@@ -5,8 +5,9 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash -> CORRECTNESS_r{N}.json).
 
-Implementations live in ``database_collector_spark.workloads`` (and the
-operator modules it calls); this file is the thin driver-facing shim.
+The gates live in the workloads modules listed in
+``database_collector_spark.gates``; this file is the thin driver-facing
+shim over that registry.
 """
 
 from __future__ import annotations
@@ -19,24 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from database_collector_spark import (
-    workloads,
-    workloads2,
-    workloads3,
-    workloads4,
-    workloads5,
-    workloads_ext,
-    workloads_ir,
-    workloads_pq,
-    workloads_r9,
-    workloads_r10,
-    workloads_r11,
-    workloads_r12,
-    workloads_r13,
-    workloads_r14,
-    workloads_r15,
-    workloads_ts,
-)
+from database_collector_spark import gates, workloads
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -44,144 +28,18 @@ def entry(spark: SparkSession) -> DataFrame:
     return workloads.q_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-# The external driver correctness-checks the FIRST 50 entries of queries()
-# in dict order. Entries are therefore ordered by evidence need: queries
-# whose oracle rows were red or absent in the previous round's
-# CORRECTNESS report come first, then this round's new queries, then a
-# representative slice of the reference-parity flagships; queries with a
-# green row in a prior round sort last (their implementations are
-# unchanged and pinned by pytest).
-_CHECK_FIRST = [
-    # Round-15 rotation, part 1 — staleness-bound backfill:
-    # CORRECTNESS_r14 was 50/50 green (fifth consecutive fully-green
-    # window, zero reds to re-check), so the head goes to the
-    # FORTY-SEVEN r10-latest gates (newest driver row = round 10;
-    # 15 - 10 = 5, the max-staleness bound binds THIS round). Computed
-    # from the CORRECTNESS_r*.json union, alphabetical
-    # (ann_lsh_buckets .. window_running). This cohort carries the two
-    # highest-value fresh-evidence rows of the round: pack_sequences
-    # (rewritten r14 onto the two-level prefix pass — first
-    # post-rewrite driver row) and dedup_clusters (roster_truncated
-    # column added r14, oracle updated in lockstep).
-    "ann_lsh_buckets", "cdc_apply", "conditional_agg", "crossmodal_join",
-    "curation_full", "curation_pipeline", "decile_stats",
-    "decontaminate", "dedup_clusters", "dedup_embedding",
-    "dedup_embedding_lsh", "dedup_exact", "dedup_incremental",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_simhash_pairs", "doc_fingerprint", "engine_rejects",
-    "events_hourly", "exact_percentiles", "hash_split",
-    "histogram_metrics", "hll_mergeable_rollup", "hll_sliding_windows",
-    "incremental_agg", "interval_join_events", "jl_projection",
-    "json_struct_parse", "kv_numeric_parse", "kv_pivot_wide", "lang_id",
-    "length_trim", "lexical_diversity", "market_share",
-    "minhash_persist_incremental", "mixture_sample", "ngram_novelty",
-    "pack_sequences", "source_percentile_filter", "source_quota_sample",
-    "token_budget_alloc", "top_supplier", "unpivot_melt",
-    "vocab_drift_kl", "window_frames", "window_running",
-    # part 2 — NEW GATES: the three staged r15 gates register in the
-    # order decided in r13 per the r12 VERDICT #5 (oracles
-    # pre-verified by the driver-identical staged differential at
-    # sf0.001/0.01/0.1 and judge-re-run green in the r14 VERDICT).
-    # This lands SATURATION: 247 + 3 = 250 registered = the 50-slot x
-    # 5-round-staleness ceiling. vocab_overlap (the 4th r15 candidate)
-    # stays permanently staged-tier per COVERAGE.md §staged-tier.
-    "agreement_alpha", "token_gini", "pack_chunks",
-    # Window is EXACTLY 50 — entries past 50 get no driver row.
-    # r16 MANDATORY HEAD: any red r15 rows first, then the 50
-    # r11-latest gates (newest row r11, 16 - 11 = 5; recompute
-    # alphabetically from the CORRECTNESS union — do not trust
-    # memory) — ZERO structural slack. That cohort includes
-    # sequence_pack (rewritten r14, newest row r11): its first
-    # post-rewrite driver row rides the r16 window — do not displace.
-    # r17: head = the 50 r12-latest gates. NOTE (r13 VERDICT #4 + r14
-    # changes): that cohort includes gates whose IMPLEMENTATION changed
-    # after their newest driver row — trimmed_mean / quantile_norm /
-    # key_skew_profile (rewritten r13) and embedding_dedup_clusters
-    # (roster_truncated flag column added r14, oracle updated in
-    # lockstep) — their r17 rows are the highest-value fresh evidence
-    # in that window; do not displace them. (dedup_clusters, the other
-    # roster_truncated gate, is r10-latest and re-checks in THIS
-    # round's head above.)
-    # POST-SATURATION (in force from r16 on): 250 registered = the
-    # ceiling, so EVERY later window is exactly consumed by the
-    # 50-gate cohort from 5 rounds back. vocab_overlap
-    # (workloads_r15.py), the r16 staged cohort (workloads_r16.py:
-    # embedding_drift, zipf_head_fit, bigram_cond_entropy) and the r17
-    # data-quality cohort (workloads_r17.py: table_profile,
-    # fk_orphan_report, key_uniqueness, staged r14) and the r15-
-    # staged order-statistics cohort (workloads_r18.py:
-    # rank_quartiles, range_splitters, token_mass_median) and the
-    # r15-staged robust-statistics cohort (workloads_r19.py:
-    # group_mad, winsorized_mean, iqr_outlier_report) stay at
-    # the staged-green evidence tier PERMANENTLY — decided and documented
-    # in COVERAGE.md §staged-tier (r13 VERDICT #5, playbook expanded
-    # r15 per the r14 VERDICT #3); the judge's check.py --staged
-    # differential covers them every round. Any 1-for-1 retirement
-    # swap must be recorded here with its rationale; the pre-agreed
-    # swap candidates live in COVERAGE.md §staged-tier.
-    # SATURATION ARITHMETIC (r15 recompute, from the CORRECTNESS
-    # union): cohorts by newest evidence after r14: r10:47 r11:50
-    # r12:50 r13:50 r14:50 (=247 registered) + 3 r15 staged = 250
-    # after THIS round registers — the 50-slot window x 5-round
-    # staleness ceiling, reached. Do NOT register new gates from here
-    # without a 1-for-1 retirement — the window cannot absorb them and
-    # the staleness meta-test will trip.
-    # Always recompute cohorts from the CORRECTNESS_r*.json union
-    # (tests/test_docs_consistency.py::test_rotation_debt_cannot_drift)
-    # rather than trusting name lists written from memory — the r11
-    # directive's expanded r7 name list was stale; only its computed
-    # endpoints were right.
-    # All subject to the max-staleness meta-test in
-    # tests/test_docs_consistency.py (no registered gate's newest driver
-    # row older than 5 rounds; missing gates count as round 0).
-]
-assert len(_CHECK_FIRST) == 50, f"check window holds {len(_CHECK_FIRST)}, not 50"
-
-
-def _ordered(all_entries: dict) -> dict:
-    head = {name: all_entries[name] for name in _CHECK_FIRST if name in all_entries}
-    return {**head, **{k: v for k, v in all_entries.items() if k not in head}}
+def _registered(entries: dict) -> dict:
+    """The registered gates of ``entries``, the check window first."""
+    registered = {k: v for k, v in entries.items() if k not in gates.STAGED}
+    head = {k: registered[k] for k in gates.check_window()}
+    return {**head, **registered}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 + extensions."""
-    return _ordered({
-        **workloads.QUERIES,
-        **workloads2.QUERIES2,
-        **workloads3.QUERIES3,
-        **workloads4.QUERIES4,
-        **workloads5.QUERIES5,
-        **workloads_ext.QUERIES_EXT,
-        **workloads_ir.QUERIES_IR,
-        **workloads_pq.QUERIES_PQ,
-        **workloads_r9.QUERIES_R9,
-        **workloads_r10.QUERIES_R10,
-        **workloads_r11.QUERIES_R11,
-        **workloads_r12.QUERIES_R12,
-        **workloads_r13.QUERIES_R13,
-        **workloads_r14.QUERIES_R14,
-        **workloads_r15.QUERIES_R15_REGISTERED,
-        **workloads_ts.QUERIES_TS,
-    })
+    """One entry per registered gate."""
+    return _registered(gates.all_queries())
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI-SQL twin for each ``queries()`` entry."""
-    return _ordered({
-        **workloads.ORACLES,
-        **workloads2.ORACLES2,
-        **workloads3.ORACLES3,
-        **workloads4.ORACLES4,
-        **workloads5.ORACLES5,
-        **workloads_ext.ORACLES_EXT,
-        **workloads_ir.ORACLES_IR,
-        **workloads_pq.ORACLES_PQ,
-        **workloads_r9.ORACLES_R9,
-        **workloads_r10.ORACLES_R10,
-        **workloads_r11.ORACLES_R11,
-        **workloads_r12.ORACLES_R12,
-        **workloads_r13.ORACLES_R13,
-        **workloads_r14.ORACLES_R14,
-        **workloads_r15.ORACLES_R15_REGISTERED,
-        **workloads_ts.ORACLES_TS,
-    })
+    return _registered(gates.all_oracles())

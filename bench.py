@@ -21,20 +21,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
-    from database_collector_spark import workloads
-    from database_collector_spark.session import get_spark
+    from database_collector_spark.session import get_spark, warm_up
 
     spark = get_spark("bench")
-    # warm the JVM + parquet footer caches so per-query numbers measure the
-    # plan, not first-touch JIT
-    workloads.q_pricing_summary(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # ...and the Python worker pool + Arrow lanes, so the first
-    # mapInPandas query isn't billed ~4s of daemon spin-up
-    spark.range(spark.sparkContext.defaultParallelism).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     # min-of-2 runs per query: a single run conflates the plan's cost with
     # JIT / page-cache / Python-worker warm-up state, which made the r3->r4

@@ -233,6 +233,11 @@ def fertility_report(
     NULL-doc_id filter preserves the old inner-join semantics (a NULL
     key never matched).
 
+    Assumes ``doc_id`` is unique: every row counts as one document, so a
+    duplicated doc_id is counted (and its words and tokens summed) once
+    per row. Nothing checks this; deduplicate the input first if it can
+    repeat ids.
+
     Output per group: (group, n_docs, n_words, n_chars, n_bpe_tokens,
     fertility, chars_per_token).
     """

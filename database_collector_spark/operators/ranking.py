@@ -179,7 +179,13 @@ def exact_ratio_round(num: F.Column, den: F.Column, digits: int = 6) -> F.Column
     first, then the remainder quantized — so the 2·10^d multiplier
     touches only the remainder (< den): identically equal to the
     one-step ``(2·10^d·num + den) div (2·den)`` with 10^d more
-    overflow headroom on large numerators (the chi2 dev² class)."""
+    overflow headroom on large numerators (the chi2 dev² class).
+
+    Exact only while the quantized quotient q·10^d stays below 2^53:
+    past it the one long→double cast rounds q·10^d to the nearest double,
+    so the last units are lost (at d=6, ratios of about 9.0e9 and up).
+    Callers with unbounded numerators (chi2 dev²) stay exact only while
+    their ratio does."""
     d38 = "decimal(38,0)"
     p = F.lit(10**digits).cast(d38)
     t = num.cast(d38)

@@ -15,6 +15,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The directory holding this package. Python workers start in the driver's
+# working directory, so without it on their path a mapInPandas kernel that
+# imports the package fails when the driver runs from anywhere else.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "database-collector-spark",
@@ -74,12 +79,27 @@ def get_spark(
         # Python DataSource filter pushdown (sources/prom_source.py
         # consumes EqualTo('name') at parse time)
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Warm the JVM and the parquet footer caches, then the Python worker
+    pool and Arrow lanes, so timed queries measure the plan rather than
+    first-touch JIT and ~4 s of worker daemon spin-up."""
+    from database_collector_spark import workloads
+
+    workloads.q_pricing_summary(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    spark.range(spark.sparkContext.defaultParallelism).mapInPandas(
+        lambda it: it, "id long"
+    ).write.format("noop").mode("overwrite").save()
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:

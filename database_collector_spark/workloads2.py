@@ -1066,7 +1066,7 @@ SELECT 'intersect_all' AS op, l_returnflag, COUNT(*) AS n FROM it GROUP BY 2
 """
 
 
-QUERIES2 = {
+QUERIES = {
     "null_safe_join": q_null_safe_join,
     "bag_set_ops": q_bag_set_ops,
     "semi_anti_orders": q_semi_anti_orders,
@@ -1091,7 +1091,7 @@ QUERIES2 = {
     "try_arith": q_try_arith,
 }
 
-ORACLES2 = {
+ORACLES = {
     "null_safe_join": SQL_NULL_SAFE_JOIN,
     "bag_set_ops": SQL_BAG_SET_OPS,
     "semi_anti_orders": SQL_SEMI_ANTI_ORDERS,

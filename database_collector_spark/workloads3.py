@@ -692,7 +692,7 @@ FROM w GROUP BY event_type
 """
 
 
-QUERIES3 = {
+QUERIES = {
     "corr_matrix": q_corr_matrix,
     "weighted_median": q_weighted_median,
     "decayed_counts": q_decayed_counts,
@@ -707,7 +707,7 @@ QUERIES3 = {
     "dedup_clusters": q_dedup_clusters,
 }
 
-ORACLES3 = {
+ORACLES = {
     "corr_matrix": SQL_CORR_MATRIX,
     "weighted_median": SQL_WEIGHTED_MEDIAN,
     "decayed_counts": SQL_DECAYED_COUNTS,

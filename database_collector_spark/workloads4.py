@@ -1467,7 +1467,7 @@ FROM words
 """
 
 
-QUERIES4 = {
+QUERIES = {
     "market_share": q_market_share,
     "table_checksum": q_table_checksum,
     "supplier_diversity": q_supplier_diversity,
@@ -1494,7 +1494,7 @@ QUERIES4 = {
     "profile_table": q_profile_table,
 }
 
-ORACLES4 = {
+ORACLES = {
     "market_share": SQL_MARKET_SHARE,
     "table_checksum": SQL_TABLE_CHECKSUM,
     "supplier_diversity": SQL_SUPPLIER_DIVERSITY,

@@ -693,7 +693,7 @@ FROM s
 """
 
 
-QUERIES5 = {
+QUERIES = {
     "corpus_shuffle": q_corpus_shuffle,
     "kfold_split": q_kfold_split,
     "filter_funnel": q_filter_funnel,
@@ -710,7 +710,7 @@ QUERIES5 = {
     "sequence_pack": q_sequence_pack,
 }
 
-ORACLES5 = {
+ORACLES = {
     "corpus_shuffle": SQL_CORPUS_SHUFFLE,
     "kfold_split": SQL_KFOLD_SPLIT,
     "filter_funnel": SQL_FILTER_FUNNEL,

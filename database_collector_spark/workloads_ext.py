@@ -1367,7 +1367,7 @@ WHERE inter * 10 >= 8 * (sa.n + sb.n - inter)
 """
 
 
-QUERIES_EXT = {
+QUERIES = {
     "embedding_covariance": q_embedding_covariance,
     "jaccard_join_exact": q_jaccard_join_exact,
     "text_token_stats": q_text_token_stats,
@@ -1407,7 +1407,7 @@ QUERIES_EXT = {
     "dedup_fuzzy": q_dedup_fuzzy,
 }
 
-ORACLES_EXT = {
+ORACLES = {
     "embedding_covariance": SQL_EMBEDDING_COVARIANCE,
     "jaccard_join_exact": SQL_JACCARD_JOIN_EXACT,
     "text_token_stats": SQL_TEXT_TOKEN_STATS,

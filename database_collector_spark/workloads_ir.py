@@ -1168,7 +1168,7 @@ GROUP BY part
 """
 
 
-QUERIES_IR = {
+QUERIES = {
     "pmi_collocations": q_pmi_collocations,
     "triangle_count": q_triangle_count,
     "bm25_scores": q_bm25_scores,
@@ -1191,7 +1191,7 @@ QUERIES_IR = {
     "oov_rate": q_oov_rate,
 }
 
-ORACLES_IR = {
+ORACLES = {
     "pmi_collocations": SQL_PMI_COLLOCATIONS,
     "triangle_count": SQL_TRIANGLE_COUNT,
     "bm25_scores": SQL_BM25_SCORES,

@@ -265,13 +265,13 @@ QUALIFY rank <= 3
 """
 
 
-QUERIES_PQ = {
+QUERIES = {
     "ann_pq_codes": q_ann_pq_codes,
     "ann_pq_adc": q_ann_pq_adc,
     "ann_sq8_topk": q_ann_sq8_topk,
 }
 
-ORACLES_PQ = {
+ORACLES = {
     "ann_pq_codes": _sql_pq_codes(),
     "ann_pq_adc": _sql_pq_adc(),
     "ann_sq8_topk": _sql_sq8_topk(),

@@ -1,11 +1,6 @@
-"""Round-11 STAGED gate cohort (not yet registered with the driver).
-
-Staging pattern (r8-proven): QUERIES_R11/ORACLES_R11 are NOT imported by
-``__spark_entry__`` this round; ``tests/test_r11_staged_differential.py``
-runs the driver-identical differential at sf0.001 (plus the widened
-LIMIT-0 portability sweep) and ``tools/check.py --staged`` runs the
-whole cohort through the standard harness. Registration next round is a
-two-line import + window-head listing.
+"""Round-11 gates, registered with the driver through
+``database_collector_spark.gates``; ``tests/test_gates.py`` runs each
+against its DuckDB twin.
 
 The cohort — the r9-verdict r11 shortlist plus the DSIR selection tier:
 
@@ -503,7 +498,7 @@ ORDER BY src_lo, src_hi
 SQL_CROSS_SOURCE_DUP_MATRIX = _sql_cross_source_dup_matrix()
 
 
-QUERIES_R11 = {
+QUERIES = {
     "substring_dedup": q_substring_dedup,
     "bloom_decontaminate": q_bloom_decontaminate,
     "semdedup_prune": q_semdedup_prune,
@@ -513,7 +508,7 @@ QUERIES_R11 = {
     "cross_source_dup_matrix": q_cross_source_dup_matrix,
 }
 
-ORACLES_R11 = {
+ORACLES = {
     "substring_dedup": SQL_SUBSTRING_DEDUP,
     "bloom_decontaminate": SQL_BLOOM_DECONTAMINATE,
     "semdedup_prune": SQL_SEMDEDUP_PRUNE,

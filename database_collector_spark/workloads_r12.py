@@ -884,7 +884,7 @@ ORDER BY p.source
 """
 
 
-QUERIES_R12 = {
+QUERIES = {
     "auc_by_group": q_auc_by_group,
     "calibration_curve": q_calibration_curve,
     "calibration_by_source": q_calibration_by_source,
@@ -894,7 +894,7 @@ QUERIES_R12 = {
     "source_governance": q_source_governance,
 }
 
-ORACLES_R12 = {
+ORACLES = {
     "auc_by_group": SQL_AUC_BY_GROUP,
     "calibration_curve": SQL_CALIBRATION_CURVE,
     "calibration_by_source": SQL_CALIBRATION_BY_SOURCE,

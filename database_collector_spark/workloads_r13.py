@@ -1,12 +1,6 @@
-"""Round-13 gates — REGISTERED in the round-13 window (staged round 12).
-
-The r8-proven staging pattern: each gate ships with its DuckDB oracle
-twin and runs through the driver-identical differential in
-``tests/test_r13_staged_differential.py`` at sf0.001 (plus the LIMIT-0
-Arrow-portability sweep) the round BEFORE registration, so window
-registration next round is a two-line import — executed in round 13
-(``__spark_entry__`` imports QUERIES_R13/ORACLES_R13 and heads the
-check window with this cohort).
+"""Round-13 gates, registered with the driver through
+``database_collector_spark.gates``; ``tests/test_gates.py`` runs each
+against its DuckDB twin.
 
 Cohort (the r11 verdict's item-2 list plus the Spark-first layout gate):
 
@@ -24,8 +18,7 @@ Cohort (the r11 verdict's item-2 list plus the Spark-first layout gate):
   integer thresholds — incrementally maintainable, bounded state). The
   SAME operator expression runs as a Structured Streaming update-mode
   aggregate; the stream's end-state equals this batch twin
-  (tests/test_r13_staged_differential.py, the ttl_expiry_counts
-  pattern).
+  (tests/test_ranking.py, the ttl_expiry_counts pattern).
 - ``rule_attribution`` — Gopher/C4-style ordered quality-rule funnel
   with marginal drop attribution (operators/text.py::rule_attribution):
   one corpus scan for the whole report, marginals reconcile exactly.
@@ -656,7 +649,7 @@ ORDER BY q_id, rank
 """
 
 
-QUERIES_R13 = {
+QUERIES = {
     "ndcg_by_source": q_ndcg_by_source,
     "quantiles_refined": q_quantiles_refined,
     "calibration_fixed_bins": q_calibration_fixed_bins,
@@ -667,7 +660,7 @@ QUERIES_R13 = {
     "hard_negatives": q_hard_negatives,
 }
 
-ORACLES_R13 = {
+ORACLES = {
     "ndcg_by_source": SQL_NDCG_BY_SOURCE,
     "quantiles_refined": SQL_QUANTILES_REFINED,
     "calibration_fixed_bins": SQL_CALIBRATION_FIXED_BINS,

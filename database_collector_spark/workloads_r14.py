@@ -1,11 +1,6 @@
-"""Round-14 STAGED gates (not yet imported by ``__spark_entry__``).
-
-The r8-proven staging pattern (see workloads_r13.py): each gate ships
-with its DuckDB oracle twin and runs through the driver-identical
-differential in ``tests/test_r14_staged_differential.py`` at sf0.001
-(plus the LIMIT-0 Arrow-portability sweep) the rounds BEFORE
-registration, so window registration is a two-line import when the r14
-rotation lands.
+"""Round-14 gates, registered with the driver through
+``database_collector_spark.gates``; ``tests/test_gates.py`` runs each
+against its DuckDB twin.
 
 Cohort — the evaluation tier's completion plus three curation-
 governance reports (pre-built as operators in round 12, gates staged
@@ -702,7 +697,7 @@ FROM cells ORDER BY source, label
 """
 
 
-QUERIES_R14 = {
+QUERIES = {
     "pr_curve_sweep": q_pr_curve_sweep,
     "lift_deciles": q_lift_deciles,
     "mcc_by_lang": q_mcc_by_lang,
@@ -716,7 +711,7 @@ QUERIES_R14 = {
     "class_balance": q_class_balance,
 }
 
-ORACLES_R14 = {
+ORACLES = {
     "pr_curve_sweep": SQL_PR_CURVE_SWEEP,
     "lift_deciles": SQL_LIFT_DECILES,
     "mcc_by_lang": SQL_MCC_BY_LANG,

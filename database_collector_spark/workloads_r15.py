@@ -1,17 +1,7 @@
-"""Round-15 gates: three REGISTERED in round 15 (``agreement_alpha``,
-``token_gini``, ``pack_chunks`` — via ``QUERIES_R15_REGISTERED``) plus
-``vocab_overlap``, permanently staged-tier (COVERAGE.md §staged-tier).
-
-The staging pattern of workloads_r13/r14: each gate ships with its
-DuckDB oracle twin and runs through the driver-identical differential in
-``tests/test_r15_staged_differential.py`` at sf0.001 (plus the LIMIT-0
-Arrow-portability sweep) the rounds BEFORE registration.
-
-Cohort — deliberately FOUR gates, sized to the rotation's saturation
-arithmetic (see the ``__spark_entry__`` directive: from r15 on the
-50-slot window is consumed by staleness backfill, leaving ~3 slots per
-round; a bigger cohort could never register without tripping the
-staleness meta-test):
+"""Round-15 gates: ``agreement_alpha``, ``token_gini`` and ``pack_chunks``
+are registered; ``vocab_overlap`` is permanently staged
+(``gates.STAGED``, COVERAGE.md §staged-tier). ``tests/test_gates.py``
+runs all four against their DuckDB twins.
 
 - ``pack_chunks`` — boundary-splitting GPT-style sequence packing over
   the documents corpus (curation.pack_segments): the exact per-chunk
@@ -268,34 +258,16 @@ FROM pairs ORDER BY g_a, g_b
 """
 
 
-QUERIES_R15 = {
-    "pack_chunks": q_pack_chunks,
+QUERIES = {
     "agreement_alpha": q_agreement_alpha,
     "token_gini": q_token_gini,
+    "pack_chunks": q_pack_chunks,
     "vocab_overlap": q_vocab_overlap,
 }
 
-ORACLES_R15 = {
-    "pack_chunks": SQL_PACK_CHUNKS,
+ORACLES = {
     "agreement_alpha": SQL_AGREEMENT_ALPHA,
     "token_gini": SQL_TOKEN_GINI,
+    "pack_chunks": SQL_PACK_CHUNKS,
     "vocab_overlap": SQL_VOCAB_OVERLAP,
-}
-
-# Round-15 registration split (COVERAGE.md §staged-tier): the trio below
-# registered via ``__spark_entry__`` in round 15 — the window's 3 slack
-# slots, per the r13/r14 directives — while ``vocab_overlap`` (the 4th
-# candidate; the slack holds only 3) stays PERMANENTLY staged-tier and is
-# covered every round by ``tools/check.py --staged`` plus
-# ``tests/test_r15_staged_differential.py`` (which sweeps the full
-# QUERIES_R15, registered and staged alike).
-_REGISTERED_R15 = ("agreement_alpha", "token_gini", "pack_chunks")
-
-QUERIES_R15_REGISTERED = {k: QUERIES_R15[k] for k in _REGISTERED_R15}
-ORACLES_R15_REGISTERED = {k: ORACLES_R15[k] for k in _REGISTERED_R15}
-QUERIES_R15_STAGED = {
-    k: v for k, v in QUERIES_R15.items() if k not in _REGISTERED_R15
-}
-ORACLES_R15_STAGED = {
-    k: v for k, v in ORACLES_R15.items() if k not in _REGISTERED_R15
 }

@@ -1,18 +1,7 @@
-"""Round-16 STAGED gates (not yet imported by ``__spark_entry__``).
-
-The staging pattern of workloads_r13/r14/r15: each gate ships with its
-DuckDB oracle twin and runs through the driver-identical differential in
-``tests/test_r16_staged_differential.py`` at sf0.001 (plus the LIMIT-0
-Arrow-portability sweep); ``tools/check.py --staged`` re-runs the cohort
-at sf0.01/sf0.1.
-
-Cohort — deliberately THREE gates. POST-SATURATION NOTE (see the
-``__spark_entry__`` directive): once the registered surface hits the
-250-gate rotation ceiling at the end of r15, every later 50-slot window
-is exactly consumed by staleness backfill, so this cohort (and
-``vocab_overlap`` from r15) stays at the staged-green evidence tier
-permanently — judge-verified through ``check.py --staged`` each round —
-unless a registered gate is deliberately retired in a 1-for-1 swap.
+"""Round-16 gates, permanently staged (``gates.STAGED``,
+COVERAGE.md §staged-tier): oracle-paired and run against their DuckDB
+twins by ``tests/test_gates.py`` and ``tools/check.py --staged``, but
+never registered with the driver.
 
 - ``embedding_drift`` — exact centroid drift (L2 + cosine) between two
   embedding snapshots per label slice (similarity.embedding_drift,
@@ -216,13 +205,13 @@ ORDER BY a2.lang
 """
 
 
-QUERIES_R16 = {
+QUERIES = {
     "embedding_drift": q_embedding_drift,
     "zipf_head_fit": q_zipf_head_fit,
     "bigram_cond_entropy": q_bigram_cond_entropy,
 }
 
-ORACLES_R16 = {
+ORACLES = {
     "embedding_drift": SQL_EMBEDDING_DRIFT,
     "zipf_head_fit": SQL_ZIPF_HEAD_FIT,
     "bigram_cond_entropy": SQL_BIGRAM_COND_ENTROPY,

@@ -1,19 +1,11 @@
-"""Round-17 STAGED gates (not yet imported by ``__spark_entry__``).
-
-The staging pattern of workloads_r13..r16: each gate ships with its
-DuckDB oracle twin and runs through the driver-identical differential in
-``tests/test_r17_staged_differential.py`` at sf0.001 (plus the LIMIT-0
-Arrow-portability sweep); ``tools/check.py --staged`` re-runs the cohort
-at sf0.01/sf0.1.
+"""Round-17 gates, permanently staged (``gates.STAGED``,
+COVERAGE.md §staged-tier): oracle-paired and run against their DuckDB
+twins by ``tests/test_gates.py`` and ``tools/check.py --staged``, but
+never registered with the driver.
 
 Cohort — the DATA-QUALITY EXPECTATIONS tier (operators/expectations.py:
 the Deequ/Great-Expectations surface a 100 TB lake gates its inputs on
-before any pipeline runs). POST-SATURATION NOTE (see the
-``__spark_entry__`` directive): the registered surface saturates at the
-250-gate rotation ceiling at the end of r15, so this cohort stays at the
-staged-green evidence tier permanently — judge-verified through
-``check.py --staged`` each round — unless a registered gate is
-deliberately retired in a 1-for-1 swap (COVERAGE.md §staged-tier).
+before any pipeline runs).
 
 - ``table_profile`` — per-column null/cardinality profile of orders in
   ONE aggregate pass (expectations.column_profile).
@@ -216,13 +208,13 @@ SQL_KEY_UNIQUENESS = (
 )
 
 
-QUERIES_R17 = {
+QUERIES = {
     "table_profile": q_table_profile,
     "fk_orphan_report": q_fk_orphan_report,
     "key_uniqueness": q_key_uniqueness,
 }
 
-ORACLES_R17 = {
+ORACLES = {
     "table_profile": SQL_TABLE_PROFILE,
     "fk_orphan_report": SQL_FK_ORPHAN_REPORT,
     "key_uniqueness": SQL_KEY_UNIQUENESS,

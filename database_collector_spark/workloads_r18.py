@@ -1,11 +1,8 @@
-"""Round-18 STAGED gates — the exact order-statistics tier at scale.
-
-Post-saturation cohort (COVERAGE.md §staged-tier playbook, decided
-r15): the registered surface sits at its 250-gate ceiling, so this
-cohort ships PERMANENTLY staged-tier — judge-run every round through
-``tools/check.py --staged`` plus ``tests/test_r18_staged_differential``
-— unless a 1-for-1 retirement swap promotes a gate (candidates are
-pre-agreed in COVERAGE.md).
+"""Round-18 gates — the exact order-statistics tier at scale —
+permanently staged (``gates.STAGED``, COVERAGE.md §staged-tier):
+oracle-paired and run against their DuckDB twins by
+``tests/test_gates.py`` and ``tools/check.py --staged``, but never
+registered with the driver.
 
 All three gates are first-class consumers of
 ``ranking.rank_select_by_group`` (r15): exact order statistics at a
@@ -201,13 +198,13 @@ FROM ranked GROUP BY source ORDER BY source
 """
 
 
-QUERIES_R18 = {
+QUERIES = {
     "rank_quartiles": q_rank_quartiles,
     "range_splitters": q_range_splitters,
     "token_mass_median": q_token_mass_median,
 }
 
-ORACLES_R18 = {
+ORACLES = {
     "rank_quartiles": SQL_RANK_QUARTILES,
     "range_splitters": SQL_RANGE_SPLITTERS,
     "token_mass_median": SQL_TOKEN_MASS_MEDIAN,

@@ -1,10 +1,11 @@
-"""Round-19 STAGED gates — the robust-statistics tier on the
-fixed-rank selection core.
+"""Round-19 gates — the robust-statistics tier on the fixed-rank
+selection core.
 
 The pre-agreed r19 candidates recorded in COVERAGE.md during round 15,
-built the same round (post-saturation playbook: permanently
-staged-tier, judge-run every round through ``tools/check.py --staged``
-plus ``tests/test_r19_staged_differential.py``). All three compose on
+permanently staged (``gates.STAGED``, COVERAGE.md §staged-tier):
+oracle-paired and run against their DuckDB twins by
+``tests/test_gates.py`` and ``tools/check.py --staged``, but never
+registered with the driver. All three compose on
 ``ranking.rank_select_by_group`` (two corpus scans per selection
 phase, no corpus shuffle, state bounded by one log-cell's value
 population — see SCALE.md §Round-15 for the 50M-row stress where the
@@ -249,13 +250,13 @@ GROUP BY c.source ORDER BY c.source
 """
 
 
-QUERIES_R19 = {
+QUERIES = {
     "group_mad": q_group_mad,
     "winsorized_mean": q_winsorized_mean,
     "iqr_outlier_report": q_iqr_outlier_report,
 }
 
-ORACLES_R19 = {
+ORACLES = {
     "group_mad": SQL_GROUP_MAD,
     "winsorized_mean": SQL_WINSORIZED_MEAN,
     "iqr_outlier_report": SQL_IQR_OUTLIER_REPORT,

@@ -1,21 +1,14 @@
-"""STAGED round-9 gate queries + DuckDB oracles for the operators that
-landed late in round 8 (COVERAGE.md "gate queued r9" rows).
-
-NOT yet merged into ``__spark_entry__.queries()`` — the r8 driver check
-window is full and the rotation rule requires every newly REGISTERED
-gate to enter the window in its registration round. Staging the gate
-code here with a pytest differential (tests/test_r9_staged_differential.py
-runs the exact tools/check.py comparison at sf0.001) means the r9
-registration is a two-line import with every oracle already proven,
-instead of a round-opening debugging session.
+"""Round-9 gates + DuckDB oracles for the operators that landed late in
+round 8 (COVERAGE.md "registered r9" rows), registered with the driver
+through ``database_collector_spark.gates``; ``tests/test_gates.py`` runs
+each against its DuckDB twin.
 
 Determinism conventions are the repo's usual: exact integer
 intermediates, md5-derived uniforms/weights (first-8-hex-digits idiom
 shared with operators/sampling.py), one transcendental at most per
 output column, rounded floats. Every oracle's final schema is
 BIGINT-cast where DuckDB would infer HUGEINT (the map_funcs failure
-class; swept by the staged differential test alongside
-tests/test_oracle_schemas.py's LIMIT-0 check of registered oracles).
+class; swept by tests/test_oracle_schemas.py's LIMIT-0 check).
 """
 
 from __future__ import annotations
@@ -693,7 +686,7 @@ FROM sides a JOIN sides b ON a.tail_txt = b.head_txt AND a.sid <> b.sid
 """
 
 
-QUERIES_R9 = {
+QUERIES = {
     "readability_scores": q_readability_scores,
     "temperature_mixture": q_temperature_mixture,
     "quality_classifier": q_quality_classifier,
@@ -709,7 +702,7 @@ QUERIES_R9 = {
     "shard_overlap": q_shard_overlap,
 }
 
-ORACLES_R9 = {
+ORACLES = {
     "readability_scores": SQL_READABILITY_SCORES,
     "temperature_mixture": SQL_TEMPERATURE_MIXTURE,
     "quality_classifier": SQL_QUALITY_CLASSIFIER,

@@ -2622,7 +2622,7 @@ FROM events GROUP BY event_type
 """
 
 
-QUERIES_TS = {
+QUERIES = {
     "events_hourly": q_events_hourly,
     "pit_join": q_pit_join,
     "time_weighted_avg": q_time_weighted_avg,
@@ -2671,7 +2671,7 @@ QUERIES_TS = {
     "mad_outliers": q_mad_outliers,
 }
 
-ORACLES_TS = {
+ORACLES = {
     "events_hourly": SQL_EVENTS_HOURLY,
     "pit_join": SQL_PIT_JOIN,
     "time_weighted_avg": SQL_TIME_WEIGHTED_AVG,

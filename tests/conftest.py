@@ -1,33 +1,19 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from database_collector_spark.session import get_spark
+
+# the smallest driver-generated fixture tables (TESTDATA.md)
+SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", shuffle_partitions=4)
     yield s
-
-
-def driver_evidenced_gates() -> set[str]:
-    """Union of gate names holding ANY past driver CORRECTNESS row —
-    the shared evidence set for the per-round registration bookkeeping
-    tests (third-pass review: the glob/union block was being re-cloned
-    into every round's staged-differential file; one definition here
-    means a CORRECTNESS format change is patched once)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen: set[str] = set()
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        with open(f) as fh:
-            seen |= set(json.load(fh))
-    return seen

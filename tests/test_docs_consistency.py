@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import __spark_entry__ as entrymod
+from database_collector_spark import gates
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -22,17 +23,15 @@ def test_every_query_has_an_oracle():
 def test_every_query_is_documented_in_coverage():
     with open(os.path.join(ROOT, "COVERAGE.md")) as fh:
         cov = fh.read()
-    missing = [q for q in entrymod.queries() if q not in cov]
+    missing = [q for q in gates.all_queries() if f"`{q}`" not in cov]
     assert not missing, f"gates absent from COVERAGE.md: {missing}"
 
 
 def test_check_window_is_exactly_driver_sized_and_resolvable():
-    qs = entrymod.queries()
-    assert len(entrymod._CHECK_FIRST) == 50
-    unresolved = [q for q in entrymod._CHECK_FIRST if q not in qs]
-    assert not unresolved, f"window names unknown queries: {unresolved}"
-    # _ordered must put the window first, verbatim
-    assert list(qs)[:50] == entrymod._CHECK_FIRST
+    window = gates.check_window()
+    assert len(window) == 50
+    assert list(entrymod.queries())[:50] == window
+    assert list(entrymod.oracle_sql())[:50] == window
 
 
 def test_rotation_debt_cannot_drift():
@@ -40,15 +39,10 @@ def test_rotation_debt_cannot_drift():
     round must sit inside the current 50-entry window — otherwise a gate
     could accumulate rounds of "green locally" with zero driver
     evidence. Computed from the artifacts, not a hand-kept list."""
-    import glob
-    import json
-
-    seen: set[str] = set()
-    for f in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        with open(f) as fh:
-            seen |= set(json.load(fh))
-    never = [q for q in entrymod.queries() if q not in seen]
-    outside = [q for q in never if q not in entrymod._CHECK_FIRST]
+    seen = gates.newest_driver_rows()
+    qs = list(entrymod.queries())
+    never = [q for q in qs if q not in seen]
+    outside = [q for q in never if q not in qs[:50]]
     assert not outside, (
         f"{len(outside)} never-driver-checked queries outside the check "
         f"window: {outside}"
@@ -62,27 +56,15 @@ def test_no_gate_evidence_older_than_five_rounds():
     driver CORRECTNESS row must be no older than 5 rounds by the time
     the upcoming round's report lands. Gates sitting in the current
     window count as refreshed this round (the driver will row them)."""
-    import glob
-    import json
-    import re
-
-    newest: dict[str, int] = {}
-    rounds: list[int] = []
-    for f in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", f).group(1))
-        rounds.append(rnd)
-        with open(f) as fh:
-            for q in json.load(fh):
-                newest[q] = max(newest.get(q, 0), rnd)
-    current_round = max(rounds) + 1
+    newest = gates.newest_driver_rows()
+    current_round = max(newest.values()) + 1
     # Missing gates default to round 0 (never evidenced = maximally
     # stale), NOT current_round — defaulting to current_round exempted
     # exactly the gates most in need of the bound (r9 ADVICE).
     stale = [
         q
-        for q in entrymod.queries()
-        if q not in entrymod._CHECK_FIRST
-        and newest.get(q, 0) < current_round - 5
+        for q in list(entrymod.queries())[50:]
+        if newest.get(q, 0) < current_round - 5
     ]
     assert not stale, (
         f"gates whose newest driver evidence predates round "
@@ -97,23 +79,15 @@ def test_no_oracle_enumerates_positions_with_a_fixed_bound():
     oracle's n-gram sets while Spark's stayed complete. All such sites
     now derive positions from the row's own length
     (unnest(generate_series(1, len(t) - k + 1))), which is correct at
-    ANY document length. Pin the retirement repo-wide — REGISTERED and
-    STAGED oracles both (via tools/check.py's single staged-module
-    pointer), so the class cannot re-enter through a staged cohort and
-    ship at registration: the only literal generate_series upper bounds
-    left are small STRUCTURAL constants (embedding dim 64, PQ
-    subspaces, seed/band/bucket counts) — any literal bound above 64
+    ANY document length. Pin the retirement over every registry oracle,
+    registered and staged, so the class cannot re-enter through a staged
+    gate and ship at registration: the only literal generate_series
+    upper bounds left are small STRUCTURAL constants (embedding dim 64,
+    PQ subspaces, seed/band/bucket counts) — any literal bound above 64
     is the truncation class reappearing."""
-    import importlib.util
     import re
 
-    spec = importlib.util.spec_from_file_location(
-        "check", os.path.join(ROOT, "tools", "check.py")
-    )
-    check = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(check)
-    swept = {**entrymod.oracle_sql(), **check.staged_oracles()}
-    for name, sql in swept.items():
+    for name, sql in gates.all_oracles().items():
         for lo, hi in re.findall(
             r"generate_series\(\s*(-?\d+)\s*,\s*(\d+)\s*\)", sql
         ):
@@ -125,24 +99,10 @@ def test_no_oracle_enumerates_positions_with_a_fixed_bound():
 
 
 def test_staged_cohorts_never_shadow_registered_gates():
-    """check.py's --staged merge applies the staged dicts AFTER the
-    registered surface, so a staged gate reusing a registered name
-    would silently REPLACE the registered gate in every staged
-    differential run — the registered oracle comparison would stop
-    executing while still reporting green (review finding: the r13
-    cohort's pre-registration shadow check used to pin this class;
-    this is its cohort-agnostic, always-live replacement, importing
-    the ONE staged-module pointer so new cohorts are covered the
-    moment they stage)."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "check", os.path.join(ROOT, "tools", "check.py")
-    )
-    check = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(check)
-    staged = set(check.staged_queries())
-    overlap = staged & set(entrymod.queries())
-    assert not overlap, f"staged names shadow registered gates: {overlap}"
-    # and the staged surface itself must stay 1:1 with its oracles
-    assert staged == set(check.staged_oracles())
+    """A staged gate is a registry gate the driver never sees: every
+    STAGED name resolves in the registry, none reaches queries() or
+    oracle_sql(), and every other registry gate does."""
+    registry = set(gates.all_queries())
+    assert gates.STAGED <= registry
+    assert set(entrymod.queries()) == registry - gates.STAGED
+    assert set(entrymod.oracle_sql()) == registry - gates.STAGED

@@ -5,10 +5,7 @@ chunking, z-ordered write — all through the public operator API."""
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.001"
 

@@ -4,19 +4,20 @@ The driver canonicalizes DuckDB oracle results through Arrow/pandas, which
 has no int128: a final column DuckDB types HUGEINT (e.g. any expression
 over a SUM(BIGINT) CTE column) silently becomes float64 and hash-mismatches
 Spark's int64 even when every value is identical (round-7 `map_funcs`).
-This test prepares every registered oracle with LIMIT 0 and asserts no
-final column is HUGEINT/UHUGEINT — catching the whole class before any
-driver row exists.
+This test prepares every oracle, registered and staged, with LIMIT 0 and
+asserts no final column is HUGEINT/UHUGEINT — catching the whole class
+before any driver row exists.
 """
 
 from __future__ import annotations
 
 import importlib.util
+import os
 
 import duckdb
 import pytest
 
-import __spark_entry__ as entrymod
+from database_collector_spark import gates
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = (
@@ -29,7 +30,10 @@ TABLES = (
 # mismatch), and ANY nested final type whose string contains [] /
 # STRUCT / MAP / UNION (r9 jl_projection — pandas canonicalization
 # cannot hash list cells). One predicate, one place to widen.
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_spec = importlib.util.spec_from_file_location(
+    "check", os.path.join(_ROOT, "tools", "check.py")
+)
 _check = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(_check)
 
@@ -48,7 +52,7 @@ def con():
 def test_no_oracle_final_column_is_int128(con):
     bad: list[str] = []
     errs: list[str] = []
-    for name, sql in entrymod.oracle_sql().items():
+    for name, sql in gates.all_oracles().items():
         try:
             rel = con.sql(f"SELECT * FROM ({sql}) __q LIMIT 0")
         except Exception as e:  # an unparseable oracle is its own failure

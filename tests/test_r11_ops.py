@@ -1,7 +1,7 @@
 """Operator-level pins for the r11 staged tier — Python-reference
 exactness and the structural properties the cross-engine differential
-cannot see (the staged differential in test_r11_staged_differential.py
-covers Spark-vs-DuckDB; these pin Spark-vs-specification)."""
+cannot see (tests/test_gates.py covers Spark-vs-DuckDB; these pin
+Spark-vs-specification)."""
 
 from __future__ import annotations
 

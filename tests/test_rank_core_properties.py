@@ -239,3 +239,55 @@ def test_cohen_kappa_fuzz_vs_closed_form(spark, votes):
         assert row["kappa"] is None
     else:
         assert abs(row["kappa"] - (n * agree - pe_num) / den) <= 5.1e-7
+
+
+_TWO53 = 2**53
+
+
+def _exact_ratio_rows(spark, pairs, digits):
+    from pyspark.sql import functions as F
+
+    from database_collector_spark.operators.ranking import exact_ratio_round
+
+    df = spark.createDataFrame(sorted(pairs), "num long, den long")
+    r = exact_ratio_round(F.col("num"), F.col("den"), digits).alias("r")
+    return {(x["num"], x["den"]): x["r"] for x in df.select("num", "den", r).collect()}
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    digits=st.integers(min_value=0, max_value=9),
+    rows=st.lists(
+        st.tuples(
+            st.one_of(
+                st.integers(min_value=0, max_value=_TWO53 - 1),
+                st.integers(min_value=_TWO53 - 2**20, max_value=_TWO53 - 1),
+            ),
+            st.integers(min_value=1, max_value=1000),
+        ),
+        min_size=1,
+        max_size=30,
+    ),
+)
+def test_exact_ratio_round_is_exact_below_two_pow_53(spark, digits, rows):
+    """Up to the documented bound — quantized quotient q·10^d < 2^53 —
+    the result is exactly the half-up integer quotient over 10^d, i.e.
+    the double nearest q / 10^d, across the whole range and at the
+    bound itself."""
+    pairs = {((q * den) // 10**digits, den) for q, den in rows}
+    for (num, den), got in _exact_ratio_rows(spark, pairs, digits).items():
+        q = (2 * 10**digits * num + den) // (2 * den)
+        if q < _TWO53:
+            assert got == q / 10**digits, (num, den, digits)
+
+
+def test_exact_ratio_round_loses_units_past_two_pow_53(spark):
+    """The bound is real: 2^53 - 1 survives the long→double cast, 2^53 + 1
+    comes back as 2^53."""
+    got = _exact_ratio_rows(spark, {(_TWO53 - 1, 1), (_TWO53 + 1, 1)}, 0)
+    assert got[(_TWO53 - 1, 1)] == _TWO53 - 1
+    assert got[(_TWO53 + 1, 1)] == _TWO53

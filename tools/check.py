@@ -7,10 +7,9 @@ hash — the same shape of check the driver records in CORRECTNESS_r{N}.json.
 
 Usage:  python tools/check.py [--staged] [sf_dir] [query_name ...]
 
-``--staged`` additionally includes the CURRENT staged cohort — whatever
-module ``staged_queries()`` below points at (the ONE staged-module
-pointer; not yet registered with the driver) — so it runs through the
-exact same harness.
+``--staged`` adds the permanently staged gates
+(``database_collector_spark.gates.STAGED``, never registered with the
+driver), so every gate in the registry runs through the same harness.
 """
 
 from __future__ import annotations
@@ -19,6 +18,7 @@ import datetime as dt
 import decimal
 import hashlib
 import math
+import os
 import re
 import sys
 import time
@@ -26,7 +26,7 @@ import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -117,54 +117,6 @@ def value_hash(canon: list[str]) -> str:
     return h.hexdigest()
 
 
-def staged_queries() -> dict:
-    """The CURRENT staged cohorts' queries — as of round 15, the
-    PERMANENTLY staged-tier set (COVERAGE.md §staged-tier): the r15
-    trio registered in round 15, leaving vocab_overlap (via
-    QUERIES_R15_STAGED) plus the full r16, r17, r18 and r19 cohorts. This is the
-    ONE place the staged-module pointer lives: main()'s --staged merge
-    AND the docs-consistency oracle sweeps import it, so a
-    registration round bumps exactly one import and the staged oracles
-    never escape the repo-wide meta-tests (a staged oracle
-    reintroducing a retired failure class — e.g. a fixed
-    generate_series position bound — must fail at staging time, not
-    after registration)."""
-    from database_collector_spark import (
-        workloads_r15,
-        workloads_r16,
-        workloads_r17,
-        workloads_r18,
-        workloads_r19,
-    )
-
-    return {
-        **workloads_r15.QUERIES_R15_STAGED,
-        **workloads_r16.QUERIES_R16,
-        **workloads_r17.QUERIES_R17,
-        **workloads_r18.QUERIES_R18,
-        **workloads_r19.QUERIES_R19,
-    }
-
-
-def staged_oracles() -> dict:
-    """Oracle twins of staged_queries() — same single-pointer contract."""
-    from database_collector_spark import (
-        workloads_r15,
-        workloads_r16,
-        workloads_r17,
-        workloads_r18,
-        workloads_r19,
-    )
-
-    return {
-        **workloads_r15.ORACLES_R15_STAGED,
-        **workloads_r16.ORACLES_R16,
-        **workloads_r17.ORACLES_R17,
-        **workloads_r18.ORACLES_R18,
-        **workloads_r19.ORACLES_R19,
-    }
-
-
 def main() -> int:
     args = sys.argv[1:]
     staged = "--staged" in args
@@ -174,6 +126,7 @@ def main() -> int:
     only = set(args[1:])
 
     import __spark_entry__ as entrymod
+    from database_collector_spark import gates
     from database_collector_spark.session import get_spark
 
     spark = get_spark("check-correctness")
@@ -186,8 +139,8 @@ def main() -> int:
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     if staged:
-        queries = {**queries, **staged_queries()}
-        oracles = {**oracles, **staged_oracles()}
+        queries = {**queries, **gates.all_queries()}
+        oracles = gates.all_oracles()
     failures = 0
     for name, fn in queries.items():
         if only and name not in only:

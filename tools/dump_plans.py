@@ -72,12 +72,11 @@ PICKS += [
     ("bloom_decontaminate", "bit_or word build + broadcast probe bool_and"),
 ]
 
-# current STAGED cohorts (tools/check.py::staged_queries, r15-r17,
-# plus registered r13/r14 representatives) — one
-# representative per NEW plan family. bucketed_join_persist is omitted:
+# newer plan families, staged (gates.STAGED) and registered alike — one
+# representative per family. bucketed_join_persist is omitted:
 # constructing it writes warehouse tables as a side effect, which a
 # plan dump should not do (its exchange-free SMJ plan is pinned in
-# tests/test_r13_staged_differential.py instead).
+# tests/test_bucketed.py instead).
 STAGED_PICKS = [
     ("calibration_fixed_bins", "all-integer fixed-bin reliability (streamable)"),
     ("rule_attribution", "one-scan ordered rule funnel + stack unpivot"),
@@ -94,11 +93,11 @@ STAGED_PICKS = [
 
 
 def main() -> None:
-    import __spark_entry__ as entrymod
+    from database_collector_spark import gates
     from database_collector_spark.session import get_spark
 
     spark = get_spark("dump-plans")
-    qs = entrymod.queries()
+    qs = gates.all_queries()
     out = [
         "# PLANS — formatted physical plans for one query per plan family",
         "",
@@ -107,22 +106,12 @@ def main() -> None:
         "`tests/test_plan_quality.py`; this file is the human-readable half.",
         "",
     ]
-    import importlib.util
-
-    _spec = importlib.util.spec_from_file_location(
-        "check", os.path.join(os.path.dirname(os.path.abspath(__file__)), "check.py")
-    )
-    check = importlib.util.module_from_spec(_spec)
-    _spec.loader.exec_module(check)
-    staged = check.staged_queries()
     from database_collector_spark.workloads_r12 import clear_session_memo
 
     for name, why in PICKS + STAGED_PICKS:
-        if name in staged and name not in qs:
-            df = staged[name](spark, SF)
+        df = qs[name](spark, SF)
+        if name in gates.STAGED:
             why = f"{why} [staged]"
-        else:
-            df = qs[name](spark, SF)
         # evict the session feature-frame memo AFTER constructing the
         # pick (construction itself may register a persist with the
         # CacheManager) and BEFORE explain, so every dumped plan is the

@@ -45,22 +45,14 @@ def main() -> int:
     ap.add_argument("--suffix", default="before", choices=["before", "after"])
     args = ap.parse_args()
 
-    import __spark_entry__ as entrymod
-    from database_collector_spark import workloads
-    from database_collector_spark.session import get_spark
-    from tools.check import staged_queries
+    from database_collector_spark import gates
+    from database_collector_spark.session import get_spark, warm_up
 
     spark = get_spark("perf-probe")
     sc = spark.sparkContext
-    # bench-identical warm-up: JVM/parquet footers + Python worker pool
-    workloads.q_pricing_summary(spark, args.sf).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(sc.defaultParallelism).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, args.sf)
 
-    queries = {**entrymod.queries(), **staged_queries()}
+    queries = gates.all_queries()
     for name in args.names:
         fn = queries[name]
         if args.plan:
