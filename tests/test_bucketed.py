@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from conftest import SF
-from database_collector_spark import workloads_r13
 from database_collector_spark.sinks.bucketed import read_table, write_bucketed
 
 
@@ -60,86 +58,3 @@ def test_bucketed_join_has_no_exchange(spark):
         spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
         spark.sql("DROP TABLE IF EXISTS bkt_orders")
         spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
-def test_bucketed_join_is_exchange_free_when_smj_forced(spark):
-    """At fixture scale Catalyst rightly broadcasts the tiny side; the
-    100 TB claim is the SORT-MERGE path (both sides too big to
-    broadcast), where bucketing must elide the exchanges entirely.
-    Force it by disabling broadcast and pin: SMJ, ZERO exchange of any
-    kind under the join (the only shuffles in the whole gate are the
-    final per-lang aggregate + its ordering), bucketed scans on both
-    sides."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            workloads_r13.q_bucketed_join_persist(spark, SF)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    assert plan.count("Bucketed: true") == 2, plan[:2000]
-    # exchanges: exactly the per-lang aggregate shuffle + the orderBy
-    # range partitioning — NONE keyed by doc_id (the join key)
-    assert "Exchange hashpartitioning(doc_id" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Exchange rangepartitioning") == 1
-    assert "Exchange SinglePartition" not in plan
-
-
-def test_bucketed_layout_serves_second_consumers_exchange_free(spark):
-    """The layout is SHARED infrastructure (r13 VERDICT #6): after
-    ensure_bucketed_tables builds the pair once, OTHER consumers —
-    the nightly label report (a different aggregate over the same
-    join) and the coverage anti-join — also run with ZERO doc_id
-    exchange under their joins, and their values match the raw-parquet
-    computation."""
-    from pyspark.sql import functions as F
-
-    from examples.nightly_join import coverage_gaps, label_report
-    from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import ensure_bucketed_tables
-
-    dt, et = ensure_bucketed_tables(spark, SF)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        report = label_report(spark, dt, et)
-        gaps = coverage_gaps(spark, dt, et)
-        rplan = report._jdf.queryExecution().executedPlan().toString()
-        gplan = gaps._jdf.queryExecution().executedPlan().toString()
-        got = [tuple(r) for r in report.collect()]
-        n_gaps = gaps.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    for plan in (rplan, gplan):
-        assert "SortMergeJoin" in plan
-        assert plan.count("Bucketed: true") == 2
-        assert "Exchange hashpartitioning(doc_id" not in plan
-    # the label report's only shuffles: label aggregate + its ordering
-    assert rplan.count("Exchange hashpartitioning") == 1
-    # the anti join itself is completely exchange-free
-    assert "Exchange" not in gplan.split("SortMergeJoin")[1]
-    # values match the raw-parquet computation
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    raw = (
-        _t(spark, SF, "documents")
-        .join(emb.select(F.col("vec_id").alias("doc_id"), "label"), "doc_id")
-        .groupBy("label")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-        .orderBy("label")
-    )
-    assert got == [tuple(r) for r in raw.collect()]
-    n_raw_gaps = (
-        _t(spark, SF, "documents")
-        .join(
-            emb.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
-        )
-        .count()
-    )
-    assert n_gaps == n_raw_gaps

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from database_collector_spark import workloads5, workloads_r12
+from database_collector_spark import workloads5
 
 SF = "/root/testdata/sf0.001"
 
@@ -542,13 +542,3 @@ def test_corpus_diff_roundtrip_reconstructs_new_hashes(spark):
         for i, t in [(1, "a"), (2, "B"), (4, "d")]
     }
     assert rebuilt == expect
-
-
-def test_source_governance_quotas_sum_to_budget(spark):
-    """The composite's loader contract: Hamilton quotas over the
-    survivors sum EXACTLY to the budget — checked on the composed gate
-    output, not just the allocator's own property tests."""
-    out = workloads_r12.q_source_governance(spark, SF).collect()
-    assert sum(r["quota"] for r in out) == workloads_r12._GOV_BUDGET
-    for r in out:
-        assert 0 < r["n_kept"] <= r["n_docs"]

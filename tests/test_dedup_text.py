@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import Row
 
-from conftest import SF
-from database_collector_spark import workloads_r11, workloads_r13, workloads_r16
 from database_collector_spark.operators import dedup, text
 
 
@@ -500,62 +498,3 @@ def test_boundary_overlap_pairs_tolerates_docs_shorter_than_k(spark):
         for r in boundary_overlap_pairs(docs, k=4).collect()
     }
     assert got == {(2, 3): "tail one two three"}
-
-
-def test_substring_spans_are_maximal_and_covered(spark):
-    """Span contract: spans are >= k tokens, starts positive, and no two
-    spans of one doc overlap or touch (maximality: touching spans would
-    have merged)."""
-    rows = (
-        workloads_r11.QUERIES["substring_dedup"](spark, SF)
-        .orderBy("doc_id", "span_start")
-        .collect()
-    )
-    assert rows
-    k = workloads_r11._SUBSTR_K
-    prev = {}
-    for r in rows:
-        assert r["span_tokens"] >= k
-        assert r["span_start"] >= 1
-        assert r["span_end"] == r["span_start"] + r["span_tokens"] - 1
-        if r["doc_id"] in prev:
-            # islands split only when the position gap exceeds k, so
-            # distinct spans never overlap or touch (start >= prev
-            # end + 2); touching spans would have merged
-            assert r["span_start"] > prev[r["doc_id"]] + 1
-        prev[r["doc_id"]] = r["span_end"]
-
-
-def test_rule_attribution_marginals_reconcile(spark):
-    """The funnel contract: sum of marginals == number of documents
-    flagged by ANY rule (so survivors = n_docs - sum(marginals)
-    exactly), and each rule's marginal never exceeds its flag count."""
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import _rule_columns
-
-    rows = workloads_r13.q_rule_attribution(spark, SF).collect()
-    total_marginal = sum(r["n_marginal"] for r in rows)
-    for r in rows:
-        assert r["n_marginal"] <= r["n_flagged"], r
-    docs = _t(spark, SF, "documents")
-    any_rule = None
-    for _, pred in _rule_columns():
-        any_rule = pred if any_rule is None else (any_rule | pred)
-    flagged_any = docs.where(any_rule).count()
-    assert total_marginal == flagged_any
-    assert rows[0]["n_marginal"] == rows[0]["n_flagged"], (
-        "rule 0 has no prior rules; its marginal must equal its flag count"
-    )
-
-
-def test_zipf_head_fit_slopes_are_negative_at_fixture_scale(spark):
-    """Counts in the head strictly decrease with rank by construction,
-    so every language's fitted slope must be negative (a zero/positive
-    slope would mean a degenerate all-equal head — worth noticing)."""
-    rows = workloads_r16.q_zipf_head_fit(spark, SF).collect()
-    assert rows and all(
-        r["slope"] is None or r["slope"] < 0 for r in rows
-    )
-    assert any(r["slope"] is not None for r in rows)

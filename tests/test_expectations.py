@@ -8,8 +8,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from conftest import SF
-from database_collector_spark import workloads_r17
 from database_collector_spark.operators import expectations
 
 
@@ -243,58 +241,3 @@ def test_verify_bound_types_bool_rejected_decimal_accepted(spark):
         expectations.verify(df, max_null_frac={"v": True})
     report = expectations.verify(df, max_null_frac={"v": Decimal("0.05")})
     assert report[0]["passed"]
-
-
-def test_table_profile_is_one_scan_one_expand(spark):
-    """The profile's 100 TB contract: EVERY column's count/distinct
-    rides ONE pass — one scan of orders, the multi-distinct Expand, and
-    no per-column re-aggregation chain (adding a column must never add
-    a pass)."""
-    plan = (
-        workloads_r17.q_table_profile(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Scan parquet") + plan.count("FileScan") >= 1
-    # exactly one scan: a per-column loop would show one per column
-    assert plan.count("orders.parquet") == 1, plan[:2000]
-    assert "Expand" in plan
-
-
-def test_fk_orphan_report_joins_compressed_keys_not_fact_rows(spark):
-    """The anti join must consume the DISTINCT-key compressions: both
-    join inputs are aggregates, so no plan path joins raw fact rows."""
-    plan = (
-        workloads_r17.q_fk_orphan_report(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "LeftAnti" in plan
-    assert "BatchEvalPython" not in plan
-    # scalar totals attach via bounded single-row joins, and the only
-    # cartesian-free mechanism for those is broadcast
-    assert "CartesianProduct" not in plan
-
-
-def test_key_uniqueness_verdicts_and_conservation(spark):
-    """The fixture exercises both verdicts: doc_id is a key,
-    (lang, source) is the deliberate non-key. content_md5 is
-    SF-dependent (exact text duplicates exist at sf0.1 but not
-    sf0.001), so only its self-consistency is pinned here — each dup
-    key contributes at least 2 dup rows."""
-    rows = {
-        r["key_name"]: r
-        for r in workloads_r17.q_key_uniqueness(spark, SF).collect()
-    }
-    assert rows["doc_id"]["is_unique"] is True
-    assert rows["doc_id"]["n_dup_rows"] == 0
-    assert rows["lang_source"]["is_unique"] is False
-    assert rows["lang_source"]["n_dup_rows"] > rows["lang_source"]["n_dup_keys"]
-    cm = rows["content_md5"]
-    assert cm["n_dup_rows"] >= 2 * cm["n_dup_keys"]
-    assert cm["is_unique"] is (cm["n_dup_keys"] == 0)
-    # conservation: every key set partitions the same row count
-    n = {r["n_rows"] for r in rows.values()}
-    assert len(n) == 1

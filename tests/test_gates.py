@@ -7,7 +7,6 @@ from the filesystem."""
 from __future__ import annotations
 
 import glob
-import importlib.util
 import os
 import subprocess
 import sys
@@ -16,16 +15,8 @@ from concurrent.futures import ThreadPoolExecutor
 import duckdb
 import pytest
 
-from conftest import SF
+from conftest import ROOT, SF, assert_no_row_python_or_cartesian, check
 from database_collector_spark import gates
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-_spec = importlib.util.spec_from_file_location(
-    "check", os.path.join(ROOT, "tools", "check.py")
-)
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
 
 QUERIES = gates.all_queries()
 ORACLES = gates.all_oracles()
@@ -49,16 +40,11 @@ def duck():
 
 
 @pytest.mark.parametrize("name", list(QUERIES))
-def test_gate_matches_oracle(spark, duck, name):
+def test_gate_matches_oracle(spark, gate_plan, duck, name):
     con, pool = duck
     oracle = pool.submit(_oracle_canon, con, ORACLES[name])
     df = QUERIES[name](spark, SF)
-    # Arrow-batched Python (MapInPandas, FlatMapGroupsInPandas) is the
-    # sanctioned slow path; row-at-a-time Python and unbroadcast cartesian
-    # products are not.
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+    assert_no_row_python_or_cartesian(name, gate_plan(name, df))
 
     s_cols, s_canon = check.canon_rows(df.columns, [tuple(r) for r in df.collect()])
     o_cols, o_canon = oracle.result()

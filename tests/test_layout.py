@@ -7,7 +7,6 @@ from __future__ import annotations
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from conftest import SF
 from database_collector_spark.operators import layout
 
 
@@ -51,46 +50,3 @@ def test_zorder_repartition_plan_is_range_partitioned(spark):
     assert "Sort" in plan
     # whole pipeline stays JVM-side
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_range_layout_example_partitions_are_equi_depth(spark, tmp_path):
-    """The range_splitters consumer one level up (examples/
-    range_layout.py): exact splitters -> zero-shuffle range ids ->
-    partitioned write; every partition's size is within one
-    splitter-tie of n/8, and the band query's partition set is
-    sufficient (contains every matching row)."""
-    from examples.range_layout import (
-        plan_splitters,
-        price_band_ranges,
-        range_id_col,
-        write_range_layout,
-    )
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.workloads import _t
-
-    out = str(tmp_path / "layout")
-    splitters = plan_splitters(spark, SF)
-    assert splitters == sorted(splitters) and len(splitters) == 7
-    write_range_layout(spark, SF, out, splitters)
-    laid = spark.read.parquet(out)
-    n = laid.count()
-    sizes = {r["range_id"]: r["c"] for r in laid.groupBy("range_id").agg(
-        F.count("*").alias("c")).collect()}
-    assert set(sizes) == set(range(8))
-    # equi-depth up to ties: each range holds ceil-ish n/8 except where
-    # a heavy tie class straddles a boundary; bound loosely at 2x
-    for rid, c in sizes.items():
-        assert c <= 2 * (n // 8 + 1), (rid, c, n)
-    # consume-side partition set is SUFFICIENT: filtering the full
-    # table vs the pruned partitions agrees
-    lo, hi = splitters[1], splitters[4]
-    wanted = price_band_ranges(splitters, lo, hi)
-    full = laid.where(F.col("cents").between(lo, hi)).count()
-    pruned = laid.where(
-        F.col("range_id").isin(wanted) & F.col("cents").between(lo, hi)
-    ).count()
-    assert full == pruned > 0
-    # and the in-row assignment matches a recomputation from raw data
-    li = _t(spark, SF, "lineitem").where(F.col("l_extendedprice").isNotNull())
-    assert li.count() == n

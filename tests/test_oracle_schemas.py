@@ -11,50 +11,26 @@ before any driver row exists.
 
 from __future__ import annotations
 
-import importlib.util
-import os
-
-import duckdb
 import pytest
 
+from conftest import check as _check
 from database_collector_spark import gates
-
-SF_DIR = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 # Shared predicate with the local harness and both staged meta-tests:
 # bans HUGEINT/UHUGEINT (r7 map_funcs — Arrow has no int128),
 # TIMESTAMPTZ/TIMETZ (r8 sliding_unique_* — tz-aware vs naive dtype
 # mismatch), and ANY nested final type whose string contains [] /
 # STRUCT / MAP / UNION (r9 jl_projection — pandas canonicalization
-# cannot hash list cells). One predicate, one place to widen.
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_spec = importlib.util.spec_from_file_location(
-    "check", os.path.join(_ROOT, "tools", "check.py")
-)
-_check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(_check)
+# cannot hash list cells). One predicate, one place to widen:
+# tools/check.py::unportable_type.
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in TABLES:
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def test_no_oracle_final_column_is_int128(con):
+def test_no_oracle_final_column_is_int128(oracle_con):
     bad: list[str] = []
     errs: list[str] = []
     for name, sql in gates.all_oracles().items():
         try:
-            rel = con.sql(f"SELECT * FROM ({sql}) __q LIMIT 0")
+            rel = oracle_con.sql(f"SELECT * FROM ({sql}) __q LIMIT 0")
         except Exception as e:  # an unparseable oracle is its own failure
             errs.append(f"{name}: {e}")
             continue

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import pytest
 
-from database_collector_spark import workloads_r13, workloads_r14
-
 SF = "/root/testdata/sf0.001"
 
 
@@ -564,6 +562,28 @@ def test_funnel_has_no_join_and_two_shrinking_exchanges(spark):
     plan = _plan(q_funnel_steps(spark, SF))
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 2
+
+
+def test_no_query_uses_row_python_or_cartesian(gate_plan):
+    # blanket invariant over the ENTIRE gate surface: no row-at-a-time
+    # Python UDF (BatchEvalPython) and no CartesianProduct in any query's
+    # physical plan. Arrow-batched Python (ArrowEvalPython / MapInPandas /
+    # FlatMapGroupsInPandas) is the sanctioned slow path; broadcast
+    # nested-loop is allowed only for deliberate 1-row scalar attaches.
+    # The plans are the ones test_gates.py recorded when it ran first.
+    import __spark_entry__ as entrymod
+
+    offenders = {}
+    for name in entrymod.queries():
+        plan = gate_plan(name)
+        bad = []
+        if "BatchEvalPython" in plan:
+            bad.append("BatchEvalPython")
+        if "CartesianProduct" in plan:
+            bad.append("CartesianProduct")
+        if bad:
+            offenders[name] = bad
+    assert not offenders, f"scale-killers in plans: {offenders}"
 
 
 def test_interval_join_is_equi_join_on_bucket_and_key(spark):
@@ -1249,76 +1269,3 @@ def test_approx_quantiles_exact_side_never_buffers_percentile(spark):
     assert "percentile_approx" in plan  # the operator under test stays
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_new_eval_gate_plans_stay_parallel(spark):
-    """Plan pins for the r12-second-wave staged gates: map_quality's
-    two ranking windows get the rank-limit pushdown (tasks keep k rows
-    before the per-group sort) and nothing funnels to one partition;
-    cohen_kappa is ONE keyed aggregate shuffle (its joins broadcast);
-    hard_negatives broadcasts the bounded anchor batch (BNLJ — the
-    probe stream stays map-side) and its per-anchor top-k window is
-    group-limit pushed."""
-    plans = {
-        name: workloads_r13.QUERIES[name](spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        for name in ("map_quality", "cohen_kappa", "hard_negatives")
-    }
-    for name, plan in plans.items():
-        assert plan.count("Exchange SinglePartition") == 0, name
-    assert plans["map_quality"].count("WindowGroupLimit") >= 2
-    assert plans["cohen_kappa"].count("Exchange hashpartitioning") == 1
-    assert "SortMergeJoin" not in plans["cohen_kappa"]
-    assert plans["hard_negatives"].count("BroadcastNestedLoopJoin") == 1
-    assert "SortMergeJoin" not in plans["hard_negatives"]
-    assert plans["hard_negatives"].count("WindowGroupLimit") >= 2
-
-
-def test_ks_separation_single_partitions_are_guard_only(spark):
-    """ks_statistic inherits auc_exact's whole scale argument; pin it
-    structurally — every SinglePartition exchange in the gate must be
-    the prefix core's bounded rng guard (count-over-() window above,
-    rng min/max aggregate below), never a corpus gather or sort."""
-    plan = (
-        workloads_r14.q_ks_separation(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    _assert_single_partition_is_guard_only(plan)
-
-
-@pytest.mark.parametrize("gate", ["pr_curve_sweep", "lift_deciles"])
-def test_curve_gates_single_partitions_are_bounded_aggregates(spark, gate):
-    """The curve gates ride the ungrouped calibration core: legitimate
-    SinglePartition exchanges are bounded post-aggregate gathers (the
-    <=65536-row `_cell#` histogram, the <= n_bins `bin#` table, scalar
-    totals) — each occurrence's child must be an aggregate and any
-    sorted consumer must sort one of those bounded keys, so a
-    corpus-sized funnel fails structurally regardless of occurrence
-    count (the r11 ADVICE stance)."""
-    plan = (
-        workloads_r14.QUERIES[gate](spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    _assert_single_partition_inputs_bounded(
-        plan,
-        child_markers=("HashAggregate",),
-        sorted_key_markers=("bin#", "_cell#"),
-    )
-
-
-def test_rank_select_gates_broadcast_their_candidate_joins(spark):
-    """The order-statistics and robust-statistics gates on
-    rank_select_by_group: candidate and stat joins broadcast; the
-    per-group-window/SMJ funnel shapes must never return."""
-    from database_collector_spark import workloads_r18, workloads_r19
-
-    for name, fn in {**workloads_r18.QUERIES, **workloads_r19.QUERIES}.items():
-        plan = _plan(fn(spark, SF))
-        assert "BroadcastHashJoin" in plan, f"{name}: candidate join not broadcast"
-        assert "SortMergeJoin" not in plan, f"{name}: SMJ crept in"

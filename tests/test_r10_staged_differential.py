@@ -1,141 +1,40 @@
-"""Differential verification of the STAGED r10 gates (workloads_r10.py)
-against their DuckDB oracles — the exact comparison tools/check.py (and
-the external driver) runs: row count, sorted column names,
-order-insensitive canonical value hash. Run at sf0.001 so the suite
-stays fast; the r10 registration round re-runs everything at sf0.01
-through the normal harness (`tools/check.py --staged` does it today).
-
-Also LIMIT-0-sweeps the staged oracles for Arrow-unportable final
-column types (HUGEINT int128 and TIMESTAMPTZ — the map_funcs and
-sliding_unique failure classes) so the staged twins enter r10 already
-clean.
-
-Verdict-tolerance provenance (the sketch-gate protocol): the HLL
-verdict bounds were set from measured max error against the exact twin
-— sliding max(20%, ±15) vs measured max abs error 6.47 / rel 23.5% at
-sf0.1 (14,415 windows) and 1.99 abs at sf0.01; rollup max(15%, ±10) vs
-measured 5.7% rel / 85.5 abs at sf0.1 (0.15*1500 = 225, 2.6x margin).
+"""The workloads_r10 cohort: its registry bookkeeping. Every gate's
+differential against its DuckDB twin and its plan check for
+row-at-a-time Python and cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
-import pytest
-
+from conftest import (
+    assert_module_documented,
+    assert_module_registered,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+    assert_registration_composes,
+)
 from database_collector_spark import workloads_r10
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r10.QUERIES_R10) == set(workloads_r10.ORACLES_R10)
+    assert set(workloads_r10.QUERIES) == set(workloads_r10.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    # Shared predicate (tools/check.py::unportable_type) bans the exact
-    # scalar names (HUGEINT/TIMESTAMPTZ classes) AND any nested type
-    # ([], STRUCT, MAP, UNION — the r9 jl_projection class).
-    for name, sql in workloads_r10.ORACLES_R10.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r10.ORACLES)
 
 
-@pytest.mark.parametrize("name", sorted(workloads_r10.QUERIES_R10))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r10.QUERIES_R10[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r10.ORACLES_R10[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(spark):
-    """The blanket plan invariant the registered gates get from
-    test_plan_quality.py, applied at staging time: nothing in the r10
-    tier may fall back to row-at-a-time Python eval or an unbroadcast
-    cartesian product."""
-    for name, fn in workloads_r10.QUERIES_R10.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
+    for name in workloads_r10.QUERIES:
+        assert_no_row_python_or_cartesian(name, gate_plan(name))
 
 
 def test_every_staged_gate_is_documented_and_window_headed():
-    # the r10 cohort REGISTERED in round 10 and rotated OUT in round 11:
-    # every gate must carry a driver CORRECTNESS row from some past
-    # round (or sit in the current window awaiting one) and a
-    # REGISTERED r10 COVERAGE row naming it
-    import glob
-    import json
-
-    import __spark_entry__ as entrymod
-
-    seen: set[str] = set()
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        with open(f) as fh:
-            seen |= set(json.load(fh))
-    cov = open("/root/repo/COVERAGE.md").read()
-    for name in workloads_r10.QUERIES_R10:
-        assert name in seen or name in entrymod._CHECK_FIRST, (
-            f"{name}: no driver row and not in the current window"
-        )
-        assert f"`{name}`" in cov, f"{name} missing a COVERAGE row"
-    assert cov.count("REGISTERED r10") == len(workloads_r10.QUERIES_R10), (
-        "REGISTERED r10 COVERAGE rows must be 1:1 with the r10 cohort"
-    )
+    assert_module_documented(workloads_r10, "r10")
 
 
 def test_r10_cohort_is_fully_registered():
-    # the inverse of the pre-registration shadow check: since round 10
-    # every r10 name must resolve in the REGISTERED surface with the
-    # module's own callable/SQL (the _ordered merge must not have
-    # dropped or shadowed any)
-    import __spark_entry__ as entrymod
-
-    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
-    for name in workloads_r10.QUERIES_R10:
-        assert qs[name] is workloads_r10.QUERIES_R10[name], name
-        assert os_[name] == workloads_r10.ORACLES_R10[name], name
+    assert_module_registered(workloads_r10)
 
 
-def test_r10_registration_dry_run_composes(spark):
-    """Simulate the r10 registration: merging QUERIES_R10/ORACLES_R10
-    into the registered dicts must yield a 1:1 query/oracle surface
-    where every staged name resolves."""
-    import __spark_entry__ as entrymod
-
-    q = {**entrymod.queries(), **workloads_r10.QUERIES_R10}
-    o = {**entrymod.oracle_sql(), **workloads_r10.ORACLES_R10}
-    assert set(q) == set(o)
-    for name in workloads_r10.QUERIES_R10:
-        assert callable(q[name]) and isinstance(o[name], str)
+def test_r10_registration_dry_run_composes(gate_plan):
+    assert_registration_composes(workloads_r10, gate_plan)

@@ -1,142 +1,46 @@
-"""Differential verification of the STAGED r12 gates (workloads_r12.py)
-against their DuckDB oracles — the exact comparison tools/check.py (and
-the external driver) runs: row count, sorted column names,
-order-insensitive canonical value hash. Run at sf0.001 so the suite
-stays fast; the registration round re-runs everything at sf0.01 through
-the normal harness (`tools/check.py --staged` does it today).
-
-Also LIMIT-0-sweeps the staged oracles through the shared portability
-predicate (tools/check.py::unportable_type — HUGEINT/TIMESTAMPTZ scalar
-classes AND any nested []/STRUCT/MAP/UNION final type) so the staged
-twins enter r12 already clean.
+"""The workloads_r12 cohort: its registry bookkeeping, the brute-force
+references of the banded pair core (Kendall tau, Theil-Sen), calibration
+curve and grouped quantiles, and the source-governance budget. Every
+gate's differential against its DuckDB twin and its plan check for
+row-at-a-time Python and cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
-import pytest
-
+from conftest import (
+    SF,
+    assert_module_documented,
+    assert_module_registered,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+    assert_registration_composes,
+)
 from database_collector_spark import workloads_r12
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r12.QUERIES_R12) == set(workloads_r12.ORACLES_R12)
+    assert set(workloads_r12.QUERIES) == set(workloads_r12.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    for name, sql in workloads_r12.ORACLES_R12.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r12.ORACLES)
 
 
-@pytest.mark.parametrize("name", sorted(workloads_r12.QUERIES_R12))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r12.QUERIES_R12[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r12.ORACLES_R12[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(spark):
-    """The blanket plan invariant the registered gates get from
-    test_plan_quality.py, applied at staging time: nothing in the r12
-    tier may fall back to row-at-a-time Python eval or an unbroadcast
-    cartesian product."""
-    for name, fn in workloads_r12.QUERIES_R12.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
+    for name in workloads_r12.QUERIES:
+        assert_no_row_python_or_cartesian(name, gate_plan(name))
 
 
 def test_every_staged_gate_is_documented_and_window_headed():
-    # the r12 cohort REGISTERED in round 12: every gate must either sit
-    # in the live check window (awaiting its driver row) or already
-    # carry one from a past round — the rotation-proof form (the
-    # window-membership-only assertion broke the moment the cohort
-    # rotated out of the window, same as the r10->r11 transition) —
-    # and have a REGISTERED r12 COVERAGE row naming it
-    import __spark_entry__ as entrymod
-    from conftest import driver_evidenced_gates
-
-    seen = driver_evidenced_gates()
-    cov = open("/root/repo/COVERAGE.md").read()
-    for name in workloads_r12.QUERIES_R12:
-        assert name in seen or name in entrymod._CHECK_FIRST, (
-            f"{name}: no driver row and not in the current window"
-        )
-        assert f"`{name}`" in cov, f"{name} missing a COVERAGE row"
-    assert cov.count("REGISTERED r12") == len(workloads_r12.QUERIES_R12), (
-        "REGISTERED r12 COVERAGE rows must be 1:1 with the r12 cohort"
-    )
+    assert_module_documented(workloads_r12, "r12")
 
 
 def test_r12_cohort_is_fully_registered():
-    # the inverse of the pre-registration shadow check: since round 12
-    # every r12 name must resolve in the REGISTERED surface with the
-    # module's own callable/SQL (the _ordered merge must not have
-    # dropped or shadowed any)
-    import __spark_entry__ as entrymod
-
-    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
-    for name in workloads_r12.QUERIES_R12:
-        assert qs[name] is workloads_r12.QUERIES_R12[name], name
-        assert os_[name] == workloads_r12.ORACLES_R12[name], name
+    assert_module_registered(workloads_r12)
 
 
-def test_r12_registration_dry_run_composes(spark):
-    """Simulate the r12 registration: merging QUERIES_R12/ORACLES_R12
-    into the registered dicts must yield a 1:1 query/oracle surface
-    where every staged name resolves."""
-    import __spark_entry__ as entrymod
-
-    q = {**entrymod.queries(), **workloads_r12.QUERIES_R12}
-    o = {**entrymod.oracle_sql(), **workloads_r12.ORACLES_R12}
-    assert set(q) == set(o)
-    for name in workloads_r12.QUERIES_R12:
-        assert callable(q[name]) and isinstance(o[name], str)
-
-
-def test_source_governance_quotas_sum_to_budget(spark):
-    """The composite's loader contract: Hamilton quotas over the
-    survivors sum EXACTLY to the budget — checked on the composed gate
-    output, not just the allocator's own property tests."""
-    out = workloads_r12.q_source_governance(spark, SF).collect()
-    assert sum(r["quota"] for r in out) == workloads_r12._GOV_BUDGET
-    for r in out:
-        assert 0 < r["n_kept"] <= r["n_docs"]
+def test_r12_registration_dry_run_composes(gate_plan):
+    assert_registration_composes(workloads_r12, gate_plan)
 
 
 def test_kendall_tau_matches_brute_force(spark):
@@ -298,3 +202,13 @@ def test_quantiles_by_group_matches_brute_force(spark):
         exp = [vals[math.ceil(m * n / 4) - 1] for m in (1, 2, 3)]
         r = got[g]
         assert (r["n"], r["p25"], r["p50"], r["p75"]) == (n, *exp), g
+
+
+def test_source_governance_quotas_sum_to_budget(spark):
+    """The composite's loader contract: Hamilton quotas over the
+    survivors sum EXACTLY to the budget — checked on the composed gate
+    output, not just the allocator's own property tests."""
+    out = workloads_r12.q_source_governance(spark, SF).collect()
+    assert sum(r["quota"] for r in out) == workloads_r12._GOV_BUDGET
+    for r in out:
+        assert 0 < r["n_kept"] <= r["n_docs"]

@@ -1,173 +1,128 @@
-"""Differential verification of the STAGED r13 gates (workloads_r13.py)
-against their DuckDB oracles — the exact comparison tools/check.py (and
-the external driver) runs: row count, sorted column names,
-order-insensitive canonical value hash. Run at sf0.001 so the suite
-stays fast; the registration round re-runs everything at sf0.01 through
-the normal harness (`tools/check.py --staged` does it today).
-
-Also LIMIT-0-sweeps the staged oracles through the shared portability
-predicate (tools/check.py::unportable_type), pins the bucketed gate's
-zero-exchange sort-merge plan, audits that the refine escape hatch
-ACTUALLY re-grids on the quantiles_refined domain, and runs the
-fixed-bin calibration operator as a Structured Streaming update-mode
-aggregate whose end-state must equal the batch twin (the
-ttl_expiry_counts pattern).
+"""The workloads_r13 cohort: its registry bookkeeping, the bucketed
+sort-merge pins, the refined-quantile re-grid audit, the fixed-bin
+calibration stream-vs-batch end state, and the MAP@k / Cohen's kappa /
+hard-negative references. Every gate's differential against its DuckDB
+twin and its plan check for row-at-a-time Python and cartesian products
+run in test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import os
 import tempfile
 
-import duckdb
 import pytest
 
+from conftest import (
+    SF,
+    assert_module_documented,
+    assert_module_registered,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+    assert_registration_composes,
+)
 from database_collector_spark import workloads_r13
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r13.QUERIES_R13) == set(workloads_r13.ORACLES_R13)
+    assert set(workloads_r13.QUERIES) == set(workloads_r13.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    for name, sql in workloads_r13.ORACLES_R13.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r13.ORACLES)
 
 
-@pytest.mark.parametrize("name", sorted(workloads_r13.QUERIES_R13))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r13.QUERIES_R13[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r13.ORACLES_R13[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
+def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
+    for name in workloads_r13.QUERIES:
+        assert_no_row_python_or_cartesian(name, gate_plan(name))
 
 
-def test_staged_plans_have_no_python_udfs_or_cartesians(spark):
-    """The blanket plan invariant the registered gates get from
-    test_plan_quality.py, applied at staging time: nothing in the r13
-    tier may fall back to row-at-a-time Python eval or an unbroadcast
-    cartesian product."""
-    for name, fn in workloads_r13.QUERIES_R13.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+def test_every_staged_gate_is_documented_and_window_headed():
+    assert_module_documented(workloads_r13, "r13")
 
 
-def test_bucketed_join_is_exchange_free_when_smj_forced(spark):
-    """At fixture scale Catalyst rightly broadcasts the tiny side; the
-    100 TB claim is the SORT-MERGE path (both sides too big to
-    broadcast), where bucketing must elide the exchanges entirely.
-    Force it by disabling broadcast and pin: SMJ, ZERO exchange of any
-    kind under the join (the only shuffles in the whole gate are the
-    final per-lang aggregate + its ordering), bucketed scans on both
-    sides."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            workloads_r13.q_bucketed_join_persist(spark, SF)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
+def test_r13_cohort_is_fully_registered():
+    assert_module_registered(workloads_r13)
+
+
+def test_r13_registration_dry_run_composes(gate_plan):
+    assert_registration_composes(workloads_r13, gate_plan)
+
+
+def test_hard_negatives_subset_of_restricted_topk(spark):
+    """Every mined pair satisfies both predicates, and the result equals
+    cosine_topk run over the candidate set restricted to negatives (the
+    operator must prune the stream, not re-rank differently)."""
+    from database_collector_spark.operators import similarity
+    from database_collector_spark.workloads import _t
+
+    emb = _t(spark, SF, "embeddings")
+    got = similarity.hard_negatives(
+        emb, anchor_filter="vec_id < 10 AND label >= 5",
+        negative_filter="label < 5", k=3,
+    ).collect()
+    assert got, "fixture must yield at least one anchor"
+    anchors = {
+        r["vec_id"] for r in emb.filter("vec_id < 10 AND label >= 5")
+        .select("vec_id").collect()
+    }
+    negatives = {
+        r["vec_id"] for r in emb.filter("label < 5").select("vec_id").collect()
+    }
+    for r in got:
+        assert r["q_id"] in anchors and r["c_id"] in negatives
+    # brute-force reference with the operator's own quantization
+    # (round(x * 2^20) int dots, one double division), negatives-only
+    # candidate set — cosine_topk can't express that (its candidate
+    # side is the whole input), which is exactly why the operator exists
+    vecs = {
+        r["vec_id"]: [round(float(x) * 1048576) for x in r["embedding"]]
+        for r in emb.select("vec_id", "embedding").collect()
+    }
+    import math
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(vecs[a], vecs[b]))
+        return dot / (
+            math.sqrt(float(sum(x * x for x in vecs[a])))
+            * math.sqrt(float(sum(x * x for x in vecs[b])))
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    assert plan.count("Bucketed: true") == 2, plan[:2000]
-    # exchanges: exactly the per-lang aggregate shuffle + the orderBy
-    # range partitioning — NONE keyed by doc_id (the join key)
-    assert "Exchange hashpartitioning(doc_id" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Exchange rangepartitioning") == 1
-    assert "Exchange SinglePartition" not in plan
+
+    expected = set()
+    for q in anchors:
+        scored = sorted(
+            ((-cos(q, c), c) for c in negatives if c != q)
+        )[:3]
+        expected |= {
+            (q, c, round(-n, 6), i + 1) for i, (n, c) in enumerate(scored)
+        }
+    got_pairs = {(r["q_id"], r["c_id"], r["cos"], r["rank"]) for r in got}
+    assert got_pairs == expected
 
 
-def test_bucketed_layout_serves_second_consumers_exchange_free(spark):
-    """The layout is SHARED infrastructure (r13 VERDICT #6): after
-    ensure_bucketed_tables builds the pair once, OTHER consumers —
-    the nightly label report (a different aggregate over the same
-    join) and the coverage anti-join — also run with ZERO doc_id
-    exchange under their joins, and their values match the raw-parquet
-    computation."""
+def test_rule_attribution_marginals_reconcile(spark):
+    """The funnel contract: sum of marginals == number of documents
+    flagged by ANY rule (so survivors = n_docs - sum(marginals)
+    exactly), and each rule's marginal never exceeds its flag count."""
     from pyspark.sql import functions as F
 
-    from examples.nightly_join import coverage_gaps, label_report
     from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import ensure_bucketed_tables
+    from database_collector_spark.workloads_r13 import _rule_columns
 
-    dt, et = ensure_bucketed_tables(spark, SF)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        report = label_report(spark, dt, et)
-        gaps = coverage_gaps(spark, dt, et)
-        rplan = report._jdf.queryExecution().executedPlan().toString()
-        gplan = gaps._jdf.queryExecution().executedPlan().toString()
-        got = [tuple(r) for r in report.collect()]
-        n_gaps = gaps.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    for plan in (rplan, gplan):
-        assert "SortMergeJoin" in plan
-        assert plan.count("Bucketed: true") == 2
-        assert "Exchange hashpartitioning(doc_id" not in plan
-    # the label report's only shuffles: label aggregate + its ordering
-    assert rplan.count("Exchange hashpartitioning") == 1
-    # the anti join itself is completely exchange-free
-    assert "Exchange" not in gplan.split("SortMergeJoin")[1]
-    # values match the raw-parquet computation
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    raw = (
-        _t(spark, SF, "documents")
-        .join(emb.select(F.col("vec_id").alias("doc_id"), "label"), "doc_id")
-        .groupBy("label")
-        .agg(F.count("*").cast("long").alias("n_docs"))
-        .orderBy("label")
+    rows = workloads_r13.q_rule_attribution(spark, SF).collect()
+    total_marginal = sum(r["n_marginal"] for r in rows)
+    for r in rows:
+        assert r["n_marginal"] <= r["n_flagged"], r
+    docs = _t(spark, SF, "documents")
+    any_rule = None
+    for _, pred in _rule_columns():
+        any_rule = pred if any_rule is None else (any_rule | pred)
+    flagged_any = docs.where(any_rule).count()
+    assert total_marginal == flagged_any
+    assert rows[0]["n_marginal"] == rows[0]["n_flagged"], (
+        "rule 0 has no prior rules; its marginal must equal its flag count"
     )
-    assert got == [tuple(r) for r in raw.collect()]
-    n_raw_gaps = (
-        _t(spark, SF, "documents")
-        .join(
-            emb.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
-        )
-        .count()
-    )
-    assert n_gaps == n_raw_gaps
 
 
 def test_quantiles_refined_regrids_the_degenerate_cell(spark):
@@ -216,30 +171,6 @@ def test_quantiles_refined_regrids_the_degenerate_cell(spark):
     ref = max_bucket_share(True)
     assert unref > 0.9, f"domain not degenerate enough: unrefined share {unref}"
     assert ref < 0.25, f"refine did not spread the bulk: refined share {ref}"
-
-
-def test_rule_attribution_marginals_reconcile(spark):
-    """The funnel contract: sum of marginals == number of documents
-    flagged by ANY rule (so survivors = n_docs - sum(marginals)
-    exactly), and each rule's marginal never exceeds its flag count."""
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import _rule_columns
-
-    rows = workloads_r13.q_rule_attribution(spark, SF).collect()
-    total_marginal = sum(r["n_marginal"] for r in rows)
-    for r in rows:
-        assert r["n_marginal"] <= r["n_flagged"], r
-    docs = _t(spark, SF, "documents")
-    any_rule = None
-    for _, pred in _rule_columns():
-        any_rule = pred if any_rule is None else (any_rule | pred)
-    flagged_any = docs.where(any_rule).count()
-    assert total_marginal == flagged_any
-    assert rows[0]["n_marginal"] == rows[0]["n_flagged"], (
-        "rule 0 has no prior rules; its marginal must equal its flag count"
-    )
 
 
 def test_fixed_bin_calibration_stream_end_state_matches_batch(spark):
@@ -301,54 +232,6 @@ def test_fixed_bin_calibration_stream_end_state_matches_batch(spark):
     )
     expected = {r["bin"]: tuple(r) for r in batch.collect()}
     assert latest == expected
-
-
-def test_every_staged_gate_is_documented_and_window_headed():
-    # the r13 cohort REGISTERED in round 13: every gate must either sit
-    # in the live check window (awaiting its driver row) or already
-    # carry one from a past round — the rotation-proof form (a
-    # window-membership-only assertion breaks the round the cohort
-    # rotates out; bitten at the r10->r11 AND r12->r13 transitions) —
-    # and have a REGISTERED r13 COVERAGE row naming it
-    import __spark_entry__ as entrymod
-    from conftest import driver_evidenced_gates
-
-    seen = driver_evidenced_gates()
-    cov = open("/root/repo/COVERAGE.md").read()
-    for name in workloads_r13.QUERIES_R13:
-        assert name in seen or name in entrymod._CHECK_FIRST, (
-            f"{name}: no driver row and not in the current window"
-        )
-        assert f"`{name}`" in cov, f"{name} missing a COVERAGE row"
-    assert cov.count("REGISTERED r13") == len(workloads_r13.QUERIES_R13), (
-        "REGISTERED r13 COVERAGE rows must be 1:1 with the r13 cohort"
-    )
-
-
-def test_r13_cohort_is_fully_registered():
-    # the inverse of the pre-registration shadow check: since round 13
-    # every r13 name must resolve in the REGISTERED surface with the
-    # module's own callable/SQL (the _ordered merge must not have
-    # dropped or shadowed any)
-    import __spark_entry__ as entrymod
-
-    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
-    for name in workloads_r13.QUERIES_R13:
-        assert qs[name] is workloads_r13.QUERIES_R13[name], name
-        assert os_[name] == workloads_r13.ORACLES_R13[name], name
-
-
-def test_r13_registration_dry_run_composes(spark):
-    """Simulate the r13 registration: merging QUERIES_R13/ORACLES_R13
-    into the registered dicts must yield a 1:1 query/oracle surface
-    where every staged name resolves."""
-    import __spark_entry__ as entrymod
-
-    q = {**entrymod.queries(), **workloads_r13.QUERIES_R13}
-    o = {**entrymod.oracle_sql(), **workloads_r13.ORACLES_R13}
-    assert set(q) == set(o)
-    for name in workloads_r13.QUERIES_R13:
-        assert callable(q[name]) and isinstance(o[name], str)
 
 
 def test_fixed_bin_calibration_validates_params(spark):
@@ -450,55 +333,87 @@ def test_cohen_kappa_matches_hand_computation(spark):
     assert out["ge"]["kappa"] is None
 
 
-def test_hard_negatives_subset_of_restricted_topk(spark):
-    """Every mined pair satisfies both predicates, and the result equals
-    cosine_topk run over the candidate set restricted to negatives (the
-    operator must prune the stream, not re-rank differently)."""
-    from database_collector_spark.operators import similarity
-    from database_collector_spark.workloads import _t
-
-    emb = _t(spark, SF, "embeddings")
-    got = similarity.hard_negatives(
-        emb, anchor_filter="vec_id < 10 AND label >= 5",
-        negative_filter="label < 5", k=3,
-    ).collect()
-    assert got, "fixture must yield at least one anchor"
-    anchors = {
-        r["vec_id"] for r in emb.filter("vec_id < 10 AND label >= 5")
-        .select("vec_id").collect()
-    }
-    negatives = {
-        r["vec_id"] for r in emb.filter("label < 5").select("vec_id").collect()
-    }
-    for r in got:
-        assert r["q_id"] in anchors and r["c_id"] in negatives
-    # brute-force reference with the operator's own quantization
-    # (round(x * 2^20) int dots, one double division), negatives-only
-    # candidate set — cosine_topk can't express that (its candidate
-    # side is the whole input), which is exactly why the operator exists
-    vecs = {
-        r["vec_id"]: [round(float(x) * 1048576) for x in r["embedding"]]
-        for r in emb.select("vec_id", "embedding").collect()
-    }
-    import math
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(vecs[a], vecs[b]))
-        return dot / (
-            math.sqrt(float(sum(x * x for x in vecs[a])))
-            * math.sqrt(float(sum(x * x for x in vecs[b])))
+def test_bucketed_join_is_exchange_free_when_smj_forced(spark):
+    """At fixture scale Catalyst rightly broadcasts the tiny side; the
+    100 TB claim is the SORT-MERGE path (both sides too big to
+    broadcast), where bucketing must elide the exchanges entirely.
+    Force it by disabling broadcast and pin: SMJ, ZERO exchange of any
+    kind under the join (the only shuffles in the whole gate are the
+    final per-lang aggregate + its ordering), bucketed scans on both
+    sides."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = (
+            workloads_r13.q_bucketed_join_persist(spark, SF)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
         )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "SortMergeJoin" in plan
+    assert "BroadcastHashJoin" not in plan
+    assert plan.count("Bucketed: true") == 2, plan[:2000]
+    # exchanges: exactly the per-lang aggregate shuffle + the orderBy
+    # range partitioning — NONE keyed by doc_id (the join key)
+    assert "Exchange hashpartitioning(doc_id" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("Exchange rangepartitioning") == 1
+    assert "Exchange SinglePartition" not in plan
 
-    expected = set()
-    for q in anchors:
-        scored = sorted(
-            ((-cos(q, c), c) for c in negatives if c != q)
-        )[:3]
-        expected |= {
-            (q, c, round(-n, 6), i + 1) for i, (n, c) in enumerate(scored)
-        }
-    got_pairs = {(r["q_id"], r["c_id"], r["cos"], r["rank"]) for r in got}
-    assert got_pairs == expected
+
+def test_bucketed_layout_serves_second_consumers_exchange_free(spark):
+    """The layout is SHARED infrastructure (r13 VERDICT #6): after
+    ensure_bucketed_tables builds the pair once, OTHER consumers —
+    the nightly label report (a different aggregate over the same
+    join) and the coverage anti-join — also run with ZERO doc_id
+    exchange under their joins, and their values match the raw-parquet
+    computation."""
+    from pyspark.sql import functions as F
+
+    from examples.nightly_join import coverage_gaps, label_report
+    from database_collector_spark.workloads import _t
+    from database_collector_spark.workloads_r13 import ensure_bucketed_tables
+
+    dt, et = ensure_bucketed_tables(spark, SF)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        report = label_report(spark, dt, et)
+        gaps = coverage_gaps(spark, dt, et)
+        rplan = report._jdf.queryExecution().executedPlan().toString()
+        gplan = gaps._jdf.queryExecution().executedPlan().toString()
+        got = [tuple(r) for r in report.collect()]
+        n_gaps = gaps.count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    for plan in (rplan, gplan):
+        assert "SortMergeJoin" in plan
+        assert plan.count("Bucketed: true") == 2
+        assert "Exchange hashpartitioning(doc_id" not in plan
+    # the label report's only shuffles: label aggregate + its ordering
+    assert rplan.count("Exchange hashpartitioning") == 1
+    # the anti join itself is completely exchange-free
+    assert "Exchange" not in gplan.split("SortMergeJoin")[1]
+    # values match the raw-parquet computation
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    raw = (
+        _t(spark, SF, "documents")
+        .join(emb.select(F.col("vec_id").alias("doc_id"), "label"), "doc_id")
+        .groupBy("label")
+        .agg(F.count("*").cast("long").alias("n_docs"))
+        .orderBy("label")
+    )
+    assert got == [tuple(r) for r in raw.collect()]
+    n_raw_gaps = (
+        _t(spark, SF, "documents")
+        .join(
+            emb.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
+        )
+        .count()
+    )
+    assert n_gaps == n_raw_gaps
 
 
 def test_new_eval_gate_plans_stay_parallel(spark):
@@ -510,7 +425,7 @@ def test_new_eval_gate_plans_stay_parallel(spark):
     probe stream stays map-side) and its per-anchor top-k window is
     group-limit pushed."""
     plans = {
-        name: workloads_r13.QUERIES_R13[name](spark, SF)
+        name: workloads_r13.QUERIES[name](spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

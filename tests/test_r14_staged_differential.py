@@ -1,126 +1,36 @@
-"""Differential verification of the STAGED r14 gates (workloads_r14.py)
-against their DuckDB oracles — the exact comparison tools/check.py (and
-the external driver) runs: row count, sorted column names,
-order-insensitive canonical value hash. Run at sf0.001 so the suite
-stays fast; the staging rounds re-run everything at sf0.01/sf0.1
-through `tools/check.py --staged`.
-
-Also LIMIT-0-sweeps the staged oracles through the shared portability
-predicate (tools/check.py::unportable_type) and applies the blanket
-no-Python-UDF / no-CartesianProduct plan invariant at staging time.
+"""The workloads_r14 cohort: its plan sweep, the ks/curve SinglePartition
+pins and the ECE fold from streamed fixed-bin state. Every gate's
+differential against its DuckDB twin and its plan check for
+row-at-a-time Python and cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
 import pytest
 
+from conftest import (
+    SF,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+)
 from database_collector_spark import workloads_r14
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
+from test_plan_quality import (
+    _assert_single_partition_inputs_bounded,
+    _assert_single_partition_is_guard_only,
+)
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r14.QUERIES_R14) == set(workloads_r14.ORACLES_R14)
+    assert set(workloads_r14.QUERIES) == set(workloads_r14.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    for name, sql in workloads_r14.ORACLES_R14.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r14.ORACLES)
 
 
-@pytest.mark.parametrize("name", sorted(workloads_r14.QUERIES_R14))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r14.QUERIES_R14[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r14.ORACLES_R14[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(spark):
-    """The blanket plan invariant the registered gates get from
-    test_plan_quality.py, applied at staging time: nothing in the r14
-    tier may fall back to row-at-a-time Python eval or an unbroadcast
-    cartesian product."""
-    for name, fn in workloads_r14.QUERIES_R14.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-
-
-_pq_spec = importlib.util.spec_from_file_location(
-    "plan_quality", "/root/repo/tests/test_plan_quality.py"
-)
-plan_quality = importlib.util.module_from_spec(_pq_spec)
-_pq_spec.loader.exec_module(plan_quality)
-
-
-def test_ks_separation_single_partitions_are_guard_only(spark):
-    """ks_statistic inherits auc_exact's whole scale argument; pin it
-    structurally — every SinglePartition exchange in the gate must be
-    the prefix core's bounded rng guard (count-over-() window above,
-    rng min/max aggregate below), never a corpus gather or sort."""
-    plan = (
-        workloads_r14.q_ks_separation(spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    plan_quality._assert_single_partition_is_guard_only(plan)
-
-
-@pytest.mark.parametrize("gate", ["pr_curve_sweep", "lift_deciles"])
-def test_curve_gates_single_partitions_are_bounded_aggregates(spark, gate):
-    """The curve gates ride the ungrouped calibration core: legitimate
-    SinglePartition exchanges are bounded post-aggregate gathers (the
-    <=65536-row `_cell#` histogram, the <= n_bins `bin#` table, scalar
-    totals) — each occurrence's child must be an aggregate and any
-    sorted consumer must sort one of those bounded keys, so a
-    corpus-sized funnel fails structurally regardless of occurrence
-    count (the r11 ADVICE stance)."""
-    plan = (
-        workloads_r14.QUERIES_R14[gate](spark, SF)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    plan_quality._assert_single_partition_inputs_bounded(
-        plan,
-        child_markers=("HashAggregate",),
-        sorted_key_markers=("bin#", "_cell#"),
-    )
+def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
+    for name in workloads_r14.QUERIES:
+        assert_no_row_python_or_cartesian(name, gate_plan(name))
 
 
 def test_ece_foldable_from_streamed_fixed_bin_state(spark):
@@ -203,3 +113,39 @@ def test_ece_foldable_from_streamed_fixed_bin_state(spark):
         scale=scale,
     ).collect()
     assert (batch["n"], batch["ece"], batch["mce"]) == (n, ece, mce)
+
+
+def test_ks_separation_single_partitions_are_guard_only(spark):
+    """ks_statistic inherits auc_exact's whole scale argument; pin it
+    structurally — every SinglePartition exchange in the gate must be
+    the prefix core's bounded rng guard (count-over-() window above,
+    rng min/max aggregate below), never a corpus gather or sort."""
+    plan = (
+        workloads_r14.q_ks_separation(spark, SF)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    _assert_single_partition_is_guard_only(plan)
+
+
+@pytest.mark.parametrize("gate", ["pr_curve_sweep", "lift_deciles"])
+def test_curve_gates_single_partitions_are_bounded_aggregates(spark, gate):
+    """The curve gates ride the ungrouped calibration core: legitimate
+    SinglePartition exchanges are bounded post-aggregate gathers (the
+    <=65536-row `_cell#` histogram, the <= n_bins `bin#` table, scalar
+    totals) — each occurrence's child must be an aggregate and any
+    sorted consumer must sort one of those bounded keys, so a
+    corpus-sized funnel fails structurally regardless of occurrence
+    count (the r11 ADVICE stance)."""
+    plan = (
+        workloads_r14.QUERIES[gate](spark, SF)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    _assert_single_partition_inputs_bounded(
+        plan,
+        child_markers=("HashAggregate",),
+        sorted_key_markers=("bin#", "_cell#"),
+    )

@@ -1,88 +1,30 @@
-"""Differential verification of the r15 gates (workloads_r15.py) against
-their DuckDB oracles — the exact comparison tools/check.py (and the
-external driver) runs: row count, sorted column names, order-insensitive
-canonical value hash, at sf0.001; re-run at sf0.01/sf0.1 through
-`tools/check.py --staged`. The trio registered in round 15; this sweep
-deliberately keeps covering the FULL cohort (registered trio +
-permanently-staged vocab_overlap) so the staged tier never rots.
-
-Also LIMIT-0-sweeps the staged oracles through the shared portability
-predicate and applies the blanket no-Python-UDF / no-CartesianProduct
-plan invariant at staging time.
+"""The workloads_r15 cohort: its plan sweep and the agreement_alpha
+missing-vote pin. Every gate's differential against its DuckDB twin and
+its plan check for row-at-a-time Python and cartesian products run in
+test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
-import pytest
-
+from conftest import (
+    SF,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+)
 from database_collector_spark import workloads_r15
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r15.QUERIES_R15) == set(workloads_r15.ORACLES_R15)
+    assert set(workloads_r15.QUERIES) == set(workloads_r15.ORACLES)
 
 
-def test_staged_cohort_respects_saturation_cap():
-    """The rotation arithmetic (see the __spark_entry__ directive): from
-    r15 on, staleness backfill consumes nearly the whole 50-slot window,
-    so a staged cohort larger than ~4 could never register without
-    tripping the staleness meta-test."""
-    assert len(workloads_r15.QUERIES_R15) <= 4
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r15.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    for name, sql in workloads_r15.ORACLES_R15.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
-
-
-@pytest.mark.parametrize("name", sorted(workloads_r15.QUERIES_R15))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r15.QUERIES_R15[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r15.ORACLES_R15[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(spark):
-    for name, fn in workloads_r15.QUERIES_R15.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
+    for name in workloads_r15.QUERIES:
+        assert_no_row_python_or_cartesian(name, gate_plan(name))
 
 
 def test_agreement_alpha_panel_really_is_uneven(spark):

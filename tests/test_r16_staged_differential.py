@@ -1,86 +1,30 @@
-"""Differential verification of the STAGED r16 gates (workloads_r16.py)
-against their DuckDB oracles — the exact comparison tools/check.py (and
-the external driver) runs: row count, sorted column names,
-order-insensitive canonical value hash, at sf0.001; the staging rounds
-re-run at sf0.01/sf0.1 through `tools/check.py --staged`.
-
-Also LIMIT-0-sweeps the staged oracles through the shared portability
-predicate and applies the blanket no-Python-UDF / no-CartesianProduct
-plan invariant at staging time.
+"""The workloads_r16 cohort: its plan sweep and the embedding-drift / Zipf-
+slope result pins. Every gate's differential against its DuckDB twin and
+its plan check for row-at-a-time Python and cartesian products run in
+test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
-import pytest
-
+from conftest import (
+    SF,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+)
 from database_collector_spark import workloads_r16
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r16.QUERIES_R16) == set(workloads_r16.ORACLES_R16)
+    assert set(workloads_r16.QUERIES) == set(workloads_r16.ORACLES)
 
 
-def test_staged_cohort_respects_saturation_cap():
-    """Post-saturation (see the __spark_entry__ directive), the r16
-    cohort can only register through deliberate 1-for-1 retirement
-    swaps — keep it small enough that staged-green stays a reviewable
-    evidence tier."""
-    assert len(workloads_r16.QUERIES_R16) <= 3
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r16.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    for name, sql in workloads_r16.ORACLES_R16.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
-
-
-@pytest.mark.parametrize("name", sorted(workloads_r16.QUERIES_R16))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r16.QUERIES_R16[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r16.ORACLES_R16[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(spark):
-    for name, fn in workloads_r16.QUERIES_R16.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
+    for name in workloads_r16.QUERIES:
+        assert_no_row_python_or_cartesian(name, gate_plan(name))
 
 
 def test_embedding_drift_halves_really_differ(spark):

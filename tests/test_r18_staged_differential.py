@@ -1,81 +1,33 @@
-"""Differential verification of the STAGED r18 gates (workloads_r18.py
-— the exact order-statistics tier on rank_select_by_group) against
-their DuckDB oracles: the exact comparison tools/check.py (and the
-external driver) runs — row count, sorted column names,
-order-insensitive canonical value hash — at sf0.001; `tools/check.py
---staged` re-runs it at sf0.01/0.1. Permanently staged-tier per the
-COVERAGE.md §staged-tier playbook (the registry saturated at 250 in
-r15), so this sweep IS the cohort's standing evidence.
-
-Also LIMIT-0-sweeps the staged oracles through the shared portability
-predicate and pins the plans: two scans, broadcast candidate joins, no
-corpus-wide exchange or sort, no Python.
+"""The workloads_r18 cohort: the order-statistics tier on
+rank_select_by_group: its plan pin (broadcast candidate joins, no corpus
+funnel), range-splitter and token-mass-median checks, and the
+range-layout example. Every gate's differential against its DuckDB twin
+and its plan check for row-at-a-time Python and cartesian products run
+in test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-
-import duckdb
-import pytest
-
+from conftest import (
+    SF,
+    assert_no_row_python_or_cartesian,
+    assert_oracles_portable,
+)
 from database_collector_spark import workloads_r18
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r18.QUERIES_R18) == set(workloads_r18.ORACLES_R18)
+    assert set(workloads_r18.QUERIES) == set(workloads_r18.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    for name, sql in workloads_r18.ORACLES_R18.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r18.ORACLES)
 
 
-@pytest.mark.parametrize("name", sorted(workloads_r18.QUERIES_R18))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r18.QUERIES_R18[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r18.ORACLES_R18[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_staged_plans_have_no_python_or_cartesian_or_corpus_funnel(spark):
-    for name, fn in workloads_r18.QUERIES_R18.items():
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+def test_staged_plans_have_no_python_or_cartesian_or_corpus_funnel(gate_plan):
+    for name in workloads_r18.QUERIES:
+        plan = gate_plan(name)
+        assert_no_row_python_or_cartesian(name, plan)
         # the whole point of the tier: candidate joins broadcast; the
         # per-group-window/SMJ funnel shapes must never return
         assert "BroadcastHashJoin" in plan, f"{name}: candidate join not broadcast"

@@ -1,130 +1,34 @@
-"""Differential verification of the STAGED r9 gates (workloads_r9.py)
-against their DuckDB oracles — the exact comparison tools/check.py (and
-the external driver) runs: row count, sorted column names,
-order-insensitive canonical value hash. Run at sf0.001 so the suite
-stays fast; the r9 registration round re-runs everything at sf0.01
-through the normal harness.
-
-Also LIMIT-0-sweeps the staged oracles for HUGEINT/UHUGEINT final
-columns (the map_funcs failure class) — the staged twins must enter r9
-already clean.
+"""The workloads_r9 cohort: its registry bookkeeping. Every gate's
+differential against its DuckDB twin and its plan check for
+row-at-a-time Python and cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
 
-import importlib.util
-import sys
-
-import duckdb
-import pytest
-
+from conftest import (
+    assert_module_documented,
+    assert_module_registered,
+    assert_oracles_portable,
+    assert_registration_composes,
+)
 from database_collector_spark import workloads_r9
-
-SF = "/root/testdata/sf0.001"
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-_spec = importlib.util.spec_from_file_location("check", "/root/repo/tools/check.py")
-check = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(check)
-
-
-@pytest.fixture(scope="module")
-def con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-    return con
 
 
 def test_staged_sets_are_one_to_one():
-    assert set(workloads_r9.QUERIES_R9) == set(workloads_r9.ORACLES_R9)
+    assert set(workloads_r9.QUERIES) == set(workloads_r9.ORACLES)
 
 
-def test_staged_oracles_have_no_arrow_unportable_columns(con):
-    # Shared predicate (tools/check.py::unportable_type) bans the exact
-    # scalar names (HUGEINT/TIMESTAMPTZ classes) AND any nested type
-    # ([], STRUCT, MAP, UNION — the r9 jl_projection class).
-    for name, sql in workloads_r9.ORACLES_R9.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
-
-
-@pytest.mark.parametrize("name", sorted(workloads_r9.QUERIES_R9))
-def test_staged_gate_matches_oracle(spark, con, name):
-    sdf = workloads_r9.QUERIES_R9[name](spark, SF)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.sql(workloads_r9.ORACLES_R9[name])
-    o_cols = res.columns
-    o_rows = res.fetchall()
-    assert len(s_rows) == len(o_rows), f"{name}: rows {len(s_rows)} vs {len(o_rows)}"
-    assert len(s_rows) > 0, f"{name}: trivially-empty gate"
-    sc, s_canon = check.canon_rows(s_cols, s_rows)
-    oc, o_canon = check.canon_rows(o_cols, o_rows)
-    assert sc == oc, f"{name}: columns {sc} vs {oc}"
-    assert check.value_hash(s_canon) == check.value_hash(o_canon), (
-        f"{name}: value hash mismatch; first spark={s_canon[:2]} oracle={o_canon[:2]}"
-    )
-
-
-def test_r9_cohort_is_fully_registered():
-    # the inverse of the pre-registration shadow check: since round 9
-    # every r9 name must resolve in the REGISTERED surface with the
-    # module's own callable/SQL (the _ordered merge must not have
-    # dropped or shadowed any)
-    import __spark_entry__ as entry
-
-    qs, os_ = entry.queries(), entry.oracle_sql()
-    for name in workloads_r9.QUERIES_R9:
-        assert qs[name] is workloads_r9.QUERIES_R9[name], name
-        assert os_[name] == workloads_r9.ORACLES_R9[name], name
+def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
+    assert_oracles_portable(oracle_con, workloads_r9.ORACLES)
 
 
 def test_every_staged_gate_is_documented_in_coverage():
-    # the r9 cohort REGISTERED in round 9 and rotated OUT in round 10:
-    # every gate must carry a driver CORRECTNESS row from some past
-    # round (or sit in the current window awaiting one — jl_projection's
-    # r10 red-row retest) and a REGISTERED r9 COVERAGE row naming it
-    import glob
-    import json
-
-    import __spark_entry__ as entrymod
-
-    seen: set[str] = set()
-    for f in glob.glob("/root/repo/CORRECTNESS_r*.json"):
-        with open(f) as fh:
-            seen |= set(json.load(fh))
-    cov = open("/root/repo/COVERAGE.md").read()
-    for name in workloads_r9.QUERIES_R9:
-        assert name in seen or name in entrymod._CHECK_FIRST, (
-            f"{name}: no driver row and not in the current window"
-        )
-        assert f"`{name}`" in cov, f"{name} missing a COVERAGE row"
-    assert cov.count("REGISTERED r9") == len(workloads_r9.QUERIES_R9), (
-        "REGISTERED r9 COVERAGE rows must be 1:1 with the r9 cohort"
-    )
+    assert_module_documented(workloads_r9, "r9")
 
 
-def test_r9_registration_dry_run_composes(spark):
-    """Simulate the r9 registration: merging QUERIES_R9/ORACLES_R9 into
-    the registered dicts must yield a 1:1 query/oracle surface where
-    every staged name resolves and returns a DataFrame at sf0.001 —
-    so the actual registration round cannot hit an import cycle,
-    name clash, or arity surprise."""
-    import __spark_entry__ as entry
+def test_r9_cohort_is_fully_registered():
+    assert_module_registered(workloads_r9)
 
-    queries = {**entry.queries(), **workloads_r9.QUERIES_R9}
-    oracles = {**entry.oracle_sql(), **workloads_r9.ORACLES_R9}
-    assert set(queries) == set(oracles)
-    # EVERY staged gate must build its DataFrame (plan construction
-    # catches import cycles, arity mistakes, bad column references —
-    # no collect, so this stays cheap)
-    for name, q in workloads_r9.QUERIES_R9.items():
-        df = q(spark, SF)
-        assert df.columns, name
+
+def test_r9_registration_dry_run_composes(gate_plan):
+    assert_registration_composes(workloads_r9, gate_plan)

@@ -3,17 +3,13 @@ against a plain-Python reference, top-k ordering, and plan shape."""
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import tempfile
 
 import pytest
 from pyspark.sql import Row
 
-from conftest import SF
-from database_collector_spark import workloads_r15, workloads_r18, workloads_r19
 from database_collector_spark.operators import ranking
+
 from rankrefs import rank_ref, wrank_ref
 
 DOCS = [
@@ -823,559 +819,3 @@ def test_rank_select_input_columns_named_g_or_v_do_not_shadow_filters(spark):
     )
     rows = ranking.rank_select_by_group(df2, "grp", "v", {"m": "1"}).collect()
     assert len(rows) == 1 and rows[0]["grp"] == "x" and rows[0]["n"] == 2
-
-
-def test_kendall_tau_matches_brute_force(spark):
-    """Banded tau-b on a small hand fixture vs an all-banded-pairs
-    Python reference, ties included in both x and y."""
-    import math
-
-    rows = [
-        # (user, ts-seconds, event_id, cents)
-        (1, 10, 1, 100),
-        (1, 10, 2, 300),  # x-tie with the row above
-        (1, 20, 3, 300),  # y-tie with the row above
-        (1, 30, 4, 200),
-        (1, 40, 5, 500),
-        (2, 10, 1, 5),
-        (2, 20, 2, 5),
-        (2, 30, 3, 5),  # all y tied -> NULL tau
-    ]
-    band = 3
-    df = spark.createDataFrame(rows, "g long, x long, id long, y long")
-    from database_collector_spark.operators.ranking import banded_kendall_tau
-
-    got = {
-        r["g"]: r
-        for r in banded_kendall_tau(
-            df, "g", x_col="x", y_col="y", id_col="id", band=band
-        ).collect()
-    }
-
-    for g in (1, 2):
-        pts = sorted([(x, i, y) for (u, x, i, y) in rows if u == g])
-        pairs = [
-            (pts[a], pts[b])
-            for a in range(len(pts))
-            for b in range(a + 1, min(a + band + 1, len(pts)))
-        ]
-        c = sum(1 for p, q in pairs if q[0] > p[0] and q[2] > p[2])
-        d = sum(1 for p, q in pairs if q[0] > p[0] and q[2] < p[2])
-        n0 = len(pairs)
-        n1 = sum(1 for p, q in pairs if q[0] == p[0])
-        n2 = sum(1 for p, q in pairs if q[2] == p[2])
-        r = got[g]
-        assert (r["n_pairs"], r["concordant"], r["discordant"]) == (n0, c, d)
-        denom = (n0 - n1) * (n0 - n2)
-        if denom > 0:
-            assert r["tau_b"] == round((c - d) / math.sqrt(denom), 6)
-        else:
-            assert r["tau_b"] is None
-
-
-def test_calibration_curve_matches_brute_force(spark):
-    """Percentile bins with tie classes kept whole: brute-force the
-    bin = below*B div n rule in Python and compare every bin stat."""
-    rows = [(0.1, 1), (0.1, 0), (0.2, 1), (0.3, 0), (0.3, 1), (0.3, 1), (0.9, 0)]
-    df = spark.createDataFrame(rows, "score double, label int")
-    from database_collector_spark.operators.ranking import calibration_curve
-
-    got = {r["bin"]: r for r in calibration_curve(df, n_bins=4).collect()}
-
-    n = len(rows)
-    per = {}
-    for s, y in rows:
-        cnt, pos = per.get(s, (0, 0))
-        per[s] = (cnt + 1, pos + y)
-    below = 0
-    stats = {}
-    for s in sorted(per):
-        cnt, pos = per[s]
-        b = (below * 4) // n
-        nd, np_, lo, hi = stats.get(b, (0, 0, s, s))
-        stats[b] = (nd + cnt, np_ + pos, min(lo, s), max(hi, s))
-        below += cnt
-    assert set(got) == set(stats)
-    for b, (nd, np_, lo, hi) in stats.items():
-        r = got[b]
-        assert (r["n_docs"], r["n_pos"]) == (nd, np_)
-        assert r["pos_rate"] == round(np_ / nd, 6)
-        assert (r["lo_score"], r["hi_score"]) == (round(lo, 6), round(hi, 6))
-
-
-def test_banded_pair_core_excludes_null_rows_actively(spark):
-    """NULL group/x/y/id rows are FILTERED by the shared band core
-    (a NULL y would count in n_pairs yet match no comparison — tau_b
-    biased toward 0; a NULL x sorts NULLS FIRST in Spark but NULLS
-    LAST in DuckDB and changes the banded pair SET); remaining pairs
-    are unaffected."""
-    from database_collector_spark.operators.ranking import banded_kendall_tau
-
-    clean = [(1, 10, 1, 100), (1, 20, 2, 200), (1, 30, 3, 150)]
-    dirty = clean + [(1, 15, 4, None), (1, None, 5, 300), (None, 25, 6, 50)]
-    out = {}
-    for tag, rows in (("clean", clean), ("dirty", dirty)):
-        df = spark.createDataFrame(rows, "g int, x int, id int, y int")
-        out[tag] = banded_kendall_tau(
-            df, "g", x_col="x", y_col="y", id_col="id", band=3
-        ).collect()
-    assert [tuple(r) for r in out["dirty"]] == [tuple(r) for r in out["clean"]]
-    assert out["clean"][0]["n_pairs"] == 3
-
-
-def test_theil_sen_rides_the_shared_band_core(spark):
-    """theil_sen_slope and kendall_tau_banded consume the SAME series
-    projection and band expansion — the reuse contract: both gates'
-    pair sets come from ranking.banded_pair_deltas over
-    workloads_ts.user_value_series, so a band-semantics fix lands in
-    one place. Checked behaviorally: the theil_sen slope multiset per
-    user equals the dy/dx of the shared core's pairs."""
-    from database_collector_spark.operators.ranking import banded_pair_deltas
-    from database_collector_spark.workloads_ts import (
-        _TS_BAND,
-        q_theil_sen_slope,
-        user_value_series,
-    )
-
-    base = user_value_series(spark, SF)
-    pairs = banded_pair_deltas(
-        base, "user_id", x_col="s", y_col="v", id_col="event_id", band=_TS_BAND
-    ).collect()
-    import collections
-
-    want = collections.defaultdict(list)
-    for r in pairs:
-        if r["dx"] != 0:
-            want[r["g"]].append(r["dy"] / r["dx"])
-    got = q_theil_sen_slope(spark, SF).collect()
-    import math
-
-    for r in got:
-        slopes = sorted(want[r["user_id"]])
-        assert r["n_slopes"] == len(slopes)
-        median = slopes[(len(slopes) + 1) // 2 - 1]
-        assert math.isclose(r["median_slope_per_hour"], round(median * 3600, 6))
-
-
-def test_quantiles_by_group_matches_brute_force(spark):
-    """Type-1 quartile rule k_m = ceil(m*n/4) on random tie-heavy data
-    vs a sort-and-index Python reference."""
-    import math
-    import random
-
-    from database_collector_spark.operators.ranking import quantiles_by_group
-
-    rng = random.Random(11)
-    rows = [
-        (g, rng.randint(-20, 20))
-        for g, sz in (("a", 37), ("b", 64), ("c", 1))
-        for _ in range(sz)
-    ]
-    df = spark.createDataFrame(rows, "g string, v long")
-    got = {r["g"]: r for r in quantiles_by_group(df, "g", "v").collect()}
-    from collections import defaultdict
-
-    byg = defaultdict(list)
-    for g, v in rows:
-        byg[g].append(v)
-    for g, vals in byg.items():
-        vals.sort()
-        n = len(vals)
-        exp = [vals[math.ceil(m * n / 4) - 1] for m in (1, 2, 3)]
-        r = got[g]
-        assert (r["n"], r["p25"], r["p50"], r["p75"]) == (n, *exp), g
-
-
-def test_quantiles_refined_regrids_the_degenerate_cell(spark):
-    """The reason this gate exists: on the 1e12-bulk + zero-outlier
-    domain the UNREFINED core maps (nearly) every distinct value of a
-    group into one bucket — the documented single-populous-bucket
-    residual — while the ARMED core re-grids the populous cell and
-    spreads the bulk. Audit via the bucket_col hook: per group, the
-    max share of distinct values in one bucket must be close to 1
-    unrefined and small refined."""
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.operators.ranking import prefix_count_below
-    from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import _qr_value
-
-    docs = _t(spark, SF, "documents")
-    per = (
-        docs.select(F.col("lang").alias("g"), _qr_value().alias("v"))
-        .where(F.col("g").isNotNull() & F.col("v").isNotNull())
-        .groupBy("g", "v")
-        .agg(F.count("*").alias("cnt"))
-    )
-
-    def max_bucket_share(refined: bool) -> float:
-        out = prefix_count_below(
-            per,
-            ["g"],
-            "v",
-            "cnt",
-            out_col="below",
-            refine_narrow_domains=refined,
-            bucket_col="bkt",
-        )
-        stats = (
-            out.groupBy("g", "bkt")
-            .agg(F.count("*").alias("nv"))
-            .groupBy("g")
-            .agg((F.max("nv") / F.sum("nv")).alias("share"))
-            .agg(F.max("share"))
-            .collect()[0][0]
-        )
-        return float(stats)
-
-    unref = max_bucket_share(False)
-    ref = max_bucket_share(True)
-    assert unref > 0.9, f"domain not degenerate enough: unrefined share {unref}"
-    assert ref < 0.25, f"refine did not spread the bulk: refined share {ref}"
-
-
-def test_fixed_bin_calibration_stream_end_state_matches_batch(spark):
-    """The streaming story the operator docstring claims, pinned: the
-    SAME fixed_bin_calibration expression over a readStream source,
-    run in update mode across multiple availableNow passes restarting
-    from one checkpoint, converges to the batch twin's exact per-bin
-    rows. Bins are a bounded key domain (n_bins keys forever), so no
-    watermark/TTL is needed for state to stay bounded."""
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.operators.ranking import fixed_bin_calibration
-
-    rows = [  # (s_int, y) — spans below-lo, in-range, above-hi scores
-        (-300, 0), (-300, 1), (-120, 0), (-51, 1), (-50, 1),
-        (0, 1), (49, 0), (120, 1), (260, 1), (260, 0), (5, 0),
-    ]
-    kw = dict(score_col="s_int", label_col="y", lo=-250, bin_width=50, n_bins=10)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        os.makedirs(src)
-        latest: dict = {}
-
-        def sink(batch_df, _bid):
-            for r in batch_df.collect():
-                latest[r["bin"]] = tuple(r)
-
-        def run_pass():
-            stream = spark.readStream.schema("s_int long, y int").json(src)
-            q = (
-                fixed_bin_calibration(stream, **kw)
-                .writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                assert q.awaitTermination(120), "stream pass did not finish"
-            finally:
-                q.stop()
-
-        def write_batch(fname, some):
-            with open(f"{src}/{fname}", "w") as f:
-                f.write(
-                    "\n".join(json.dumps({"s_int": s, "y": y}) for s, y in some)
-                )
-
-        write_batch("b1.json", rows[:4])
-        run_pass()
-        write_batch("b2.json", rows[4:8])
-        run_pass()
-        write_batch("b3.json", rows[8:])
-        run_pass()
-
-    batch = fixed_bin_calibration(
-        spark.createDataFrame(rows, "s_int long, y int"), **kw
-    )
-    expected = {r["bin"]: tuple(r) for r in batch.collect()}
-    assert latest == expected
-
-
-def test_fixed_bin_calibration_validates_params(spark):
-    """r12 review: garbage bin geometry must fail fast, not silently
-    produce one bogus bin (n_bins=0 would clamp every row to bin -1;
-    bin_width=0 NULLs the div; negative width inverts the binning)."""
-    from database_collector_spark.operators.ranking import fixed_bin_calibration
-
-    df = spark.createDataFrame([(1, 1)], "s_int long, y int")
-    for bad in (dict(n_bins=0), dict(bin_width=0), dict(bin_width=-5),
-                dict(lo=1.5), dict(n_bins=-1)):
-        kw = dict(score_col="s_int", label_col="y", lo=0, bin_width=1, n_bins=10)
-        kw.update(bad)
-        with pytest.raises(ValueError):
-            fixed_bin_calibration(df, **kw)
-    # a column name needing backticks must work (no string interpolation
-    # of user identifiers into expr)
-    odd = spark.createDataFrame([(7, 1)], "`my score` long, y int")
-    out = fixed_bin_calibration(
-        odd, score_col="my score", label_col="y", lo=0, bin_width=1, n_bins=10
-    ).collect()
-    assert out[0]["bin"] == 7 and out[0]["n_pos"] == 1
-
-
-def test_map_at_k_matches_hand_computation(spark):
-    """Brute-force reference for map_at_k on a hand-computed 2-group
-    fixture: group g1 has ranked+judged rows (AP verifiable by hand),
-    g2 is judged-but-unranked (scores 0.0), g3 is ranked with zero
-    relevant judgments (NULL r_at_k/ap)."""
-    from database_collector_spark.operators.ranking import map_at_k
-
-    ranked = spark.createDataFrame(
-        [("g1", 1, 1), ("g1", 2, 2), ("g1", 3, 3), ("g1", 4, 4),
-         ("g3", 7, 1), ("g3", 8, 2)],
-        "g string, doc_id int, rank int",
-    )
-    rels = spark.createDataFrame(
-        # g1: docs 1,3 relevant + doc 99 relevant-but-unranked -> n_rel=3
-        [("g1", 1, 1), ("g1", 2, 0), ("g1", 3, 1), ("g1", 99, 1),
-         ("g2", 5, 1),
-         ("g3", 7, 0)],
-        "g string, doc_id int, rel int",
-    )
-    out = {
-        r["g"]: r
-        for r in map_at_k(ranked, rels, k=3, group_col="g").collect()
-    }
-    g1 = out["g1"]
-    # top-3 of g1 = docs 1,2,3 -> hits at ranks 1,3; cum hits 1,1,2
-    # AP = (1/1 + 2/3) / min(3, 3) = 5/9
-    assert (g1["n_ranked"], g1["n_rel"], g1["hits"]) == (3, 3, 2)
-    assert g1["p_at_k"] == round(2 / 3, 6)
-    assert g1["r_at_k"] == round(2 / 3, 6)
-    assert g1["ap"] == round((1.0 + 2.0 / 3.0) / 3.0, 6)
-    g2 = out["g2"]
-    assert (g2["n_ranked"], g2["n_rel"], g2["hits"]) == (0, 1, 0)
-    assert (g2["p_at_k"], g2["r_at_k"], g2["ap"]) == (0.0, 0.0, 0.0)
-    g3 = out["g3"]
-    assert (g3["n_ranked"], g3["n_rel"], g3["hits"]) == (2, 0, 0)
-    assert g3["p_at_k"] == 0.0 and g3["r_at_k"] is None and g3["ap"] is None
-    # rank >= 1 is enforced in-plan
-    bad = spark.createDataFrame([("g1", 1, 0)], "g string, doc_id int, rank int")
-    with pytest.raises(Exception, match="ranks are 1-based"):
-        map_at_k(bad, rels, k=3, group_col="g").collect()
-
-
-def test_cohen_kappa_matches_hand_computation(spark):
-    """Hand-computed kappa cases: imperfect agreement (classic 2x2),
-    perfect agreement (kappa=1), constant raters (NULL), and pairwise
-    deletion of NULL votes."""
-    from database_collector_spark.operators.ranking import cohen_kappa
-
-    # ga: n=10, agree=7, pos_a=5, pos_b=4 (a=b=1 on 3 rows)
-    # pe_num = 5*4 + 5*6 = 50; kappa = (70-50)/(100-50) = 0.4
-    rows = (
-        [("ga", 1, 1)] * 3 + [("ga", 1, 0)] * 2 + [("ga", 0, 1)] * 1
-        + [("ga", 0, 0)] * 4
-        + [("gb", 1, 1)] * 2 + [("gb", 0, 0)] * 3          # perfect
-        + [("gc", 1, 1)] * 2 + [("gc", 1, 0)] * 2          # a constant
-        + [("gd", None, 1), ("gd", 1, 1), ("gd", 0, 0)]    # NULL dropped
-        + [("ge", 1, 1)] * 3                               # both constant
-    )
-    df = spark.createDataFrame(rows, "g string, a int, b int")
-    out = {
-        r["g"]: r
-        for r in cohen_kappa(
-            df, rater_a_col="a", rater_b_col="b", group_col="g"
-        ).collect()
-    }
-    ga = out["ga"]
-    assert (ga["n"], ga["agree"], ga["pos_a"], ga["pos_b"]) == (10, 7, 5, 4)
-    assert ga["kappa"] == 0.4
-    assert out["gb"]["kappa"] == 1.0
-    # ONE constant rater: den = n * neg_b != 0, kappa = 0 exactly (no
-    # better than chance) — NOT the undefined case
-    assert out["gc"]["kappa"] == 0.0
-    assert out["gd"]["n"] == 2 and out["gd"]["kappa"] == 1.0
-    # BOTH raters constant on the same side: pe = 1, kappa undefined
-    assert out["ge"]["kappa"] is None
-
-
-def test_ece_foldable_from_streamed_fixed_bin_state(spark):
-    """The monitoring story behind ece_report, pinned: its per-bin state
-    (n, positives, Σp) is a plain keyed commutative aggregate over the
-    SAME all-integer bin expression, so a Structured Streaming
-    update-mode query maintains it with BOUNDED state (n_bins keys
-    forever), and folding ECE/MCE from the stream's end-state equals
-    the batch operator exactly — the calibration-error monitor a
-    production gate runs while the corpus streams in (the
-    fixed_bin_calibration / ttl_expiry_counts pattern)."""
-    import json as _json
-    import os as _os
-    import tempfile as _tempfile
-
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.operators.ranking import ece_report
-
-    rows = [
-        (50, 0), (120, 0), (180, 1), (450, 0), (480, 1), (520, 1),
-        (730, 1), (760, 0), (990, 1), (1000, 1), (0, 0), (999, 1),
-    ]
-    n_bins, scale = 5, 1000
-    latest: dict = {}
-
-    def sink(batch_df, _bid):
-        for r in batch_df.collect():
-            latest[r["b"]] = (r["nb"], r["pos"], r["sp"])
-
-    with _tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        _os.makedirs(src)
-
-        def run_pass():
-            stream = spark.readStream.schema("p_milli long, label int").json(src)
-            binned = stream.select(
-                F.least(
-                    F.expr(f"(p_milli * {n_bins}) div {scale}"),
-                    F.lit(n_bins - 1),
-                ).alias("b"),
-                "p_milli",
-                "label",
-            )
-            agg = binned.groupBy("b").agg(
-                F.count("*").alias("nb"),
-                F.sum("label").alias("pos"),
-                F.sum("p_milli").alias("sp"),
-            )
-            q = (
-                agg.writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                assert q.awaitTermination(120), "stream pass did not finish"
-            finally:
-                q.stop()
-
-        for i, chunk in enumerate((rows[:5], rows[5:9], rows[9:])):
-            with open(f"{src}/b{i}.json", "w") as f:
-                f.write(
-                    "\n".join(
-                        _json.dumps({"p_milli": p, "label": y}) for p, y in chunk
-                    )
-                )
-            run_pass()
-
-    n = sum(nb for nb, _, _ in latest.values())
-    gaps = {b: abs(scale * pos - sp) for b, (nb, pos, sp) in latest.items()}
-    ece = round(sum(gaps.values()) / (scale * n), 6)
-    mce = round(
-        max(g / (scale * latest[b][0]) for b, g in gaps.items()), 6
-    )
-    [batch] = ece_report(
-        spark.createDataFrame(rows, "p_milli long, label int"),
-        n_bins=n_bins,
-        scale=scale,
-    ).collect()
-    assert (batch["n"], batch["ece"], batch["mce"]) == (n, ece, mce)
-
-
-def test_agreement_alpha_panel_really_is_uneven(spark):
-    """The gate exists to exercise MISSING votes — if a fixture change
-    ever made every document fully voted, the gate would silently
-    degenerate into fleiss territory; pin genuine unevenness."""
-    docs_votes = (
-        workloads_r15.q_agreement_alpha(spark, SF).collect()
-    )
-    # n_values < 3 * n_items would be impossible under a full panel
-    [r] = docs_votes
-    assert r["n_values"] < 3 * r["n_items"], (
-        "every item fully voted — the missing-vote scenario is gone"
-    )
-
-
-def test_range_splitters_are_monotone_and_bounded(spark):
-    """Split points must be usable as a range partitioner: per group,
-    non-decreasing across s1..s7 and inside the group's value range."""
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.workloads import _t
-
-    li = _t(spark, SF, "lineitem").where(
-        F.col("l_returnflag").isNotNull() & F.col("l_extendedprice").isNotNull()
-    )
-    bounds = {
-        r["l_returnflag"]: (r["lo"], r["hi"])
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.min(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("lo"),
-            F.max(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("hi"),
-        )
-        .collect()
-    }
-    rows = workloads_r18.q_range_splitters(spark, SF).collect()
-    assert rows
-    for r in rows:
-        ss = [r[f"s{i}"] for i in range(1, 8)]
-        assert all(s is not None for s in ss), r
-        assert ss == sorted(ss), f"non-monotone splitters: {r}"
-        lo, hi = bounds[r["l_returnflag"]]
-        assert lo <= ss[0] and ss[-1] <= hi, (
-            f"splitters escape the group's value range: {r} vs [{lo}, {hi}]"
-        )
-
-
-def test_token_mass_median_dominates_row_median(spark):
-    """The token-mass median is >= the row median p50 (long documents
-    hold more mass), and total_tokens matches the corpus sum — the
-    cross-gate consistency read."""
-    from pyspark.sql import functions as F
-
-    q = {r["source"]: r for r in workloads_r18.q_rank_quartiles(spark, SF).collect()}
-    m = {
-        r["source"]: r
-        for r in workloads_r18.q_token_mass_median(spark, SF).collect()
-    }
-    assert set(q) == set(m)
-    totals = {
-        r["source"]: r["t"]
-        for r in workloads_r18._doc_tokens(spark, SF)
-        .groupBy("source")
-        .agg(F.sum("n_tok").alias("t"))
-        .collect()
-    }
-    for src in q:
-        # NULL only in the zero-total-mass degenerate, which the
-        # fixture must not silently become (a None would otherwise
-        # crash the >= with a TypeError instead of a diagnostic)
-        assert m[src]["total_tokens"] > 0, f"{src}: zero token mass"
-        assert m[src]["wmed_tokens"] is not None, src
-        assert m[src]["wmed_tokens"] >= q[src]["p50"], src
-        assert m[src]["total_tokens"] == totals[src], src
-
-
-def test_robust_stats_textbook_relationships(spark):
-    """Cross-gate consistency: MAD bounded by the max |deviation| and
-    >= 0; winsorized mean inside its own bracket; every outlier count
-    strictly less than n and fences consistent with the quartiles."""
-    from pyspark.sql import functions as F
-
-    mad = {r["source"]: r for r in workloads_r19.q_group_mad(spark, SF).collect()}
-    toks = workloads_r19._doc_tokens(spark, SF)
-    spread = {
-        r["source"]: r
-        for r in toks.groupBy("source")
-        .agg(F.min("n_tok").alias("lo"), F.max("n_tok").alias("hi"))
-        .collect()
-    }
-    for src, r in mad.items():
-        assert r["mad_tokens"] >= 0
-        max_dev = max(
-            abs(spread[src]["lo"] - r["med_tokens"]),
-            abs(spread[src]["hi"] - r["med_tokens"]),
-        )
-        assert r["mad_tokens"] <= max_dev, src
-        assert spread[src]["lo"] <= r["med_tokens"] <= spread[src]["hi"], src
-
-    for r in workloads_r19.q_winsorized_mean(spark, SF).collect():
-        assert r["q05_cents"] <= r["winsorized_mean_cents"] <= r["q95_cents"], r
-
-    for r in workloads_r19.q_iqr_outlier_report(spark, SF).collect():
-        assert r["p25"] <= r["p75"], r
-        assert 0 <= r["n_low_outliers"] + r["n_high_outliers"] < r["n"], r

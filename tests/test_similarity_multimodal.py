@@ -6,8 +6,6 @@ import math
 
 from pyspark.sql import Row
 
-from conftest import SF
-from database_collector_spark import workloads_r11, workloads_r16
 from database_collector_spark.operators import multimodal, similarity
 
 
@@ -731,73 +729,3 @@ def test_embedding_outliers_random_property(spark):
     assert [v for v, _ in got] == [v for v, _ in expect]
     for (_, g), (_, e) in zip(got, expect):
         assert abs(g - e) < 5e-7
-
-
-def test_semdedup_prune_is_nontrivial(spark):
-    """The gate must actually DROP something at the fixture SFs — a
-    threshold that never fires would pass the differential trivially
-    (every row dropped=false)."""
-    out = workloads_r11.QUERIES["semdedup_prune"](spark, SF)
-    n_dropped = out.filter("dropped").count()
-    assert n_dropped > 0
-
-
-def test_hard_negatives_subset_of_restricted_topk(spark):
-    """Every mined pair satisfies both predicates, and the result equals
-    cosine_topk run over the candidate set restricted to negatives (the
-    operator must prune the stream, not re-rank differently)."""
-    from database_collector_spark.operators import similarity
-    from database_collector_spark.workloads import _t
-
-    emb = _t(spark, SF, "embeddings")
-    got = similarity.hard_negatives(
-        emb, anchor_filter="vec_id < 10 AND label >= 5",
-        negative_filter="label < 5", k=3,
-    ).collect()
-    assert got, "fixture must yield at least one anchor"
-    anchors = {
-        r["vec_id"] for r in emb.filter("vec_id < 10 AND label >= 5")
-        .select("vec_id").collect()
-    }
-    negatives = {
-        r["vec_id"] for r in emb.filter("label < 5").select("vec_id").collect()
-    }
-    for r in got:
-        assert r["q_id"] in anchors and r["c_id"] in negatives
-    # brute-force reference with the operator's own quantization
-    # (round(x * 2^20) int dots, one double division), negatives-only
-    # candidate set — cosine_topk can't express that (its candidate
-    # side is the whole input), which is exactly why the operator exists
-    vecs = {
-        r["vec_id"]: [round(float(x) * 1048576) for x in r["embedding"]]
-        for r in emb.select("vec_id", "embedding").collect()
-    }
-    import math
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(vecs[a], vecs[b]))
-        return dot / (
-            math.sqrt(float(sum(x * x for x in vecs[a])))
-            * math.sqrt(float(sum(x * x for x in vecs[b])))
-        )
-
-    expected = set()
-    for q in anchors:
-        scored = sorted(
-            ((-cos(q, c), c) for c in negatives if c != q)
-        )[:3]
-        expected |= {
-            (q, c, round(-n, 6), i + 1) for i, (n, c) in enumerate(scored)
-        }
-    got_pairs = {(r["q_id"], r["c_id"], r["cos"], r["rank"]) for r in got}
-    assert got_pairs == expected
-
-
-def test_embedding_drift_halves_really_differ(spark):
-    """The gate exists to measure MOVEMENT — if a fixture change ever
-    made the parity halves identical, every centroid_l2 would be 0 and
-    the gate would pin nothing; require at least one label to drift."""
-    rows = workloads_r16.q_embedding_drift(spark, SF).collect()
-    assert any(r["centroid_l2"] > 0 for r in rows), (
-        "all parity-half centroids coincide — the drift scenario is gone"
-    )
