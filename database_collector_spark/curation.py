@@ -495,7 +495,7 @@ def temperature_mixture(
     explode); the per-domain aggregate moves |domains| rows, and the
     normalization runs over that post-aggregate frame via a global
     window documented-bounded at |domains| rows (the same bounded
-    pattern as workloads4's share windows). Exactness: counts and
+    pattern as market_share's windows in workloads.py). Exactness: counts and
     shares are integer rationals; ``pow`` is the single transcendental
     per domain, summed over |domains| doubles before one divide, then
     rounded (same exact-intermediates convention as char_entropy).

@@ -25,25 +25,11 @@ MODULES = tuple(
     importlib.import_module(f"database_collector_spark.{name}")
     for name in (
         "workloads",
-        "workloads2",
-        "workloads3",
-        "workloads4",
-        "workloads5",
-        "workloads_ext",
-        "workloads_ir",
-        "workloads_pq",
-        "workloads_r9",
-        "workloads_r10",
-        "workloads_r11",
-        "workloads_r12",
-        "workloads_r13",
-        "workloads_r14",
-        "workloads_r15",
         "workloads_ts",
-        "workloads_r16",
-        "workloads_r17",
-        "workloads_r18",
-        "workloads_r19",
+        "workloads_text",
+        "workloads_similarity",
+        "workloads_eval",
+        "workloads_storage",
     )
 )
 

@@ -6,7 +6,7 @@ training-data-pipeline extension: corpus-level relevance scoring is the
 standard primitive behind retrieval-based data curation (e.g. selecting
 documents relevant to a seed set).
 
-Determinism conventions (shared with workloads_ext.py): every float that
+Determinism conventions (shared with the workloads modules): every float that
 reaches a differential gate is computed from engine-exact integer
 intermediates (tf, df, dl, N, Σdl) and rounded; per-term contributions
 are summed in a FIXED order (one conditional aggregate per query term,

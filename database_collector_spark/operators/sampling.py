@@ -2,7 +2,7 @@
 derandomized with md5-derived uniforms.
 
 The curation tier already has uniform md5-order sampling and md5-prefix
-mixture weighting (workloads5.py / curation.py); this adds the
+mixture weighting (workloads_text.py / curation.py); this adds the
 WEIGHTED-item form — sample k documents with probability proportional
 to a per-row weight (e.g. length-proportional sampling for token-budget
 curation) — as one scan + a global top-k, no shuffle of the corpus.

@@ -769,7 +769,7 @@ def embedding_near_dup_lsh(
     recall is ~0.3 per probe and the standard levers apply: fewer
     planes (bigger buckets, more work), OR-amplification across several
     independent plane sets, or Hamming-1 multi-probe as in
-    ``workloads2.q_ann_ivf_multiprobe``.
+    ``workloads_similarity.q_ann_ivf_multiprobe``.
     """
     # exactly the n_tables=1 case of the OR-amplified variant — one
     # bucketing scheme, one tile pipeline, defined once
@@ -1260,8 +1260,8 @@ def cell_cosine_probe(
 ) -> DataFrame:
     """Exact-cosine top-k of each query against ONLY its own coarse
     cell — the IVF probe step shared by the trained-probe gate
-    (workloads2.q_ann_ivf_kmeans_probe) and the persisted-index
-    round-trip gate (workloads_r10.q_ann_index_roundtrip): ONE
+    (workloads_similarity.q_ann_ivf_kmeans_probe) and the persisted-index
+    round-trip gate (workloads_similarity.q_ann_index_roundtrip): ONE
     definition, because the round-trip's bit-identity claim only holds
     if both compute the same ranks and rounding. Both inputs carry
     (vec_id, qe, qnorm2, cid); queries are broadcast into a cid

@@ -5,8 +5,7 @@ reference — these are the extension operators a 100 TB stream needs).
 Every operator here bounds its state with a watermark: an unbounded-key
 stream (event ids, content hashes) must evict state or the state store
 grows without limit. The batch twins of these shapes live in
-workloads_ts.py (sessionization, tumbling windows) and workloads3.py
-(range join) — same semantics, same column names, so a pipeline can run
+workloads_ts.py (sessionization, tumbling windows, range join) — same semantics, same column names, so a pipeline can run
 one definition in either mode.
 """
 
@@ -85,7 +84,7 @@ def stream_stream_interval_join(
 ) -> DataFrame:
     """Stream-stream inner join with an interval condition: right-side
     rows within [left.ts - lookback, left.ts] for the same key (the
-    streaming twin of workloads3 range_join_buckets).
+    streaming twin of workloads_ts range_join_buckets).
 
     Both sides MUST be watermarked and the join condition must bound
     event time on both sides — that pair of bounds is what lets the

@@ -451,7 +451,7 @@ def sliding_hll_unique(
     lateness: str | None = "2 hours",
 ) -> DataFrame:
     """Streaming sliding-window distinct-user estimation — the stateful
-    twin of the batch hll_sliding_windows gate (workloads_r10.py),
+    twin of the batch hll_sliding_windows gate (workloads_ts.py),
     closing the batch/streaming asymmetry in the sketch tier: same
     md5-derived registers (operators/sketches.py contract), same
     max-merge, so the streaming state is REGISTER-FOR-REGISTER identical

@@ -1,16 +1,608 @@
-"""Time-series / windowing / join-shape workloads (SURVEY.md §2.6, §2.7,
-§2.10 surface plus the metric-series alignment joins called out in §2.3).
+"""Time-series, event and streaming gates.
 
-Same determinism conventions as workloads.py.
+Event windows and sessions, point-in-time and as-of joins, interval
+coalescing and outages, counter rates, rollups and downsampling,
+change-point and outlier detection, drift between event
+distributions, and the streaming summaries (HyperLogLog registers,
+Count-Min, KMV, bitmaps) with their exact twins
+(``operators/timeseries.py``, ``operators/sketches.py``). Several gates
+are the batch twins of the streaming operators in ``streaming/``.
+
+Same determinism conventions as ``workloads.py``.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from database_collector_spark.workloads import _t
+from database_collector_spark.operators import sketches, timeseries
+from database_collector_spark.workloads import _t, hv_sql
+from database_collector_spark.workloads import artifact_dir as _artifact_dir
+
+
+# ---------------------------------------------------------------------------
+# non-equi range join (time-bucketed at scale)
+# ---------------------------------------------------------------------------
+
+
+def q_range_join_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-window range join: per purchase event, clicks by any user
+    in the preceding 2 minutes.
+
+    A raw theta-join on ``c.ts BETWEEN p.ts - 2m AND p.ts`` is a nested
+    loop at any scale; the distributed shape is time bucketing: both
+    sides key by floor(ts / window), each probe checks exactly two
+    buckets (its own and the previous — a 2-minute trailing window can
+    only span them), so the physical plan is an EQUI-join on bucket id
+    with the residual range filter on top — shuffle-partitionable like
+    any other equi-join (same trick as the as-of join, workloads_ts).
+    Left join + conditional count keeps zero-click purchases."""
+    ev = _t(spark, sf_dir, "events")
+    win = 120
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select("event_id", F.col("ts").alias("p_ts"))
+        .withColumn("b", F.floor(F.unix_timestamp("p_ts") / win))
+        .withColumn("probe", F.explode(F.array(F.col("b"), F.col("b") - 1)))
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .select(F.col("ts").alias("c_ts"))
+        .withColumn("cb", F.floor(F.unix_timestamp("c_ts") / win))
+    )
+    hit = (
+        (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 2 MINUTES"))
+        & (F.col("c_ts") <= F.col("p_ts"))
+    ).cast("long")
+    return (
+        purchases.join(clicks, purchases["probe"] == clicks["cb"], "left")
+        .groupBy("event_id")
+        .agg(F.coalesce(F.sum(hit), F.lit(0)).alias("n_clicks_2min"))
+    )
+
+
+SQL_RANGE_JOIN_BUCKETS = """
+SELECT p.event_id,
+       CAST(COALESCE(SUM(CASE WHEN c.ts >= p.ts - INTERVAL 2 MINUTE AND c.ts <= p.ts
+                              THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_clicks_2min
+FROM (SELECT event_id, ts FROM events WHERE event_type = 'purchase') p
+LEFT JOIN (SELECT ts FROM events WHERE event_type = 'click') c
+  ON c.ts >= p.ts - INTERVAL 2 MINUTE AND c.ts <= p.ts
+GROUP BY p.event_id
+"""
+
+
+_CM_TYPES = ("click", "error", "purchase", "signup", "view")
+
+
+def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise Pearson correlation MATRIX across the five hourly
+    event-type revenue series — the multi-metric dependence screen that
+    turns one-pair `corr` (stats_moments) into the full upper triangle.
+
+    Alignment is a single conditional-sum aggregate on the hour key
+    (missing hours contribute 0 — series share one spine by
+    construction, no join); all moment sums are exact DECIMAL(38,0)
+    integers accumulated in ONE global aggregate whose shuffle carries
+    1 row x 21 numbers however many hours exist; the 10 output pairs
+    are an in-row explode of that single row. Correlations are computed
+    from the exact sums with one rounded float step (stats_moments
+    convention) — never the engines' order-sensitive float corr."""
+    ev = _t(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("long")
+    hourly = ev.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("h")
+    ).agg(
+        *[
+            F.coalesce(
+                F.sum(F.when(F.col("event_type") == t, cents)), F.lit(0)
+            ).alias(f"v_{t}")
+            for t in _CM_TYPES
+        ]
+    )
+    dec = "decimal(38,0)"
+    aggs = [F.count("*").alias("n")]
+    for t in _CM_TYPES:
+        c = F.col(f"v_{t}").cast(dec)
+        aggs.append(F.sum(c).alias(f"s_{t}"))
+        aggs.append(F.sum(c * c).alias(f"ss_{t}"))
+    for i, a in enumerate(_CM_TYPES):
+        for b in _CM_TYPES[i + 1:]:
+            aggs.append(
+                F.sum(
+                    F.col(f"v_{a}").cast(dec) * F.col(f"v_{b}").cast(dec)
+                ).alias(f"sxy_{a}_{b}")
+            )
+    moments = hourly.agg(*aggs)
+    n = F.col("n").cast(dec)
+    pair_structs = []
+    for i, a in enumerate(_CM_TYPES):
+        for b in _CM_TYPES[i + 1:]:
+            num = (n * F.col(f"sxy_{a}_{b}") - F.col(f"s_{a}") * F.col(f"s_{b}")).cast(
+                "double"
+            )
+            den_a = (n * F.col(f"ss_{a}") - F.col(f"s_{a}") * F.col(f"s_{a}")).cast(
+                "double"
+            )
+            den_b = (n * F.col(f"ss_{b}") - F.col(f"s_{b}") * F.col(f"s_{b}")).cast(
+                "double"
+            )
+            pair_structs.append(
+                F.struct(
+                    F.lit(a).alias("type_a"),
+                    F.lit(b).alias("type_b"),
+                    F.round(num / (F.sqrt(den_a) * F.sqrt(den_b)), 6).alias("corr"),
+                )
+            )
+    return moments.select(
+        F.col("n").cast("long").alias("n_hours"),
+        F.explode(F.array(*pair_structs)).alias("p"),
+    ).select("p.type_a", "p.type_b", "n_hours", "p.corr")
+
+
+def _cm_sql() -> str:
+    cond = ",\n         ".join(
+        f"SUM(CASE WHEN event_type = '{t}' THEN CAST(ROUND(value*100) AS BIGINT) ELSE 0 END) AS v_{t}"
+        for t in _CM_TYPES
+    )
+    moments = ["CAST(COUNT(*) AS HUGEINT) AS n"]
+    for t in _CM_TYPES:
+        moments.append(f"SUM(CAST(v_{t} AS HUGEINT)) AS s_{t}")
+        moments.append(f"SUM(CAST(v_{t} AS HUGEINT) * v_{t}) AS ss_{t}")
+    pairs = []
+    for i, a in enumerate(_CM_TYPES):
+        for b in _CM_TYPES[i + 1:]:
+            moments.append(f"SUM(CAST(v_{a} AS HUGEINT) * v_{b}) AS sxy_{a}_{b}")
+            pairs.append(
+                f"SELECT '{a}' AS type_a, '{b}' AS type_b, CAST(n AS BIGINT) AS n_hours,\n"
+                f"  ROUND(CAST(n * sxy_{a}_{b} - s_{a} * s_{b} AS DOUBLE)\n"
+                f"    / (SQRT(CAST(n * ss_{a} - s_{a} * s_{a} AS DOUBLE))\n"
+                f"       * SQRT(CAST(n * ss_{b} - s_{b} * s_{b} AS DOUBLE))), 6) AS corr\n"
+                f"  FROM m"
+            )
+    return (
+        "WITH hourly AS (\n"
+        f"  SELECT date_trunc('hour', ts) AS h,\n         {cond}\n"
+        "  FROM events GROUP BY 1\n"
+        "),\n"
+        "m AS (\n  SELECT " + ",\n         ".join(moments) + "\n  FROM hourly\n)\n"
+        + "\nUNION ALL ".join(pairs)
+    )
+
+
+SQL_CORR_MATRIX = _cm_sql()
+
+
+def q_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exponentially time-decayed event counts per type with a one-week
+    half-life — recency-weighted popularity, the metric behind trending
+    lists. Dyadic exactness: weight = 2^(20 − age_weeks) as an INTEGER
+    (age measured back from the stream's max timestamp; older than 20
+    half-lives contributes 0), so the sum is bit-exact in any order and
+    the gate hashes — no float pow drift. Stream end is a one-row
+    broadcast (the ttl_expiry_counts precedent); everything else is one
+    map-side expression into a per-type aggregate."""
+    ev = _t(spark, sf_dir, "events")
+    epoch = F.col("ts").cast("timestamp_ltz").cast("long")
+    end = ev.agg(F.max(epoch).alias("end_s"))
+    age_w = F.floor((F.col("end_s") - epoch) / (7 * 86400)).cast("int")
+    # 2^(20-age) as a finite CASE over the 21 in-range ages (shiftleft's
+    # bit count must be a literal, not a column)
+    weight = F.when(age_w == 0, F.lit(1 << 20).cast("long"))
+    for k in range(1, 21):
+        weight = weight.when(age_w == k, F.lit(1 << (20 - k)).cast("long"))
+    weight = weight.otherwise(F.lit(0).cast("long"))
+    return (
+        ev.join(F.broadcast(end))
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(weight).alias("decayed_scaled"),
+        )
+    )
+
+
+SQL_DECAYED_COUNTS = """
+WITH e AS (SELECT MAX(CAST(floor(epoch(ts)) AS BIGINT)) AS end_s FROM events),
+w AS (
+  SELECT event_type,
+         CASE WHEN CAST(floor((end_s - CAST(floor(epoch(ts)) AS BIGINT))
+                              / 604800.0) AS INT) <= 20
+              THEN CAST(1 AS BIGINT)
+                   << (20 - CAST(floor((end_s - CAST(floor(epoch(ts)) AS BIGINT))
+                                       / 604800.0) AS INT))
+              ELSE 0 END AS wt
+  FROM events, e
+)
+SELECT event_type, COUNT(*) AS n,
+       CAST(SUM(wt) AS BIGINT) AS decayed_scaled
+FROM w GROUP BY event_type
+"""
+
+
+def q_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user event-stream gap detection: number of silences longer
+    than 1 hour and the longest silence, from lag() over one per-user
+    time sort. The window order is made total with event_id so ties at
+    the same timestamp are deterministic. At scale this is one shuffle
+    on user_id and a sort within partitions — the canonical
+    time-series-quality scan."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gaps = (
+        _t(spark, sf_dir, "events")
+        .select("user_id", "event_id", "ts")
+        .withColumn(
+            # same epoch-seconds idiom as q_sessionization (NTZ->LTZ reads
+            # the naive value in the UTC session tz; LTZ->long floors) so
+            # gap semantics are uniform across the time-series queries and
+            # well-defined for both MICROS and NTZ fixture generations
+            "gap_s",
+            F.col("ts").cast("timestamp_ltz").cast("long")
+            - F.lag(F.col("ts").cast("timestamp_ltz").cast("long")).over(w),
+        )
+    )
+    return (
+        gaps.groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.coalesce(
+                F.sum(F.when(F.col("gap_s") > 3600, 1).otherwise(0)), F.lit(0)
+            ).alias("n_gaps_1h"),
+            F.max("gap_s").alias("max_gap_s"),
+        )
+    )
+
+
+SQL_GAP_DETECT = """
+WITH g AS (
+  SELECT user_id,
+         CAST(floor(epoch(ts)) AS BIGINT)
+           - CAST(floor(epoch(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT)
+           AS gap_s
+  FROM events
+)
+SELECT user_id,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(COALESCE(SUM(CASE WHEN gap_s > 3600 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_gaps_1h,
+       MAX(gap_s) AS max_gap_s
+FROM g
+GROUP BY user_id
+"""
+
+
+def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact distinct customers per order status via mergeable bitmap
+    aggregation (operators/sketches.py::bitmap_distinct): one 4 KiB
+    bitmap per (status, 32k-key bucket) folds map-side, so the shuffle
+    never carries per-key rows — the exact-count plan that scales where
+    COUNT(DISTINCT)'s expand does not. The oracle IS the plain
+    COUNT(DISTINCT), so any dropped/doubled bit mismatches."""
+    from database_collector_spark.operators import sketches
+
+    return sketches.bitmap_distinct(
+        _t(spark, sf_dir, "orders"), ["o_orderstatus"], "o_custkey"
+    )
+
+
+SQL_BITMAP_DISTINCT = """
+SELECT o_orderstatus,
+       CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_distinct_o_custkey
+FROM orders GROUP BY o_orderstatus
+"""
+
+
+def q_dist_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distribution-drift audit between two time periods — the data-
+    quality check a training pipeline runs before trusting a new
+    snapshot: bin `value` into fixed equi-width bins, compare each bin's
+    share between the first and second half-month, and report the
+    per-bin total-variation contribution in exact integer ppb
+    (|n_a·N_b − n_b·N_a| · 1e9 // (N_a·N_b) — the cross-multiplied form
+    of |p_a − p_b|, no float subtraction of near-equal shares). The sum
+    of tv_ppb over bins is 2e9·TV(P_a, P_b). `drifted` flags bins whose
+    share moved ≥ 1% absolute — an integer compare, so the verdict is
+    deterministic at any scale.
+
+    Plan: ONE scan — bin + period are map-side expressions feeding a
+    single 12-group conditional aggregate; the N_a/N_b totals are a
+    window over that aggregate's OUTPUT, whose size is the fixed bin
+    count (<= 12 rows reach the window — bounded by construction, not a
+    data-sized single partition; the broadcast-crossjoin alternative
+    plans a second full scan because Catalyst does not reuse the
+    aggregate exchange across the two consumers). Fixed bin edges keep
+    the audit single-pass (a data-driven min/max would add a pre-pass);
+    DECIMAL(38,0) cross-products kill the int64 overflow cliff at
+    petabyte row counts."""
+    ev = _t(spark, sf_dir, "events")
+    mid = F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
+    # NULL-total comparison: when(...).otherwise(0) matches the oracle's
+    # CASE WHEN (a NULL ts counts in period B), where a bare cast would
+    # silently drop NULL-ts rows from BOTH halves
+    in_a = F.when(F.col("ts") < mid, F.lit(1)).otherwise(F.lit(0)).cast("long")
+    per_bin = (
+        ev.select(
+            F.least(F.floor(F.col("value") / 50), F.lit(11)).cast("long").alias("bin"),
+            in_a.alias("in_a"),
+        )
+        .groupBy("bin")
+        .agg(
+            F.sum("in_a").alias("n_a"),
+            F.sum(F.lit(1) - F.col("in_a")).alias("n_b"),
+        )
+    )
+    w = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    with_tot = per_bin.select(
+        "bin",
+        "n_a",
+        "n_b",
+        F.sum("n_a").over(w).alias("na_tot"),
+        F.sum("n_b").over(w).alias("nb_tot"),
+    )
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    num = F.abs(
+        dec(F.col("n_a")) * dec(F.col("nb_tot"))
+        - dec(F.col("n_b")) * dec(F.col("na_tot"))
+    ) * F.lit(1_000_000_000).cast("decimal(38,0)")
+    den = dec(F.col("na_tot")) * dec(F.col("nb_tot"))
+    tv = ((num - num % den) / den).cast("long")
+    return with_tot.select(
+        "bin",
+        "n_a",
+        "n_b",
+        tv.alias("tv_ppb"),
+        (tv >= 10_000_000).alias("drifted"),
+    )
+
+
+SQL_DIST_DRIFT = """
+WITH binned AS (
+  SELECT LEAST(CAST(FLOOR(value / 50) AS BIGINT), 11) AS bin,
+         CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 0 END AS in_a
+  FROM events
+),
+per_bin AS (
+  SELECT bin, SUM(in_a) AS n_a, SUM(1 - in_a) AS n_b FROM binned GROUP BY bin
+),
+tot AS (SELECT SUM(n_a) AS na_tot, SUM(n_b) AS nb_tot FROM per_bin)
+SELECT bin, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+       CAST((ABS(CAST(n_a AS HUGEINT) * nb_tot - CAST(n_b AS HUGEINT) * na_tot)
+             * 1000000000) // (CAST(na_tot AS HUGEINT) * nb_tot) AS BIGINT)
+         AS tv_ppb,
+       (ABS(CAST(n_a AS HUGEINT) * nb_tot - CAST(n_b AS HUGEINT) * na_tot)
+             * 1000000000) // (CAST(na_tot AS HUGEINT) * nb_tot) >= 10000000
+         AS drifted
+FROM per_bin, tot
+"""
+
+
+def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Population Stability Index per bin — the industry drift score
+    next to `dist_drift`'s total-variation: psi_bin =
+    (pB − pA)·ln(pB/pA) with add-one (Laplace) smoothed shares
+    pX = (nX + 1)/(NX + 12), so empty bins contribute a finite term
+    instead of ±inf (the standard PSI smoothing). Same fixed 12-bin
+    equi-width layout and half-month split as dist_drift; shares are
+    exact rationals, one ln per bin, result rounded to 6 (rule of
+    thumb: psi_total < 0.1 stable, > 0.25 shifted).
+
+    ALL 12 bins are emitted (a fixed spine left-joins the observed
+    counts, zero-filled): a bin empty in both halves still carries its
+    nonzero smoothed term whenever the half totals differ, so summing
+    the output rows IS the 12-term smoothed PSI — omitting unobserved
+    bins would silently undercount the statistic against its own
+    definition.
+
+    Plan: identical to dist_drift — ONE scan into a 12-group
+    conditional aggregate; totals from the bounded post-aggregate
+    window; the spine join touches 12 rows."""
+    ev = _t(spark, sf_dir, "events")
+    mid = F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
+    # NULL-total comparison: when(...).otherwise(0) matches the oracle's
+    # CASE WHEN (a NULL ts counts in period B), where a bare cast would
+    # silently drop NULL-ts rows from BOTH halves
+    in_a = F.when(F.col("ts") < mid, F.lit(1)).otherwise(F.lit(0)).cast("long")
+    per_bin = (
+        ev.select(
+            F.least(F.floor(F.col("value") / 50), F.lit(11))
+            .cast("long")
+            .alias("bin"),
+            in_a.alias("in_a"),
+        )
+        .groupBy("bin")
+        .agg(
+            F.sum("in_a").alias("n_a"),
+            F.sum(F.lit(1) - F.col("in_a")).alias("n_b"),
+        )
+    )
+    spine = spark.range(0, 12).select(F.col("id").alias("bin"))
+    per_bin = spine.join(per_bin, "bin", "left").select(
+        "bin",
+        F.coalesce("n_a", F.lit(0)).alias("n_a"),
+        F.coalesce("n_b", F.lit(0)).alias("n_b"),
+    )
+    w = Window.partitionBy().rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    with_tot = per_bin.select(
+        "bin",
+        "n_a",
+        "n_b",
+        F.sum("n_a").over(w).alias("na_tot"),
+        F.sum("n_b").over(w).alias("nb_tot"),
+    )
+    pa = (F.col("n_a") + 1) / (F.col("na_tot") + 12)
+    pb = (F.col("n_b") + 1) / (F.col("nb_tot") + 12)
+    return with_tot.select(
+        "bin",
+        "n_a",
+        "n_b",
+        F.round((pb - pa) * F.log(pb / pa), 6).alias("psi_bin"),
+    )
+
+
+SQL_PSI_DRIFT = """
+WITH binned AS (
+  SELECT LEAST(CAST(FLOOR(value / 50) AS BIGINT), 11) AS bin,
+         CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 0 END AS in_a
+  FROM events
+),
+obs AS (
+  SELECT bin, SUM(in_a) AS n_a, SUM(1 - in_a) AS n_b FROM binned GROUP BY bin
+),
+per_bin AS (
+  SELECT s.bin, COALESCE(o.n_a, 0) AS n_a, COALESCE(o.n_b, 0) AS n_b
+  FROM (SELECT unnest(generate_series(0, 11)) AS bin) s
+  LEFT JOIN obs o ON o.bin = s.bin
+),
+tot AS (SELECT SUM(n_a) AS na_tot, SUM(n_b) AS nb_tot FROM per_bin),
+sh AS (
+  SELECT bin, n_a, n_b,
+         (CAST(n_a AS DOUBLE) + 1) / (na_tot + 12) AS pa,
+         (CAST(n_b AS DOUBLE) + 1) / (nb_tot + 12) AS pb
+  FROM per_bin, tot
+)
+SELECT bin, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+       round((pb - pa) * ln(pb / pa), 6) AS psi_bin
+FROM sh
+"""
+
+
+def q_capped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Floor-at-zero running balance per user (inventory/credit
+    semantics): purchases add cents, errors subtract them, and the
+    balance clamps at 0 — balance_i = max(0, balance_{i-1} + delta_i),
+    a NON-LINEAR recurrence no window frame can express (unlike a
+    running sum, each step depends on the clamped previous value).
+
+    The scalable exact form for bounded per-key histories is the in-row
+    fold: one key-sorted collect, then `aggregate()` (a codegen
+    higher-order fold) — one shuffle, sequential work confined inside
+    each row. The sequential dependence is irreducible (this is a
+    prefix computation that does not associate); for keys whose history
+    exceeds row budgets, chunk through applyInPandasWithState and carry
+    the clamp across chunks. All arithmetic exact int64 cents."""
+    ev = _t(spark, sf_dir, "events")
+    cents = F.round(F.col("value") * 100).cast("long")
+    delta = (
+        F.when(F.col("event_type") == "purchase", cents)
+        .when(F.col("event_type") == "error", -cents)
+        .otherwise(F.lit(0))
+    )
+    per_user = ev.select(
+        "user_id",
+        F.struct("ts", "event_id", delta.alias("d")).alias("s"),
+    ).groupBy("user_id").agg(
+        F.array_sort(F.collect_list("s")).alias("hist")
+    )
+    fold = F.aggregate(
+        F.col("hist"),
+        F.lit(0).cast("long"),
+        lambda acc, s: F.greatest(F.lit(0).cast("long"), acc + s["d"]),
+    )
+    return per_user.select(
+        "user_id",
+        F.size("hist").cast("long").alias("n_deltas"),
+        fold.alias("final_balance"),
+    )
+
+
+SQL_CAPPED_BALANCE = """
+WITH d AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN event_type = 'purchase' THEN CAST(ROUND(value*100) AS BIGINT)
+              WHEN event_type = 'error' THEN -CAST(ROUND(value*100) AS BIGINT)
+              ELSE 0 END AS delta
+  FROM events
+),
+h AS (
+  SELECT user_id, list(delta ORDER BY ts, event_id) AS hist FROM d GROUP BY user_id
+)
+SELECT user_id, CAST(len(hist) AS BIGINT) AS n_deltas,
+       list_reduce(list_prepend(CAST(0 AS BIGINT), hist),
+                   (acc, x) -> GREATEST(CAST(0 AS BIGINT), acc + x))
+         AS final_balance
+FROM h
+"""
+
+
+_CMS_PROBES = ["hash", "join", "vector", "scan", "merge", "the", "zz_absent"]
+
+
+def q_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-Min sketch point estimates vs exact truth for a fixed probe
+    set (operators/sketches.py::cms_point_estimates — depth 4 x width
+    256, md5 hashing, so the SKETCH itself is deterministic and
+    oracle-checkable, unlike HLL). no_undercount must be TRUE for every
+    probe (the CMS one-sided error guarantee); an absent probe shows the
+    pure collision overestimate."""
+    docs = _t(spark, sf_dir, "documents")
+    items = docs.select(
+        F.explode(F.split("text", " ")).alias("item")
+    ).where(F.col("item") != "")
+    probes = spark.createDataFrame([(p,) for p in _CMS_PROBES], "item string")
+    est = sketches.cms_point_estimates(items, probes)
+    truth = (
+        items.where(F.col("item").isin(_CMS_PROBES))
+        .groupBy(F.col("item").alias("probe_item"))
+        .agg(F.count("*").alias("true_count"))
+    )
+    return (
+        est.join(truth, "probe_item", "left")
+        .select(
+            "probe_item",
+            F.coalesce("true_count", F.lit(0)).alias("true_count"),
+            "cms_estimate",
+            (F.col("cms_estimate") >= F.coalesce("true_count", F.lit(0))).alias(
+                "no_undercount"
+            ),
+        )
+    )
+
+
+_SQL_HEX8 = (
+    "(SELECT SUM(CAST(strpos('0123456789abcdef', substr({h}, i, 1)) - 1 AS BIGINT)"
+    " * (CAST(1 AS BIGINT) << (4 * (8 - i))))"
+    " FROM (SELECT unnest(generate_series(1, 8)) AS i))"
+)
+
+SQL_CMS_ESTIMATES = f"""
+WITH ft AS (
+  SELECT item FROM (SELECT unnest(string_split(text, ' ')) AS item FROM documents)
+  WHERE item <> ''
+),
+hashed AS (
+  SELECT dd.d, ft.item,
+         {_SQL_HEX8.format(h="md5(dd.d || ':' || ft.item)")} % 256 AS col
+  FROM ft, (SELECT unnest(generate_series(0, 3)) AS d) dd
+),
+cells AS (SELECT d, col, COUNT(*) AS cnt FROM hashed GROUP BY 1, 2),
+probes(item) AS (VALUES {", ".join(f"('{p}')" for p in _CMS_PROBES)}),
+probe_cells AS (
+  SELECT p.item, dd.d,
+         {_SQL_HEX8.format(h="md5(dd.d || ':' || p.item)")} % 256 AS col
+  FROM probes p, (SELECT unnest(generate_series(0, 3)) AS d) dd
+),
+est AS (
+  SELECT pc.item AS probe_item, MIN(COALESCE(c.cnt, 0)) AS cms_estimate
+  FROM probe_cells pc LEFT JOIN cells c ON c.d = pc.d AND c.col = pc.col
+  GROUP BY 1
+),
+truth AS (
+  SELECT item AS probe_item, COUNT(*) AS true_count FROM ft
+  WHERE item IN (SELECT item FROM probes) GROUP BY 1
+)
+SELECT e.probe_item,
+       CAST(COALESCE(t.true_count, 0) AS BIGINT) AS true_count,
+       CAST(e.cms_estimate AS BIGINT) AS cms_estimate,
+       e.cms_estimate >= COALESCE(t.true_count, 0) AS no_undercount
+FROM est e LEFT JOIN truth t USING (probe_item)
+"""
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -662,92 +1254,6 @@ WITH per AS (
 SELECT user_id, rds_events_total, last_seen_s,
        (stream_end_s - last_seen_s > 3600) AS expired
 FROM per, g
-"""
-
-
-def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantile-sketch surface (GK/percentile_approx) with a bounded-
-    RANK-error verdict, the approx_distinct pattern: sketch medians are
-    engine-specific, but "the approx q50 lies within the exact
-    [q45, q55] value bracket" is deterministic (the sketch guarantees
-    rank error <= 1/accuracy = 0.01% here, far inside the 5% bracket) —
-    so the gate hashes the exact median plus that boolean, and any
-    sketch regression flips the row.
-
-    The exact side rides ``ranking.rank_select_by_group`` (r14 VERDICT
-    advisory closed r15): for a FIXED set of target ranks the two-scan
-    cell-refinement design selects the exact values with NO corpus
-    shuffle and state bounded by one log-cell's value population —
-    Spark's exact ``percentile`` aggregate buffers per-distinct-value
-    counts per group (a value-domain-sized map per agg buffer), and
-    even the ``quantiles_by_group`` prefix pass shuffles the whole
-    compressed value domain, which for ~all-distinct cents IS the
-    corpus. The median is the standard (n−1)·q interpolation — ranks
-    lo = (n+1) div 2, hi = (n+2) div 2, value (v_lo + v_hi)/2 — exact
-    in doubles for integer cents (both operands < 2^52), bit-equal to
-    DuckDB's quantile_cont and to the F.percentile call it replaces.
-    The [q45, q55] bracket uses type-1 ranks ceil(0.45·n)/ceil(0.55·n):
-    exact input values, and the sketch's <= 0.01% rank error keeps the
-    verdict TRUE with ~5%-of-n rank margin on both sides. The sketch
-    itself still runs as a plain map-side-partial aggregate over the
-    corpus (it is the operator under test); the per-group 3-row frames
-    broadcast-join.
-    """
-    from database_collector_spark.operators.ranking import rank_select_by_group
-
-    # NULL-group stance made explicit on BOTH sides (review):
-    # rank_select_by_group excludes NULL groups by contract, so the
-    # sketch aggregate and the oracle filter them too — on TPC-H
-    # l_returnflag is non-null and nothing changes, but a nullable
-    # group column must not silently drop a row only on the Spark side
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_returnflag").isNotNull()
-    )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-    exact = rank_select_by_group(
-        li.select(F.col("l_returnflag"), cents.alias("cents")),
-        "l_returnflag",
-        "cents",
-        {
-            "v_lo": "(n + 1) div 2",
-            "v_hi": "(n + 2) div 2",
-            "q45": "(45 * n + 99) div 100",
-            "q55": "(55 * n + 99) div 100",
-        },
-    )
-    sk = li.groupBy("l_returnflag").agg(
-        F.percentile_approx(cents, F.lit(0.5), F.lit(10000))
-        .cast("double")
-        .alias("approx")
-    )
-    # sketch side is the LEFT of the join: a group whose cents are all
-    # NULL is absent from the rank_select frame (NULL values excluded)
-    # but present in the sketch groupBy and in the oracle's GROUP BY —
-    # an inner join would drop the row only on the Spark side (review).
-    # For such a group every operand is NULL, so within_rank_tol
-    # coalesces to the oracle's literal TRUE and exact_q50 stays NULL
-    # on both engines.
-    return (
-        sk.join(F.broadcast(exact), "l_returnflag", "left")
-        .select(
-            "l_returnflag",
-            (
-                (F.col("v_lo") + F.col("v_hi")).cast("double") / F.lit(2.0)
-            ).alias("exact_q50"),
-            F.coalesce(
-                (F.col("approx") >= F.col("q45").cast("double"))
-                & (F.col("approx") <= F.col("q55").cast("double")),
-                F.lit(True),
-            ).alias("within_rank_tol"),
-        )
-    )
-
-
-SQL_APPROX_QUANTILES = """
-SELECT l_returnflag,
-       quantile_cont(CAST(ROUND(l_extendedprice*100) AS BIGINT), 0.5) AS exact_q50,
-       TRUE AS within_rank_tol
-FROM lineitem WHERE l_returnflag IS NOT NULL GROUP BY l_returnflag
 """
 
 
@@ -1822,7 +2328,6 @@ FROM md GROUP BY user_id
 """
 
 
-
 def q_seasonal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day seasonal decomposition per event type: the seasonal
     mean over each (type, hod) cell plus the count of residual outliers
@@ -1892,7 +2397,6 @@ GROUP BY 1, 2
 """
 
 
-
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition counts over each user's event
     sequence (lag/lead over the (user, time) order): the path-analysis
@@ -1938,7 +2442,6 @@ SELECT from_type, to_type, n,
        round(n / SUM(n) OVER (PARTITION BY from_type), 4) AS p_next
 FROM pairs
 """
-
 
 
 def q_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1989,7 +2492,6 @@ SELECT first_touch.t AS channel, COUNT(*) AS n_purchases
 FROM tagged WHERE event_type = 'purchase'
 GROUP BY 1
 """
-
 
 
 def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2060,119 +2562,6 @@ SELECT event_type,
        CAST(MAX(abs(n * run_sum - k * s)) AS BIGINT) AS max_ncusum
 FROM scored GROUP BY event_type
 """
-
-
-
-_TS_BAND = 12  # banded Theil-Sen: pair each sample with its next 12
-
-
-def user_value_series(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact-integer per-user event series (user_id, s = unix
-    seconds, event_id, v = value cents) shared by the banded-pair gates
-    (theil_sen_slope here, kendall_tau_banded in workloads_r12)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "user_id",
-        F.unix_timestamp("ts").alias("s"),
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-    )
-
-
-def q_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded Theil-Sen robust slope per user series: the median of
-    pairwise slopes, with pairs limited to each sample and its next
-    {band} successors — the standard scale-honest variant (full
-    Theil-Sen is O(n²) per series; the band keeps it O(n·band) while
-    retaining the median's outlier robustness). Expressed as {band}
-    lead() columns sharing ONE per-user sort, then a second window on
-    the same key for exact lower-median selection (rank (n+1)//2 with
-    a (slope, rn, k) total order — no averaging, no float ambiguity:
-    slopes are identical doubles in any engine since cents/seconds
-    inputs are integers and division is correctly rounded)."""
-    from database_collector_spark.operators.ranking import banded_pair_deltas
-
-    base = user_value_series(spark, sf_dir)
-    # the banded (rn, k)-identified pair deltas ride the SHARED core
-    # under banded_kendall_tau (one per-user sort, in-row expansion).
-    # try_divide: pairs with equal timestamps (dx = 0) have no defined
-    # slope — classic Theil-Sen skips them (the null is filtered). A
-    # plain `/` would THROW under ANSI the moment two samples share a
-    # second, which the denser sf0.1 fixture does hit.
-    slopes = (
-        banded_pair_deltas(
-            base, "user_id", x_col="s", y_col="v", id_col="event_id",
-            band=_TS_BAND,
-        )
-        .select(
-            F.col("g").alias("user_id"),
-            F.try_divide(F.col("dy"), F.col("dx")).alias("slope"),
-            "rn",
-            "k",
-        )
-        .where(F.col("slope").isNotNull())
-    )
-    wm = Window.partitionBy("user_id").orderBy("slope", "rn", "k")
-    wc = Window.partitionBy("user_id")
-    return (
-        slopes.select(
-            "user_id",
-            "slope",
-            F.row_number().over(wm).alias("r"),
-            F.count("*").over(wc).alias("n_slopes"),
-        )
-        .where(F.col("r") == F.floor((F.col("n_slopes") + 1) / 2))
-        .select(
-            "user_id",
-            "n_slopes",
-            F.round(F.col("slope") * 3600, 6).alias("median_slope_per_hour"),
-        )
-    )
-
-
-def _sql_theil_sen(band: int = _TS_BAND) -> str:
-    leads = ",\n         ".join(
-        f"LEAD(s, {k}) OVER w AS s{k}, LEAD(v, {k}) OVER w AS v{k}"
-        for k in range(1, band + 1)
-    )
-    unions = "\n  UNION ALL\n  ".join(
-        f"SELECT user_id, (v{k} - v) / CAST(s{k} - s AS DOUBLE) AS slope,"
-        f" rn, {k} AS k FROM led WHERE s{k} IS NOT NULL AND s{k} <> s"
-        for k in range(1, band + 1)
-    )
-    return f"""
-WITH base AS (
-  -- NULL key/x/y/id rows excluded on BOTH sides: the Spark core
-  -- (ranking.banded_pair_deltas) filters them actively
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s, event_id,
-         CAST(ROUND(value * 100) AS BIGINT) AS v
-  FROM events
-  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-    AND event_id IS NOT NULL AND value IS NOT NULL
-),
-led AS (
-  SELECT user_id, ROW_NUMBER() OVER w AS rn, s, v,
-         {leads}
-  FROM base
-  WINDOW w AS (PARTITION BY user_id ORDER BY s, event_id)
-),
-slopes AS (
-  {unions}
-),
-ranked AS (
-  SELECT user_id, slope,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY slope, rn, k) AS r,
-         COUNT(*) OVER (PARTITION BY user_id) AS n_slopes
-  FROM slopes
-)
-SELECT user_id, CAST(n_slopes AS BIGINT) AS n_slopes,
-       round(slope * 3600, 6) AS median_slope_per_hour
-FROM ranked WHERE r = (n_slopes + 1) // 2
-"""
-
-
-SQL_THEIL_SEN_SLOPE = _sql_theil_sen()
-
 
 
 def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2263,7 +2652,6 @@ SELECT event_type, bin, COUNT(*) AS n,
        round(SUM(v) / (100.0 * COUNT(*)), 4) AS bin_mean
 FROM binned GROUP BY 1, 2
 """
-
 
 
 def q_sliding_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2622,7 +3010,338 @@ FROM events GROUP BY event_type
 """
 
 
+# -------------------------------------------------------- interval difference
+
+def q_interval_outages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user uncovered windows: activity intervals (every non-error
+    event opens [ts, ts + value sec)) MINUS error intervals
+    (operators/timeseries.py::interval_subtract — coalesce both sides +
+    one boundary sweep, never a base x holes interval join)."""
+    ev = _t(spark, sf_dir, "events")
+    tus = F.unix_micros(F.col("ts").cast("timestamp_ltz"))
+    iv = ev.select(
+        "user_id",
+        "event_type",
+        tus.alias("start"),
+        (tus + F.round(F.col("value") * 1_000_000).cast("long")).alias("end"),
+    )
+    base = iv.where(F.col("event_type") != "error").drop("event_type")
+    holes = iv.where(F.col("event_type") == "error").drop("event_type")
+    out = timeseries.interval_subtract(base, holes, by=("user_id",))
+    return out.select(
+        "user_id", F.col("start").alias("start_us"), F.col("end").alias("end_us")
+    )
+
+
+# Oracle is deliberately a DIFFERENT formulation: elementary segments
+# from the union of all boundaries, EXISTS/NOT EXISTS coverage tests
+# (constant within an elementary segment), then an islands merge.
+SQL_INTERVAL_OUTAGES = """
+WITH iv AS (
+  SELECT user_id, event_type, epoch_us(ts) AS s,
+         epoch_us(ts) + CAST(ROUND(value * 1000000) AS BIGINT) AS e
+  FROM events
+),
+b AS (SELECT user_id, s, e FROM iv WHERE event_type <> 'error' AND e > s),
+h AS (SELECT user_id, s, e FROM iv WHERE event_type = 'error' AND e > s),
+bounds AS (
+  SELECT DISTINCT user_id, t FROM (
+    SELECT user_id, s AS t FROM b UNION ALL SELECT user_id, e FROM b
+    UNION ALL SELECT user_id, s FROM h UNION ALL SELECT user_id, e FROM h
+  )
+),
+seg AS (
+  SELECT user_id, t AS s,
+         LEAD(t) OVER (PARTITION BY user_id ORDER BY t) AS e
+  FROM bounds
+),
+kept AS (
+  SELECT user_id, s, e FROM seg
+  WHERE e IS NOT NULL AND e > s
+    AND EXISTS (SELECT 1 FROM b
+                WHERE b.user_id = seg.user_id AND b.s <= seg.s AND b.e >= seg.e)
+    AND NOT EXISTS (SELECT 1 FROM h
+                    WHERE h.user_id = seg.user_id AND h.s < seg.e AND h.e > seg.s)
+),
+x AS (
+  SELECT user_id, s, e,
+         CASE WHEN s > MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
+                                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+              THEN 1 ELSE 0 END AS brk
+  FROM kept
+),
+y AS (
+  SELECT user_id, s, e,
+         SUM(brk) OVER (PARTITION BY user_id ORDER BY s, e
+                        ROWS UNBOUNDED PRECEDING) AS isl
+  FROM x
+)
+SELECT user_id, MIN(s) AS start_us, MAX(e) AS end_us
+FROM y GROUP BY user_id, isl
+"""
+
+
+# ------------------------------------------------------------ HLL gates
+#
+# Tolerance bounds follow the protocol: measured max error at sf0.1 and
+# sf0.01 with >= 2x margin (SCALE.md). Sliding max(20%, ±15) vs measured
+# max abs error 6.47 / rel 23.5% at sf0.1 (14,415 windows) and 1.99 abs
+# at sf0.01; rollup max(15%, ±10) vs measured 5.7% rel / 85.5 abs at
+# sf0.1 (0.15*1500 = 225, 2.6x margin). m = 256 -> rsd ~ 6.5%; linear
+# counting covers the small-window regime.
+
+_HLL_SALT_SLIDE = "shll"
+_HLL_SALT_ROLL = "rhll"
+_HLL_M = sketches.HLL_M
+_HLL_ALPHA = 0.7213 / (1.0 + 1.079 / _HLL_M)
+# repr() so the SQL literal parses to the bit-identical double Spark uses
+_HLL_SCALE = repr(_HLL_ALPHA * _HLL_M * _HLL_M * float(1 << 33))
+
+
+def _hll_verdict(frac: float, floor: float) -> F.Column:
+    exact = F.col("exact_users").cast("double")
+    tol = F.greatest(F.lit(frac) * exact, F.lit(floor))
+    return (F.abs(F.col("est_users") - exact) <= tol).alias("within_tol")
+
+
+def q_hll_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window distinct users from DETERMINISTIC HLL registers
+    (operators/sketches.py::hll_partial_registers) — same 1 h / 15 min
+    hop windows as sliding_unique_users, but the sketch state itself is
+    engine-reproducible, so the gate hashes (n_regs, v_zero, reg_sum):
+    any register divergence fails the hash outright, and the estimate
+    verdict documents accuracy on top. Batch twin of the stateful
+    streaming op streaming/stateful.py::sliding_hll_unique (parity
+    pinned register-for-register in tests/test_streaming_hll.py).
+
+    Windows keyed by epoch-second BIGINT win_s — the r8 lesson: naive
+    vs tz-aware TIMESTAMP is an oracle-portability trap; integer window
+    keys cannot have it. Plan: hop explode (4x, the shared
+    sketches.hop_expand the streaming twin and the parity test also
+    use), one distinct-free register partial-agg (max is insensitive to
+    duplicates), one finalize agg + one exact-twin agg joined on the
+    window key.
+    """
+    ev = _t(spark, sf_dir, "events")
+    s = F.col("ts").cast("timestamp_ltz").cast("long")
+    expanded = sketches.hop_expand(
+        ev.select("event_type", "user_id", s.alias("s")),
+        window_s=3600,
+        hop_s=900,
+    ).select("event_type", "user_id", "win_s")
+    regs = sketches.hll_partial_registers(
+        expanded, ["event_type", "win_s"], "user_id", salt=_HLL_SALT_SLIDE
+    )
+    fin = sketches.hll_finalize(regs, ["event_type", "win_s"])
+    exact = expanded.groupBy("event_type", "win_s").agg(
+        F.countDistinct("user_id").alias("exact_users")
+    )
+    return (
+        fin.join(exact, ["event_type", "win_s"])
+        .select(
+            "event_type",
+            "win_s",
+            "exact_users",
+            "n_regs",
+            "v_zero",
+            "reg_sum",
+            _hll_verdict(0.20, 15.0),
+        )
+    )
+
+
+def _sql_hll_core(distinct_items_cte: str, keys: str, salt: str) -> str:
+    """Shared oracle chain: ``items`` CTE (keys..., item VARCHAR) ->
+    registers -> finalize columns, mirroring sketches.hll_* exactly
+    (including the NULL-item drop in hll_rho_projection)."""
+    h1 = hv_sql("item || ':" + salt + "'", 1)
+    h2 = hv_sql("item || ':" + salt + "'", 9)
+    return f"""{distinct_items_cte},
+hashed AS (
+  SELECT {keys}, {h1} % {_HLL_M} AS reg, {h2} AS h2
+  FROM items WHERE item IS NOT NULL
+),
+regs AS (
+  SELECT {keys}, reg,
+         MAX(CASE WHEN h2 = 0 THEN 33 ELSE 33 - length(bin(h2)) END) AS rho
+  FROM hashed GROUP BY {keys}, reg
+),
+fin AS (
+  SELECT {keys},
+         CAST(COUNT(*) AS INT) AS n_regs,
+         CAST({_HLL_M} - COUNT(*) AS INT) AS v_zero,
+         CAST(SUM(CAST(1 AS BIGINT) << (33 - rho))
+              + ({_HLL_M} - COUNT(*)) * (CAST(1 AS BIGINT) << 33) AS BIGINT)
+           AS reg_sum
+  FROM regs GROUP BY {keys}
+),
+est AS (
+  SELECT *,
+         CASE WHEN ({_HLL_SCALE} / CAST(reg_sum AS DOUBLE)) <= {2.5 * _HLL_M}
+                   AND v_zero > 0
+              THEN {float(_HLL_M)!r} * ln({float(_HLL_M)!r} / CAST(v_zero AS DOUBLE))
+              ELSE {_HLL_SCALE} / CAST(reg_sum AS DOUBLE) END AS est_users
+  FROM fin
+)"""
+
+
+SQL_HLL_SLIDING_WINDOWS = f"""
+WITH e AS (
+  SELECT event_type, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS s
+  FROM events
+),
+expanded AS (
+  -- floor-aligned window start via the pmod idiom: DuckDB // TRUNCATES
+  -- toward zero (-7 // 2 = -3), so s // 900 * 900 would mis-align
+  -- pre-1970 epochs relative to Spark's pmod floor alignment; the
+  -- containment predicate is provably always-true for floor-aligned
+  -- hops (see sketches.hop_expand), so none is needed
+  SELECT event_type, user_id,
+         (s - ((s % 900) + 900) % 900) - hop.h * 900 AS win_s
+  FROM e, (SELECT unnest(generate_series(0, 3)) AS h) hop
+),
+{_sql_hll_core(
+    "items AS (SELECT DISTINCT event_type, win_s,"
+    " CAST(user_id AS VARCHAR) AS item FROM expanded)",
+    "event_type, win_s",
+    _HLL_SALT_SLIDE,
+)},
+exact AS (
+  SELECT event_type, win_s, COUNT(DISTINCT user_id) AS exact_users
+  FROM expanded GROUP BY 1, 2
+)
+SELECT x.event_type, x.win_s, x.exact_users,
+       est.n_regs, est.v_zero, est.reg_sum,
+       abs(est.est_users - CAST(x.exact_users AS DOUBLE))
+         <= greatest(0.20 * CAST(x.exact_users AS DOUBLE), 15.0) AS within_tol
+FROM exact x JOIN est USING (event_type, win_s)
+"""
+
+
+def q_hll_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persist-then-merge sketch rollup: DAILY register partials per
+    (event_type, day) — the bounded table a 100 TB pipeline writes to
+    parquet each night (O(types x days x 256) rows, independent of event
+    count) — ACTUALLY written to and read back from parquet (the nightly
+    artifact), then merged register-by-register (max) up to event_type
+    and finalized, with an exact twin verdict. Merging partials equals
+    sketching the whole range directly BY CONSTRUCTION (max is
+    associative), which is the property that lets month-level questions
+    be answered without rescanning any day's raw events. The gate hashes
+    the merged register state (n_regs, v_zero, reg_sum) + n_days +
+    per-day partial row count, so a wrong partial anywhere — or a lossy
+    round-trip — flips it."""
+    ev = _t(spark, sf_dir, "events")
+    # integer FLOOR division (s - pmod)/86400, not double-divide + cast
+    # (which truncates toward zero): a pre-1970 epoch would bucket into
+    # a different day under trunc. NB DuckDB's // ALSO truncates, so the
+    # oracle floor-aligns the same way (pmod idiom) rather than using
+    # bare // — the trunc-vs-floor engine-divergence class, both sides
+    s = F.col("ts").cast("timestamp_ltz").cast("long")
+    day = ((s - F.pmod(s, 86400)) / F.lit(86400)).cast("long")
+    base = ev.select("event_type", day.alias("day"), "user_id")
+    path = os.path.join(_artifact_dir("hll_rollup", sf_dir), "daily_registers")
+    sketches.hll_partial_registers(
+        base, ["event_type", "day"], "user_id", salt=_HLL_SALT_ROLL
+    ).write.mode("overwrite").parquet(path)
+    daily = spark.read.parquet(path)
+    merged = sketches.merge_hll_registers(daily, ["event_type"])
+    fin = sketches.hll_finalize(merged, ["event_type"])
+    meta = daily.groupBy("event_type").agg(
+        F.countDistinct("day").cast("int").alias("n_days"),
+        F.count("*").alias("partial_rows"),
+    )
+    exact = base.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users")
+    )
+    return (
+        fin.join(meta, "event_type")
+        .join(exact, "event_type")
+        .select(
+            "event_type",
+            "n_days",
+            "partial_rows",
+            "exact_users",
+            "n_regs",
+            "v_zero",
+            "reg_sum",
+            _hll_verdict(0.15, 10.0),
+        )
+    )
+
+
+SQL_HLL_MERGEABLE_ROLLUP = f"""
+WITH e0 AS (
+  SELECT event_type, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS es FROM events
+),
+base AS (
+  -- (es - pmod) is an exact multiple of 86400, so trunc-div == floor-div
+  -- (DuckDB // truncates; bare es // 86400 would diverge from Spark's
+  -- floor day key on pre-1970 epochs)
+  SELECT event_type,
+         (es - ((es % 86400) + 86400) % 86400) // 86400 AS day,
+         user_id
+  FROM e0
+),
+-- the daily partial table (merge then equals direct sketch; the oracle
+-- recomputes the partial ROW COUNT to pin the persisted-table shape)
+{_sql_hll_core(
+    "items AS (SELECT DISTINCT event_type, day,"
+    " CAST(user_id AS VARCHAR) AS item FROM base)",
+    "event_type, day",
+    _HLL_SALT_ROLL,
+)},
+daily_regs AS (SELECT event_type, day, reg, rho FROM regs),
+merged AS (
+  SELECT event_type, reg, MAX(rho) AS rho FROM daily_regs GROUP BY 1, 2
+),
+mfin AS (
+  SELECT event_type,
+         CAST(COUNT(*) AS INT) AS n_regs,
+         CAST({_HLL_M} - COUNT(*) AS INT) AS v_zero,
+         CAST(SUM(CAST(1 AS BIGINT) << (33 - rho))
+              + ({_HLL_M} - COUNT(*)) * (CAST(1 AS BIGINT) << 33) AS BIGINT)
+           AS reg_sum
+  FROM merged GROUP BY 1
+),
+mest AS (
+  SELECT *,
+         CASE WHEN ({_HLL_SCALE} / CAST(reg_sum AS DOUBLE)) <= {2.5 * _HLL_M}
+                   AND v_zero > 0
+              THEN {float(_HLL_M)!r} * ln({float(_HLL_M)!r} / CAST(v_zero AS DOUBLE))
+              ELSE {_HLL_SCALE} / CAST(reg_sum AS DOUBLE) END AS est_users
+  FROM mfin
+),
+meta AS (
+  SELECT event_type, CAST(COUNT(DISTINCT day) AS INT) AS n_days,
+         COUNT(*) AS partial_rows
+  FROM daily_regs GROUP BY 1
+),
+exact AS (
+  SELECT event_type, COUNT(DISTINCT user_id) AS exact_users
+  FROM base GROUP BY 1
+)
+SELECT x.event_type, m.n_days, m.partial_rows, x.exact_users,
+       e.n_regs, e.v_zero, e.reg_sum,
+       abs(e.est_users - CAST(x.exact_users AS DOUBLE))
+         <= greatest(0.15 * CAST(x.exact_users AS DOUBLE), 10.0) AS within_tol
+FROM exact x JOIN mest e USING (event_type) JOIN meta m USING (event_type)
+"""
+
+
 QUERIES = {
+    "corr_matrix": q_corr_matrix,
+    "decayed_counts": q_decayed_counts,
+    "range_join_buckets": q_range_join_buckets,
+    "capped_balance": q_capped_balance,
+    "dist_drift": q_dist_drift,
+    "psi_drift": q_psi_drift,
+    "gap_detect": q_gap_detect,
+    "bitmap_distinct": q_bitmap_distinct,
+    "cms_estimates": q_cms_estimates,
+    "interval_outages": q_interval_outages,
+    "hll_sliding_windows": q_hll_sliding_windows,
+    "hll_mergeable_rollup": q_hll_mergeable_rollup,
     "events_hourly": q_events_hourly,
     "pit_join": q_pit_join,
     "time_weighted_avg": q_time_weighted_avg,
@@ -2639,7 +3358,6 @@ QUERIES = {
     "event_transitions": q_event_transitions,
     "attribution_first_touch": q_attribution_first_touch,
     "cusum_changepoints": q_cusum_changepoints,
-    "theil_sen_slope": q_theil_sen_slope,
     "rolling_median": q_rolling_median,
     "value_histogram": q_value_histogram,
     "sliding_unique_users": q_sliding_unique_users,
@@ -2657,7 +3375,6 @@ QUERIES = {
     "json_struct_parse": q_json_struct_parse,
     "rollup_counts": q_rollup_counts,
     "approx_distinct": q_approx_distinct,
-    "approx_quantiles": q_approx_quantiles,
     "ttl_expiry_counts": q_ttl_expiry_counts,
     "interval_join_events": q_interval_join_events,
     "funnel_steps": q_funnel_steps,
@@ -2672,6 +3389,18 @@ QUERIES = {
 }
 
 ORACLES = {
+    "corr_matrix": SQL_CORR_MATRIX,
+    "decayed_counts": SQL_DECAYED_COUNTS,
+    "range_join_buckets": SQL_RANGE_JOIN_BUCKETS,
+    "capped_balance": SQL_CAPPED_BALANCE,
+    "dist_drift": SQL_DIST_DRIFT,
+    "psi_drift": SQL_PSI_DRIFT,
+    "gap_detect": SQL_GAP_DETECT,
+    "bitmap_distinct": SQL_BITMAP_DISTINCT,
+    "cms_estimates": SQL_CMS_ESTIMATES,
+    "interval_outages": SQL_INTERVAL_OUTAGES,
+    "hll_sliding_windows": SQL_HLL_SLIDING_WINDOWS,
+    "hll_mergeable_rollup": SQL_HLL_MERGEABLE_ROLLUP,
     "events_hourly": SQL_EVENTS_HOURLY,
     "pit_join": SQL_PIT_JOIN,
     "time_weighted_avg": SQL_TIME_WEIGHTED_AVG,
@@ -2688,7 +3417,6 @@ ORACLES = {
     "event_transitions": SQL_EVENT_TRANSITIONS,
     "attribution_first_touch": SQL_ATTRIBUTION_FIRST_TOUCH,
     "cusum_changepoints": SQL_CUSUM_CHANGEPOINTS,
-    "theil_sen_slope": SQL_THEIL_SEN_SLOPE,
     "rolling_median": SQL_ROLLING_MEDIAN,
     "value_histogram": SQL_VALUE_HISTOGRAM,
     "sliding_unique_users": SQL_SLIDING_UNIQUE_USERS,
@@ -2705,10 +3433,7 @@ ORACLES = {
     "kv_pivot_wide": SQL_KV_PIVOT_WIDE,
     "json_struct_parse": SQL_JSON_STRUCT_PARSE,
     "rollup_counts": SQL_ROLLUP_COUNTS,
-    # HLL sketch values are engine-specific, so the oracle checks the
-    # bounded-error verdict (exact count + within_5pct) instead
     "approx_distinct": SQL_APPROX_DISTINCT,
-    "approx_quantiles": SQL_APPROX_QUANTILES,
     "ttl_expiry_counts": SQL_TTL_EXPIRY_COUNTS,
     "interval_join_events": SQL_INTERVAL_JOIN_EVENTS,
     "funnel_steps": SQL_FUNNEL_STEPS,

@@ -158,52 +158,37 @@ def run_eval(spark, sf_dir: str, n_bins: int) -> dict:
     return report
 
 
-def demo_feature_store_memo(
+def demo_feature_store(
     spark, sf_dir: str
 ) -> list[tuple[str, str, float, int]]:
-    """The feature-store pattern one level up (r14 VERDICT #5, reshaped
-    r15): score the hashed-classifier feature frame ONCE via the OPT-IN
-    session memo (``clf_truth_frame(memo=True)`` /
-    ``_clf_lang_frame(memo=True)``) and run four evaluation reads
-    against the persisted frame — exactly like a production feature
-    store where evaluations read a scored table instead of re-running
-    the model. The first read pays the cold corpus fold (classifier
-    tokenization + truth join, persisted MEMORY_AND_DISK); the second
-    pays only the lang join layered on the warm truth frame; the last
-    two are pure warm reads.
-
-    NOTE the ``memo=True``: since the r15 optimization round the
-    REGISTERED GATES never memoize — every declared-query invocation
-    recomputes from parquet (the bench-integrity contract) — so the
-    memo is purely this user-level opt-in tier for long-lived
-    evaluation services. The memo is cleared at entry so the labels are
-    honest even when the session already scored this sf_dir. Returns
-    [(name, label, seconds, rows)] in execution order. Teardown
-    contract: the CALLER evicts via ``clear_session_memo(spark)`` when
-    the session retires (``main()`` below does; a process that forgets
-    gets the atexit safety net, but in a long-lived multi-session
-    service that means holding the frames until exit).
+    """The feature-store pattern one level up: score the hashed-classifier
+    feature frame ONCE, persist it, and run four evaluation reads against
+    the persisted frame — exactly like a production feature store where
+    evaluations read a scored table instead of re-running the model. The
+    first read pays the cold corpus fold (classifier tokenization + truth
+    join); the second pays only the lang join layered on the warm truth
+    frame; the last two are pure warm reads. Both frames are unpersisted
+    before returning, so the session keeps no cached block from the demo.
+    Returns [(name, label, seconds, rows)] in execution order.
     """
     import time
 
     from pyspark.sql import functions as F
 
     from database_collector_spark.operators import ranking
-    from database_collector_spark.workloads_r12 import (
-        clear_session_memo,
-        clf_truth_frame,
-    )
-    from database_collector_spark.workloads_r14 import _clf_lang_frame
+    from database_collector_spark.workloads_eval import clf_truth_frame
 
-    # cold-start guarantee: without this, a session that already built
-    # the memoized frames would make the 'cold fold' label a lie
-    clear_session_memo(spark)
+    truth = clf_truth_frame(spark, sf_dir).persist()
+    lang = _t(spark, sf_dir, "documents").select("doc_id", "lang")
+    by_lang = (
+        truth.join(lang, "doc_id").where(F.col("lang").isNotNull()).persist()
+    )
     reads = [
         (
             "auc_overall",
             "cold: classifier fold",
             lambda: ranking.auc_exact(
-                clf_truth_frame(spark, sf_dir, memo=True).select(
+                truth.select(
                     F.expr("logit_milli div n_feats").alias("score"), "y"
                 ),
                 score_col="score",
@@ -214,7 +199,7 @@ def demo_feature_store_memo(
             "auc_by_lang",
             "cold: + lang join on the warm frame",
             lambda: ranking.auc_by_group(
-                _clf_lang_frame(spark, sf_dir, memo=True).select(
+                by_lang.select(
                     "lang",
                     F.expr("logit_milli div n_feats").alias("score"),
                     "y",
@@ -227,16 +212,12 @@ def demo_feature_store_memo(
         (
             "class_balance",
             "warm read",
-            lambda: _clf_lang_frame(spark, sf_dir, memo=True)
-            .groupBy("lang", "y")
-            .count(),
+            lambda: by_lang.groupBy("lang", "y").count(),
         ),
         (
             "score_moments",
             "warm read",
-            lambda: _clf_lang_frame(spark, sf_dir, memo=True)
-            .groupBy("lang")
-            .agg(
+            lambda: by_lang.groupBy("lang").agg(
                 F.count("*").alias("n"),
                 F.sum("logit_milli").alias("s1"),
                 F.sum(F.col("logit_milli") * F.col("logit_milli")).alias("s2"),
@@ -244,10 +225,14 @@ def demo_feature_store_memo(
         ),
     ]
     timings = []
-    for name, label, mk in reads:
-        t0 = time.time()
-        rows = mk().collect()
-        timings.append((name, label, time.time() - t0, len(rows)))
+    try:
+        for name, label, mk in reads:
+            t0 = time.time()
+            rows = mk().collect()
+            timings.append((name, label, time.time() - t0, len(rows)))
+    finally:
+        by_lang.unpersist()
+        truth.unpersist()
     return timings
 
 
@@ -284,8 +269,8 @@ def main() -> None:
                 f"keeps {kept} docs at precision={prec} recall={rec} f1={f1}"
             )
         print(f"lift of the top decile: {report['top_decile_lift']}")
-        print("== feature-store memo: each frame folds once ==")
-        timings = demo_feature_store_memo(spark, sf_dir)
+        print("== feature store: each frame folds once ==")
+        timings = demo_feature_store(spark, sf_dir)
         for name, label, sec, rows in timings:
             print(f"  {name}: {sec:.2f}s ({rows} rows) [{label}]")
         cold0 = timings[0][2]
@@ -296,15 +281,7 @@ def main() -> None:
             "gates read the persisted feature store"
         )
     finally:
-        # documented memo lifetime contract: evict this session's
-        # feature frames on teardown (workloads_r12.clear_session_memo)
-        from database_collector_spark.workloads_r12 import clear_session_memo
-
-        try:
-            clear_session_memo(spark)
-        finally:
-            # a strict-unpersist re-raise must not skip the stop
-            spark.stop()
+        spark.stop()
 
 
 if __name__ == "__main__":

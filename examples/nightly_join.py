@@ -1,7 +1,7 @@
 """Nightly-join demonstration over the SHARED bucketed layout.
 
 The `bucketed_join_persist` gate writes the (documents, embeddings)
-pair bucketed+sorted on doc_id (workloads_r13.ensure_bucketed_tables ->
+pair bucketed+sorted on doc_id (workloads_storage.ensure_bucketed_tables ->
 sinks/bucketed.py::write_bucketed). That layout is meant to be paid ONCE
 and consumed by every recurring job — not one query's private cache
 (r13 VERDICT #6). This example runs TWO different consumers over the
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from database_collector_spark.session import get_spark
 from database_collector_spark.sinks.bucketed import read_table
-from database_collector_spark.workloads_r13 import ensure_bucketed_tables
+from database_collector_spark.workloads_storage import ensure_bucketed_tables
 
 
 def lang_rollup(spark, docs_table: str, emb_table: str):

@@ -1,6 +1,6 @@
 """Range-partitioned layout planning from exact equi-depth splitters.
 
-The `range_splitters` gate (workloads_r18) computes the exact
+The `range_splitters` gate (workloads_eval) computes the exact
 boundaries cutting a distribution into equal-count ranges with TWO
 scans and ZERO corpus shuffle (ranking.rank_select_by_group). This
 example shows what those numbers are FOR: planning a range-partitioned

@@ -64,56 +64,3 @@ def oracle_con():
         c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     yield c
     c.close()
-
-
-def assert_oracles_portable(con, oracles: dict[str, str]) -> None:
-    """Every oracle's final columns pass the shared Arrow-portability
-    predicate (tools/check.py::unportable_type), checked with LIMIT 0."""
-    for name, sql in oracles.items():
-        rel = con.sql(f"SELECT * FROM ({sql}) q LIMIT 0")
-        for col, typ in zip(rel.columns, map(str, rel.types)):
-            reason = check.unportable_type(typ)
-            assert reason is None, f"{name}.{col}: {reason}"
-
-
-def assert_module_registered(module) -> None:
-    """Every gate of a workloads module outside ``STAGED`` reaches the
-    driver with the module's own callable and SQL."""
-    import __spark_entry__ as entrymod
-
-    qs, os_ = entrymod.queries(), entrymod.oracle_sql()
-    for name in module.QUERIES:
-        if name in gates.STAGED:
-            assert name not in qs and name not in os_, name
-            continue
-        assert qs[name] is module.QUERIES[name], name
-        assert os_[name] == module.ORACLES[name], name
-
-
-def assert_registration_composes(module, gate_plan) -> None:
-    """Registering a staged gate is removing its name from ``STAGED``:
-    the registry must already hold the module's gates 1:1 with their
-    oracles, and every gate must plan."""
-    queries, oracles = gates.all_queries(), gates.all_oracles()
-    assert set(queries) == set(oracles)
-    for name in module.QUERIES:
-        assert queries[name] is module.QUERIES[name], name
-        assert oracles[name] == module.ORACLES[name], name
-        assert gate_plan(name), name
-
-
-def assert_module_documented(module, cohort: str) -> None:
-    """Every gate of a registered cohort carries a driver CORRECTNESS row
-    from some past round or sits in the check window, and has a
-    COVERAGE.md row; the ``REGISTERED <cohort>`` rows are 1:1 with it."""
-    seen, window = gates.newest_driver_rows(), gates.check_window()
-    with open(os.path.join(ROOT, "COVERAGE.md")) as fh:
-        cov = fh.read()
-    for name in module.QUERIES:
-        assert name in seen or name in window, (
-            f"{name}: no driver row and not in the current window"
-        )
-        assert f"`{name}`" in cov, f"{name} missing a COVERAGE row"
-    assert cov.count(f"REGISTERED {cohort}") == len(module.QUERIES), (
-        f"REGISTERED {cohort} COVERAGE rows must be 1:1 with the {cohort} cohort"
-    )

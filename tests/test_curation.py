@@ -1,4 +1,4 @@
-"""Dataset-curation operators (workloads5): stratified sampling,
+"""Dataset-curation operators (workloads_text): stratified sampling,
 hash splits, normalization, lexical diversity.
 
 Invariants, not goldens — the DuckDB differential gate pins exact
@@ -9,13 +9,14 @@ from __future__ import annotations
 
 import pytest
 
-from database_collector_spark import workloads5
+from database_collector_spark import gates
+
 
 SF = "/root/testdata/sf0.001"
 
 
 def test_stratified_sample_exact_k_per_stratum(spark):
-    rows = workloads5.q_sample_stratified(spark, SF).collect()
+    rows = gates.all_queries()["sample_stratified"](spark, SF).collect()
     by_lang: dict[str, list[int]] = {}
     for r in rows:
         by_lang.setdefault(r["lang"], []).append(r["rk"])
@@ -33,13 +34,13 @@ def test_stratified_sample_exact_k_per_stratum(spark):
 
 
 def test_stratified_sample_is_deterministic(spark):
-    a = {(r["lang"], r["doc_id"]) for r in workloads5.q_sample_stratified(spark, SF).collect()}
-    b = {(r["lang"], r["doc_id"]) for r in workloads5.q_sample_stratified(spark, SF).collect()}
+    a = {(r["lang"], r["doc_id"]) for r in gates.all_queries()["sample_stratified"](spark, SF).collect()}
+    b = {(r["lang"], r["doc_id"]) for r in gates.all_queries()["sample_stratified"](spark, SF).collect()}
     assert a == b
 
 
 def test_hash_split_partitions_everything_once(spark):
-    rows = workloads5.q_hash_split(spark, SF).collect()
+    rows = gates.all_queries()["hash_split"](spark, SF).collect()
     total = spark.read.parquet(f"{SF}/documents.parquet").count()
     assert {r["split"] for r in rows} == {"train", "val", "test"}
     assert sum(r["n_docs"] for r in rows) == total
@@ -49,7 +50,7 @@ def test_hash_split_partitions_everything_once(spark):
 
 
 def test_normalize_never_grows_text(spark):
-    for r in workloads5.q_text_normalize(spark, SF).collect():
+    for r in gates.all_queries()["text_normalize"](spark, SF).collect():
         assert r["chars_norm"] <= r["chars_raw"]
         assert r["tokens"] >= r["n_docs"]  # every doc has >=1 token
 
@@ -57,13 +58,13 @@ def test_normalize_never_grows_text(spark):
 def test_subtoken_estimate_dominates_word_count(spark):
     # every word contributes >= 1 subtoken, so the estimate never
     # undercounts words; inflation is bounded by the longest-word regime
-    for r in workloads5.q_token_estimate(spark, SF).collect():
+    for r in gates.all_queries()["token_estimate"](spark, SF).collect():
         assert r["subtokens_est"] >= r["words"]
         assert 1.0 <= r["inflation"] < 10.0
 
 
 def test_lexical_diversity_bounds(spark):
-    for r in workloads5.q_lexical_diversity(spark, SF).collect():
+    for r in gates.all_queries()["lexical_diversity"](spark, SF).collect():
         assert 0 < r["uniq_tokens"] <= r["tokens"]
         assert 0 < r["ttr"] <= 1.0
 
@@ -71,20 +72,20 @@ def test_lexical_diversity_bounds(spark):
 def test_length_trim_keeps_about_half(spark):
     # [p25, p75] band: about half of each stratum survives (interpolated
     # thresholds can exclude one boundary value on each side), band ordered
-    for r in workloads5.q_length_trim(spark, SF).collect():
+    for r in gates.all_queries()["length_trim"](spark, SF).collect():
         assert r["lo"] <= r["hi"]
         assert r["total"] // 2 - 2 <= r["kept"] <= r["total"]
 
 
 def test_mixture_sample_tracks_recipe_rates(spark):
-    for r in workloads5.q_mixture_sample(spark, SF).collect():
+    for r in gates.all_queries()["mixture_sample"](spark, SF).collect():
         assert 0 <= r["kept"] <= r["total"]
         # small strata: generous tolerance, but the rate must still steer
         assert r["kept"] / r["total"] == pytest.approx(r["rate"], abs=0.25)
 
 
 def test_crossmodal_join_covers_matched_ids(spark):
-    rows = workloads5.q_crossmodal_join(spark, SF).collect()
+    rows = gates.all_queries()["crossmodal_join"](spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
     vecs = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id")
     matched = docs.join(vecs, docs["doc_id"] == vecs["vec_id"]).count()

@@ -5,6 +5,7 @@ mention, and the correctness window must stay exactly driver-sized."""
 from __future__ import annotations
 
 import os
+import re
 
 import __spark_entry__ as entrymod
 from database_collector_spark import gates
@@ -25,6 +26,18 @@ def test_every_query_is_documented_in_coverage():
         cov = fh.read()
     missing = [q for q in gates.all_queries() if f"`{q}`" not in cov]
     assert not missing, f"gates absent from COVERAGE.md: {missing}"
+
+
+def test_cited_workloads_modules_exist():
+    """Every gate module README.md and COVERAGE.md name is on disk."""
+    pkg = os.path.join(ROOT, "database_collector_spark")
+    for doc in ("README.md", "COVERAGE.md"):
+        with open(os.path.join(ROOT, doc)) as fh:
+            text = fh.read()
+        cited = set(re.findall(r"\b(workloads\w*)\.py\b", text))
+        cited |= set(re.findall(r"\b(workloads(?:\d+|_[a-z0-9_]+))\b", text))
+        missing = sorted(n for n in cited if not os.path.exists(os.path.join(pkg, f"{n}.py")))
+        assert not missing, f"{doc} cites missing modules: {missing}"
 
 
 def test_check_window_is_exactly_driver_sized_and_resolvable():

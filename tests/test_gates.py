@@ -6,8 +6,10 @@ from the filesystem."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
+import re
 import subprocess
 import sys
 from concurrent.futures import ThreadPoolExecutor
@@ -65,6 +67,28 @@ def test_registry_lists_every_workloads_module_once():
     }
     listed = [m.__name__.rsplit(".", 1)[1] for m in gates.MODULES]
     assert sorted(listed) == sorted(on_disk)
+    # modules are named by domain, never by the round or batch they came in
+    numbered = [m for m in listed if re.search(r"\d", m)]
+    assert not numbered, f"numbered gate modules: {numbered}"
+    # gate modules share code through public names only; _t and _cents
+    # are the table reader and money helper every module reads with
+    shared = {("workloads", "_t"), ("workloads", "_cents")}
+    private = []
+    for m in gates.MODULES:
+        with open(m.__file__) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or node.module is None:
+                continue
+            src = node.module.rsplit(".", 1)[-1]
+            if not node.module.startswith("database_collector_spark.") or src not in listed:
+                continue
+            private += [
+                f"{m.__name__} imports {src}.{a.name}"
+                for a in node.names
+                if a.name.startswith("_") and (src, a.name) not in shared
+            ]
+    assert not private, private
     names = [k for m in gates.MODULES for k in m.QUERIES]
     twice = sorted({k for k in names if names.count(k) > 1})
     assert not twice, f"gates defined in more than one module: {twice}"

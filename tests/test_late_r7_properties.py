@@ -74,7 +74,6 @@ delta = st.integers(-50, 50)
 def test_capped_balance_matches_python_fold(spark, ds):
     import datetime as dt
 
-    from database_collector_spark.workloads4 import q_capped_balance  # noqa: F401 (shape ref)
     from pyspark.sql import functions as F
 
     # drive the same fold shape directly: per-key sorted aggregate()

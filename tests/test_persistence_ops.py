@@ -10,6 +10,8 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF
+from database_collector_spark import gates
 from database_collector_spark.operators import dedup, similarity, sketches
 
 
@@ -123,10 +125,8 @@ def test_ivfpq_probe_is_broadcast_celljoined(spark):
     # must reach the codes through a BROADCAST equi-join on cid (work =
     # sum over probed cells), never a sort-merge shuffle of the corpus
     # or a cartesian against every query
-    from database_collector_spark.workloads_r10 import q_ann_ivfpq_adc
-
     plan = (
-        q_ann_ivfpq_adc(spark, "/root/testdata/sf0.001")
+        gates.all_queries()["ann_ivfpq_adc"](spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -139,12 +139,9 @@ def test_ivfpq_probe_is_broadcast_celljoined(spark):
 def test_token_budget_quotas_sum_exactly_to_budget(spark):
     # the largest-remainder contract on the real fixture: integer quotas,
     # sum EXACTLY equals the budget (floating shares can't give this)
-    from database_collector_spark.workloads_r10 import (
-        _TOKEN_BUDGET,
-        q_token_budget_alloc,
-    )
+    from database_collector_spark.workloads_text import _TOKEN_BUDGET
 
-    rows = q_token_budget_alloc(spark, "/root/testdata/sf0.001").collect()
+    rows = gates.all_queries()["token_budget_alloc"](spark, SF).collect()
     assert rows, "empty allocation"
     assert sum(r["quota"] for r in rows) == _TOKEN_BUDGET
     # monotone: a strictly larger weight never receives a smaller quota
@@ -155,13 +152,10 @@ def test_token_budget_quotas_sum_exactly_to_budget(spark):
 
 
 def test_source_percentile_filter_keeps_top_share_per_source(spark):
-    from database_collector_spark.workloads_r10 import (
-        _FILTER_CUT,
-        q_source_percentile_filter,
-    )
+    from database_collector_spark.workloads_text import _FILTER_CUT
     from database_collector_spark.workloads import _t
 
-    kept = q_source_percentile_filter(spark, "/root/testdata/sf0.001")
+    kept = gates.all_queries()["source_percentile_filter"](spark, SF)
     per_kept = {
         r["source"]: r["n"]
         for r in kept.groupBy("source").agg(F.count("*").alias("n")).collect()
@@ -237,7 +231,6 @@ def test_ivfpq_index_roundtrip_serves_identical_probe(spark, ivfpq_index):
     # in-memory chain (everything is exact integers, so any lossy
     # round-trip or artifact skew flips a rank or distance)
     from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r10 import q_ann_ivfpq_adc
 
     sf = "/root/testdata/sf0.001"
     emb = _t(spark, sf, "embeddings")
@@ -247,7 +240,7 @@ def test_ivfpq_index_roundtrip_serves_identical_probe(spark, ivfpq_index):
         F.col("vec_id").alias("q_id"), "cid", F.col("qe").alias("q_qe")
     )
     served = similarity.pq_adc_topk(codes, queries, books, topk=3, cell_col="cid")
-    want = {tuple(r) for r in q_ann_ivfpq_adc(spark, sf).collect()}
+    want = {tuple(r) for r in gates.all_queries()["ann_ivfpq_adc"](spark, sf).collect()}
     got = {tuple(r) for r in served.collect()}
     assert got == want
 

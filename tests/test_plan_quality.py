@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import assert_no_row_python_or_cartesian
+from database_collector_spark import gates, workloads_text
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -230,9 +233,7 @@ def test_minhash_signatures_zero_shuffle(spark):
 
 
 def test_pricing_summary_pushes_filter_and_prunes_columns(spark):
-    from database_collector_spark.workloads import q_pricing_summary
-
-    plan = _plan(q_pricing_summary(spark, SF))
+    plan = _plan(gates.all_queries()["pricing_summary"](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # pruned read: none of the untouched columns reach the scan
     assert "l_partkey" not in plan and "l_suppkey" not in plan
@@ -241,23 +242,17 @@ def test_pricing_summary_pushes_filter_and_prunes_columns(spark):
 
 
 def test_shipping_priority_broadcasts_dims(spark):
-    from database_collector_spark.workloads import q_shipping_priority
-
-    plan = _plan(q_shipping_priority(spark, SF))
+    plan = _plan(gates.all_queries()["shipping_priority"](spark, SF))
     assert "BroadcastHashJoin" in plan
 
 
 def test_semi_anti_planned_as_semi_and_anti(spark):
-    from database_collector_spark.workloads2 import q_semi_anti_orders
-
-    plan = _plan(q_semi_anti_orders(spark, SF))
+    plan = _plan(gates.all_queries()["semi_anti_orders"](spark, SF))
     assert "LeftSemi" in plan and "LeftAnti" in plan
 
 
 def test_window_running_single_sort(spark):
-    from database_collector_spark.workloads2 import q_window_running
-
-    plan = _plan(q_window_running(spark, SF))
+    plan = _plan(gates.all_queries()["window_running"](spark, SF))
     # all four window functions share one Window operator (one sort)
     assert plan.count("Window") - plan.count("WindowGroupLimit") <= 1
 
@@ -291,9 +286,7 @@ def test_enrich_histogram_expansion_no_python(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 def test_window_frames_single_sort(spark):
-    from database_collector_spark.workloads3 import q_window_frames
-
-    plan = _plan(q_window_frames(spark, SF))
+    plan = _plan(gates.all_queries()["window_frames"](spark, SF))
     # moving-avg frame, running frame, percent_rank and ntile all share
     # the (o_custkey; o_orderdate, o_orderkey) ordering -> one Exchange,
     # one Sort, window ops stacked on top without re-partitioning
@@ -302,9 +295,7 @@ def test_window_frames_single_sort(spark):
 
 
 def test_range_join_is_equi_join_on_bucket(spark):
-    from database_collector_spark.workloads3 import q_range_join_buckets
-
-    plan = _plan(q_range_join_buckets(spark, SF))
+    plan = _plan(gates.all_queries()["range_join_buckets"](spark, SF))
     # the trailing-window theta predicate must NOT plan as a nested loop:
     # bucketing turns it into a hash-joinable equi condition
     assert "BroadcastNestedLoopJoin" not in plan
@@ -312,18 +303,14 @@ def test_range_join_is_equi_join_on_bucket(spark):
 
 
 def test_grouping_sets_single_scan(spark):
-    from database_collector_spark.workloads3 import q_grouping_sets
-
-    plan = _plan(q_grouping_sets(spark, SF))
+    plan = _plan(gates.all_queries()["grouping_sets"](spark, SF))
     # one Expand feeding one aggregate: all three granularities from one scan
     assert plan.count("Expand") >= 1
     assert plan.count("Scan parquet") - plan.count("Scan parquet []") <= 1
 
 
 def test_hash_split_label_is_map_side_scalar(spark):
-    from database_collector_spark.workloads5 import q_hash_split
-
-    plan = _plan(q_hash_split(spark, SF))
+    plan = _plan(gates.all_queries()["hash_split"](spark, SF))
     # split assignment is a scalar projection: the only exchange is the
     # final 3-row aggregate's, after map-side partials; no Python anywhere
     assert plan.count("Exchange hashpartitioning") <= 1
@@ -331,30 +318,20 @@ def test_hash_split_label_is_map_side_scalar(spark):
 
 
 def test_stratified_sample_single_stratum_shuffle(spark):
-    from database_collector_spark.workloads5 import q_sample_stratified
-
-    plan = _plan(q_sample_stratified(spark, SF))
+    plan = _plan(gates.all_queries()["sample_stratified"](spark, SF))
     # one exchange on the stratum key; the rank sorts within strata only
     assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_ann_multiprobe_broadcasts_query_side(spark):
-    from database_collector_spark.workloads2 import q_ann_ivf_multiprobe
-
-    plan = _plan(q_ann_ivf_multiprobe(spark, SF))
+    plan = _plan(gates.all_queries()["ann_ivf_multiprobe"](spark, SF))
     # the 9-cell probe explode stays on the tiny query side, which must
     # broadcast — a shuffle join here would move the whole corpus per probe
     assert "BroadcastHashJoin" in plan
 
 
 def test_curation_scalar_pipelines_stay_in_codegen(spark):
-    from database_collector_spark.workloads5 import (
-        q_lexical_diversity,
-        q_text_normalize,
-        q_token_estimate,
-    )
-
-    for q in (q_text_normalize, q_lexical_diversity, q_token_estimate):
+    for q in (gates.all_queries()["text_normalize"], gates.all_queries()["lexical_diversity"], gates.all_queries()["token_estimate"]):
         plan = _plan(q(spark, SF))
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -446,9 +423,7 @@ def test_simhash_pairs_bucketed_not_cartesian(spark):
 
 
 def test_asof_join_single_sort_no_range_join(spark):
-    from database_collector_spark.workloads_ts import q_asof_join
-
-    plan = _plan(q_asof_join(spark, SF))
+    plan = _plan(gates.all_queries()["asof_join"](spark, SF))
     # union + one per-key window sort; never a nested-loop range join
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -459,27 +434,21 @@ def test_decile_stats_no_single_partition_window(spark):
     # the distributed exact-NTILE rewrite must never funnel the table
     # through one task: no SinglePartition exchange anywhere, and the
     # row_number window partitions on pid
-    from database_collector_spark.workloads4 import q_decile_stats
-
-    plan = _plan(q_decile_stats(spark, SF))
+    plan = _plan(gates.all_queries()["decile_stats"](spark, SF))
     assert "SinglePartition" not in plan
     assert "Window" in plan  # the per-pid ranking window is still a window
 
 
 def test_ttl_expiry_counts_broadcasts_stream_end(spark):
     # the 1-row global max joins via broadcast, not a shuffled cross join
-    from database_collector_spark.workloads_ts import q_ttl_expiry_counts
-
-    plan = _plan(q_ttl_expiry_counts(spark, SF))
+    plan = _plan(gates.all_queries()["ttl_expiry_counts"](spark, SF))
     assert "BroadcastNestedLoopJoin" in plan
 
 
 def test_multimodal_decode_single_python_stage(spark):
     # payload synthesis is JVM-side (unhex/repeat in codegen); exactly one
     # Arrow Python boundary — the decode kernel itself
-    from database_collector_spark.workloads_ext import q_multimodal_decode
-
-    plan = _plan(q_multimodal_decode(spark, SF))
+    plan = _plan(gates.all_queries()["multimodal_decode"](spark, SF))
     assert plan.count("MapInPandas") == 1
     assert "BatchEvalPython" not in plan
 
@@ -493,11 +462,10 @@ def test_decile_distributed_equals_global_ntile(spark):
     from pyspark.sql.window import Window
 
     from database_collector_spark.workloads import _cents, _t
-    from database_collector_spark.workloads4 import q_decile_stats
 
     got = {
         r["decile"]: (r["n_orders"], r["lo"], r["hi"])
-        for r in q_decile_stats(spark, SF).collect()
+        for r in gates.all_queries()["decile_stats"](spark, SF).collect()
     }
     ref_rows = (
         _t(spark, SF, "orders")
@@ -557,41 +525,15 @@ def test_funnel_has_no_join_and_two_shrinking_exchanges(spark):
     # the funnel is ONE user-keyed aggregate + a tiny depth re-aggregate:
     # no self-join of the event stream (the naive 3-way formulation), no
     # window over raw events
-    from database_collector_spark.workloads_ts import q_funnel_steps
-
-    plan = _plan(q_funnel_steps(spark, SF))
+    plan = _plan(gates.all_queries()["funnel_steps"](spark, SF))
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 2
-
-
-def test_no_query_uses_row_python_or_cartesian(gate_plan):
-    # blanket invariant over the ENTIRE gate surface: no row-at-a-time
-    # Python UDF (BatchEvalPython) and no CartesianProduct in any query's
-    # physical plan. Arrow-batched Python (ArrowEvalPython / MapInPandas /
-    # FlatMapGroupsInPandas) is the sanctioned slow path; broadcast
-    # nested-loop is allowed only for deliberate 1-row scalar attaches.
-    # The plans are the ones test_gates.py recorded when it ran first.
-    import __spark_entry__ as entrymod
-
-    offenders = {}
-    for name in entrymod.queries():
-        plan = gate_plan(name)
-        bad = []
-        if "BatchEvalPython" in plan:
-            bad.append("BatchEvalPython")
-        if "CartesianProduct" in plan:
-            bad.append("CartesianProduct")
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"scale-killers in plans: {offenders}"
 
 
 def test_interval_join_is_equi_join_on_bucket_and_key(spark):
     # the ±30min theta condition must compile to an equi-join (bucket +
     # user key) with the range as residual filter — never a nested loop
-    from database_collector_spark.workloads_ts import q_interval_join_events
-
-    plan = _plan(q_interval_join_events(spark, SF))
+    plan = _plan(gates.all_queries()["interval_join_events"](spark, SF))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
         "BroadcastHashJoin" in plan
@@ -623,31 +565,21 @@ def test_metric_analytics_single_exchange(spark):
     # trend_slope / ewma_smooth / mad_outliers: windows + final aggregate
     # all share the user_id partitioning -> exactly ONE exchange, no
     # Python anywhere (the exact-integer arithmetic is all codegen)
-    from database_collector_spark.workloads_ts import (
-        q_ewma_smooth,
-        q_mad_outliers,
-        q_trend_slope,
-    )
-
-    for fn in (q_trend_slope, q_ewma_smooth, q_mad_outliers):
+    for fn in (gates.all_queries()["trend_slope"], gates.all_queries()["ewma_smooth"], gates.all_queries()["mad_outliers"]):
         plan = _plan(fn(spark, SF))
         assert plan.count("Exchange hashpartitioning") == 1, fn.__name__
         assert "EvalPython" not in plan and "InPandas" not in plan, fn.__name__
 
 
 def test_seasonal_profile_single_exchange(spark):
-    from database_collector_spark.workloads_ts import q_seasonal_profile
-
-    plan = _plan(q_seasonal_profile(spark, SF))
+    plan = _plan(gates.all_queries()["seasonal_profile"](spark, SF))
     # the window and the final groupBy share the (event_type, hod) key:
     # one hash exchange serves both
     assert plan.count("Exchange hashpartitioning") == 1
 
 
 def test_bm25_no_token_stream_shuffle_of_full_vocab(spark):
-    from database_collector_spark.workloads_ir import q_bm25_scores
-
-    plan = _plan(q_bm25_scores(spark, SF))
+    plan = _plan(gates.all_queries()["bm25_scores"](spark, SF))
     # df/stats sides broadcast; the isin() term filter sits below the
     # tf aggregation so only matching tokens shuffle
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -655,48 +587,36 @@ def test_bm25_no_token_stream_shuffle_of_full_vocab(spark):
 
 
 def test_zorder_layout_stays_codegen(spark):
-    from database_collector_spark.workloads_ir import q_zorder_layout
-
-    plan = _plan(q_zorder_layout(spark, SF))
+    plan = _plan(gates.all_queries()["zorder_layout"](spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_weighted_sample_no_shuffle(spark):
-    from database_collector_spark.workloads_ir import q_weighted_sample
-
-    plan = _plan(q_weighted_sample(spark, SF))
+    plan = _plan(gates.all_queries()["weighted_sample"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
 
 
 def test_cusum_single_exchange(spark):
-    from database_collector_spark.workloads_ts import q_cusum_changepoints
-
-    plan = _plan(q_cusum_changepoints(spark, SF))
+    plan = _plan(gates.all_queries()["cusum_changepoints"](spark, SF))
     # both windows and the final groupBy share the event_type key
     assert plan.count("Exchange hashpartitioning") == 1
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_attribution_no_self_join(spark):
-    from database_collector_spark.workloads_ts import q_attribution_first_touch
-
-    plan = _plan(q_attribution_first_touch(spark, SF))
+    plan = _plan(gates.all_queries()["attribution_first_touch"](spark, SF))
     # join-free: the lookback is a range-frame window, never a self-join
     assert "Join" not in plan
 
 
 def test_event_transitions_single_user_exchange(spark):
-    from database_collector_spark.workloads_ts import q_event_transitions
-
-    plan = _plan(q_event_transitions(spark, SF))
+    plan = _plan(gates.all_queries()["event_transitions"](spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_cms_probe_side_broadcasts(spark):
-    from database_collector_spark.workloads_ir import q_cms_estimates
-
-    plan = _plan(q_cms_estimates(spark, SF))
+    plan = _plan(gates.all_queries()["cms_estimates"](spark, SF))
     # the depth*width cell table broadcasts against the probes
     assert "BroadcastHashJoin" in plan
 
@@ -705,9 +625,7 @@ def test_dist_drift_single_scan(spark):
     """The drift audit must read events ONCE: totals come from a window
     over the 12-row bin aggregate, not a second aggregate branch (which
     Catalyst plans as a second full scan)."""
-    from database_collector_spark.workloads4 import q_dist_drift
-
-    plan = _plan(q_dist_drift(spark, SF))
+    plan = _plan(gates.all_queries()["dist_drift"](spark, SF))
     assert plan.count("Scan parquet") == 1
 
 
@@ -715,9 +633,7 @@ def test_m4_downsample_is_one_partial_agg_exchange(spark):
     # M4 must plan as partial HashAggregate -> ONE (type,bucket) exchange
     # -> final HashAggregate: no window, no sort, no join — the mergeable
     # per-bucket form that distinguishes it from sequential LTTB
-    from database_collector_spark.workloads_ts import q_m4_downsample
-
-    plan = _plan(q_m4_downsample(spark, SF))
+    plan = _plan(gates.all_queries()["m4_downsample"](spark, SF))
     assert plan.count("Exchange hashpartitioning") == 1
     assert "Window" not in plan and "Join" not in plan
 
@@ -725,9 +641,7 @@ def test_m4_downsample_is_one_partial_agg_exchange(spark):
 def test_corpus_shuffle_has_no_single_partition_window(spark):
     # the whole point vs a global row_number: positions come from
     # shard-partitioned windows, never an Exchange SinglePartition
-    from database_collector_spark.workloads5 import q_corpus_shuffle
-
-    plan = _plan(q_corpus_shuffle(spark, SF))
+    plan = _plan(gates.all_queries()["corpus_shuffle"](spark, SF))
     assert "SinglePartition" not in plan
     assert "Exchange hashpartitioning(shard" in plan
 
@@ -735,9 +649,7 @@ def test_corpus_shuffle_has_no_single_partition_window(spark):
 def test_kmv_sketch_join_is_hash_join(spark):
     # both the sketch-sample join and the exact twin must be planned as
     # user_id hash joins (shuffle or broadcast), never a nested loop
-    from database_collector_spark.workloads_ts import q_kmv_intersection
-
-    plan = _plan(q_kmv_intersection(spark, SF))
+    plan = _plan(gates.all_queries()["kmv_intersection"](spark, SF))
     assert "HashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
@@ -745,9 +657,7 @@ def test_kmv_sketch_join_is_hash_join(spark):
 def test_bigram_logppl_broadcasts_count_tables(spark):
     # corpus bigram/context/vocab tables join back broadcast — the doc
     # side never reshuffles for the lookups
-    from database_collector_spark.workloads_ir import q_bigram_logppl
-
-    plan = _plan(q_bigram_logppl(spark, SF))
+    plan = _plan(gates.all_queries()["bigram_logppl"](spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -779,9 +689,7 @@ def test_readability_zero_shuffle(spark):
 
 
 def test_shard_overlap_candidates_via_hash_equi_join(spark):
-    from database_collector_spark import workloads_r9
-
-    plan = _plan(workloads_r9.q_shard_overlap(spark, SF))
+    plan = _plan(gates.all_queries()["shard_overlap"](spark, SF))
     # candidate pairs MUST come from the window-hash equi-join — never a
     # nested-loop/cartesian text scan
     assert "CartesianProduct" not in plan
@@ -789,9 +697,7 @@ def test_shard_overlap_candidates_via_hash_equi_join(spark):
 
 
 def test_interval_outages_never_joins_base_with_holes(spark):
-    from database_collector_spark import workloads_r9
-
-    plan = _plan(workloads_r9.q_interval_outages(spark, SF))
+    plan = _plan(gates.all_queries()["interval_outages"](spark, SF))
     # the sweep is window-only: unions + keyed windows, zero joins — a
     # base x holes interval join would appear as any join operator
     for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
@@ -800,9 +706,7 @@ def test_interval_outages_never_joins_base_with_holes(spark):
 
 
 def test_auc_exact_has_no_corpus_sized_single_partition_window(spark):
-    from database_collector_spark import workloads_r9
-
-    plan = _plan(workloads_r9.q_auc_scores(spark, SF))
+    plan = _plan(gates.all_queries()["auc_scores"](spark, SF))
     # the per-score running-negatives window MUST be partitioned by the
     # coarse bucket; SinglePartition exchanges are allowed only for the
     # bounded pieces (1-row min/max cut aggregate + final aggregates +
@@ -816,9 +720,7 @@ def test_auc_exact_has_no_corpus_sized_single_partition_window(spark):
 
 
 def test_lang_confusion_never_explodes_the_token_stream(spark):
-    from database_collector_spark import workloads_r9
-
-    plan = _plan(workloads_r9.q_lang_confusion(spark, SF))
+    plan = _plan(gates.all_queries()["lang_confusion"](spark, SF))
     # lang_id is an in-row fold: no Generate (explode), no Python, no join
     assert "Generate" not in plan
     assert "BatchEvalPython" not in plan
@@ -828,9 +730,7 @@ def test_lang_confusion_never_explodes_the_token_stream(spark):
 # ------------------------------------------------- r11 staged tier pins
 
 def test_substring_dedup_duplicated_vocab_is_broadcast(spark):
-    from database_collector_spark import workloads_r11
-
-    plan = _plan(workloads_r11.q_substring_dedup(spark, SF))
+    plan = _plan(gates.all_queries()["substring_dedup"](spark, SF))
     # the duplicated-shingle vocabulary joins back by BROADCAST hash
     # join on the md5 key, and the span machinery never degenerates to
     # a nested-loop text comparison
@@ -840,9 +740,7 @@ def test_substring_dedup_duplicated_vocab_is_broadcast(spark):
 
 
 def test_semdedup_candidates_are_cell_equi_join(spark):
-    from database_collector_spark import workloads_r11
-
-    plan = _plan(workloads_r11.q_semdedup_prune(spark, SF))
+    plan = _plan(gates.all_queries()["semdedup_prune"](spark, SF))
     # pair candidates MUST come from a cid EQUI-join (work =
     # sum(|cell|^2)) — if Catalyst ever loses the equi-key the member
     # self-join degenerates to a nested loop, O(n^2) at scale
@@ -859,9 +757,7 @@ def test_semdedup_candidates_are_cell_equi_join(spark):
 
 
 def test_dsir_model_table_is_broadcast(spark):
-    from database_collector_spark import workloads_r11
-
-    plan = _plan(workloads_r11.q_dsir_weights(spark, SF))
+    plan = _plan(gates.all_queries()["dsir_weights"](spark, SF))
     # the n_buckets-row model joins back by broadcast — the corpus-side
     # token stream must never shuffle against it
     assert "BroadcastHashJoin" in plan
@@ -869,9 +765,7 @@ def test_dsir_model_table_is_broadcast(spark):
 
 
 def test_spearman_has_no_single_partition_rank_funnel(spark):
-    from database_collector_spark import workloads_r11
-
-    plan = _plan(workloads_r11.q_spearman_corr(spark, SF))
+    plan = _plan(gates.all_queries()["spearman_corr"](spark, SF))
     # the two-level prefix-sum contract: the ONLY SinglePartition
     # exchanges are the in-plan cardinality guard's sort-free count
     # windows over the bounded rng table (a naive per-group rank window
@@ -913,9 +807,7 @@ def test_spearman_has_no_single_partition_rank_funnel(spark):
 
 
 def test_cross_source_matrix_pairs_are_candidate_bounded(spark):
-    from database_collector_spark import workloads_r11
-
-    plan = _plan(workloads_r11.q_cross_source_dup_matrix(spark, SF))
+    plan = _plan(gates.all_queries()["cross_source_dup_matrix"](spark, SF))
     # the source attach and rollups must stay equi-joins over the
     # LSH-bounded pair set — never a nested-loop doc x doc comparison
     assert "CartesianProduct" not in plan
@@ -924,9 +816,7 @@ def test_cross_source_matrix_pairs_are_candidate_bounded(spark):
 
 
 def test_bloom_probe_broadcasts_the_word_table(spark):
-    from database_collector_spark import workloads_r11
-
-    plan = _plan(workloads_r11.q_bloom_decontaminate(spark, SF))
+    plan = _plan(gates.all_queries()["bloom_decontaminate"](spark, SF))
     # the <=256-row word table is broadcast to the probe; the probe side
     # (100 TB of candidates) must never shuffle for the membership test
     assert "BroadcastHashJoin" in plan
@@ -958,9 +848,7 @@ def test_auc_by_group_stays_keyed_and_jvm_side(spark):
 # ------------------------------------------------- r12 staged tier pins
 
 def test_auc_by_group_gate_plan_is_keyed_and_broadcast_attached(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_auc_by_group(spark, SF))
+    plan = _plan(gates.all_queries()["auc_by_group"](spark, SF))
     # lang attaches to the scorer via a hash join (broadcast-able at
     # any embedding-corpus size — the dim table is the documents
     # projection); the rank core stays keyed — the only SinglePartition
@@ -971,9 +859,7 @@ def test_auc_by_group_gate_plan_is_keyed_and_broadcast_attached(spark):
 
 
 def test_calibration_curve_windows_are_bucket_bounded(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_calibration_curve(spark, SF))
+    plan = _plan(gates.all_queries()["calibration_curve"](spark, SF))
     # the classifier fold is in-row (no token-stream shuffle against a
     # weight table), the binning rides the compressed score domain, and
     # the only SinglePartition exchanges are the documented bounded
@@ -991,9 +877,7 @@ def test_calibration_curve_windows_are_bucket_bounded(spark):
 
 
 def test_kendall_tau_shares_one_per_group_sort(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_kendall_tau_banded(spark, SF))
+    plan = _plan(gates.all_queries()["kendall_tau_banded"](spark, SF))
     # the band expansion is in-row over ONE per-user window sort: no
     # pair join of any kind, no Python, and no single-partition funnel
     # (user_id supplies the parallelism)
@@ -1005,9 +889,7 @@ def test_kendall_tau_shares_one_per_group_sort(spark):
 
 
 def test_source_governance_composition_stays_bounded(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_source_governance(spark, SF))
+    plan = _plan(gates.all_queries()["source_governance"](spark, SF))
     # the composite may only add |sources|-row joins on top of the
     # stage plans: no cartesian, no Python, and the Hamilton/percentile
     # machinery's bounded windows keep the SinglePartition count small
@@ -1026,9 +908,7 @@ def test_source_governance_composition_stays_bounded(spark):
 
 
 def test_quantiles_by_group_has_no_per_group_value_buffer(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_quantiles_by_group(spark, SF))
+    plan = _plan(gates.all_queries()["quantiles_by_group"](spark, SF))
     # the exact-quartile contract: NO built-in percentile aggregate
     # (its agg buffer holds every group value — the memory cliff this
     # operator exists to avoid), no single-partition funnel, no Python
@@ -1045,9 +925,7 @@ def test_quantiles_by_group_has_no_per_group_value_buffer(spark):
 
 
 def test_ndcg_quality_windows_are_group_limit_pushed(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_ndcg_quality(spark, SF))
+    plan = _plan(gates.all_queries()["ndcg_quality"](spark, SF))
     # both top-k windows (the per-lang ranking and the ideal-label
     # ordering) must get Spark's rank-limit pushdown: each task keeps
     # only k rows before the per-group sort, so the corpus never sorts
@@ -1058,9 +936,7 @@ def test_ndcg_quality_windows_are_group_limit_pushed(spark):
 
 
 def test_calibration_by_source_stays_keyed(spark):
-    from database_collector_spark import workloads_r12
-
-    plan = _plan(workloads_r12.q_calibration_by_source(spark, SF))
+    plan = _plan(gates.all_queries()["calibration_by_source"](spark, SF))
     # the per-source curves ride the keyed prefix core: only the
     # bounded cardinality-guard single-partition exchanges, no Python,
     # no cartesian, and the classifier fold stays in-row
@@ -1151,9 +1027,7 @@ def test_pack_segments_has_no_per_stream_corpus_sort(spark):
 
 
 def test_pack_sequences_gate_has_no_per_source_corpus_sort(spark):
-    from database_collector_spark import workloads_r10
-
-    plan = _plan(workloads_r10.q_pack_sequences(spark, SF))
+    plan = _plan(gates.all_queries()["pack_sequences"](spark, SF))
     # the source-domain packing offsets ride the hash-bucketed
     # two-level prefix pass (r13 VERDICT #3: this gate was the second
     # miss): every ordered window is (source, _b)-keyed — the
@@ -1168,15 +1042,13 @@ def test_pack_sequences_gate_has_no_per_source_corpus_sort(spark):
 
 
 def test_pack_sequences_prestage_scan_stays_funnel_free(spark):
-    from database_collector_spark import workloads_r10
-
     # the shared `sized` frame localCheckpoints (r14 ADVICE: one
     # tokenize scan feeds both the window and the carry aggregate), so
     # q_pack_sequences' own plan shows an ExistingRDD leaf — pin the
     # PRE-checkpoint projection separately: the tokenize must stay
     # fused into the parquet scan with no sort and no single-partition
     # exchange upstream of the checkpoint
-    plan = _plan(workloads_r10._pack_sized(spark, SF))
+    plan = _plan(workloads_text._pack_sized(spark, SF))
     assert "Scan parquet" in plan
     assert "SortExec" not in plan and "Sort " not in plan
     assert "Exchange SinglePartition" not in plan
@@ -1184,9 +1056,7 @@ def test_pack_sequences_prestage_scan_stays_funnel_free(spark):
 
 
 def test_zipf_head_fit_window_is_rank_limit_pushed(spark):
-    from database_collector_spark import workloads_r16
-
-    plan = _plan(workloads_r16.q_zipf_head_fit(spark, SF))
+    plan = _plan(gates.all_queries()["zipf_head_fit"](spark, SF))
     # the top-k vocabulary ranking must get Spark's rank-limit pushdown
     # (partial + final WindowGroupLimit): each task keeps k rows before
     # the per-group sort, so the vocabulary never sorts whole-group
@@ -1198,9 +1068,7 @@ def test_zipf_head_fit_window_is_rank_limit_pushed(spark):
 
 
 def test_bigram_cond_entropy_has_no_window_and_no_python(spark):
-    from database_collector_spark import workloads_r16
-
-    plan = _plan(workloads_r16.q_bigram_cond_entropy(spark, SF))
+    plan = _plan(gates.all_queries()["bigram_cond_entropy"](spark, SF))
     # pure aggregate pipeline: in-row bigram explode + keyed aggregates
     # over the compressed count table — no window machinery at all (the
     # gate's orderBy is the only sort), no Python, no cartesian
@@ -1211,9 +1079,7 @@ def test_bigram_cond_entropy_has_no_window_and_no_python(spark):
 
 
 def test_embedding_drift_folds_are_keyed_and_broadcast(spark):
-    from database_collector_spark import workloads_r16
-
-    plan = _plan(workloads_r16.q_embedding_drift(spark, SF))
+    plan = _plan(gates.all_queries()["embedding_drift"](spark, SF))
     # the per-dim sums join the bounded per-group count tables via
     # BROADCAST (the counts are |groups| rows); no Python, no cartesian,
     # no single-partition funnel — (group, dim) supplies the parallelism
@@ -1224,9 +1090,7 @@ def test_embedding_drift_folds_are_keyed_and_broadcast(spark):
 
 
 def test_trimmed_mean_has_no_per_priority_corpus_sort(spark):
-    from database_collector_spark import workloads_ir
-
-    plan = _plan(workloads_ir.q_trimmed_mean(spark, SF))
+    plan = _plan(gates.all_queries()["trimmed_mean"](spark, SF))
     # the r13 rewrite: the trim rides value-domain compression + the
     # two-level prefix pass — the old form's per-priority corpus rank
     # window would show windowspecdefinition(o_orderpriority#, cents#)
@@ -1234,9 +1098,7 @@ def test_trimmed_mean_has_no_per_priority_corpus_sort(spark):
 
 
 def test_quantile_norm_has_no_per_type_corpus_sort(spark):
-    from database_collector_spark import workloads4
-
-    plan = _plan(workloads4.q_quantile_norm(spark, SF))
+    plan = _plan(gates.all_queries()["quantile_norm"](spark, SF))
     # the r13 rewrite: RANK() = below+1 from the two-level prefix pass,
     # joined back to rows on (type, v) — the old per-type corpus rank
     # would show windowspecdefinition(event_type#, v# ...)
@@ -1244,9 +1106,7 @@ def test_quantile_norm_has_no_per_type_corpus_sort(spark):
 
 
 def test_key_skew_profile_rank_mass_is_compressed_and_top10_limit_pushed(spark):
-    from database_collector_spark import workloads4
-
-    plan = _plan(workloads4.q_key_skew_profile(spark, SF))
+    plan = _plan(gates.all_queries()["key_skew_profile"](spark, SF))
     # the r13 rewrite: rank mass rides count-value compression + the
     # prefix pass; the only remaining per-type ordered window is the
     # top-10 branch ("c" second arg), which must carry Spark's
@@ -1264,8 +1124,18 @@ def test_approx_quantiles_exact_side_never_buffers_percentile(spark):
     # percentile_approx UNDER TEST, and the candidate joins broadcast.
     from database_collector_spark import workloads_ts
 
-    plan = _plan(workloads_ts.q_approx_quantiles(spark, SF))
+    plan = _plan(gates.all_queries()["approx_quantiles"](spark, SF))
     assert "percentile(" not in plan, "buffered exact Percentile returned"
     assert "percentile_approx" in plan  # the operator under test stays
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_staged_plans_have_no_python_or_cartesian_or_corpus_funnel(gate_plan):
+    for name in ("group_mad", "winsorized_mean", "iqr_outlier_report"):
+        plan = gate_plan(name)
+        assert_no_row_python_or_cartesian(name, plan)
+        # the whole point of the tier: candidate joins broadcast; the
+        # per-group-window/SMJ funnel shapes must never return
+        assert "BroadcastHashJoin" in plan, f"{name}: candidate join not broadcast"
+        assert "SortMergeJoin" not in plan, f"{name}: SMJ crept in"

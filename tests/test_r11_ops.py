@@ -278,6 +278,8 @@ def test_bloom_filters_merge_by_bit_or(spark):
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from database_collector_spark import gates
+
 _token = st.text(alphabet="abxy", min_size=1, max_size=2)
 _doc = st.lists(_token, min_size=1, max_size=24)
 
@@ -341,7 +343,6 @@ def test_spearman_matches_fraction_reference_with_heavy_ties(spark):
     double precision, and the zero-variance guard must emit NULL."""
     import math
 
-    from database_collector_spark import workloads_r11
 
     rows = []
     # group "t": heavy ties, deterministic pseudo-random but hardcoded
@@ -361,7 +362,7 @@ def test_spearman_matches_fraction_reference_with_heavy_ties(spark):
         df.write.parquet(f"{d}/lineitem.parquet")
         out = {
             r["l_returnflag"]: (r["n"], r["spearman_qp"])
-            for r in workloads_r11.q_spearman_corr(spark, d).collect()
+            for r in gates.all_queries()["spearman_corr"](spark, d).collect()
         }
     ref = _py_spearman([float(x) for x in xs], [float(y) for y in ys])
     n_t, rho_t = out["t"]
@@ -374,8 +375,6 @@ def test_spearman_matches_fraction_reference_with_heavy_ties(spark):
 def test_spearman_perfect_monotone_is_exactly_one(spark):
     """A strictly increasing pair (no ties) must give rho = 1.0 EXACTLY
     — the integer pipeline leaves nothing to rounding."""
-    from database_collector_spark import workloads_r11
-
     rows = [("m", float(i), float(i * i)) for i in range(1, 30)]
     df = spark.createDataFrame(
         rows, "l_returnflag string, l_quantity double, l_extendedprice double"
@@ -384,7 +383,7 @@ def test_spearman_perfect_monotone_is_exactly_one(spark):
 
     with tempfile.TemporaryDirectory() as d:
         df.write.parquet(f"{d}/lineitem.parquet")
-        [r] = workloads_r11.q_spearman_corr(spark, d).collect()
+        [r] = gates.all_queries()["spearman_corr"](spark, d).collect()
     assert r["spearman_qp"] == 1.0
 
 
@@ -395,11 +394,10 @@ def test_cross_source_matrix_is_consistent_with_pair_list(spark):
     normalized cells (src_lo <= src_hi), pair_count sums to the total
     verified pair count, and each cell's docs_involved matches a direct
     recount."""
-    from database_collector_spark import workloads_r11
     from database_collector_spark.workloads import _t
 
     sf = SF
-    cells = workloads_r11.q_cross_source_dup_matrix(spark, sf).collect()
+    cells = gates.all_queries()["cross_source_dup_matrix"](spark, sf).collect()
     assert all(r["src_lo"] <= r["src_hi"] for r in cells)
 
     docs = _t(spark, sf, "documents")

@@ -1,46 +1,14 @@
-"""The workloads_r12 cohort: its registry bookkeeping, the brute-force
-references of the banded pair core (Kendall tau, Theil-Sen), calibration
-curve and grouped quantiles, and the source-governance budget. Every
-gate's differential against its DuckDB twin and its plan check for
-row-at-a-time Python and cartesian products run in test_gates.py.
+"""Brute-force references of the banded pair core (Kendall tau,
+Theil-Sen), the calibration curve and grouped quantiles, and the
+source-governance budget. Every gate's differential against its DuckDB
+twin and its plan check for row-at-a-time Python and cartesian products
+run in test_gates.py.
 """
 
 from __future__ import annotations
 
-from conftest import (
-    SF,
-    assert_module_documented,
-    assert_module_registered,
-    assert_no_row_python_or_cartesian,
-    assert_oracles_portable,
-    assert_registration_composes,
-)
-from database_collector_spark import workloads_r12
-
-
-def test_staged_sets_are_one_to_one():
-    assert set(workloads_r12.QUERIES) == set(workloads_r12.ORACLES)
-
-
-def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
-    assert_oracles_portable(oracle_con, workloads_r12.ORACLES)
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
-    for name in workloads_r12.QUERIES:
-        assert_no_row_python_or_cartesian(name, gate_plan(name))
-
-
-def test_every_staged_gate_is_documented_and_window_headed():
-    assert_module_documented(workloads_r12, "r12")
-
-
-def test_r12_cohort_is_fully_registered():
-    assert_module_registered(workloads_r12)
-
-
-def test_r12_registration_dry_run_composes(gate_plan):
-    assert_registration_composes(workloads_r12, gate_plan)
+from conftest import SF
+from database_collector_spark import gates, workloads_eval, workloads_text
 
 
 def test_kendall_tau_matches_brute_force(spark):
@@ -145,15 +113,11 @@ def test_theil_sen_rides_the_shared_band_core(spark):
     """theil_sen_slope and kendall_tau_banded consume the SAME series
     projection and band expansion — the reuse contract: both gates'
     pair sets come from ranking.banded_pair_deltas over
-    workloads_ts.user_value_series, so a band-semantics fix lands in
+    workloads_eval.user_value_series, so a band-semantics fix lands in
     one place. Checked behaviorally: the theil_sen slope multiset per
     user equals the dy/dx of the shared core's pairs."""
     from database_collector_spark.operators.ranking import banded_pair_deltas
-    from database_collector_spark.workloads_ts import (
-        _TS_BAND,
-        q_theil_sen_slope,
-        user_value_series,
-    )
+    from database_collector_spark.workloads_eval import _TS_BAND, user_value_series
 
     base = user_value_series(spark, SF)
     pairs = banded_pair_deltas(
@@ -165,7 +129,7 @@ def test_theil_sen_rides_the_shared_band_core(spark):
     for r in pairs:
         if r["dx"] != 0:
             want[r["g"]].append(r["dy"] / r["dx"])
-    got = q_theil_sen_slope(spark, SF).collect()
+    got = gates.all_queries()["theil_sen_slope"](spark, SF).collect()
     import math
 
     for r in got:
@@ -208,7 +172,7 @@ def test_source_governance_quotas_sum_to_budget(spark):
     """The composite's loader contract: Hamilton quotas over the
     survivors sum EXACTLY to the budget — checked on the composed gate
     output, not just the allocator's own property tests."""
-    out = workloads_r12.q_source_governance(spark, SF).collect()
-    assert sum(r["quota"] for r in out) == workloads_r12._GOV_BUDGET
+    out = gates.all_queries()["source_governance"](spark, SF).collect()
+    assert sum(r["quota"] for r in out) == workloads_text._GOV_BUDGET
     for r in out:
         assert 0 < r["n_kept"] <= r["n_docs"]

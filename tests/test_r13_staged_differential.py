@@ -1,9 +1,8 @@
-"""The workloads_r13 cohort: its registry bookkeeping, the bucketed
-sort-merge pins, the refined-quantile re-grid audit, the fixed-bin
-calibration stream-vs-batch end state, and the MAP@k / Cohen's kappa /
-hard-negative references. Every gate's differential against its DuckDB
-twin and its plan check for row-at-a-time Python and cartesian products
-run in test_gates.py.
+"""The bucketed sort-merge pins, the refined-quantile re-grid audit,
+the fixed-bin calibration stream-vs-batch end state, and the MAP@k /
+Cohen's kappa / hard-negative references. Every gate's differential
+against its DuckDB twin and its plan check for row-at-a-time Python and
+cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
@@ -14,40 +13,8 @@ import tempfile
 
 import pytest
 
-from conftest import (
-    SF,
-    assert_module_documented,
-    assert_module_registered,
-    assert_no_row_python_or_cartesian,
-    assert_oracles_portable,
-    assert_registration_composes,
-)
-from database_collector_spark import workloads_r13
-
-
-def test_staged_sets_are_one_to_one():
-    assert set(workloads_r13.QUERIES) == set(workloads_r13.ORACLES)
-
-
-def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
-    assert_oracles_portable(oracle_con, workloads_r13.ORACLES)
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
-    for name in workloads_r13.QUERIES:
-        assert_no_row_python_or_cartesian(name, gate_plan(name))
-
-
-def test_every_staged_gate_is_documented_and_window_headed():
-    assert_module_documented(workloads_r13, "r13")
-
-
-def test_r13_cohort_is_fully_registered():
-    assert_module_registered(workloads_r13)
-
-
-def test_r13_registration_dry_run_composes(gate_plan):
-    assert_registration_composes(workloads_r13, gate_plan)
+from conftest import SF
+from database_collector_spark import gates
 
 
 def test_hard_negatives_subset_of_restricted_topk(spark):
@@ -108,9 +75,9 @@ def test_rule_attribution_marginals_reconcile(spark):
     from pyspark.sql import functions as F
 
     from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import _rule_columns
+    from database_collector_spark.workloads_text import _rule_columns
 
-    rows = workloads_r13.q_rule_attribution(spark, SF).collect()
+    rows = gates.all_queries()["rule_attribution"](spark, SF).collect()
     total_marginal = sum(r["n_marginal"] for r in rows)
     for r in rows:
         assert r["n_marginal"] <= r["n_flagged"], r
@@ -137,7 +104,7 @@ def test_quantiles_refined_regrids_the_degenerate_cell(spark):
 
     from database_collector_spark.operators.ranking import prefix_count_below
     from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import _qr_value
+    from database_collector_spark.workloads_eval import _qr_value
 
     docs = _t(spark, SF, "documents")
     per = (
@@ -345,7 +312,7 @@ def test_bucketed_join_is_exchange_free_when_smj_forced(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         plan = (
-            workloads_r13.q_bucketed_join_persist(spark, SF)
+            gates.all_queries()["bucketed_join_persist"](spark, SF)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -374,7 +341,7 @@ def test_bucketed_layout_serves_second_consumers_exchange_free(spark):
 
     from examples.nightly_join import coverage_gaps, label_report
     from database_collector_spark.workloads import _t
-    from database_collector_spark.workloads_r13 import ensure_bucketed_tables
+    from database_collector_spark.workloads_storage import ensure_bucketed_tables
 
     dt, et = ensure_bucketed_tables(spark, SF)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -425,7 +392,7 @@ def test_new_eval_gate_plans_stay_parallel(spark):
     probe stream stays map-side) and its per-anchor top-k window is
     group-limit pushed."""
     plans = {
-        name: workloads_r13.QUERIES[name](spark, SF)
+        name: gates.all_queries()[name](spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -1,36 +1,19 @@
-"""The workloads_r14 cohort: its plan sweep, the ks/curve SinglePartition
-pins and the ECE fold from streamed fixed-bin state. Every gate's
-differential against its DuckDB twin and its plan check for
-row-at-a-time Python and cartesian products run in test_gates.py.
+"""The ks/curve SinglePartition pins and the ECE fold from streamed
+fixed-bin state. Every gate's differential against its DuckDB twin and
+its plan check for row-at-a-time Python and cartesian products run in
+test_gates.py.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from conftest import (
-    SF,
-    assert_no_row_python_or_cartesian,
-    assert_oracles_portable,
-)
-from database_collector_spark import workloads_r14
+from conftest import SF
 from test_plan_quality import (
     _assert_single_partition_inputs_bounded,
     _assert_single_partition_is_guard_only,
 )
-
-
-def test_staged_sets_are_one_to_one():
-    assert set(workloads_r14.QUERIES) == set(workloads_r14.ORACLES)
-
-
-def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
-    assert_oracles_portable(oracle_con, workloads_r14.ORACLES)
-
-
-def test_staged_plans_have_no_python_udfs_or_cartesians(gate_plan):
-    for name in workloads_r14.QUERIES:
-        assert_no_row_python_or_cartesian(name, gate_plan(name))
+from database_collector_spark import gates
 
 
 def test_ece_foldable_from_streamed_fixed_bin_state(spark):
@@ -121,7 +104,7 @@ def test_ks_separation_single_partitions_are_guard_only(spark):
     the prefix core's bounded rng guard (count-over-() window above,
     rng min/max aggregate below), never a corpus gather or sort."""
     plan = (
-        workloads_r14.q_ks_separation(spark, SF)
+        gates.all_queries()["ks_separation"](spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -139,7 +122,7 @@ def test_curve_gates_single_partitions_are_bounded_aggregates(spark, gate):
     corpus-sized funnel fails structurally regardless of occurrence
     count (the r11 ADVICE stance)."""
     plan = (
-        workloads_r14.QUERIES[gate](spark, SF)
+        gates.all_queries()[gate](spark, SF)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -1,31 +1,18 @@
-"""The workloads_r18 cohort: the order-statistics tier on
-rank_select_by_group: its plan pin (broadcast candidate joins, no corpus
-funnel), range-splitter and token-mass-median checks, and the
-range-layout example. Every gate's differential against its DuckDB twin
-and its plan check for row-at-a-time Python and cartesian products run
-in test_gates.py.
+"""The order-statistics gates on rank_select_by_group: their plan pin
+(broadcast candidate joins, no corpus funnel), range-splitter and
+token-mass-median checks, and the range-layout example. Every gate's
+differential against its DuckDB twin and its plan check for
+row-at-a-time Python and cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
 
-from conftest import (
-    SF,
-    assert_no_row_python_or_cartesian,
-    assert_oracles_portable,
-)
-from database_collector_spark import workloads_r18
-
-
-def test_staged_sets_are_one_to_one():
-    assert set(workloads_r18.QUERIES) == set(workloads_r18.ORACLES)
-
-
-def test_staged_oracles_have_no_arrow_unportable_columns(oracle_con):
-    assert_oracles_portable(oracle_con, workloads_r18.ORACLES)
+from conftest import SF, assert_no_row_python_or_cartesian
+from database_collector_spark import gates, workloads_eval
 
 
 def test_staged_plans_have_no_python_or_cartesian_or_corpus_funnel(gate_plan):
-    for name in workloads_r18.QUERIES:
+    for name in ("rank_quartiles", "range_splitters", "token_mass_median"):
         plan = gate_plan(name)
         assert_no_row_python_or_cartesian(name, plan)
         # the whole point of the tier: candidate joins broadcast; the
@@ -53,7 +40,7 @@ def test_range_splitters_are_monotone_and_bounded(spark):
         )
         .collect()
     }
-    rows = workloads_r18.q_range_splitters(spark, SF).collect()
+    rows = gates.all_queries()["range_splitters"](spark, SF).collect()
     assert rows
     for r in rows:
         ss = [r[f"s{i}"] for i in range(1, 8)]
@@ -71,15 +58,15 @@ def test_token_mass_median_dominates_row_median(spark):
     cross-gate consistency read."""
     from pyspark.sql import functions as F
 
-    q = {r["source"]: r for r in workloads_r18.q_rank_quartiles(spark, SF).collect()}
+    q = {r["source"]: r for r in gates.all_queries()["rank_quartiles"](spark, SF).collect()}
     m = {
         r["source"]: r
-        for r in workloads_r18.q_token_mass_median(spark, SF).collect()
+        for r in gates.all_queries()["token_mass_median"](spark, SF).collect()
     }
     assert set(q) == set(m)
     totals = {
         r["source"]: r["t"]
-        for r in workloads_r18._doc_tokens(spark, SF)
+        for r in workloads_eval._doc_tokens(spark, SF)
         .groupBy("source")
         .agg(F.sum("n_tok").alias("t"))
         .collect()

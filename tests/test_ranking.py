@@ -8,6 +8,8 @@ import math
 import pytest
 from pyspark.sql import Row
 
+from conftest import SF
+from database_collector_spark import gates, workloads_eval
 from database_collector_spark.operators import ranking
 
 from rankrefs import rank_ref, wrank_ref
@@ -819,3 +821,48 @@ def test_rank_select_input_columns_named_g_or_v_do_not_shadow_filters(spark):
     )
     rows = ranking.rank_select_by_group(df2, "grp", "v", {"m": "1"}).collect()
     assert len(rows) == 1 and rows[0]["grp"] == "x" and rows[0]["n"] == 2
+
+
+def test_agreement_alpha_panel_really_is_uneven(spark):
+    """The gate exists to exercise MISSING votes — if a fixture change
+    ever made every document fully voted, the gate would silently
+    degenerate into fleiss territory; pin genuine unevenness."""
+    docs_votes = (
+        gates.all_queries()["agreement_alpha"](spark, SF).collect()
+    )
+    # n_values < 3 * n_items would be impossible under a full panel
+    [r] = docs_votes
+    assert r["n_values"] < 3 * r["n_items"], (
+        "every item fully voted — the missing-vote scenario is gone"
+    )
+
+
+def test_robust_stats_textbook_relationships(spark):
+    """Cross-gate consistency: MAD bounded by the max |deviation| and
+    >= 0; winsorized mean inside its own bracket; every outlier count
+    strictly less than n and fences consistent with the quartiles."""
+    from pyspark.sql import functions as F
+
+    mad = {r["source"]: r for r in gates.all_queries()["group_mad"](spark, SF).collect()}
+    toks = workloads_eval._doc_tokens(spark, SF)
+    spread = {
+        r["source"]: r
+        for r in toks.groupBy("source")
+        .agg(F.min("n_tok").alias("lo"), F.max("n_tok").alias("hi"))
+        .collect()
+    }
+    for src, r in mad.items():
+        assert r["mad_tokens"] >= 0
+        max_dev = max(
+            abs(spread[src]["lo"] - r["med_tokens"]),
+            abs(spread[src]["hi"] - r["med_tokens"]),
+        )
+        assert r["mad_tokens"] <= max_dev, src
+        assert spread[src]["lo"] <= r["med_tokens"] <= spread[src]["hi"], src
+
+    for r in gates.all_queries()["winsorized_mean"](spark, SF).collect():
+        assert r["q05_cents"] <= r["winsorized_mean_cents"] <= r["q95_cents"], r
+
+    for r in gates.all_queries()["iqr_outlier_report"](spark, SF).collect():
+        assert r["p25"] <= r["p75"], r
+        assert 0 <= r["n_low_outliers"] + r["n_high_outliers"] < r["n"], r

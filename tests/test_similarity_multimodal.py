@@ -6,6 +6,8 @@ import math
 
 from pyspark.sql import Row
 
+from conftest import SF
+from database_collector_spark import gates
 from database_collector_spark.operators import multimodal, similarity
 
 
@@ -256,17 +258,12 @@ def test_frame_sample_cardinality_and_stride(spark):
 def test_multiprobe_dominates_single_probe(spark):
     # 1-probe candidates (mask 0) are a subset of the 9-cell probe set,
     # so for every query the best multiprobe hit is at least as good
-    from database_collector_spark.workloads2 import (
-        q_ann_ivf_multiprobe,
-        q_ann_ivf_probe,
-    )
-
     sf = "/root/testdata/sf0.001"
     best = {
         r["q_id"]: r["cos"]
-        for r in q_ann_ivf_multiprobe(spark, sf).filter("rank = 1").collect()
+        for r in gates.all_queries()["ann_ivf_multiprobe"](spark, sf).filter("rank = 1").collect()
     }
-    for r in q_ann_ivf_probe(spark, sf).filter("rank = 1").collect():
+    for r in gates.all_queries()["ann_ivf_probe"](spark, sf).filter("rank = 1").collect():
         assert best[r["q_id"]] >= r["cos"]
 
 
@@ -729,3 +726,13 @@ def test_embedding_outliers_random_property(spark):
     assert [v for v, _ in got] == [v for v, _ in expect]
     for (_, g), (_, e) in zip(got, expect):
         assert abs(g - e) < 5e-7
+
+
+def test_embedding_drift_halves_really_differ(spark):
+    """The gate exists to measure MOVEMENT — if a fixture change ever
+    made the parity halves identical, every centroid_l2 would be 0 and
+    the gate would pin nothing; require at least one label to drift."""
+    rows = gates.all_queries()["embedding_drift"](spark, SF).collect()
+    assert any(r["centroid_l2"] > 0 for r in rows), (
+        "all parity-half centroids coincide — the drift scenario is gone"
+    )

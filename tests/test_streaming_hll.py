@@ -4,7 +4,7 @@ on the same summary as the batch pipeline (operators/sketches.py) over
 the same events, regardless of micro-batch boundaries — max-merge is
 idempotent/commutative/associative, so replays and batch splits cannot
 change state. This is the evidence behind the hll_sliding_windows gate's
-"batch twin of the streaming op" claim (workloads_r10.py)."""
+"batch twin of the streaming op" claim (workloads_ts.py)."""
 
 from __future__ import annotations
 

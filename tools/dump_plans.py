@@ -106,27 +106,18 @@ def main() -> None:
         "`tests/test_plan_quality.py`; this file is the human-readable half.",
         "",
     ]
-    from database_collector_spark.workloads_r12 import clear_session_memo
-
     for name, why in PICKS + STAGED_PICKS:
         df = qs[name](spark, SF)
         if name in gates.STAGED:
             why = f"{why} [staged]"
-        # evict the session feature-frame memo AFTER constructing the
-        # pick (construction itself may register a persist with the
-        # CacheManager) and BEFORE explain, so every dumped plan is the
-        # canonical COLD plan, not an InMemoryRelation wrapper whose
-        # shape depends on PICKS order (r14 review, two passes: the
-        # clear-before-build form still dumped the pick's own cache)
-        clear_session_memo(spark)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        # scrub per-process artifact suffixes (workloads_r10's
-        # _artifact_dir embeds os.getpid() in persisted-signature
-        # paths) so regeneration never produces a meaningless diff —
-        # PLANS.md is a reviewed artifact and must churn only when a
-        # plan SHAPE changes (second review pass)
+        # scrub per-process artifact suffixes (workloads.artifact_dir
+        # embeds os.getpid() in persisted-signature paths) so
+        # regeneration never produces a meaningless diff — PLANS.md is
+        # a reviewed artifact and must churn only when a plan SHAPE
+        # changes
         text = re.sub(r"(_sf[0-9._]+)_\d+", r"\1_PID", buf.getvalue().strip())
         # plan_id / RDD ids are process-global monotone counters and
         # expression ids (#123) ride a global counter too: any upstream
