@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from database_collector_spark.operators.text import (
@@ -51,6 +51,7 @@ def _ols(xy):
     ),
     k=st.integers(min_value=1, max_value=6),
 )
+@example(docs=[["a"] * 4 + ["b"] * 4 + ["c"] * 4], k=3)
 def test_zipf_head_fit_fuzz_matches_ols_reference(spark, docs, k):
     rows = [("xx", i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "lang string, doc_id int, text string")
@@ -64,6 +65,12 @@ def test_zipf_head_fit_fuzz_matches_ols_reference(spark, docs, k):
         (math.log10(r + 1), math.log10(c)) for r, (_, c) in enumerate(head)
     ]
     slope, r2 = _ols(xy)
+    if len({c for _, c in head}) == 1:
+        # every head count identical: r2 is 0/0. The float dy in _ols
+        # can come out as rounding noise here (three counts of 4 give
+        # 8.9e-16), so the reference guards on the exact counts, as the
+        # operator does.
+        r2 = None
     [r] = got
     assert r["n_terms"] == len(head)
     if slope is None:
