@@ -16,7 +16,8 @@ Histogram/summary handling is dual-mode (SURVEY §2.6): the reference
 *flattens* histograms/summaries to a single sample_sum sample (its bucket
 loop at prometheus.go:82-87 is overwritten at :101-107); correct mode
 explodes buckets into per-`le` series the way a live Prometheus would
-scrape them.
+scrape them. Either mode is one ``inline`` generator over a per-sample
+array of series followed by one label projection: no union, no shuffle.
 """
 
 from __future__ import annotations
@@ -43,13 +44,28 @@ def identifier_from_host(host: Column) -> Column:
     return F.split(host, "\\.").getItem(0)
 
 
-def _source_labels(*also_reserved: str) -> Column:
-    """Source label map, null-safe, with reserved (and per-series extra,
-    e.g. 'le'/'quantile') keys stripped so map_concat never sees a
-    duplicate."""
-    reserved = list(RESERVED_LABELS) + list(also_reserved)
-    m = F.coalesce(F.col("labels"), F.create_map().cast("map<string,string>"))
-    return F.map_filter(m, lambda k, _v: ~k.isin(*reserved))
+# Columns a scalar-only input (the metric-config melt) may lack, and the
+# type each reads as when absent.
+_OPTIONAL = {
+    "metric_type": "string",
+    "buckets": "array<struct<le:double,cumulative_count:bigint>>",
+    "quantiles": "array<struct<q:double,value:double>>",
+    "sample_sum": "double",
+    "sample_count": "bigint",
+}
+
+
+def _series(
+    n: Column, v: Column, k: str | None = None, kv: Column | None = None
+) -> Column:
+    """One emitted series before labelling: its name, the optional
+    per-series label (k = 'le' or 'quantile', kv its value) and value."""
+    return F.struct(
+        n.alias("n"),
+        F.lit(k).cast("string").alias("k"),
+        (F.lit(None) if kv is None else kv).cast("string").alias("kv"),
+        v.cast("double").alias("v"),
+    )
 
 
 def enrich(
@@ -65,8 +81,12 @@ def enrich(
 ) -> DataFrame:
     """metric samples -> enriched TimeSeries rows (labels, value, ts).
 
-    Input must follow METRIC_SAMPLE_SCHEMA. Pure projection + (in correct
-    mode) a generator expression — no shuffle, fully pipelined by
+    Input must follow METRIC_SAMPLE_SCHEMA; an optional column (type,
+    buckets, quantiles, sum, count) that is absent, as in the metric-config
+    melt's scalar frames, reads as NULL. Each sample expands to an array
+    of (name, le/quantile key, key value, value) series chosen by its
+    type; one ``inline`` generator emits them and one projection builds
+    each series' label map. No union, no shuffle: fully pipelined by
     whole-stage codegen at any scale.
 
     ``anchor_ts`` pins the now() fallback for deterministic tests; None uses
@@ -74,125 +94,77 @@ def enrich(
     """
     now = F.lit(anchor_ts).cast("timestamp") if anchor_ts else F.current_timestamp()
 
-    # tolerate scalar-only inputs (e.g. the metric-config compiler emits no
-    # histogram columns): absent optional columns become typed NULLs
-    optional = {
-        "metric_type": "string",
-        "buckets": "array<struct<le:double,cumulative_count:bigint>>",
-        "quantiles": "array<struct<q:double,value:double>>",
-        "sample_sum": "double",
-        "sample_count": "bigint",
-    }
-    for col_name, col_type in optional.items():
-        if col_name not in samples.columns:
-            samples = samples.withColumn(col_name, F.lit(None).cast(col_type))
+    def opt(col_name: str) -> Column:
+        if col_name in samples.columns:
+            return F.col(col_name)
+        return F.lit(None).cast(_OPTIONAL[col_name])
 
-    pipeline_labels = F.create_map(
-        F.lit("__name__"), F.col("name"),
+    name = F.col("name")
+    mtype = F.upper(F.coalesce(opt("metric_type"), F.lit("UNTYPED")))
+    is_scalar = mtype.isin("COUNTER", "GAUGE", "UNTYPED")
+
+    if compat_flatten_histograms:
+        # Reference behavior (prometheus.go:101-107): histograms/summaries
+        # emit ONE sample under the bare name with value = sample_sum.
+        value = F.when(is_scalar, F.col("value")).otherwise(opt("sample_sum"))
+        series = F.array(_series(name, value))
+    else:
+        # Correct mode: scalar samples pass through; histograms expand into
+        # `<name>_bucket{le=...}` series plus `_sum`/`_count`; summaries into
+        # `{quantile=...}` plus `_sum`/`_count`; any other type gets a NULL
+        # array, which inline() expands to no row. The input arrays are
+        # coalesced to empty first: concat with NULL is NULL and would lose
+        # `_sum`/`_count`.
+        sum_count = F.array(
+            _series(F.concat(name, F.lit("_sum")), opt("sample_sum")),
+            _series(F.concat(name, F.lit("_count")), opt("sample_count")),
+        )
+        buckets = F.transform(
+            F.coalesce(opt("buckets"), F.array().cast(_OPTIONAL["buckets"])),
+            lambda b: _series(
+                F.concat(name, F.lit("_bucket")),
+                b["cumulative_count"],
+                "le",
+                F.when(b["le"] == float("inf"), F.lit("+Inf")).otherwise(
+                    b["le"].cast("string")
+                ),
+            ),
+        )
+        quantiles = F.transform(
+            F.coalesce(opt("quantiles"), F.array().cast(_OPTIONAL["quantiles"])),
+            lambda q: _series(name, q["value"], "quantile", q["q"]),
+        )
+        series = (
+            F.when(is_scalar, F.array(_series(name, F.col("value"))))
+            .when(mtype == "HISTOGRAM", F.concat(buckets, sum_count))
+            .when(mtype == "SUMMARY", F.concat(quantiles, sum_count))
+        )
+
+    # Source labels lose the pipeline's reserved names and the series' own
+    # key (Spark's default mapKeyDedupPolicy=EXCEPTION would abort the batch
+    # on a duplicate). `key <> k` is NULL when k is NULL, hence the IS NULL.
+    k = F.col("k")
+    source = F.map_filter(
+        F.col("labels"),
+        lambda key, _v: ~key.isin(*RESERVED_LABELS) & (k.isNull() | (key != k)),
+    )
+    pipeline = F.create_map(
+        F.lit("__name__"), F.col("n"),
         F.lit("identifier"), identifier_from_host(F.lit(host)),
         F.lit("job"), F.lit(job),
         F.lit("region"), F.lit(region),
         F.lit("accountId"), F.lit(account_id),
         F.lit("engine"), F.lit(engine),
     )
-
-    scalar_types = ("COUNTER", "GAUGE", "UNTYPED")
-    is_scalar = F.upper(F.coalesce(F.col("metric_type"), F.lit("UNTYPED"))).isin(
-        *scalar_types
-    )
-
-    base = samples.withColumn("__ts", F.coalesce(F.col("ts"), now))
-
-    if compat_flatten_histograms:
-        # Reference behavior (prometheus.go:101-107): histograms/summaries
-        # emit ONE sample under the bare name with value = sample_sum.
-        value = F.when(is_scalar, F.col("value")).otherwise(F.col("sample_sum"))
-        return base.select(
-            F.map_concat(_source_labels(), pipeline_labels).alias("labels"),
-            value.alias("value"),
-            F.col("__ts").alias("ts"),
-        )
-
-    # Correct mode: scalar samples pass through; histograms explode into
-    # `<name>_bucket{le=...}` series plus `_sum`/`_count`; summaries into
-    # `{quantile=...}` plus `_sum`/`_count`.
-    scalars = base.filter(is_scalar).select(
-        F.map_concat(_source_labels(), pipeline_labels).alias("labels"),
-        F.col("value"),
-        F.col("__ts").alias("ts"),
-    )
-
-    def _with_name_and_extra(name_col: Column, extra_key: str | None, extra_val: Column | None) -> Column:
-        m = F.map_concat(
-            _source_labels(*([extra_key] if extra_key is not None else [])),
-            F.create_map(
-                F.lit("__name__"), name_col,
-                F.lit("identifier"), identifier_from_host(F.lit(host)),
-                F.lit("job"), F.lit(job),
-                F.lit("region"), F.lit(region),
-                F.lit("accountId"), F.lit(account_id),
-                F.lit("engine"), F.lit(engine),
-            ),
-        )
-        if extra_key is not None:
-            m = F.map_concat(m, F.create_map(F.lit(extra_key), extra_val))
-        return m
-
-    hist = base.filter(
-        F.upper(F.coalesce(F.col("metric_type"), F.lit(""))) == "HISTOGRAM"
-    )
-    hist_buckets = hist.select(
-        F.explode("buckets").alias("b"), "labels", "__ts", "name"
+    # map_concat with a NULL map is NULL: no key, empty map
+    empty = F.create_map().cast("map<string,string>")
+    series_key = F.when(k.isNull(), empty).otherwise(F.create_map(k, F.col("kv")))
+    return samples.select(
+        F.inline(series),
+        F.coalesce(F.col("labels"), empty).alias("labels"),
+        F.coalesce(F.col("ts"), now).alias("ts"),
     ).select(
-        _with_name_and_extra(
-            F.concat(F.col("name"), F.lit("_bucket")),
-            "le",
-            F.when(F.col("b.le") == float("inf"), F.lit("+Inf")).otherwise(
-                F.col("b.le").cast("string")
-            ),
-        ).alias("labels"),
-        F.col("b.cumulative_count").cast("double").alias("value"),
-        F.col("__ts").alias("ts"),
-    )
-    hist_sum = hist.select(
-        _with_name_and_extra(F.concat(F.col("name"), F.lit("_sum")), None, None).alias("labels"),
-        F.col("sample_sum").alias("value"),
-        F.col("__ts").alias("ts"),
-    )
-    hist_count = hist.select(
-        _with_name_and_extra(F.concat(F.col("name"), F.lit("_count")), None, None).alias("labels"),
-        F.col("sample_count").cast("double").alias("value"),
-        F.col("__ts").alias("ts"),
-    )
-
-    summ = base.filter(
-        F.upper(F.coalesce(F.col("metric_type"), F.lit(""))) == "SUMMARY"
-    )
-    summ_q = summ.select(
-        F.explode("quantiles").alias("q"), "labels", "__ts", "name"
-    ).select(
-        _with_name_and_extra(
-            F.col("name"), "quantile", F.col("q.q").cast("string")
-        ).alias("labels"),
-        F.col("q.value").alias("value"),
-        F.col("__ts").alias("ts"),
-    )
-    summ_sum = summ.select(
-        _with_name_and_extra(F.concat(F.col("name"), F.lit("_sum")), None, None).alias("labels"),
-        F.col("sample_sum").alias("value"),
-        F.col("__ts").alias("ts"),
-    )
-    summ_count = summ.select(
-        _with_name_and_extra(F.concat(F.col("name"), F.lit("_count")), None, None).alias("labels"),
-        F.col("sample_count").cast("double").alias("value"),
-        F.col("__ts").alias("ts"),
-    )
-
-    return (
-        scalars.unionByName(hist_buckets)
-        .unionByName(hist_sum)
-        .unionByName(hist_count)
-        .unionByName(summ_q)
-        .unionByName(summ_sum)
-        .unionByName(summ_count)
+        F.map_concat(source, pipeline, series_key).alias("labels"),
+        F.col("v").alias("value"),
+        F.col("ts"),
     )

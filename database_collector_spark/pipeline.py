@@ -49,7 +49,6 @@ def collect_target(
     region: str,
     account_id: str,
     anchor_ts: str | None = None,
-    compat_flatten_histograms: bool = False,
 ) -> DataFrame:
     """One target, one tick: run every metric spec's request through
     ``scrape_fn`` (JDBC pushdown in production, fixture lookup in tests),
@@ -68,7 +67,6 @@ def collect_target(
         region=region,
         account_id=account_id,
         anchor_ts=anchor_ts,
-        compat_flatten_histograms=compat_flatten_histograms,
     )
 
 
@@ -109,8 +107,9 @@ def run_once(
             warnings.warn(
                 f"registry holds {MAX_TARGETS + dropped} enabled targets; "
                 f"page cap {MAX_TARGETS} drops {dropped} this tick (first "
-                f"{MAX_TARGETS} by secret_name collected). Raise "
-                "discover(max_targets=...) or shard the registry.",
+                f"{MAX_TARGETS} by secret_name collected). Shard the "
+                f"registry across run_once calls of at most {MAX_TARGETS} "
+                "enabled targets each.",
                 RuntimeWarning,
                 stacklevel=2,
             )

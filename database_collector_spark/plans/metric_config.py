@@ -59,8 +59,9 @@ def load_specs_file(path: str) -> list[MetricSpec]:
 def melt_to_samples(result: DataFrame, spec: MetricSpec) -> DataFrame:
     """Query result -> one sample row per (row, value column).
 
-    The melt is a union of narrow projections: one pass over the query
-    result per value column, no shuffle, no UDF.
+    The melt is one projection over one generator: each result row builds
+    an array of (name, type, value) structs, one per value column, that
+    ``inline`` expands, so the result is read once. No shuffle, no UDF.
     """
     label_map = (
         F.create_map(
@@ -73,22 +74,23 @@ def melt_to_samples(result: DataFrame, spec: MetricSpec) -> DataFrame:
         if spec.labels
         else F.create_map().cast("map<string,string>")
     )
-    parts = []
-    for value_col in spec.metricsdesc:
-        mtype = spec.metricstype.get(value_col, "gauge").upper()
-        parts.append(
-            result.select(
+    per_column = F.array(
+        *[
+            F.struct(
                 F.lit(spec.metric_name(value_col)).alias("name"),
-                F.lit(mtype).alias("metric_type"),
-                label_map.alias("labels"),
+                F.lit(spec.metricstype.get(value_col, "gauge").upper()).alias(
+                    "metric_type"
+                ),
                 F.col(value_col).cast("double").alias("value"),
-                F.lit(None).cast("timestamp").alias("ts"),
             )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            for value_col in spec.metricsdesc
+        ]
+    )
+    return result.select(
+        F.inline(per_column),
+        label_map.alias("labels"),
+        F.lit(None).cast("timestamp").alias("ts"),
+    ).select("name", "metric_type", "labels", "value", "ts")
 
 
 def run_config(

@@ -8,6 +8,7 @@ from pyspark.sql import Row
 
 from database_collector_spark.model.schemas import METRIC_SAMPLE_SCHEMA
 from database_collector_spark.operators.enrich import enrich
+from database_collector_spark.plans.metric_config import MetricSpec, melt_to_samples
 
 ANCHOR = "2024-06-01 00:00:00"
 HOST = "mydb.abc123.us-west-2.rds.amazonaws.com"
@@ -160,10 +161,27 @@ def test_compat_mode_flattens_to_sample_sum(spark):
     assert "quantile" not in summ[0]["labels"]
 
 
-def test_enrich_plan_is_shuffle_free(spark):
+def test_enrich_plan_is_shuffle_free(spark, tmp_path):
     """§2.4 is a narrow transform: the physical plan must contain no
-    exchange — at 100 TB a shuffle here would be catastrophic."""
+    exchange — at 100 TB a shuffle here would be catastrophic. The
+    correct-mode collector stage, melt then enrich, is one pass: a
+    single scan of the scraped result and no union of per-column or
+    per-type branches."""
     plan = enrich(
         _samples(spark), compat_flatten_histograms=True, **_kw()
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(
+        [("a", 1, 2.5), ("b", 3, None)], "db string, conns bigint, lag double"
+    ).write.parquet(src_path)
+    spec = MetricSpec(
+        context="engine", request="", labels=["db"],
+        metricsdesc={"conns": "connections", "lag": "replica lag"},
+    )
+    stage = enrich(melt_to_samples(spark.read.parquet(src_path), spec), **_kw())
+    plan = stage._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    for node in ("Union", "Exchange", "EvalPython"):
+        assert node not in plan, plan

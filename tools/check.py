@@ -21,6 +21,7 @@ import math
 import os
 import re
 import sys
+import tempfile
 import time
 import traceback
 
@@ -117,6 +118,17 @@ def value_hash(canon: list[str]) -> str:
     return h.hexdigest()
 
 
+def oracle_config(spark, spill_dir: str) -> dict:
+    """Settings for the in-process DuckDB oracle. DuckDB's default cap, 80%
+    of physical memory, does not know the Spark driver JVM shares the
+    host: cap it at physical memory minus the JVM's max heap instead, and
+    let it spill to ``spill_dir`` beyond that."""
+    heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    limit_mb = max(phys - heap, 1 << 30) >> 20
+    return {"memory_limit": f"{limit_mb}MB", "temp_directory": spill_dir}
+
+
 def main() -> int:
     args = sys.argv[1:]
     staged = "--staged" in args
@@ -130,7 +142,8 @@ def main() -> int:
     from database_collector_spark.session import get_spark
 
     spark = get_spark("check-correctness")
-    con = duckdb.connect()
+    spill = tempfile.TemporaryDirectory(prefix="check-duckdb-")
+    con = duckdb.connect(config=oracle_config(spark, spill.name))
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
@@ -185,6 +198,8 @@ def main() -> int:
         else:
             print(f"ok    {name}: rows={len(s_canon)} ({elapsed:.1f}s)")
     print("FAILURES:", failures)
+    con.close()
+    spill.cleanup()
     return 1 if failures else 0
 
 
