@@ -69,12 +69,12 @@ def connected_components(
     strictly-predictable-plan choice); "star" runs the
     large-star/small-star variant directly.
 
-    Small-graph fast path (r16, "auto" only): when the two-orientation
+    Small-graph fast path ("auto" only): when the two-orientation
     edge set has fewer than ``small_graph_threshold`` rows (the same
     driver-side count the coalesce(1) gate already paid), the whole
     fixpoint runs as ONE single-task union-find job over the one
     partition — dedup pair graphs are tiny at every corpus scale
-    (near-dup pairs), and the iterative loop cost 2 driver jobs x
+    (near-dup pairs), and the iterative loop costs 2 driver jobs x
     diameter rounds for a graph that fits one task. Identical results
     by construction (union by min id ⇒ representative = min reachable
     id). Set ``small_graph_threshold=0`` to force the distributed loop;
@@ -105,8 +105,8 @@ def connected_components(
     # keeps its parallelism)
     n_edges = edges.count()
     if algorithm == "auto" and n_edges < small_graph_threshold:
-        # r16 fast path: the graph fits one task — run the whole
-        # fixpoint as ONE job instead of 2 driver jobs x diameter rounds
+        # the graph fits one task — run the whole fixpoint as ONE job
+        # instead of 2 driver jobs x diameter rounds
         return _local_components(edges)
     if n_edges < 100_000:
         edges = edges.coalesce(1)
@@ -176,7 +176,7 @@ def connected_components(
 
 def _local_components(edges: DataFrame) -> DataFrame:
     """Single-task union-find over a SMALL two-orientation edge set —
-    the size-gated fast path of ``connected_components`` (r16). The
+    the size-gated fast path of ``connected_components``. The
     caller has already proven |edges| < threshold with the driver-side
     count it needed anyway, so the whole graph fits one partition and
     the fixpoint collapses to ONE job: a deterministic min-id

@@ -29,6 +29,10 @@ from pyspark.sql.window import Window
 
 EMBED_DIM = 64
 QUANT_SCALE = 1 << 20
+# corpora below this many rows train their codebooks in one task. The
+# largest size measured: at 2k-100k rows the one-task trainer gates ran
+# 2-9x faster than on the distributed loop (4 local cores; CHANGES.md)
+SMALL_CORPUS_THRESHOLD = 100_000
 
 
 def _lcg_floats(seed: int, count: int) -> list[float]:
@@ -238,10 +242,12 @@ def kmeans_centroids(
     the rounded centroid is bit-identical, keeping every later distance
     comparison exact. An empty cluster keeps its previous centroid.
 
-    Per-iteration driver traffic is k rows of centroid components (the
-    same bounded reduce MLlib's KMeans does); all per-vector work is a
-    literal-centroid projection plus one (cid, pos) partial-agg shuffle
-    of the posexploded components — at 100 TB that shuffle moves
+    A corpus below ``SMALL_CORPUS_THRESHOLD`` rows trains in one numpy
+    task. A larger one trains as Spark rounds whose driver traffic is k
+    rows of centroid components per iteration (the same bounded reduce
+    MLlib's KMeans does); all per-vector work is a broadcast-centroid
+    projection plus one (cid, pos) partial-agg shuffle of the
+    posexploded components — at 100 TB that shuffle moves
     k*dim*|partitions| partial rows, not |vectors|*dim.
     """
     return kmeans_fit(embeddings, k=k, iters=iters, dim=dim)[1]
@@ -251,51 +257,133 @@ def kmeans_fit(
     embeddings: DataFrame, *, k: int = 8, iters: int = 3, dim: int = EMBED_DIM
 ) -> tuple[DataFrame, list[list[int]]]:
     """``kmeans_centroids`` that ALSO returns the trainer's materialized
-    quantized frame (vec_id, qe, qnorm2) — r16: every IVF gate's final
-    assignment re-derived with_quantized from a fresh corpus scan right
-    after the trainer had checkpointed the identical frame; reusing the
-    checkpoint drops one full corpus scan + quantize fold per gate
-    (within ONE gate invocation — the frame dies with the returned
-    DataFrame, nothing is memoized across queries)."""
-    # materialize the quantized corpus once: every iteration re-reads it,
-    # and the checkpoint also keeps each iteration's plan flat (at lake
-    # scale this is the persist() MLlib's trainer does on its input).
-    # Lazy: the seed collect below is the first action and materializes
-    # it — the old eager form paid a separate materialization job first.
-    base = (
-        with_quantized(embeddings)
-        .select("vec_id", "qe", "qnorm2")
-        .localCheckpoint(eager=False)
+    quantized frame (vec_id, qe, qnorm2), so a gate's final assignment
+    reads that one materialization instead of re-deriving with_quantized
+    from a second corpus scan (within ONE gate invocation — the frame
+    dies with the returned DataFrame, nothing is memoized across
+    queries). k-means is PQ with one subspace: the trainer is
+    ``pq_fit_quantized`` with m = 1."""
+    base, books = pq_fit_quantized(
+        with_quantized(embeddings).select("vec_id", "qe", "qnorm2"),
+        m=1, k=k, iters=iters, dim=dim,
     )
-    cents: list[list[int]] = [
-        list(r["qe"]) for r in base.orderBy("vec_id").limit(k).collect()
+    return base, books[0]
+
+
+def _fit_in_one_task(df: DataFrame, fit, result_type: str, *, max_rows: int):
+    """``fit(pdf)`` over every row of ``df`` as one pandas frame in ONE
+    task (``coalesce(1)``: ``limit(n)`` keeps its input's partitions, so
+    ``fit`` would run once per partition), or None when ``df`` holds more
+    than ``max_rows`` rows, ``fit`` returns None or no task runs. The
+    task stops reading after ``max_rows + 1`` rows and yields NULL, so
+    the size gate costs no job of its own. ``max_rows`` reaches the
+    worker in this closure; a module global would be re-imported there.
+    """
+    columns = list(df.columns)
+
+    def task(batches):
+        import pandas as pd
+
+        parts, n = [], 0
+        for b in batches:
+            n += len(b)
+            if n > max_rows:
+                yield pd.DataFrame({"r": [None]})
+                return
+            parts.append(b)
+        pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=columns)
+        yield pd.DataFrame({"r": [fit(pdf)]})
+
+    rows = df.coalesce(1).mapInPandas(task, f"r {result_type}").collect()
+    return rows[0]["r"] if rows else None
+
+
+def _lloyd_kernel(m: int, k: int, iters: int, dim: int):
+    """numpy Lloyd over a whole (vec_id, qe) corpus in one pandas frame:
+    the single-task twin of ``_distributed_lloyd``, with the same
+    arithmetic, so both return the same books. The m subspaces of
+    width dim // m advance in lockstep; k-means is m = 1.
+
+    * seeds: the k lowest vec_ids' vectors (k_eff = n when n < k);
+    * distances: exact int64 ‖x‖² − 2x·c + ‖c‖² (components < 2^21, so
+      every term < 2^48; einsum runs integer loops, never float BLAS).
+      A corpus whose components could overflow int64 is declined
+      (None): numpy would wrap where Spark's ANSI longs raise;
+    * ties: ``argmin`` takes the first index, the lowest code;
+    * update: sum/count rounded half away from zero in integers. Spark's
+      round(double(sum) / count) gives the same integer: the sum is
+      exact in double (< 2^53) and the quotient never crosses a half;
+    * an empty cluster keeps its centroid."""
+    sub = dim // m
+
+    def fit(pdf):
+        import numpy as np
+
+        n = len(pdf)
+        if n == 0:
+            return [[] for _ in range(m)]
+        x = np.stack(pdf["qe"].to_numpy()).astype(np.int64)[:, : m * sub]
+        if sub * int(np.abs(x).max()) ** 2 >= 1 << 61:
+            return None
+        x = x.reshape(n, m, sub)
+        seeds = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")[:k]
+        c = x[seeds].transpose(1, 0, 2).copy()  # (m, k_eff, sub)
+        k_eff = c.shape[1]
+        xn = np.einsum("njs,njs->nj", x, x)
+        first_cell = np.arange(m)[None, :] * k_eff  # cell = (j, code)
+        for _ in range(iters):
+            d = (
+                xn[:, :, None]
+                - 2 * np.einsum("njs,jcs->njc", x, c)
+                + np.einsum("jcs,jcs->jc", c, c)[None]
+            )
+            cell = (first_cell + d.argmin(axis=2)).ravel()
+            cnt = np.bincount(cell, minlength=m * k_eff).reshape(m, k_eff, 1)
+            tot = np.zeros((m * k_eff, sub), np.int64)
+            np.add.at(tot, cell, x.reshape(n * m, sub))
+            tot = tot.reshape(m, k_eff, sub)
+            rounded = np.sign(tot) * (
+                (2 * np.abs(tot) + cnt) // (2 * np.maximum(cnt, 1))
+            )
+            c = np.where(cnt > 0, rounded, c)
+        return c.tolist()
+
+    return fit
+
+
+def _distributed_lloyd(
+    full: DataFrame, *, m: int, k: int, iters: int, dim: int
+) -> list[list[list[int]]]:
+    """Lloyd as Spark rounds, for corpora too large for one task: one
+    seed collect, then per iteration one ``_assign_books`` assignment of
+    every subspace at once and one aggregate/collect of the new
+    centroids (m·k·sub bounded rows — the bounded reduce MLlib's KMeans
+    does). Same arithmetic as ``_lloyd_kernel``."""
+    sub = dim // m
+    # subspace j's seeds are the j-th slices of the k lowest-vec_id vectors
+    seed_rows = full.select("vec_id", "qe").orderBy("vec_id").limit(k).collect()
+    k_eff = len(seed_rows)
+    books: list[list[list[int]]] = [
+        [list(r["qe"])[j * sub : (j + 1) * sub] for r in seed_rows]
+        for j in range(m)
     ]
-    return base, _lloyd(base, cents, iters=iters, dim=dim)
-
-
-def _lloyd(
-    base: DataFrame, cents: list[list[int]], *, iters: int, dim: int
-) -> list[list[int]]:
-    """The deterministic Lloyd iteration over a prepared (vec_id, qe,
-    qnorm2) frame — shared by the full-vector coarse quantizer above and
-    the per-subspace PQ codebook trainer below. A corpus smaller than k
-    trains the k it can seed (every vector its own centroid is the exact
-    degenerate answer, not an error).
-
-    NOTE (r15 optimization round): chaining all ``iters`` rounds into
-    ONE lazy plan collected once (iteration i's centroid row feeding
-    i+1's assignment via broadcast one-row frames, map_from_entries +
-    coalesce for the empty-cluster fallback) was built, verified
-    bit-identical, and MEASURED SLOWER (3.3 s -> 4.4 s warm at sf0.1):
-    the deep nested-lambda plan costs more in analysis/optimization
-    than the saved per-iteration driver round-trips. Kept per-iteration
-    deliberately."""
-    k = len(cents)
-    for _ in range(iters):
-        assigned = assign_centroids(base, cents)
+    if m == 1 and "qnorm2" in full.columns:
+        # k-means: the checkpointed corpus already is its one subspace
+        base = full.select(F.lit(0).alias("j"), "qe", "qnorm2")
+    else:
+        # one (vector x subspace) row with its subvector norm, computed
+        # once instead of per centroid per iteration
+        slices = F.array(*[F.slice("qe", j * sub + 1, sub) for j in range(m)])
+        base = (
+            full.select(F.posexplode(slices).alias("j", "qe"))
+            .withColumn("qnorm2", _dot("qe", "qe"))
+            .localCheckpoint(eager=False)
+        )
+    for _ in range(iters if k_eff else 0):
         comp = (
-            assigned.select("cid", F.posexplode("qe").alias("pos", "val"))
-            .groupBy("cid", "pos")
+            _assign_books(base, books)
+            .select("j", "cid", F.posexplode("qe").alias("pos", "val"))
+            .groupBy("j", "cid", "pos")
             .agg(
                 F.round(F.sum("val").cast("double") / F.count("*"))
                 .cast("long")
@@ -303,11 +391,39 @@ def _lloyd(
             )
             .collect()
         )
-        new: dict[int, list[int]] = {}
+        new: dict[tuple[int, int], list[int]] = {}
         for r in comp:
-            new.setdefault(r["cid"], [0] * dim)[r["pos"]] = r["comp"]
-        cents = [new.get(ci, cents[ci]) for ci in range(k)]
-    return cents
+            new.setdefault((r["j"], r["cid"]), [0] * sub)[r["pos"]] = r["comp"]
+        books = [
+            [new.get((j, ci), books[j][ci]) for ci in range(k_eff)]
+            for j in range(m)
+        ]
+    return books
+
+
+def _assign_books(base: DataFrame, books: list[list[list[int]]]) -> DataFrame:
+    """Nearest codebook centroid per (vector, subspace) row — the
+    lockstep twin of ``assign_centroids``: one broadcast one-row books
+    frame, the same exact integer squared distances, ties to the lowest
+    code. ``base`` carries (j, qe = the j-th subvector, qnorm2)."""
+    dists = F.transform(
+        F.element_at(F.col("books"), F.col("j") + 1),
+        lambda c, i: F.col("qnorm2")
+        - 2
+        * F.aggregate(
+            F.zip_with("qe", c, lambda x, y: x * y),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        )
+        + F.element_at(F.element_at(F.col("bnorms"), F.col("j") + 1), i + 1),
+    )
+    return (
+        base.crossJoin(F.broadcast(_books_frame(base.sparkSession, books)))
+        .withColumn(
+            "cid", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+        )
+        .drop("books", "bnorms")
+    )
 
 
 def incremental_assign(
@@ -354,26 +470,10 @@ def pq_train(
     table fits a fraction of the footprint and ADC search scans codes,
     not vectors. Driver traffic stays k rows per iteration per subspace.
     """
-    return pq_train_quantized(
+    return pq_fit_quantized(
         with_quantized(embeddings).select("vec_id", "qe"),
         m=m, k=k, iters=iters, dim=dim,
-    )
-
-
-def pq_train_quantized(
-    quantized: DataFrame,
-    *,
-    m: int = 4,
-    k: int = 4,
-    iters: int = 2,
-    dim: int = EMBED_DIM,
-) -> list[list[list[int]]]:
-    """``pq_train`` over an ALREADY-quantized (vec_id, qe) frame — the
-    entry point when the vectors being quantized are themselves derived
-    integers rather than raw embeddings (the IVF-PQ residual path: qe =
-    vector − its coarse centroid, still exact BIGINTs, so the whole
-    residual-codebook chain stays cross-engine replayable)."""
-    return pq_fit_quantized(quantized, m=m, k=k, iters=iters, dim=dim)[1]
+    )[1]
 
 
 def pq_fit_quantized(
@@ -384,86 +484,33 @@ def pq_fit_quantized(
     iters: int = 2,
     dim: int = EMBED_DIM,
 ) -> tuple[DataFrame, list[list[list[int]]]]:
-    """``pq_train_quantized`` that ALSO returns the trainer's
-    materialized input frame (all input columns preserved) so the
-    encode/search steps of a gate reuse the one materialization instead
-    of re-deriving the quantized corpus (within ONE gate invocation —
-    nothing is memoized across queries).
+    """``pq_train`` over an ALREADY-quantized (vec_id, qe) frame — the
+    entry point when the vectors are themselves derived integers (the
+    IVF-PQ residual path: qe = vector − its coarse centroid, still exact
+    BIGINTs, so the residual-codebook chain stays cross-engine
+    replayable). Returns the books AND the trainer's materialized input
+    frame (all input columns preserved) so the encode/search steps of a
+    gate reuse the one materialization instead of re-deriving the
+    quantized corpus (within ONE gate invocation — nothing is memoized
+    across queries).
 
-    r16 LOCKSTEP trainer: the m subspaces are independent Lloyd
-    problems, but running them sequentially paid m seed collects plus
-    m x iters per-iteration driver round-trips. All m subspaces now
-    advance in lockstep — ONE (vector x subspace)-row frame (posexplode
-    of the m slices, checkpointed once), ONE broadcast codebook frame
-    per iteration, and ONE aggregate/collect per iteration returning
-    every subspace's new centroids (m·k·sub bounded rows). Driver jobs:
-    1 seed collect + ``iters`` collects, down from m·(1 + iters);
-    per-iteration arithmetic (exact integer distances, ties to the
-    lowest code, round-half-away re-quantization, empty cluster keeps
-    its centroid) is expression-identical to the sequential form, so
-    the books are bit-identical."""
-    sub = dim // m
+    Below ``SMALL_CORPUS_THRESHOLD`` rows (read at call time; 0 forces
+    the distributed loop) the corpus trains in ONE ``_lloyd_kernel``
+    task, whose job also materializes the input checkpoint; a larger one
+    makes that task decline and ``_distributed_lloyd`` trains it. Both
+    return the same books."""
     full = quantized.localCheckpoint(eager=False)
-    # ONE seed collect serves every subspace: subspace j's seeds are
-    # the j-th slices of the SAME k lowest-vec_id vectors
-    seed_rows = full.select("vec_id", "qe").orderBy("vec_id").limit(k).collect()
-    k_eff = len(seed_rows)
-    books: list[list[list[int]]] = [
-        [list(r["qe"])[j * sub : (j + 1) * sub] for r in seed_rows]
-        for j in range(m)
-    ]
-    slices = F.array(*[F.slice("qe", j * sub + 1, sub) for j in range(m)])
-    base = (
-        full.select("vec_id", F.posexplode(slices).alias("j", "qe"))
-        .withColumn("qnorm2", _dot("qe", "qe"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(iters):
-        comp = (
-            _assign_books(base, books)
-            .select("j", "cid", F.posexplode("qe").alias("pos", "val"))
-            .groupBy("j", "cid", "pos")
-            .agg(
-                F.round(F.sum("val").cast("double") / F.count("*"))
-                .cast("long")
-                .alias("comp")
-            )
-            .collect()
+    books = None
+    if SMALL_CORPUS_THRESHOLD > 0:
+        books = _fit_in_one_task(
+            full.select("vec_id", "qe"),
+            _lloyd_kernel(m, k, iters, dim),
+            "array<array<array<bigint>>>",
+            max_rows=SMALL_CORPUS_THRESHOLD - 1,
         )
-        new: dict[tuple[int, int], list[int]] = {}
-        for r in comp:
-            new.setdefault((r["j"], r["cid"]), [0] * sub)[r["pos"]] = r["comp"]
-        books = [
-            [new.get((j, ci), books[j][ci]) for ci in range(k_eff)]
-            for j in range(m)
-        ]
+    if books is None:
+        books = _distributed_lloyd(full, m=m, k=k, iters=iters, dim=dim)
     return full, books
-
-
-def _assign_books(base: DataFrame, books: list[list[list[int]]]) -> DataFrame:
-    """Nearest codebook centroid per (vector, subspace) row — the
-    lockstep twin of ``assign_centroids``: one broadcast one-row books
-    frame, the same exact integer squared distances, ties to the lowest
-    code. ``base`` carries (j, qe = the j-th subvector, qnorm2)."""
-    spark = base.sparkSession
-    dists = F.transform(
-        F.element_at(F.col("books"), F.col("j") + 1),
-        lambda c, i: F.col("qnorm2")
-        - 2
-        * F.aggregate(
-            F.zip_with("qe", c, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        + F.element_at(F.element_at(F.col("bnorms"), F.col("j") + 1), i + 1),
-    )
-    return (
-        base.crossJoin(F.broadcast(_books_frame(spark, books)))
-        .withColumn(
-            "cid", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-        .drop("books", "bnorms")
-    )
 
 
 def _books_frame(spark, books: list[list[list[int]]]):
@@ -1223,8 +1270,8 @@ def ivf_index_save(
     ann_index_roundtrip gate hashes that claim against the no-persist
     closed form)."""
     spark = embeddings.sparkSession
-    # r16: the cells write reuses the trainer's checkpointed quantized
-    # frame instead of re-deriving with_quantized from a second scan
+    # the cells write reuses the trainer's checkpointed quantized frame
+    # instead of re-deriving with_quantized from a second scan
     qbase, cents = kmeans_fit(embeddings, k=k, iters=iters)
     cent_df = _centroid_frame(spark, cents)
     cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -1307,8 +1354,7 @@ def cell_cosine_probe(
 
 def _centroid_frame(spark, cents: list[list[int]]) -> DataFrame:
     """k-row (cid, c) frame from a trained centroid list — the single
-    schema used for persisting coarse centroids and for the broadcast
-    residual join."""
+    schema used for persisting coarse centroids."""
     return spark.createDataFrame(
         [(i, c) for i, c in enumerate(cents)], "cid int, c array<bigint>"
     )
@@ -1320,8 +1366,9 @@ def residualize(embeddings: DataFrame, cents: list[list[int]]) -> DataFrame:
     query prep, and the round-trip tests all call this, because the
     'reload + probe is bit-identical' contract only holds if every
     consumer computes residuals identically. Zero shuffle: quantize is
-    in-row, assignment is a broadcast projection, the centroid join is
-    a broadcast of k rows, the subtraction is one zip_with."""
+    in-row, assignment is a broadcast projection, and the subtraction is
+    one zip_with against the own centroid, picked by cid from a k-row
+    array literal (a second broadcast would cost one more eager job)."""
     return residualize_quantized(
         with_quantized(embeddings).select("vec_id", "qe", "qnorm2"), cents
     )
@@ -1329,17 +1376,15 @@ def residualize(embeddings: DataFrame, cents: list[list[int]]) -> DataFrame:
 
 def residualize_quantized(base: DataFrame, cents: list[list[int]]) -> DataFrame:
     """``residualize`` over a frame already carrying (vec_id, qe,
-    qnorm2) — r16: lets the IVF-PQ gate reuse the coarse trainer's
+    qnorm2) — lets the IVF-PQ gate reuse the coarse trainer's
     checkpointed quantized frame instead of re-deriving with_quantized
     from a second corpus scan. Same one definition of the residual
-    arithmetic (broadcast centroid join + one zip_with)."""
-    cent_df = _centroid_frame(base.sparkSession, cents)
-    return (
-        assign_centroids(base.select("vec_id", "qe", "qnorm2"), cents)
-        .join(F.broadcast(cent_df), "cid")
-        .select(
-            "vec_id", "cid", F.zip_with("qe", "c", lambda x, y: x - y).alias("qe")
-        )
+    arithmetic."""
+    own = F.element_at(
+        F.lit(cents).cast("array<array<bigint>>"), F.col("cid") + 1
+    )
+    return assign_centroids(base.select("vec_id", "qe", "qnorm2"), cents).select(
+        "vec_id", "cid", F.zip_with("qe", own, lambda x, y: x - y).alias("qe")
     )
 
 
@@ -1373,10 +1418,9 @@ def ivfpq_index_save(
     tests/test_persistence_ops.py::test_ivfpq_index_roundtrip_serves_
     identical_probe)."""
     spark = embeddings.sparkSession
-    # r16: one corpus scan for the whole build — the coarse trainer's
+    # one corpus scan for the whole build — the coarse trainer's
     # checkpointed quantized frame feeds residualization, and the PQ
     # fit's checkpointed residual frame feeds the encode-write below
-    # (the old shape re-derived with_quantized and the residual lineage)
     qbase, cents = kmeans_fit(embeddings, k=k, iters=iters)
     _centroid_frame(spark, cents).coalesce(1).write.mode("overwrite").parquet(
         f"{path}/centroids"
@@ -1499,28 +1543,26 @@ def semdedup_prune(
     the candidate relation is a same-cell blocked tile join — vectors
     group into (cid, block) dense row blocks (one narrow shuffle), block
     pairs join ON the cid equi-key, and each tile's full dominance scan
-    runs as ONE Arrow-batched numpy matmul inside mapInPandas (r16; the
-    embedding_near_dup blocked-GEMM formulation — the prior per-pair
-    ``aggregate(zip_with(...))`` expression allocated an intermediate
-    array per candidate pair, O(Σ|cell|²) interpreted work). Total work
+    runs as ONE Arrow-batched numpy matmul inside mapInPandas (the
+    embedding_near_dup blocked-GEMM formulation; a per-pair
+    ``aggregate(zip_with(...))`` expression would allocate an
+    intermediate array per candidate pair, O(Σ|cell|²) interpreted
+    work). Total work
     is still sum(|cell|^2), SemDeDup's published cost, bounded by the
     quantizer's cell sizes (cap cells by raising k); each tile is an
     independent bounded task at any corpus size.
 
-    Exactness is unchanged (the kernel docstring has the bit-for-bit
-    argument); zero-norm members are excluded from the blocks — they
-    have no cosine to anything, so they are never dup candidates and
-    never dominate (the old join's qnorm2 > 0 guard, moved before the
-    block build).
+    The kernel docstring has the bit-for-bit exactness argument.
+    Zero-norm members are excluded from the blocks: they have no cosine
+    to anything, so they are never dup candidates and never dominate.
 
     Output: (vec_id, cid, d2c, dropped) — one row per input vector,
     ``dropped = true`` for the semantic near-duplicates a curation pass
     would remove.
     """
-    # r16: reuse the trainer's checkpointed quantized frame for the
-    # final assignment (the old form re-derived with_quantized from a
-    # fresh corpus scan), and lazily checkpoint the assigned frame —
-    # its consumers below (the block build + the final join-back) are
+    # reuse the trainer's checkpointed quantized frame for the final
+    # assignment, and lazily checkpoint the assigned frame — its
+    # consumers below (the block build + the final join-back) are
     # NON-identical plans, so ReusedExchange cannot deduplicate them
     base, cents = kmeans_fit(embeddings, k=k, iters=iters, dim=dim)
     assigned = (

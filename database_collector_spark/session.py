@@ -13,7 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` (sizes local[N] and the shuffle partitions),
+    else the CPUs this process may run on: its affinity mask, which
+    containers and taskset narrow, or the machine's count where the
+    platform has no affinity call."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+DEFAULT_SHUFFLE_PARTITIONS = cpus()
 
 # The directory holding this package. Python workers start in the driver's
 # working directory, so without it on their path a mapInPandas kernel that
@@ -41,9 +55,8 @@ def get_spark(
     vs stage time on the real corpus first). Pass them via
     ``extra_conf`` in a cluster deployment.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus()}]")
         .appName(app_name)
         .config(
             "spark.sql.shuffle.partitions",

@@ -616,7 +616,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     # kmeans_fit returns the trainer's checkpointed quantized frame —
     # the final assignment reuses it instead of re-deriving
-    # with_quantized from a second corpus scan (r16)
+    # with_quantized from a second corpus scan
     base, cents = similarity.kmeans_fit(emb, k=8, iters=3)
     assigned = similarity.assign_centroids(base, cents)
     checksum = F.element_at(
@@ -699,7 +699,7 @@ def q_ann_ivf_kmeans_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets). One probe touches one cell partition at any corpus size.
     """
     emb = _t(spark, sf_dir, "embeddings")
-    # reuse the trainer's checkpointed quantized frame (r16; see
+    # reuse the trainer's checkpointed quantized frame (see
     # q_ann_ivf_kmeans) — the probe's two branches (queries + cells)
     # then both read the one materialization
     qbase, cents = similarity.kmeans_fit(emb, k=8, iters=3)
@@ -746,7 +746,7 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") % 10 != 0)
     newb = emb.filter(F.col("vec_id") % 10 == 0)
     # reuse the trainer's checkpointed quantized corpus frame for the
-    # old-side re-assignment (r16; see q_ann_ivf_kmeans)
+    # old-side re-assignment (see q_ann_ivf_kmeans)
     cbase, cents = similarity.kmeans_fit(corpus, k=8, iters=3)
     a_old = similarity.assign_centroids(cbase, cents).withColumn(
         "is_new", F.lit(0)
@@ -855,15 +855,11 @@ SUB = DIM // PQ_M
 
 
 def _fit(spark: SparkSession, sf_dir: str):
-    # r16 bench-integrity: the former _BOOKS_CACHE (train once per
-    # corpus, reuse across the codes/ADC gates AND across the bench's
-    # min-of-2 runs) was a module-level memo keyed on the testdata path
-    # — the exact cross-query result-reuse shape the optimization-round
-    # rules ban (the r15 classifier memo class). Every gate invocation
-    # now trains from the parquet inputs; the honest cost is kept low
-    # by the lockstep trainer (1 seed + iters driver jobs instead of
-    # m·(1 + iters)) and by reusing its checkpointed quantized frame
-    # for the encode/query steps.
+    # every gate invocation trains from the parquet inputs: books are
+    # never memoized across queries (a cross-query result cache would
+    # time the cache, not the trainer). The fixture corpus trains in one
+    # task, and the encode/query steps reuse the trainer's checkpointed
+    # quantized frame.
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.pq_fit_quantized(
         similarity.with_quantized(emb).select("vec_id", "qe"),
@@ -911,7 +907,7 @@ def _sql_pq_ctes(
     (vec_id, qe) CTE the subspaces slice (the IVF-PQ gate points it at
     the residual table); ``standalone=False`` emits only the CTE body so
     a caller can append it to an existing WITH chain."""
-    # slice width derives from THIS call's m (as pq_train_quantized's
+    # slice width derives from THIS call's m (as pq_fit_quantized's
     # dim // m does) — using the module constant would silently train on
     # a prefix of the vector for any m != PQ_M
     sub = DIM // m
@@ -1015,8 +1011,8 @@ WHERE rank <= 3
 
 
 def _sq8_stats(spark: SparkSession, sf_dir: str) -> list[tuple[int, int]]:
-    # r16 bench-integrity: cache removed (see _books) — the per-dim
-    # min/max grid is one bounded aggregate, recomputed per invocation
+    # the per-dim min/max grid is one bounded aggregate, recomputed per
+    # invocation (never memoized across queries; see _fit)
     return similarity.sq8_stats(_t(spark, sf_dir, "embeddings"))
 
 
@@ -1256,14 +1252,11 @@ _BUILT_ARTIFACTS: set[str] = set()
 
 def _ivfpq_artifacts(spark: SparkSession, sf_dir: str):
     """Train the (coarse centroids, residual frame, residual PQ books)
-    triple. r16 bench-integrity: the former _IVFPQ_CACHE (train once
-    per corpus, reuse across gate invocations and the bench's min-of-2
-    runs) was a module-level memo keyed on the testdata path — the
-    banned cross-query result-reuse shape (the r15 classifier-memo
-    class). Every invocation now trains from the parquet inputs, with
-    ONE corpus scan: the coarse trainer's checkpointed quantized frame
-    feeds residualization, and the residual-PQ trainer's checkpointed
-    residual frame feeds encode + queries."""
+    triple. Every invocation trains from the parquet inputs (nothing is
+    memoized across queries, see _fit), with ONE corpus scan: the coarse
+    trainer's checkpointed quantized frame feeds residualization, and
+    the residual-PQ trainer's checkpointed residual frame feeds encode +
+    queries."""
     emb = _t(spark, sf_dir, "embeddings")
     qbase, cents = similarity.kmeans_fit(emb, k=8, iters=3)
     resid, books = similarity.pq_fit_quantized(
@@ -1277,9 +1270,9 @@ def q_ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes over the per-cell RESIDUALS (Jegou et al.'s IVFADC, the shape
     FAISS serves at scale): train the k=8 coarse quantizer
     (similarity.kmeans_centroids), subtract each vector's centroid
-    (exact BIGINT residuals via one broadcast join + zip_with), train
+    (exact BIGINT residuals via one zip_with), train
     m=4 subspace codebooks on the residuals
-    (similarity.pq_train_quantized), encode
+    (similarity.pq_fit_quantized), encode
     (similarity.pq_encode_quantized), then ADC-search queries
     (vec_id < 10) against ONLY their own coarse cell's codes
     (similarity.pq_adc_topk with cell_col='cid' — a broadcast equi-join,
