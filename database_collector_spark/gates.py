@@ -35,15 +35,11 @@ MODULES = tuple(
 
 STAGED = frozenset({
     "vocab_overlap",
-    "embedding_drift",
-    "zipf_head_fit",
-    "bigram_cond_entropy",
     "table_profile",
     "fk_orphan_report",
     "key_uniqueness",
     "rank_quartiles",
     "range_splitters",
-    "token_mass_median",
     "group_mad",
     "winsorized_mean",
     "iqr_outlier_report",

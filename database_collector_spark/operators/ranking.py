@@ -1353,7 +1353,6 @@ def rank_select_by_group(
     group_col: str,
     val_col: str,
     rank_exprs: dict[str, str],
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Exact value at a FIXED set of target ranks per group — the
     two-scan cell-refinement design: when a caller needs a handful of
@@ -1393,17 +1392,6 @@ def rank_select_by_group(
     for that column. Ties are whole: the selected value is the exact
     input value whose [below, below+cnt) rank span covers k (type-1).
 
-    ``weight_col`` switches to WEIGHTED rank selection: every count in
-    both scans becomes a weight sum, ``n`` is the group's total weight,
-    and a target rank k selects the smallest value whose cumulative
-    weight reaches k (the weighted-median family: k = (n + 1) div 2).
-    Weights must be NON-NEGATIVE INTEGERS — enforced in-plan with the
-    shared ``_int_domain_guard`` (a negative weight would silently
-    break the monotone cumulative; a fractional one would truncate) —
-    and NULL-weight rows are excluded like NULL values. Zero-weight
-    rows are valid and never selected (their rank span is empty),
-    exactly as if absent.
-
     Output: one row per group — (group_col, n, *rank_exprs-keys), the
     selected values in the input value type.
     """
@@ -1411,8 +1399,7 @@ def rank_select_by_group(
         raise ValueError("rank_select_by_group: no target ranks given")
     # every name comparison is CASEFOLDED: Spark resolves column names
     # case-insensitively by default, so 'N' vs 'n' is the same
-    # AMBIGUOUS_REFERENCE the guards exist to prevent (second review
-    # pass; the key_uniqueness probe precedent)
+    # AMBIGUOUS_REFERENCE the guards exist to prevent
     reserved = {"g", "v", "n", "_w", "_cell", "_cnt", "_below", "_k", "_name"}
     lowered_names = {name.lower() for name in rank_exprs}
     clash = reserved & lowered_names
@@ -1429,7 +1416,7 @@ def rank_select_by_group(
     # output columns are (group_col, n, *rank names) — a group column
     # named 'n' or shadowed by a rank name would emit duplicate names
     # and every downstream reference throws AMBIGUOUS_REFERENCE
-    # (review: prefix_count_below validates this class; so must this)
+    # (prefix_count_below validates the same class)
     if group_col.lower() == "n" or group_col.lower() in lowered_names:
         raise ValueError(
             f"rank_select_by_group: group_col {group_col!r} collides with an "
@@ -1453,48 +1440,17 @@ def rank_select_by_group(
             f"rank_select_by_group: val_col {val_col!r} has non-numeric type "
             f"{vtype}; the log-cell grid is defined for numeric values only"
         )
-    if weight_col is not None and weight_col.lower() not in dtypes:
-        raise ValueError(
-            f"rank_select_by_group: weight_col {weight_col!r} is not a "
-            f"column of the input (columns: {df.columns})"
-        )
-    raw_w = (
-        F.lit(1).cast("long") if weight_col is None else F.col(weight_col)
-    )
-    # the NULL exclusions apply BEFORE the projection (sixth review
-    # pass, live-reproduced: a .where() AFTER .select() resolves
-    # original column names against the Project's OWN aliases, so an
-    # input column literally named 'g' or 'v' shadowed the filter and
-    # NULL rows leaked into the ranks) and BEFORE the weight guard (a
-    # contractually-excluded row must never trip the raise; predicate
-    # order inside one select gives no short-circuit guarantee)
-    filtered = df.where(
+    # the NULL exclusions apply BEFORE the projection: a .where() AFTER
+    # .select() resolves original column names against the Project's
+    # OWN aliases, so an input column literally named 'g' or 'v' would
+    # shadow the filter and NULL rows would leak into the ranks
+    base = df.where(
         F.col(group_col).isNotNull() & F.col(val_col).isNotNull()
-    )
-    if weight_col is not None:
-        filtered = filtered.where(F.col(weight_col).isNotNull())
-    base = filtered.select(
+    ).select(
         F.col(group_col).alias("g"),
         F.col(val_col).alias("v"),
-        raw_w.alias("_wraw"),
+        F.lit(1).cast("long").alias("_w"),
     )
-    if weight_col is None:
-        base = base.select("g", "v", F.col("_wraw").alias("_w"))
-    else:
-        base = base.select(
-            "g",
-            "v",
-            _int_domain_guard(
-                "_wraw",
-                lo=0,
-                hi=None,
-                msg=(
-                    "rank_select_by_group: weights must be non-negative "
-                    "integers — a negative weight breaks the monotone "
-                    "cumulative silently, a fractional one would truncate"
-                ),
-            ).alias("_w"),
-        )
     vd = F.col("v").cast("double")
     u = F.signum(vd) * F.log1p(F.abs(vd))
     inf = float("inf")

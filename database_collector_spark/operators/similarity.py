@@ -1666,129 +1666,3 @@ def hard_negatives(
         .filter(F.col("rank") <= k)
         .select("q_id", "c_id", F.round("cos_raw", 6).alias("cos"), "rank")
     )
-
-
-def embedding_drift(
-    frame_a: DataFrame,
-    frame_b: DataFrame,
-    *,
-    emb_col: str = "embedding",
-    group_col: str | None = None,
-) -> DataFrame:
-    """Centroid drift between two embedding snapshots — did this
-    source's/language's embedding distribution MOVE between crawls?
-    The monitoring number a re-ingest review reads before rebuilding
-    an ANN index or re-running SemDeDup: a centroid that moved says
-    the content shifted; a centroid that stayed says the new crawl is
-    more-of-the-same.
-
-    Reports, per group: ``centroid_l2`` — the L2 distance between the
-    two mean vectors (in original embedding units) — and
-    ``centroid_cos`` — the cosine between them (NULL when either
-    centroid is the zero vector).
-
-    EXACT core over the engine's standard 2^20 quantization
-    (``quantize``): with per-dimension sums s1_d, s2_d and vector
-    counts n1, n2,
-
-        centroid diff per dim = (s1_d·n2 − s2_d·n1) / (n1·n2)
-
-    so Σ_d (s1_d·n2 − s2_d·n1)² accumulates in DECIMAL(38,0) with no
-    float until ONE sqrt and ONE division at the end (both
-    IEEE-correctly-rounded over identical exact operands — engine- and
-    partitioning-deterministic); the cosine's three inner products are
-    the same exact sums. Round 6. Operand bound, documented not
-    silently wrapped: the squared diff needs |s_d|·n ≲ 1e19 per side —
-    with unit-scale embeddings that is ~3e9 vectors per side per
-    group; beyond it the DECIMAL(38,0) product fails CLEANLY under
-    ANSI (the fleiss_kappa bound stance). Snapshot-drift audits
-    compare bounded samples or per-group slices in practice.
-
-    Both frames must carry the SAME dimensionality — ENFORCED in-plan
-    (raise_error when the two sides' dimension counts differ: a silent
-    inner join on dim would drop the excess dimensions and understate
-    the drift). NULL embeddings / NULL group rows are excluded.
-
-    Scale (100 TB): per side, one posexplode keyed (group, dim)
-    aggregate — the corpus×dims shuffle any per-dimension statistic
-    pays (embedding_covariance's shape) — plus a per-group vector
-    count; everything downstream folds the bounded
-    |groups| × dims table. No window, no pair join, no driver collect.
-
-    Output: (group?, n_a, n_b, dims, centroid_l2, centroid_cos).
-    """
-    gkeys = [group_col] if group_col else []
-
-    def _side(df: DataFrame, tag: str):
-        cond = F.col(emb_col).isNotNull()
-        if group_col:
-            cond = cond & F.col(group_col).isNotNull()
-        q = df.where(cond).select(*gkeys, quantize(emb_col).alias("_q"))
-        dims = q.select(
-            *gkeys, F.posexplode("_q").alias("_d", "_x")
-        )
-        sums = dims.groupBy(*gkeys, "_d").agg(
-            F.sum("_x").cast("decimal(38,0)").alias(f"_s{tag}")
-        )
-        counts = q.groupBy(*gkeys).agg(
-            F.count("*").cast("long").alias(f"n_{tag}"),
-            F.max(F.size("_q")).cast("long").alias(f"_dims{tag}"),
-        )
-        return sums, counts
-
-    sa, ca = _side(frame_a, "a")
-    sb, cb = _side(frame_b, "b")
-    dims = (
-        sa.join(sb, [*gkeys, "_d"], "full_outer")
-        .select(
-            *gkeys,
-            "_d",
-            F.coalesce(F.col("_sa"), F.lit(0)).alias("_sa"),
-            F.coalesce(F.col("_sb"), F.lit(0)).alias("_sb"),
-        )
-    )
-    counts = ca.join(cb, gkeys) if gkeys else ca.crossJoin(F.broadcast(cb))
-    d = lambda c: c.cast("decimal(38,0)")  # noqa: E731 — local shorthand
-    per_dim = (
-        dims.join(F.broadcast(counts), gkeys)
-        if gkeys
-        else dims.crossJoin(F.broadcast(counts))
-    )
-    diff = F.col("_sa") * d(F.col("n_b")) - F.col("_sb") * d(F.col("n_a"))
-    folded = per_dim.groupBy(*gkeys).agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-        F.max("_dimsa").alias("_da"),
-        F.max("_dimsb").alias("_db"),
-        F.sum(diff * diff).alias("_l2num"),
-        F.sum(F.col("_sa") * F.col("_sb")).alias("_dot"),
-        F.sum(F.col("_sa") * F.col("_sa")).alias("_na2"),
-        F.sum(F.col("_sb") * F.col("_sb")).alias("_nb2"),
-    )
-    checked_dims = F.when(
-        F.col("_da") != F.col("_db"),
-        F.raise_error(
-            F.lit(
-                "embedding_drift: the two snapshots carry different "
-                "embedding dimensionalities — a silent dim join would "
-                "understate the drift; re-embed one side first"
-            )
-        ),
-    ).otherwise(F.col("_da"))
-    scale = float(QUANT_SCALE)
-    l2 = F.sqrt(F.col("_l2num").cast("double")) / (
-        F.col("n_a").cast("double") * F.col("n_b") * F.lit(scale)
-    )
-    cos = F.when(
-        (F.col("_na2") > 0) & (F.col("_nb2") > 0),
-        F.col("_dot").cast("double")
-        / (F.sqrt(F.col("_na2").cast("double")) * F.sqrt(F.col("_nb2").cast("double"))),
-    )
-    return folded.select(
-        *gkeys,
-        "n_a",
-        "n_b",
-        checked_dims.alias("dims"),
-        F.round(l2, 6).alias("centroid_l2"),
-        F.round(cos, 6).alias("centroid_cos"),
-    )

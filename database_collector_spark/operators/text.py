@@ -376,7 +376,7 @@ def chunk_documents(
     expansion, so it composes with downstream dedup/packing at scan
     speed; chunk_id is (doc_id, chunk_idx), deterministic for re-runs.
     """
-    # bind the filtered token array ONCE per row (review finding class):
+    # bind the filtered token array ONCE per row:
     # a lambda referencing the filter(split(...)) expression re-tokenizes
     # the document per chunk; against the bound column each slice is an
     # O(chunk) copy
@@ -440,9 +440,9 @@ def pmi_collocations(
     # bind the token array ONCE per row before the lambda: referencing
     # the split(...) expression inside it would re-split the document
     # per bigram element — O(tokens²) per doc in the corpus-scan hot
-    # path (same review finding as bigram_cond_entropy); against a
-    # bound column w[i+1] is an O(1) array access, and CollapseProject
-    # keeps the non-cheap multi-referenced alias in its own project
+    # path; against a bound column w[i+1] is an O(1) array access, and
+    # CollapseProject keeps the non-cheap multi-referenced alias in its
+    # own project
     w = tokens_col(text_col)
     wref = F.col("_w")
     bigrams = (
@@ -498,9 +498,8 @@ def _feature_col(tok_col: str, bigrams: bool) -> F.Column:
     ALREADY-BOUND token-array column (callers select
     ``nonempty_tokens_col`` under a name first): referencing the
     filter(split(...)) expression inside the transform lambda would
-    re-tokenize the document per bigram element — O(tokens²) per doc
-    (review finding, same class as bigram_cond_entropy) — while against
-    a bound column every ``element_at`` is O(1)."""
+    re-tokenize the document per bigram element — O(tokens²) per doc —
+    while against a bound column every ``element_at`` is O(1)."""
     if not bigrams:
         return F.col(tok_col)
     # bigram i joins token i with token i+1; element_at is 1-based and the
@@ -788,8 +787,8 @@ def dsir_logratio_weights(
 
     ``target_filter`` is a ``Column`` predicate (default:
     ``F.col("lang") == "en"``). A raw SQL expression string is only
-    accepted with ``allow_sql_string=True`` (r11 ADVICE — the string
-    path is otherwise too easy to reach by accident): the string form
+    accepted with ``allow_sql_string=True`` (the string path is
+    otherwise too easy to reach by accident): the string form
     is TRUSTED INPUT, parsed verbatim by ``F.expr``, so it executes
     whatever expression the caller supplies — the same contract as
     ``DataFrame.filter(str)`` itself. Never interpolate
@@ -1075,194 +1074,4 @@ def vocab_overlap_matrix(
             / F.least(F.col("vocab_a"), F.col("vocab_b")),
             6,
         ).alias("containment"),
-    )
-
-
-def zipf_head_fit(
-    docs: DataFrame,
-    *,
-    k: int = 100,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """Zipf's-law head fit per group: OLS of log10(count) on log10(rank)
-    over each group's top-``k`` vocabulary terms — the standard corpus
-    health read (natural language sits near slope −1; a much flatter
-    head says boilerplate/templating, a much steeper one says a
-    degenerate vocabulary), fit on the HEAD because that is where the
-    law holds and where a bounded, deterministic sample exists at any
-    corpus size.
-
-    Reports per group: ``n_terms`` (<= k — a tiny group fits what it
-    has), ``slope``, ``intercept`` (log10 count at rank 1 under the
-    fit), and ``r2``; slope/r2 are NULL when fewer than 2 head terms
-    exist, r2 additionally NULL when every head count is identical
-    (zero y-variance — the fit line is horizontal and r2 is 0/0).
-
-    Numeric discipline: ranks and counts are exact integers; the fit's
-    x/y are log10 over those integers (the accepted SUM(log(integer))
-    class of unigram_logppl — both engines' log10 are correctly-rounded
-    doubles) summed over at most ``k`` terms per group, then ONE
-    division per coefficient, rounded to 6. Both NULL-ness guards run
-    on EXACT operands, never on the float sums (review finding — the
-    cancelled float ``n·syy − sy²`` can flip sign with summation order
-    when head counts are nearly log-equal, and a NULL-vs-number flip
-    is a cross-engine red no rounding can absorb): slope/intercept
-    guard on ``n_terms >= 2`` (ranks 1..n are distinct, so the true
-    x-variance is positive exactly when n >= 2) and r2 additionally on
-    the exact integer ``min(count) < max(count)``. The r2 VALUE is
-    additionally clamped to its mathematical range [0, 1] on both
-    engines, so summation-order noise in the cancelled denominator can
-    produce neither Inf/NaN nor a negative (r13 ADVICE); the residual
-    float class shrinks to round-6 INTERIOR noise on a
-    nearly-log-equal head — real corpus heads span decades of counts.
-
-    Plan shape at 100 TB: the vocabulary aggregate is the one
-    token-stream-sized shuffle any vocab statistic pays; the per-group
-    top-k ranking window gets Spark's rank-limit pushdown
-    (WindowGroupLimit: every task keeps k rows before the per-group
-    sort reaches the exchange), so the vocabulary never sorts
-    whole-group partitions; the OLS fold runs over <= k rows per
-    group. Ties rank deterministically ((count DESC, token ASC) — both
-    engines compare strings bytewise on this corpus's ASCII tokens).
-    """
-    if not (isinstance(k, int) and k >= 1):
-        raise ValueError(f"zipf_head_fit: k must be a positive int, got {k!r}")
-    from pyspark.sql.window import Window
-
-    vocab = (
-        docs.where(F.col(text_col).isNotNull() & F.col(group_col).isNotNull())
-        .select(F.col(group_col).alias("g"), F.explode(nonempty_tokens_col(text_col)).alias("t"))
-        .groupBy("g", "t")
-        .agg(F.count("*").alias("c"))
-    )
-    w = Window.partitionBy("g").orderBy(F.col("c").desc(), F.col("t").asc())
-    head = (
-        vocab.withColumn("r", F.row_number().over(w))
-        .where(F.col("r") <= k)
-        .select("g", F.col("c"),
-                F.log10(F.col("r").cast("double")).alias("x"),
-                F.log10(F.col("c").cast("double")).alias("y"))
-    )
-    agg = head.groupBy("g").agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.min("c").cast("long").alias("c_min"),
-        F.max("c").cast("long").alias("c_max"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-    )
-    n = F.col("n_terms").cast("double")
-    dx = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    dy = n * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    # EXACT guards (see docstring): fittable iff n >= 2; y-variance
-    # nonzero iff the exact integer counts are not all equal
-    fittable = F.col("n_terms") >= 2
-    varies = F.col("c_min") < F.col("c_max")
-    slope = F.when(fittable, cov / dx)
-    intercept = F.when(fittable, (F.col("sy") - (cov / dx) * F.col("sx")) / n)
-    # the r2 VALUE is clamped to its mathematical range [0, 1] (r13
-    # ADVICE): with a genuinely-varying but nearly-log-equal head the
-    # cancelled float dy can round to 0 or flip sign with summation
-    # order. try_divide is load-bearing under ANSI (r14 review): a
-    # plain Divide THROWS DIVIDE_BY_ZERO when dx·dy rounds to exactly
-    # 0.0 — try_divide yields NULL there, DuckDB's division yields NULL
-    # natively, and BOTH engines' greatest() skips NULLs (probed), so a
-    # zero denominator lands on 0.0 symmetrically; negatives clamp to
-    # 0.0 and overflow-Inf to 1.0, leaving only the documented residual
-    # of summation-order sign noise near the boundary
-    r2 = F.when(
-        fittable & varies,
-        F.least(
-            F.greatest(F.try_divide(cov * cov, dx * dy), F.lit(0.0)),
-            F.lit(1.0),
-        ),
-    )
-    return agg.select(
-        F.col("g").alias(group_col),
-        "n_terms",
-        F.round(slope, 6).alias("slope"),
-        F.round(intercept, 6).alias("intercept"),
-        F.round(r2, 6).alias("r2"),
-    )
-
-
-def bigram_cond_entropy(
-    docs: DataFrame,
-    *,
-    group_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
-    """Conditional next-token entropy H(next | prev) per group over
-    adjacent word bigrams, in nats — the model-free predictability read
-    of a corpus slice (low entropy = templated/repetitive text a
-    quality gate should look at; natural prose sits well above
-    boilerplate). Exactly H = [Σ_p c_p·ln(c_p) − Σ_{p,n} c_pn·ln(c_pn)]
-    / N over the bigram counts c_pn, their prev-marginals c_p = Σ_n
-    c_pn, and the stream total N: every ln is over an exact integer
-    count (the accepted SUM(c·ln(c)) class of unigram_logppl /
-    char_entropy), rounded to 4.
-
-    Adjacency is over the FILTERED token list (``nonempty_tokens_col``
-    — the repo's one word definition), so runs of extra whitespace do
-    not break pairs.
-
-    Plan shape at 100 TB: bigram construction is a zero-shuffle in-row
-    array transform; ONE bigram-keyed aggregate is the token-stream
-    shuffle any bigram statistic pays; the prev-marginal re-aggregate
-    and both entropy folds ride the COMPRESSED (group, prev, next)
-    count table (vocabulary²-bounded, far smaller than the corpus). No
-    window, no join, no Python.
-
-    Output: (group, n_prev, n_pairs, total_bigrams, cond_entropy).
-    """
-    # bind the filtered token array ONCE per row: referencing the
-    # nonempty_tokens_col expression inside the transform lambda would
-    # re-evaluate the whole filter(split(...)) per bigram element —
-    # O(tokens²) per document (review finding); against a bound column
-    # w[i+1] is an O(1) array access
-    wref = F.col("_w")
-    pairs = (
-        docs.where(F.col(text_col).isNotNull() & F.col(group_col).isNotNull())
-        .select(
-            F.col(group_col).alias("g"),
-            nonempty_tokens_col(text_col).alias("_w"),
-        )
-        .select(
-            "g",
-            F.explode(
-                F.transform(
-                    # greatest(...,0): a fully-filtered token list is EMPTY
-                    # (unlike raw split, which never is) and slice() raises
-                    # on a negative length
-                    F.slice(wref, 1, F.greatest(F.size(wref) - 1, F.lit(0))),
-                    lambda x, i: F.struct(x.alias("p"), wref[i + 1].alias("n")),
-                )
-            ).alias("bg"),
-        )
-        .select("g", "bg.p", "bg.n")
-    )
-    c2 = pairs.groupBy("g", "p", "n").agg(F.count("*").cast("long").alias("c"))
-    ln_fold = lambda c: F.sum(F.col(c).cast("double") * F.log(F.col(c).cast("double")))  # noqa: E731
-    a2 = c2.groupBy("g").agg(
-        F.count("*").cast("long").alias("n_pairs"),
-        F.sum("c").cast("long").alias("total_bigrams"),
-        ln_fold("c").alias("_t2"),
-    )
-    c1 = c2.groupBy("g", "p").agg(F.sum("c").cast("long").alias("cp"))
-    a1 = c1.groupBy("g").agg(
-        F.count("*").cast("long").alias("n_prev"),
-        ln_fold("cp").alias("_t1"),
-    )
-    return a2.join(a1, "g").select(
-        F.col("g").alias(group_col),
-        "n_prev",
-        "n_pairs",
-        "total_bigrams",
-        F.round(
-            (F.col("_t1") - F.col("_t2")) / F.col("total_bigrams").cast("double"), 4
-        ).alias("cond_entropy"),
     )

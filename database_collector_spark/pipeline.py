@@ -2,7 +2,7 @@
 
 Reference flow (collector/cmd/collector/database-collector.go:239-287):
 cron tick -> list secrets -> per-target goroutine -> scrape -> convert ->
-remote-write. Spark flow: registry DataFrame -> discover() -> per-target
+remote-write. Spark flow: registry DataFrame -> enabled_page() -> per-target
 scrape (JDBC pushdown, or pre-scraped fixture frames in tests) -> declarative
 metric-config melt -> enrich() -> union -> sink. The driver loop below is
 the cron stand-in (CRON_SCHEDULE / @every 5m semantics,
@@ -27,7 +27,7 @@ from database_collector_spark.operators.enrich import enrich
 from database_collector_spark.plans.metric_config import load_specs, melt_to_samples
 from database_collector_spark.sources.registry import (
     MAX_TARGETS,
-    discover,
+    enabled_page,
     overflow_count,
 )
 
@@ -96,12 +96,14 @@ def run_once(
     reader connects eagerly at load() to resolve the schema — the same
     point the reference's sql.Open/Ping fails.
     """
-    targets = [r.asDict() for r in discover(registry).collect()]
-    # the driver-side target list is bounded by discover()'s page cap
-    # (reference parity, MaxResults=100) — but a larger registry must not
-    # TRUNCATE silently: when the capped listing comes back full, count
-    # the uncapped eligibles and warn about the dropped remainder
-    if len(targets) >= MAX_TARGETS:
+    page = [r.asDict() for r in enabled_page(registry).collect()]
+    # the collected target list is bounded by the page cap (reference
+    # parity, MaxResults=100) — but a larger registry must not TRUNCATE
+    # silently: when the capped page comes back full, count the uncapped
+    # eligibles and warn about the dropped remainder. The page is
+    # measured before unknown engines leave it, or one reject inside a
+    # full page would hide the cut
+    if len(page) >= MAX_TARGETS:
         dropped = overflow_count(registry)
         if dropped:
             warnings.warn(
@@ -113,6 +115,7 @@ def run_once(
                 RuntimeWarning,
                 stacklevel=2,
             )
+    targets = [t for t in page if t["route"] is not None]
     results: list[CollectResult] = []
     union_df: DataFrame | None = None
     for t in targets:

@@ -32,13 +32,14 @@ ENGINE_ALIASES = {
 }
 
 
-def discover(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> DataFrame:
-    """Tag-filter + page cap + engine normalization.
+def enabled_page(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> DataFrame:
+    """Tag-filter + page cap + engine normalization: the first
+    ``max_targets`` enabled targets by secret_name, each with a
+    normalized ``route`` column that is NULL for an unknown engine.
 
-    Returns the routable targets with a normalized ``route`` column;
-    unknown engines are filtered out (the caller can anti-join to get the
-    rejects for warning logs, mirroring the reference's warn-skip).
-    """
+    This is the listing the cap applies to, so whether it came back full
+    is what tells a truncated registry apart — unknown engines inside
+    the page still occupy their slots."""
     alias_map = F.create_map(
         *[F.lit(x) for kv in ENGINE_ALIASES.items() for x in kv]
     )
@@ -47,7 +48,16 @@ def discover(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> DataFram
         .orderBy("secret_name")
         .limit(max_targets)
         .withColumn("route", alias_map[F.col("engine")])
-        .filter(F.col("route").isNotNull())
+    )
+
+
+def discover(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> DataFrame:
+    """The routable targets of :func:`enabled_page`; unknown engines are
+    filtered out (the caller can anti-join to get the rejects for warning
+    logs, mirroring the reference's warn-skip).
+    """
+    return enabled_page(registry, max_targets=max_targets).filter(
+        F.col("route").isNotNull()
     )
 
 
@@ -57,9 +67,9 @@ def overflow_count(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> in
     The reference's MaxResults-100 listing silently truncates a larger
     registry (secrets-manager.go:33 never paginates); ``discover``
     reproduces the cap but the pipeline WARNS on truncation instead of
-    silently dropping targets — call this only when the capped listing
-    came back full, so the extra count() action is paid exactly when
-    truncation is possible."""
+    silently dropping targets — call this only when the capped page
+    (:func:`enabled_page`) came back full, so the extra count() action
+    is paid exactly when truncation is possible."""
     n = registry.filter(F.col("tags").getItem(ENABLED_TAG).isNotNull()).count()
     return max(0, n - max_targets)
 

@@ -2512,60 +2512,6 @@ FROM ranked GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-# ------------------------------------------------------- token_mass_median
-
-
-def q_token_mass_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-MASS median document length per source: the n_tok value v*
-    such that half the source's TOKENS live in documents of <= v*
-    tokens (value = n_tok, weight = n_tok, k = (W + 1) div 2 over total
-    token mass W) — the number a packing/curriculum plan reads next to
-    the row median, which a few long documents cannot dominate the same
-    way. Weighted mode of rank_select_by_group: weight sums replace
-    counts in both scans, weights in-plan-guarded non-negative
-    integers. Zero-token docs carry zero mass and can never be
-    selected (and the row median of such a corpus would happily be 0)."""
-    return rank_select_by_group(
-        _doc_tokens(spark, sf_dir),
-        "source",
-        "n_tok",
-        {"wmed_tokens": "(n + 1) div 2"},
-        weight_col="n_tok",
-    ).select(
-        "source", F.col("n").alias("total_tokens"), "wmed_tokens"
-    ).orderBy("source")
-
-
-SQL_TOKEN_MASS_MEDIAN = """
-WITH counted AS (
-  SELECT source,
-         len(list_filter(string_split(text, ' '), t -> t <> ''))::BIGINT AS v
-  FROM documents WHERE text IS NOT NULL AND source IS NOT NULL
-),
-perv AS (
-  -- weight sum per distinct value: w = v * count(v); SUM promotes to
-  -- HUGEINT in DuckDB -> pin BIGINT (Arrow-portability class)
-  SELECT source, v, CAST(SUM(v) AS BIGINT) AS w
-  FROM counted GROUP BY source, v
-),
-ranked AS (
-  SELECT source, v, w,
-         CAST(SUM(w) OVER (PARTITION BY source ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cw,
-         CAST(SUM(w) OVER (PARTITION BY source) AS BIGINT) AS tw
-  FROM perv
-)
-SELECT source, CAST(MAX(tw) AS BIGINT) AS total_tokens,
-       -- tw > 0 mirrors the operator's rank domain [1, n]: a source of
-       -- only zero-token docs has k = 0, out of range, NULL on BOTH
-       -- engines (review: the bare cw >= 0 form picked the zero-weight
-       -- v = 0 row and diverged from Spark's NULL)
-       MIN(CASE WHEN tw > 0 AND cw >= (tw + 1) // 2 THEN v END)
-         AS wmed_tokens
-FROM ranked GROUP BY source ORDER BY source
-"""
-
-
 # -------------------------------------------------------------- group_mad
 
 
@@ -2808,7 +2754,6 @@ QUERIES = {
     "key_uniqueness": q_key_uniqueness,
     "rank_quartiles": q_rank_quartiles,
     "range_splitters": q_range_splitters,
-    "token_mass_median": q_token_mass_median,
     "group_mad": q_group_mad,
     "winsorized_mean": q_winsorized_mean,
     "iqr_outlier_report": q_iqr_outlier_report,
@@ -2851,7 +2796,6 @@ ORACLES = {
     "key_uniqueness": SQL_KEY_UNIQUENESS,
     "rank_quartiles": SQL_RANK_QUARTILES,
     "range_splitters": SQL_RANGE_SPLITTERS,
-    "token_mass_median": SQL_TOKEN_MASS_MEDIAN,
     "group_mad": SQL_GROUP_MAD,
     "winsorized_mean": SQL_WINSORIZED_MEAN,
     "iqr_outlier_report": SQL_IQR_OUTLIER_REPORT,

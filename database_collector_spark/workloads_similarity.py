@@ -3,9 +3,8 @@
 Embedding statistics and normalization, exact and LSH similarity
 search, IVF (1-probe, multi-probe, trained, incremental), product
 quantization with ADC, scalar quantization, IVF-PQ, embedding dedup
-and semantic pruning, hard negatives and drift, and the image / audio
-/ frame decoders (``operators/similarity.py``,
-``operators/multimodal.py``).
+and semantic pruning, hard negatives, and the image / audio / frame
+decoders (``operators/similarity.py``, ``operators/multimodal.py``).
 
 Vectors are quantized to integers before any dot product, so distances
 are exact and both engines rank identically; k-means training uses
@@ -1437,77 +1436,6 @@ ORDER BY q_id, rank
 """
 
 
-# ------------------------------------------------------- embedding_drift
-
-_DRIFT_DIM = 64  # structural constant of the fixture embeddings
-
-
-def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centroid drift between the even- and odd-vec_id halves of the
-    embeddings table, per label — a deterministic stand-in for two
-    crawl snapshots of the same source mix. Exact DECIMAL(38,0) core
-    over the engine's 2^20 quantization; one float sqrt/division per
-    output cell (similarity.embedding_drift)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    a = emb.where(F.col("vec_id") % 2 == 0)
-    b = emb.where(F.col("vec_id") % 2 == 1)
-    return similarity.embedding_drift(a, b, group_col="label").orderBy("label")
-
-
-SQL_EMBEDDING_DRIFT = f"""
-WITH q AS (
-  SELECT label, vec_id % 2 AS side,
-         list_transform(embedding,
-                        x -> CAST(round(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qe
-  FROM embeddings
-  WHERE embedding IS NOT NULL AND label IS NOT NULL
-),
-dims AS (
-  SELECT label, side, qe,
-         unnest(generate_series(1, {_DRIFT_DIM})) AS d
-  FROM q
-),
-sums AS (
-  SELECT label, side, d, SUM(qe[d]) AS s
-  FROM dims GROUP BY label, side, d
-),
-counts AS (
-  SELECT label, side, COUNT(*)::BIGINT AS n, MAX(len(qe))::BIGINT AS dims
-  FROM q GROUP BY label, side
-),
-both_sides AS (
-  SELECT a.label,
-         ca.n AS n_a, cb.n AS n_b, ca.dims AS dims,
-         a.s AS sa, b.s AS sb
-  FROM sums a
-  JOIN sums b ON b.label = a.label AND b.d = a.d AND b.side = 1
-  JOIN counts ca ON ca.label = a.label AND ca.side = 0
-  JOIN counts cb ON cb.label = a.label AND cb.side = 1
-  WHERE a.side = 0
-),
-folded AS (
-  SELECT label, MAX(n_a) AS n_a, MAX(n_b) AS n_b, MAX(dims) AS dims,
-         SUM((sa * n_b - sb * n_a) * (sa * n_b - sb * n_a)) AS l2num,
-         SUM(sa * sb) AS dot,
-         SUM(sa * sa) AS na2,
-         SUM(sb * sb) AS nb2
-  FROM both_sides GROUP BY label
-)
-SELECT label,
-       CAST(n_a AS BIGINT) AS n_a,
-       CAST(n_b AS BIGINT) AS n_b,
-       CAST(dims AS BIGINT) AS dims,
-       round(sqrt(CAST(l2num AS DOUBLE))
-             / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * 1048576.0), 6)
-         AS centroid_l2,
-       CASE WHEN na2 > 0 AND nb2 > 0 THEN
-         round(CAST(dot AS DOUBLE)
-               / (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE))), 6)
-       END AS centroid_cos
-FROM folded ORDER BY label
-"""
-
-
 QUERIES = {
     "ann_ivf_probe": q_ann_ivf_probe,
     "ann_ivf_multiprobe": q_ann_ivf_multiprobe,
@@ -1536,7 +1464,6 @@ QUERIES = {
     "ann_ivfpq_adc": q_ann_ivfpq_adc,
     "semdedup_prune": q_semdedup_prune,
     "hard_negatives": q_hard_negatives,
-    "embedding_drift": q_embedding_drift,
 }
 
 ORACLES = {
@@ -1567,5 +1494,4 @@ ORACLES = {
     "ann_ivfpq_adc": SQL_ANN_IVFPQ_ADC,
     "semdedup_prune": SQL_SEMDEDUP_PRUNE,
     "hard_negatives": SQL_HARD_NEGATIVES,
-    "embedding_drift": SQL_EMBEDDING_DRIFT,
 }

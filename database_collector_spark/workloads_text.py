@@ -4014,114 +4014,6 @@ FROM pairs ORDER BY g_a, g_b
 """
 
 
-# -------------------------------------------------------- zipf_head_fit
-
-_ZIPF_K = 100
-
-
-def q_zipf_head_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law OLS fit over each language's top-100 vocabulary terms
-    (text.zipf_head_fit): slope/intercept/r2 on (log10 rank, log10
-    count), rank ties broken (count DESC, token ASC). Rank-limit
-    pushdown keeps the vocabulary window k-bounded per task."""
-    return text.zipf_head_fit(
-        _t(spark, sf_dir, "documents"), k=_ZIPF_K, group_col="lang"
-    ).orderBy("lang")
-
-
-SQL_ZIPF_HEAD_FIT = f"""
-WITH tok AS (
-  SELECT lang,
-         unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS t
-  FROM documents
-  WHERE text IS NOT NULL AND lang IS NOT NULL
-),
-vocab AS (
-  SELECT lang, t, COUNT(*)::BIGINT AS c FROM tok GROUP BY lang, t
-),
-ranked AS (
-  SELECT lang, c,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY c DESC, t ASC) AS r
-  FROM vocab
-),
-head AS (
-  SELECT lang, c,
-         log10(CAST(r AS DOUBLE)) AS x, log10(CAST(c AS DOUBLE)) AS y
-  FROM ranked WHERE r <= {_ZIPF_K}
-),
-s AS (
-  SELECT lang, COUNT(*)::BIGINT AS n_terms,
-         MIN(c)::BIGINT AS c_min, MAX(c)::BIGINT AS c_max,
-         SUM(x) AS sx, SUM(y) AS sy, SUM(x * y) AS sxy,
-         SUM(x * x) AS sxx, SUM(y * y) AS syy
-  FROM head GROUP BY lang
-)
--- NULL-ness guards on EXACT operands, mirroring the operator: fittable
--- iff n_terms >= 2, y-variance nonzero iff the integer counts differ
-SELECT lang, n_terms,
-       CASE WHEN n_terms >= 2 THEN
-         round((n_terms * sxy - sx * sy) / (n_terms * sxx - sx * sx), 6)
-       END AS slope,
-       CASE WHEN n_terms >= 2 THEN
-         round((sy - ((n_terms * sxy - sx * sy) / (n_terms * sxx - sx * sx)) * sx)
-               / n_terms, 6)
-       END AS intercept,
-       -- r2 clamped to [0, 1] in lockstep with the operator (r13
-       -- ADVICE): DuckDB division by zero yields NULL natively, the
-       -- Spark side uses try_divide — and BOTH engines' greatest()
-       -- skips NULLs (probed), so a zero denominator lands on 0.0
-       -- symmetrically; negatives clamp to 0.0, overflow-Inf to 1.0
-       CASE WHEN n_terms >= 2 AND c_min < c_max THEN
-         round(least(greatest(
-               (n_terms * sxy - sx * sy) * (n_terms * sxy - sx * sy)
-               / ((n_terms * sxx - sx * sx) * (n_terms * syy - sy * sy)),
-               0.0), 1.0), 6)
-       END AS r2
-FROM s ORDER BY lang
-"""
-
-
-# --------------------------------------------------- bigram_cond_entropy
-
-def q_bigram_cond_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact conditional next-token entropy H(next|prev) per language
-    over adjacent word bigrams (text.bigram_cond_entropy): every ln is
-    over an exact integer count; one division per group, round 4."""
-    return text.bigram_cond_entropy(
-        _t(spark, sf_dir, "documents"), group_col="lang"
-    ).orderBy("lang")
-
-
-SQL_BIGRAM_COND_ENTROPY = """
-WITH toks AS (
-  SELECT lang, list_filter(string_split(text, ' '), x -> x <> '') AS w
-  FROM documents
-  WHERE text IS NOT NULL AND lang IS NOT NULL
-),
-pos AS (
-  SELECT lang, w, unnest(generate_series(1, len(w) - 1)) AS i
-  FROM toks WHERE len(w) >= 2
-),
-pairs AS (SELECT lang, w[i] AS p, w[i + 1] AS n FROM pos),
-c2 AS (SELECT lang, p, n, COUNT(*)::BIGINT AS c FROM pairs GROUP BY lang, p, n),
-a2 AS (
-  SELECT lang, COUNT(*)::BIGINT AS n_pairs, SUM(c)::BIGINT AS total_bigrams,
-         SUM(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS t2
-  FROM c2 GROUP BY lang
-),
-c1 AS (SELECT lang, p, SUM(c)::BIGINT AS cp FROM c2 GROUP BY lang, p),
-a1 AS (
-  SELECT lang, COUNT(*)::BIGINT AS n_prev,
-         SUM(CAST(cp AS DOUBLE) * ln(CAST(cp AS DOUBLE))) AS t1
-  FROM c1 GROUP BY lang
-)
-SELECT a2.lang, n_prev, n_pairs, total_bigrams,
-       round((t1 - t2) / CAST(total_bigrams AS DOUBLE), 4) AS cond_entropy
-FROM a2 JOIN a1 ON a1.lang = a2.lang
-ORDER BY a2.lang
-"""
-
-
 QUERIES = {
     "posexplode_tokens": q_posexplode_tokens,
     "tfidf_top_terms": q_tfidf_top_terms,
@@ -4203,8 +4095,6 @@ QUERIES = {
     "class_balance": q_class_balance,
     "pack_chunks": q_pack_chunks,
     "vocab_overlap": q_vocab_overlap,
-    "zipf_head_fit": q_zipf_head_fit,
-    "bigram_cond_entropy": q_bigram_cond_entropy,
 }
 
 ORACLES = {
@@ -4288,6 +4178,4 @@ ORACLES = {
     "class_balance": SQL_CLASS_BALANCE,
     "pack_chunks": SQL_PACK_CHUNKS,
     "vocab_overlap": SQL_VOCAB_OVERLAP,
-    "zipf_head_fit": SQL_ZIPF_HEAD_FIT,
-    "bigram_cond_entropy": SQL_BIGRAM_COND_ENTROPY,
 }

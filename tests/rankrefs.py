@@ -1,5 +1,5 @@
 """Shared brute-force references for exact rank selection, used by
-test_ranking.py and test_r18_properties.py — ONE copy so the tie/
+test_ranking.py and test_rank_core_properties.py — ONE copy so the tie/
 out-of-range semantics cannot drift between suites."""
 
 from __future__ import annotations
@@ -12,16 +12,3 @@ def rank_ref(vals, k):
         return None
     return sorted(vals)[k - 1]
 
-
-def wrank_ref(pairs, k):
-    """Weighted type-1 selection: smallest v whose cumulative weight
-    (ascending v order) reaches k; None when k out of (0, total]."""
-    total = sum(w for _, w in pairs)
-    if not 1 <= k <= total:
-        return None
-    c = 0
-    for v, w in sorted(pairs):
-        c += w
-        if c >= k:
-            return v
-    return None

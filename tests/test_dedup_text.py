@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pyspark.sql import Row
 
-from conftest import SF
-from database_collector_spark import gates
 from database_collector_spark.operators import dedup, text
 
 
@@ -500,14 +498,3 @@ def test_boundary_overlap_pairs_tolerates_docs_shorter_than_k(spark):
         for r in boundary_overlap_pairs(docs, k=4).collect()
     }
     assert got == {(2, 3): "tail one two three"}
-
-
-def test_zipf_head_fit_slopes_are_negative_at_fixture_scale(spark):
-    """Counts in the head strictly decrease with rank by construction,
-    so every language's fitted slope must be negative (a zero/positive
-    slope would mean a degenerate all-equal head — worth noticing)."""
-    rows = gates.all_queries()["zipf_head_fit"](spark, SF).collect()
-    assert rows and all(
-        r["slope"] is None or r["slope"] < 0 for r in rows
-    )
-    assert any(r["slope"] is not None for r in rows)

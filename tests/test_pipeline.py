@@ -294,3 +294,36 @@ def test_run_once_warns_on_registry_overflow(spark):
     assert len(results) == 100  # capped
     msgs = [str(w.message) for w in caught]
     assert any("drops 20" in m and "page cap 100" in m for m in msgs)
+
+
+def test_run_once_warns_on_overflow_when_the_page_holds_an_unknown_engine(spark):
+    # the cap applies to the enabled listing BEFORE unknown engines are
+    # skipped: a full page that holds one unroutable target yields 99
+    # targets, and the 20 enabled targets past the cap are still dropped
+    import warnings as _warnings
+
+    rows = [
+        Row(
+            secret_name=f"db-{i:04d}",
+            engine="sqlserver" if i == 0 else "postgres",
+            host="h",
+            port=5432,
+            username="u",
+            password="p",
+            dbname="d",
+            tags={"database-collector:enabled": "true"},
+        )
+        for i in range(120)
+    ]
+    registry = spark.createDataFrame(rows, SOURCES_REGISTRY_SCHEMA)
+
+    def scrape(spark_, target, config):
+        raise RuntimeError("fail-soft")
+
+    with _warnings.catch_warnings(record=True) as caught:
+        _warnings.simplefilter("always")
+        results = run_once(spark, registry, {"postgres": "x"}, scrape, lambda df: None)
+    assert len(results) == 99
+    assert all(r.engine == "postgres" for r in results)
+    msgs = [str(w.message) for w in caught]
+    assert any("drops 20" in m and "page cap 100" in m for m in msgs)

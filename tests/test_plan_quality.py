@@ -1055,40 +1055,6 @@ def test_pack_sequences_prestage_scan_stays_funnel_free(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_zipf_head_fit_window_is_rank_limit_pushed(spark):
-    plan = _plan(gates.all_queries()["zipf_head_fit"](spark, SF))
-    # the top-k vocabulary ranking must get Spark's rank-limit pushdown
-    # (partial + final WindowGroupLimit): each task keeps k rows before
-    # the per-group sort, so the vocabulary never sorts whole-group
-    # partitions at any corpus size
-    assert plan.count("WindowGroupLimit") >= 2
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Exchange SinglePartition") == 0
-
-
-def test_bigram_cond_entropy_has_no_window_and_no_python(spark):
-    plan = _plan(gates.all_queries()["bigram_cond_entropy"](spark, SF))
-    # pure aggregate pipeline: in-row bigram explode + keyed aggregates
-    # over the compressed count table — no window machinery at all (the
-    # gate's orderBy is the only sort), no Python, no cartesian
-    assert "windowspecdefinition" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Exchange SinglePartition") == 0
-
-
-def test_embedding_drift_folds_are_keyed_and_broadcast(spark):
-    plan = _plan(gates.all_queries()["embedding_drift"](spark, SF))
-    # the per-dim sums join the bounded per-group count tables via
-    # BROADCAST (the counts are |groups| rows); no Python, no cartesian,
-    # no single-partition funnel — (group, dim) supplies the parallelism
-    assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("Exchange SinglePartition") == 0
-
-
 def test_trimmed_mean_has_no_per_priority_corpus_sort(spark):
     plan = _plan(gates.all_queries()["trimmed_mean"](spark, SF))
     # the r13 rewrite: the trim rides value-domain compression + the

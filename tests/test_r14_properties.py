@@ -77,6 +77,14 @@ def test_ks_fuzz_matches_reference(spark, rows, buckets):
     assert r["ks"] == _ks_ref(rows)
 
 
+def _half_up_6(num, den):
+    """num/den rounded half-up at 6 digits from the exact integers. Spark
+    and DuckDB both round the exact tie 999/16000 = 0.0624375 up to
+    0.062438; Python's round() sees the double just below the tie and
+    returns 0.062437."""
+    return (2 * 10**6 * num + den) // (2 * den) / 10**6
+
+
 def _ece_ref(rows, n_bins=5, scale=1000):
     bins: dict[int, list[tuple[int, int]]] = {}
     for p, y in rows:
@@ -86,8 +94,8 @@ def _ece_ref(rows, n_bins=5, scale=1000):
         for b, v in bins.items()
     }
     n = len(rows)
-    ece = round(sum(gaps.values()) / (scale * n), 6)
-    mce = round(max(g / (scale * len(bins[b])) for b, g in gaps.items()), 6)
+    ece = _half_up_6(sum(gaps.values()), scale * n)
+    mce = max(_half_up_6(g, scale * len(bins[b])) for b, g in gaps.items())
     return ece, mce
 
 

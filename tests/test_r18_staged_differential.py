@@ -1,18 +1,18 @@
 """The order-statistics gates on rank_select_by_group: their plan pin
-(broadcast candidate joins, no corpus funnel), range-splitter and
-token-mass-median checks, and the range-layout example. Every gate's
-differential against its DuckDB twin and its plan check for
-row-at-a-time Python and cartesian products run in test_gates.py.
+(broadcast candidate joins, no corpus funnel), the range-splitter
+check, and the range-layout example. Every gate's differential against
+its DuckDB twin and its plan check for row-at-a-time Python and
+cartesian products run in test_gates.py.
 """
 
 from __future__ import annotations
 
 from conftest import SF, assert_no_row_python_or_cartesian
-from database_collector_spark import gates, workloads_eval
+from database_collector_spark import gates
 
 
 def test_staged_plans_have_no_python_or_cartesian_or_corpus_funnel(gate_plan):
-    for name in ("rank_quartiles", "range_splitters", "token_mass_median"):
+    for name in ("rank_quartiles", "range_splitters"):
         plan = gate_plan(name)
         assert_no_row_python_or_cartesian(name, plan)
         # the whole point of the tier: candidate joins broadcast; the
@@ -50,35 +50,6 @@ def test_range_splitters_are_monotone_and_bounded(spark):
         assert lo <= ss[0] and ss[-1] <= hi, (
             f"splitters escape the group's value range: {r} vs [{lo}, {hi}]"
         )
-
-
-def test_token_mass_median_dominates_row_median(spark):
-    """The token-mass median is >= the row median p50 (long documents
-    hold more mass), and total_tokens matches the corpus sum — the
-    cross-gate consistency read."""
-    from pyspark.sql import functions as F
-
-    q = {r["source"]: r for r in gates.all_queries()["rank_quartiles"](spark, SF).collect()}
-    m = {
-        r["source"]: r
-        for r in gates.all_queries()["token_mass_median"](spark, SF).collect()
-    }
-    assert set(q) == set(m)
-    totals = {
-        r["source"]: r["t"]
-        for r in workloads_eval._doc_tokens(spark, SF)
-        .groupBy("source")
-        .agg(F.sum("n_tok").alias("t"))
-        .collect()
-    }
-    for src in q:
-        # NULL only in the zero-total-mass degenerate, which the
-        # fixture must not silently become (a None would otherwise
-        # crash the >= with a TypeError instead of a diagnostic)
-        assert m[src]["total_tokens"] > 0, f"{src}: zero token mass"
-        assert m[src]["wmed_tokens"] is not None, src
-        assert m[src]["wmed_tokens"] >= q[src]["p50"], src
-        assert m[src]["total_tokens"] == totals[src], src
 
 
 def test_range_layout_example_partitions_are_equi_depth(spark, tmp_path):

@@ -9,6 +9,9 @@ huge outliers, ±Inf, NaN, duplicate-heavy ties) in BOTH bucketing modes:
 - refine_narrow_domains=True returns byte-identical counts (bucketing
   must never change results, only partitioning);
 - quantiles_by_group equals the sort-and-index type-1 reference;
+- rank_select_by_group equals the same reference over tie-heavy and
+  wide-magnitude domains (cells on both sides of zero, and everything
+  in one log-cell);
 - banded_kendall_tau equals the all-banded-pairs reference.
 
 Spark-backed — modest example counts, each example is a job.
@@ -20,6 +23,11 @@ import math
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Row
+
+from database_collector_spark.operators.ranking import rank_select_by_group
+
+from rankrefs import rank_ref
 
 _vals = st.one_of(
     st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
@@ -99,6 +107,48 @@ def test_quantiles_by_group_fuzz(spark, data):
         exp = tuple(vals[math.ceil(m * n / 4) - 1] for m in (1, 2, 3))
         r = got[g]
         assert (r["n"], r["p25"], r["p50"], r["p75"]) == (n, *exp), g
+
+
+# tie-heavy: small value pool; wide: magnitudes spanning many cells
+_values = st.one_of(
+    st.integers(min_value=-3, max_value=3),
+    st.integers(min_value=-(10**9), max_value=10**9),
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    groups=st.dictionaries(
+        st.sampled_from(["a", "b", "c"]),
+        st.lists(_values, min_size=1, max_size=25),
+        min_size=1,
+        max_size=3,
+    )
+)
+def test_rank_select_fuzz_matches_sorted_reference(spark, groups):
+    rows = [Row(g=g, v=v) for g, vs in groups.items() for v in vs]
+    df = spark.createDataFrame(rows, "g string, v long")
+    got = {
+        r["g"]: r.asDict()
+        for r in rank_select_by_group(
+            df,
+            "g",
+            "v",
+            {"lo": "1", "q1": "(n + 3) div 4", "med": "(n + 1) div 2", "hi": "n"},
+        ).collect()
+    }
+    assert set(got) == set(groups)
+    for g, vs in groups.items():
+        n = len(vs)
+        assert got[g]["n"] == n
+        assert got[g]["lo"] == rank_ref(vs, 1)
+        assert got[g]["q1"] == rank_ref(vs, (n + 3) // 4)
+        assert got[g]["med"] == rank_ref(vs, (n + 1) // 2)
+        assert got[g]["hi"] == rank_ref(vs, n)
 
 
 @settings(

@@ -12,7 +12,7 @@ from conftest import SF
 from database_collector_spark import gates, workloads_eval
 from database_collector_spark.operators import ranking
 
-from rankrefs import rank_ref, wrank_ref
+from rankrefs import rank_ref
 
 DOCS = [
     Row(doc_id=0, text="hash join hash scan"),
@@ -762,46 +762,6 @@ def test_rank_select_rejects_output_collisions_and_nonnumeric(spark):
         ranking.rank_select_by_group(df2, "grp", "v", {"grp": "1"})
     with pytest.raises(ValueError, match="non-numeric type"):
         ranking.rank_select_by_group(df, "v", "s", {"med": "1"})
-
-
-def test_rank_select_weighted_matches_reference(spark):
-    pairs = {"a": [(5, 3), (1, 1), (9, 2), (3, 0)], "b": [(2, 7)]}
-    rows = [Row(g=g, v=v, w=w) for g, ps in pairs.items() for v, w in ps]
-    df = spark.createDataFrame(rows)
-    got = {
-        r["g"]: r.asDict()
-        for r in ranking.rank_select_by_group(
-            df,
-            "g",
-            "v",
-            {"wmed": "(n + 1) div 2", "first": "1", "last": "n"},
-            weight_col="w",
-        ).collect()
-    }
-    for g, ps in pairs.items():
-        total = sum(w for _, w in ps)
-        assert got[g]["n"] == total
-        assert got[g]["wmed"] == wrank_ref(ps, (total + 1) // 2)
-        assert got[g]["first"] == wrank_ref(ps, 1)
-        assert got[g]["last"] == wrank_ref(ps, total)
-    # the zero-weight value (3, w=0) must never be selected: rank 2 in
-    # group a falls strictly inside value 5's span, not on 3
-    assert got["a"]["wmed"] == 5
-
-
-def test_rank_select_weighted_rejects_bad_weights(spark):
-    df = spark.createDataFrame([Row(g="x", v=1, w=-2)])
-    with pytest.raises(Exception, match="non-negative"):
-        ranking.rank_select_by_group(
-            df, "g", "v", {"m": "1"}, weight_col="w"
-        ).collect()
-    df2 = spark.createDataFrame([Row(g="x", v=1, w=0.5)])
-    with pytest.raises(Exception, match="non-negative"):
-        ranking.rank_select_by_group(
-            df2, "g", "v", {"m": "1"}, weight_col="w"
-        ).collect()
-    with pytest.raises(ValueError, match="not a column"):
-        ranking.rank_select_by_group(df, "g", "v", {"m": "1"}, weight_col="nope")
 
 
 def test_rank_select_input_columns_named_g_or_v_do_not_shadow_filters(spark):

@@ -6,7 +6,6 @@ import math
 
 from pyspark.sql import Row
 
-from conftest import SF
 from database_collector_spark import gates
 from database_collector_spark.operators import multimodal, similarity
 
@@ -726,13 +725,3 @@ def test_embedding_outliers_random_property(spark):
     assert [v for v, _ in got] == [v for v, _ in expect]
     for (_, g), (_, e) in zip(got, expect):
         assert abs(g - e) < 5e-7
-
-
-def test_embedding_drift_halves_really_differ(spark):
-    """The gate exists to measure MOVEMENT — if a fixture change ever
-    made the parity halves identical, every centroid_l2 would be 0 and
-    the gate would pin nothing; require at least one label to drift."""
-    rows = gates.all_queries()["embedding_drift"](spark, SF).collect()
-    assert any(r["centroid_l2"] > 0 for r in rows), (
-        "all parity-half centroids coincide — the drift scenario is gone"
-    )
