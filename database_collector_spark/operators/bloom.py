@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_collector_spark.session import local_frame
+
 DEFAULT_NUM_BITS = 1 << 20  # 128 KiB of filter, ~130k keys at fp<1%
 DEFAULT_NUM_HASHES = 5
 
@@ -123,13 +125,12 @@ def might_contain(
 
 
 def _with_words(child: DataFrame, words: list[int]) -> DataFrame:
-    """Attach the filter words to every child row via a broadcast
-    ONE-ROW frame — a map-side attach (no shuffle), with the bitset
-    riding the broadcast exchange exactly once instead of being
-    re-serialized into each probe expression."""
-    row = child.sparkSession.createDataFrame(
-        [(words,)], "__bloom_words array<bigint>"
-    )
+    """Attach the filter words to every child row from a broadcast
+    one-row ``local_frame``: a map-side attach (no shuffle) whose build
+    side is one ``LocalTableScan`` task, with the bitset riding the
+    broadcast once instead of being serialized into each probe
+    expression."""
+    row = local_frame(child.sparkSession, [(words,)], "__bloom_words array<bigint>")
     return child.crossJoin(F.broadcast(row))
 
 

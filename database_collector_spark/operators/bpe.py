@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from database_collector_spark.operators.text import tokens_col
+from database_collector_spark.session import local_frame
 
 
 def word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -145,7 +146,8 @@ def train(docs: DataFrame, n_merges: int, text_col: str = "text") -> DataFrame:
     (rank, sym_a, sym_b, merged, pair_count). See :func:`train_merges`
     for the training-loop shape (this wraps it in a DataFrame for the
     merge-table gates)."""
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         train_merges(docs, n_merges, text_col),
         "rank int, sym_a string, sym_b string, merged string, pair_count bigint",
     )

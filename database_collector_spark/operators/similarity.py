@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from database_collector_spark.session import local_frame
+
 EMBED_DIM = 64
 QUANT_SCALE = 1 << 20
 # corpora below this many rows train their codebooks in one task. The
@@ -155,10 +157,8 @@ def lsh_buckets(
 
 def _cent_dists() -> F.Column:
     """Squared-distance array to every centroid of an attached one-row
-    centroid frame (``cents``/``cnorms`` columns): the ONE assignment
-    expression shared by ``assign_centroids`` and the chained in-plan
-    Lloyd iterations, so training-time and serve-time assignment cannot
-    drift."""
+    centroid frame (``cents``/``cnorms`` columns); ``assign_centroids``'
+    argmin runs over it."""
     return F.transform(
         F.col("cents"),
         lambda c, i: F.col("qnorm2")
@@ -179,26 +179,19 @@ def assign_centroids(
     keep_dist: str | None = None,
 ) -> DataFrame:
     """Attach ``cid`` = nearest centroid (exact integer squared distance,
-    ties to the lowest cid). Centroids ride along as ONE nested-array
-    literal and the argmin is a data-driven transform + array_position —
-    k is small by definition, so assignment is a pure projection: no
-    join, no shuffle, scan speed at any corpus size. (An unrolled
-    per-centroid when()-chain computes the same thing but its codegen
-    unit grows with k*dim and Janino-recompiles per training iteration —
-    measured ~10x slower end-to-end than this single generic expression.)
+    ties to the lowest cid). The centroids and their norms arrive as the
+    columns of a one-row ``local_frame``, attached by a broadcast
+    nested-loop join: a map-side attach with no shuffle, whose build
+    side is one ``LocalTableScan`` task. The argmin is one data-driven
+    transform + array_position over those columns, so the expression
+    does not grow with k*dim (an unrolled per-centroid when()-chain
+    computes the same thing with a codegen unit that does, and measured
+    ~10x slower end to end).
 
     ``base`` must carry ``qe``/``qnorm2`` (see ``with_quantized``).
-
-    The centroid table arrives as a broadcast ONE-ROW frame rather than
-    literals: the assignment expression is then byte-identical across
-    training iterations, so whole-stage codegen compiles once instead of
-    re-Janino-compiling a k*dim-literal tree per iteration (the literal
-    form measured ~2x slower per iteration on the fixture corpus purely
-    from compile time). The broadcast nested-loop join against one row
-    is a map-side attach — still no shuffle.
     """
-    spark = base.sparkSession
-    cent_row = spark.createDataFrame(
+    cent_row = local_frame(
+        base.sparkSession,
         [(centroids, [sum(x * x for x in c) for c in centroids])],
         "cents array<array<bigint>>, cnorms array<bigint>",
     )
@@ -513,11 +506,12 @@ def pq_fit_quantized(
     return full, books
 
 
-def _books_frame(spark, books: list[list[list[int]]]):
-    """One-row broadcastable frame carrying the codebooks + norms (the
-    same compile-once trick as assign_centroids)."""
+def _books_frame(spark, books: list[list[list[int]]]) -> DataFrame:
+    """One-row ``local_frame`` carrying the codebooks and their centroid
+    norms, for a broadcast attach (see ``assign_centroids``)."""
     bnorms = [[sum(x * x for x in c) for c in b] for b in books]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(books, bnorms)],
         "books array<array<array<bigint>>>, bnorms array<array<bigint>>",
     )
@@ -528,9 +522,10 @@ def pq_encode(
 ) -> DataFrame:
     """Attach ``codes`` (array<int>, one code per subspace) to each
     vector: for every subspace, the nearest codebook centroid in exact
-    integer arithmetic, ties to the lowest code. Zero shuffle — a
-    broadcast one-row codebook attach plus a nested higher-order-function
-    projection, so encoding runs at scan speed on any corpus size."""
+    integer arithmetic, ties to the lowest code. Zero shuffle: the
+    codebooks ride a broadcast ``_books_frame`` row, and the codes are a
+    nested higher-order-function projection over it, so encoding runs at
+    scan speed on any corpus size."""
     return pq_encode_quantized(with_quantized(embeddings), books)
 
 
@@ -588,7 +583,8 @@ def pq_adc_topk(
     subspaces of ||q_j - book[j][code_j]||^2, all integer-exact.
 
     ``queries`` must carry (q_id, q_qe). Broadcast queries x corpus
-    codes, then one per-query window for the top-k — the same
+    codes, with the codebooks attached from a broadcast ``_books_frame``
+    row, then one per-query window for the top-k — the same
     shuffle-free-scan + tiny-window shape as cosine_topk, but scanning
     m-byte codes instead of full vectors (the 100 TB win).
 
@@ -875,13 +871,13 @@ def embedding_covariance(
     hashed_classifier two-step-binding rule; measured ~2x the whole
     gate at sf0.1). The (i, j) long form then comes from a broadcast
     join of the one-row (n, s[], sx[]) arrays against a dims(dims+1)/2-
-    row (k, i, j) index LocalRelation + element_at picks — the earlier
-    in-row explode of a dims(dims+1)/2-struct literal array built a
-    ~700-node expression tree whose planning/codegen dominated the
-    whole query (measured 2.3 s of a 4 s gate at sf0.1 for 136 structs;
-    the index-table form is O(pairs) DATA, O(1) expression size). This
-    is the map-side-combine shape that makes covariance of a 100 TB
-    embedding table cost one narrow scan.
+    row (k, i, j) index ``local_frame`` + element_at picks: the pairs
+    are O(pairs) data and the expression stays O(1) in size (an in-row
+    explode of a dims(dims+1)/2-struct literal array builds a ~700-node
+    expression tree at dims = 16, whose planning and codegen measured
+    2.3 s of a 4 s gate at sf0.1). The index's broadcast is one
+    ``LocalTableScan`` task. This is the map-side-combine shape that
+    makes covariance of a 100 TB embedding table cost one narrow scan.
 
     Output: (i, j, n, s_i, s_j, s_ij) for 0 <= i <= j < dims.
     """
@@ -913,9 +909,9 @@ def embedding_covariance(
         F.array(*[F.col(f"s_{i}") for i in range(dims)]).alias("_s"),
         F.array(*[F.col(f"sx_{k}") for k, _, _ in kmap]).alias("_sx"),
     )
-    # bounded parameter table (the assign_centroids cent_row precedent):
-    # dims(dims+1)/2 rows, joined broadcast-nested-loop against ONE row
-    idx = embeddings.sparkSession.createDataFrame(kmap, "k int, i int, j int")
+    # bounded parameter table: dims(dims+1)/2 rows, joined
+    # broadcast-nested-loop against ONE row
+    idx = local_frame(embeddings.sparkSession, kmap, "k int, i int, j int")
     return arrs.crossJoin(F.broadcast(idx)).select(
         "i",
         "j",
@@ -1355,9 +1351,7 @@ def cell_cosine_probe(
 def _centroid_frame(spark, cents: list[list[int]]) -> DataFrame:
     """k-row (cid, c) frame from a trained centroid list — the single
     schema used for persisting coarse centroids."""
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid int, c array<bigint>"
-    )
+    return local_frame(spark, enumerate(cents), "cid int, c array<bigint>")
 
 
 def residualize(embeddings: DataFrame, cents: list[list[int]]) -> DataFrame:
@@ -1428,7 +1422,8 @@ def ivfpq_index_save(
     resid, books = pq_fit_quantized(
         residualize_quantized(qbase, cents), m=m, k=codes_k, iters=pq_iters
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(j, ci, c) for j, b in enumerate(books) for ci, c in enumerate(b)],
         "j int, code int, c array<bigint>",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def cpus() -> int:
@@ -113,6 +113,27 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     spark.range(spark.sparkContext.defaultParallelism).mapInPandas(
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A frame over driver-held ``rows`` (tuples in ``ddl``'s column
+    order) as a ``LocalRelation``: the rows travel inside the plan, so
+    broadcasting the frame is one ``LocalTableScan`` task. Python rows
+    handed to ``createDataFrame`` become a scan of a parallelized Python
+    RDD instead, whose broadcast runs a multi-task job that starts
+    Python workers. An Arrow table stays a ``LocalRelation`` whether or
+    not ``spark.sql.execution.arrow.pyspark.enabled`` is set; a pandas
+    frame does not."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:

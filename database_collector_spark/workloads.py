@@ -78,6 +78,11 @@ def _fan_out(df: DataFrame) -> DataFrame:
     tables (documents, embeddings) where hashing/linear-algebra work
     dwarfs the one-extra-pass shuffle; aggregation-shaped tables skip it —
     partial aggregation already collapses their rows before any exchange.
+    The single-task codebook trainers ``coalesce(1)`` the spread corpus
+    again, but the encode after them runs on the spread partitions: on
+    2,000 benchmark embeddings (local[4], median of 5 warm runs)
+    ``ann_pq_codes`` without the spread built in 0.43 s instead of
+    0.56 s (one job fewer) and executed in 0.45 s instead of 0.22 s.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

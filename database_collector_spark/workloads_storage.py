@@ -26,6 +26,7 @@ from database_collector_spark.operators.sketches import (
     bloom_build,
     bloom_probe,
 )
+from database_collector_spark.session import local_frame
 from database_collector_spark.sinks.bucketed import read_table, write_bucketed
 from database_collector_spark.workloads import _cents, _t, hv_sql
 from database_collector_spark.workloads import artifact_dir as _artifact_dir
@@ -253,7 +254,8 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh = orders.filter(F.col("o_orderkey") % 3 == 0)
     # a self-cancelling retraction: one synthetic row + its negation —
     # the merged result must be unaffected (additive-fold absorption)
-    wiggle = spark.createDataFrame(
+    wiggle = local_frame(
+        spark,
         [(-1, "Z", 500), (-1, "Z", -500)],
         "o_orderkey long, o_orderstatus string, cents long",
     )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from database_collector_spark.operators import sketches, timeseries
+from database_collector_spark.session import local_frame
 from database_collector_spark.workloads import _t, hv_sql
 from database_collector_spark.workloads import artifact_dir as _artifact_dir
 
@@ -545,7 +546,7 @@ def q_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = docs.select(
         F.explode(F.split("text", " ")).alias("item")
     ).where(F.col("item") != "")
-    probes = spark.createDataFrame([(p,) for p in _CMS_PROBES], "item string")
+    probes = local_frame(spark, [(p,) for p in _CMS_PROBES], "item string")
     est = sketches.cms_point_estimates(items, probes)
     truth = (
         items.where(F.col("item").isin(_CMS_PROBES))

@@ -167,17 +167,44 @@ def test_trainer_gates_match_oracle_on_the_distributed_loop(
     assert check.value_hash(s_canon) == check.value_hash(o_canon)
 
 
+def _jobs_run_by(spark, group: str, action) -> list[int]:
+    """Ids of the jobs ``action()`` runs, tagged with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.mark.parametrize("gate, max_jobs", [("ann_pq_codes", 3), ("ann_ivfpq_adc", 5)])
 def test_trainer_gates_build_in_few_eager_jobs(spark, gate, max_jobs):
     """Building the gate's DataFrame runs the trainers' eager jobs; a
     collect per Lloyd iteration would push these counts up."""
-    sc = spark.sparkContext
-    group = f"build-{gate}"
-    sc.setJobGroup(group, group)
-    try:
-        gates.all_queries()[gate](spark, SF)
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    jobs = _jobs_run_by(
+        spark, f"build-{gate}", lambda: gates.all_queries()[gate](spark, SF)
+    )
     assert 0 < len(jobs) <= max_jobs, sorted(jobs)
+
+
+def test_pq_codes_gate_executes_in_few_tasks(spark):
+    """Collecting the built ``ann_pq_codes`` frame runs the encode over
+    the corpus partitions, the histogram's one post-shuffle task and the
+    codebook broadcast's one ``LocalTableScan`` task. A codebook frame
+    over a parallelized Python RDD would add a task per default
+    partition."""
+    sc = spark.sparkContext
+    df = gates.all_queries()["ann_pq_codes"](spark, SF)
+    jobs = _jobs_run_by(spark, "execute-ann_pq_codes", df.collect)
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = [
+        store.lastStageAttempt(sid)
+        for job in jobs
+        for sid in tracker.getJobInfo(job).stageIds
+    ]
+    tasks = sum(
+        st.numCompleteTasks() for st in stages if st.status().toString() != "SKIPPED"
+    )
+    assert 0 < tasks <= sc.defaultParallelism + 2

@@ -765,10 +765,11 @@ def test_rank_select_rejects_output_collisions_and_nonnumeric(spark):
 
 
 def test_rank_select_input_columns_named_g_or_v_do_not_shadow_filters(spark):
-    # sixth review pass (live-reproduced): a .where() placed after the
-    # g/v/_wraw projection resolved original names against the
-    # projection's own aliases, so an input column literally named 'g'
-    # or 'v' shadowed the NULL-exclusion filter
+    # the NULL-exclusion filter on the group and value columns must
+    # resolve against the input's own columns: an input column literally
+    # named 'g' or 'v' (the operator's internal group/value aliases)
+    # must neither hide a NULL from the filter nor be filtered in place
+    # of the caller's column
     df = spark.createDataFrame(
         [Row(grp="x", g=1), Row(grp="x", g=None), Row(grp="x", g=5)]
     )
