@@ -71,8 +71,8 @@ def _series(
 def enrich(
     samples: DataFrame,
     *,
-    host: str,
-    engine: str,
+    host: str | Column,
+    engine: str | Column,
     region: str,
     account_id: str,
     job: str = PIPELINE_JOB,
@@ -88,6 +88,9 @@ def enrich(
     type; one ``inline`` generator emits them and one projection builds
     each series' label map. No union, no shuffle: fully pipelined by
     whole-stage codegen at any scale.
+
+    ``host`` and ``engine`` are literals, or columns of ``samples`` when
+    one frame holds several targets' samples.
 
     ``anchor_ts`` pins the now() fallback for deterministic tests; None uses
     current_timestamp() like the reference (prometheus.go:31).
@@ -150,19 +153,24 @@ def enrich(
     )
     pipeline = F.create_map(
         F.lit("__name__"), F.col("n"),
-        F.lit("identifier"), identifier_from_host(F.lit(host)),
+        F.lit("identifier"), F.col("identifier"),
         F.lit("job"), F.lit(job),
         F.lit("region"), F.lit(region),
         F.lit("accountId"), F.lit(account_id),
-        F.lit("engine"), F.lit(engine),
+        F.lit("engine"), F.col("engine"),
     )
     # map_concat with a NULL map is NULL: no key, empty map
     empty = F.create_map().cast("map<string,string>")
     series_key = F.when(k.isNull(), empty).otherwise(F.create_map(k, F.col("kv")))
+    # the generator projection keeps only what it selects, so the
+    # per-sample identity columns are computed there (F.lit passes a
+    # Column through unchanged)
     return samples.select(
         F.inline(series),
         F.coalesce(F.col("labels"), empty).alias("labels"),
         F.coalesce(F.col("ts"), now).alias("ts"),
+        identifier_from_host(F.lit(host)).alias("identifier"),
+        F.lit(engine).alias("engine"),
     ).select(
         F.map_concat(source, pipeline, series_key).alias("labels"),
         F.col("v").alias("value"),

@@ -4,7 +4,8 @@ Reference flow (collector/cmd/collector/database-collector.go:239-287):
 cron tick -> list secrets -> per-target goroutine -> scrape -> convert ->
 remote-write. Spark flow: registry DataFrame -> enabled_page() -> per-target
 scrape (JDBC pushdown, or pre-scraped fixture frames in tests) -> declarative
-metric-config melt -> enrich() -> union -> sink. The driver loop below is
+metric-config melt, tagged with the target's host and engine -> one union
+of every melted frame -> enrich() -> sink. The driver loop below is
 the cron stand-in (CRON_SCHEDULE / @every 5m semantics,
 database-collector.go:268-280); each tick is one self-contained Spark batch,
 which is exactly what a Lambda-triggered run is too (§3.2 —
@@ -20,8 +21,10 @@ import time
 import warnings
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from database_collector_spark.operators.enrich import enrich
 from database_collector_spark.plans.metric_config import load_specs, melt_to_samples
@@ -36,38 +39,7 @@ from database_collector_spark.sources.registry import (
 class CollectResult:
     target: str
     engine: str
-    n_series: int
     error: str | None = None  # fail-soft: set when this target's scrape failed
-
-
-def collect_target(
-    spark: SparkSession,
-    target_row: dict,
-    config_toml: str,
-    scrape_fn: Callable[[SparkSession, dict, str], DataFrame],
-    *,
-    region: str,
-    account_id: str,
-    anchor_ts: str | None = None,
-) -> DataFrame:
-    """One target, one tick: run every metric spec's request through
-    ``scrape_fn`` (JDBC pushdown in production, fixture lookup in tests),
-    melt to long-format samples, enrich with the five pipeline labels."""
-    frames = []
-    for spec in load_specs(config_toml):
-        result = scrape_fn(spark, target_row, spec.request)
-        frames.append(melt_to_samples(result, spec))
-    samples = frames[0]
-    for f in frames[1:]:
-        samples = samples.unionByName(f)
-    return enrich(
-        samples,
-        host=target_row["host"],
-        engine=target_row["route"],
-        region=region,
-        account_id=account_id,
-        anchor_ts=anchor_ts,
-    )
 
 
 def run_once(
@@ -83,18 +55,19 @@ def run_once(
 ) -> list[CollectResult]:
     """One collection tick over the whole registry.
 
-    Targets fan out as independent Spark jobs (the scheduler interleaves
-    them — the goroutine-per-target analog); the per-target frames union
-    into one sink write so the remote-write POSTs batch per partition, not
-    per target.
+    The driver runs each enabled target's scrapes in turn and melts every
+    spec's result into samples tagged with the target's host and engine.
+    The melted frames of all healthy targets union into one frame, which
+    one ``enrich`` labels and one ``sink_fn`` call writes, so the
+    remote-write POSTs batch per partition, not per target.
 
     Per-target failures are FAIL-SOFT, matching the reference (a broken
     target logs and the loop continues to the next one,
     collector/cmd/collector/database-collector.go:214-222): the failing
-    target's CollectResult carries the error and its frame is excluded
-    from the union. JDBC failures surface here because Spark's jdbc
-    reader connects eagerly at load() to resolve the schema — the same
-    point the reference's sql.Open/Ping fails.
+    target's CollectResult carries the error and none of its specs reach
+    the union. JDBC failures surface here because Spark's jdbc reader
+    connects eagerly at load() to resolve the schema — the same point the
+    reference's sql.Open/Ping fails.
     """
     page = [r.asDict() for r in enabled_page(registry).collect()]
     # the collected target list is bounded by the page cap (reference
@@ -117,35 +90,40 @@ def run_once(
             )
     targets = [t for t in page if t["route"] is not None]
     results: list[CollectResult] = []
-    union_df: DataFrame | None = None
+    samples: list[DataFrame] = []
     for t in targets:
         config = config_by_engine.get(t["route"])
         if config is None:
             continue
         try:
-            df = collect_target(
-                spark,
-                t,
-                config,
-                scrape_fn,
+            melted = [
+                melt_to_samples(scrape_fn(spark, t, spec.request), spec).select(
+                    "*", F.lit(t["host"]).alias("host"), F.lit(t["route"]).alias("engine")
+                )
+                for spec in load_specs(config)
+            ]
+        except Exception as exc:  # noqa: BLE001 — any one target must not kill the tick
+            results.append(
+                CollectResult(
+                    t["secret_name"], t["route"], error=f"{type(exc).__name__}: {exc}"
+                )
+            )
+            continue
+        results.append(CollectResult(t["secret_name"], t["route"]))
+        samples.extend(melted)
+    if samples:
+        # every melted frame carries the same seven typed columns, so a
+        # positional union is safe
+        sink_fn(
+            enrich(
+                reduce(DataFrame.union, samples),
+                host=F.col("host"),
+                engine=F.col("engine"),
                 region=region,
                 account_id=account_id,
                 anchor_ts=anchor_ts,
             )
-        except Exception as exc:  # noqa: BLE001 — any one target must not kill the tick
-            results.append(
-                CollectResult(
-                    t["secret_name"],
-                    t["route"],
-                    -1,
-                    error=f"{type(exc).__name__}: {exc}",
-                )
-            )
-            continue
-        results.append(CollectResult(t["secret_name"], t["route"], -1))
-        union_df = df if union_df is None else union_df.unionByName(df)
-    if union_df is not None:
-        sink_fn(union_df)
+        )
     return results
 
 

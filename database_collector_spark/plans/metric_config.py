@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import tomllib
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,11 +50,6 @@ def load_specs(toml_text: str) -> list[MetricSpec]:
             )
         )
     return specs
-
-
-def load_specs_file(path: str) -> list[MetricSpec]:
-    with open(path, "r", encoding="utf-8") as f:
-        return load_specs(f.read())
 
 
 def melt_to_samples(result: DataFrame, spec: MetricSpec) -> DataFrame:
@@ -107,11 +103,7 @@ def run_config(
     """
     for view, df in sources.items():
         df.createOrReplaceTempView(view)
-    frames = []
-    for spec in load_specs(toml_text):
-        result = spark.sql(spec.request)
-        frames.append(melt_to_samples(result, spec))
-    out = frames[0]
-    for f_ in frames[1:]:
-        out = out.unionByName(f_)
-    return out
+    return reduce(
+        DataFrame.union,
+        [melt_to_samples(spark.sql(spec.request), spec) for spec in load_specs(toml_text)],
+    )

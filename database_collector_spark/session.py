@@ -134,8 +134,3 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
         schema=to_arrow_schema(schema),
     )
     return spark.createDataFrame(table, schema)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Read the driver-generated parquet tables for a scale factor."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

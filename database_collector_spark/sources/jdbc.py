@@ -4,9 +4,9 @@ The reference opens one DB connection per target and ships scraper SQL
 verbatim (goroutine per (secret, engine), database-collector.go:201-226;
 Oracle pool clamped to 1 connection, oracle-exporter.go:19-21). The Spark
 shape: one ``spark.read.jdbc`` per (target, scraper) with full-query
-pushdown — the remote database plans the query, Spark just fetches — and a
-driver-side thread pool to overlap the per-target reads, since each
-catalog result is tiny and network-latency-bound.
+pushdown — the remote database plans the query, Spark just fetches.
+``pipeline.run_once`` issues the reads one target at a time and unions
+what they return into one tick.
 
 Credentials never appear in plans or logs: they ride in reader options
 (redacted by Spark) and are re-resolved from the registry row on every
@@ -15,9 +15,6 @@ batch, preserving the reference's rotation-safe per-scrape re-fetch
 """
 
 from __future__ import annotations
-
-from concurrent.futures import ThreadPoolExecutor
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,61 +77,6 @@ def read_catalog_query(
     return reader.load()
 
 
-def read_table_partitioned(
-    spark: SparkSession,
-    *,
-    engine: str,
-    host: str,
-    port: int,
-    username: str,
-    password: str,
-    dbname: str | None,
-    table: str,
-    partition_column: str,
-    lower_bound: int,
-    upper_bound: int,
-    num_partitions: int = 32,
-    fetchsize: int = 10_000,
-    predicate: str | None = None,
-) -> DataFrame:
-    """Range-partitioned parallel JDBC ingest — the scale path the tiny
-    catalog scrapers (read_catalog_query) deliberately avoid.
-
-    Spark splits [lower_bound, upper_bound] on ``partition_column`` into
-    ``num_partitions`` stride ranges and opens that many concurrent
-    connections, each issuing ``WHERE pc >= lo AND pc < hi`` — so the
-    remote database does a clustered range scan per worker instead of
-    one connection streaming the whole table through the driver's
-    bandwidth. Caveats that matter at scale, encoded here as the
-    argument contract:
-
-    * partition_column must be indexed/clustered and roughly uniform —
-      bounds come from ``SELECT min(pc), max(pc)`` (run it first; a
-      stale upper_bound silently drops no rows but skews the last
-      stride with everything above it);
-    * num_partitions is simultaneously the remote connection count —
-      size it against the database's connection budget, not the
-      cluster's core count;
-    * ``predicate`` pushes an extra WHERE verbatim into every range
-      query (partition pruning at the source, e.g. an updated_at
-      incremental bound).
-    """
-    src = f"(SELECT * FROM {table} WHERE {predicate}) sub" if predicate else table
-    return (
-        spark.read.format("jdbc")
-        .option("url", jdbc_url(engine, host, port, dbname))
-        .option("dbtable", src)
-        .option("user", username)
-        .option("password", password)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", lower_bound)
-        .option("upperBound", upper_bound)
-        .option("numPartitions", num_partitions)
-        .option("fetchsize", fetchsize)
-        .load()
-    )
-
-
 def scrape_target(
     spark: SparkSession,
     target: dict,
@@ -155,18 +97,3 @@ def scrape_target(
         )
         for name, sql in select_scrapers(engine, requested).items()
     }
-
-
-def union_all(frames: list[DataFrame]) -> DataFrame:
-    """unionByName fold for per-target frames of identical schema."""
-    return reduce(lambda a, b: a.unionByName(b), frames)
-
-
-def parallel_collect_counts(frames: dict[str, DataFrame], max_workers: int = 8) -> dict[str, int]:
-    """Driver-side thread pool to overlap latency-bound JDBC reads —
-    the Spark analog of the reference's goroutine-per-target fan-out
-    (database-collector.go:190-230). Each submitted action is an
-    independent Spark job; the scheduler interleaves them."""
-    with ThreadPoolExecutor(max_workers=max_workers) as ex:
-        futs = {name: ex.submit(df.count) for name, df in frames.items()}
-        return {name: f.result() for name, f in futs.items()}

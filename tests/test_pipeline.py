@@ -327,3 +327,86 @@ def test_run_once_warns_on_overflow_when_the_page_holds_an_unknown_engine(spark)
     assert all(r.engine == "postgres" for r in results)
     msgs = [str(w.message) for w in caught]
     assert any("drops 20" in m and "page cap 100" in m for m in msgs)
+
+
+TWO_SPECS = CONFIG + """
+[[metric]]
+context = "sessions_total"
+metricsdesc = { n = "sessions" }
+request = "SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM scrape"
+"""
+
+
+def _fixture_scrape(spark_, request):
+    spark_.createDataFrame(
+        [Row(status="ACTIVE"), Row(status="ACTIVE"), Row(status="IDLE")]
+    ).createOrReplaceTempView("scrape")
+    return spark_.sql(request)
+
+
+def _nodes(plan, ancestors=()):
+    """(node name, names of its ancestors) for every node of a Catalyst
+    plan, walked through the JVM tree."""
+    yield plan.nodeName(), ancestors
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i), ancestors + (plan.nodeName(),))
+
+
+def test_run_once_enriches_one_union_of_every_healthy_melt(spark):
+    # 3 targets x 2 specs, one target down: the tick is one Union of the
+    # 4 healthy (target, spec) melts under exactly one enrich generator,
+    # not a union of per-target enrich pipelines
+    def scrape_fn(spark_, target, request):
+        if target["route"] == "postgres":
+            raise RuntimeError("target down")
+        return _fixture_scrape(spark_, request)
+
+    sunk = []
+    results = run_once(
+        spark,
+        _registry(spark),
+        {e: TWO_SPECS for e in ("mysql", "postgres", "oracle")},
+        scrape_fn,
+        sink_fn=sunk.append,
+        anchor_ts="2024-06-01 00:00:00",
+    )
+    assert {r.target for r in results if r.error} == {"db-postgres"}
+    (df,) = sunk
+    nodes = list(_nodes(df._jdf.queryExecution().optimizedPlan()))
+    assert sum(1 for n, _ in nodes if n == "Union") == 1
+    assert sum(1 for n, up in nodes if up and up[-1] == "Union") == 4
+    assert sum(1 for n, up in nodes if n == "Generate" and "Union" in up) == 4
+    assert sum(1 for n, up in nodes if n == "Generate" and "Union" not in up) == 1
+    rows = df.collect()
+    # 2 healthy targets x (2 status series + 1 total)
+    assert len(rows) == 6
+    assert {r["labels"]["identifier"] for r in rows} == {"mysql-host", "oracle-ee-host"}
+    assert {r["labels"]["engine"] for r in rows} == {"mysql", "oracle"}
+
+
+def test_run_once_drops_every_spec_of_a_target_that_fails_late(spark):
+    # the first spec of db-mysql scrapes, its second raises: the target is
+    # reported failed and none of its first-spec samples reach the sink
+    calls = []
+
+    def scrape_fn(spark_, target, request):
+        calls.append(target["route"])
+        if target["route"] == "mysql" and calls.count("mysql") == 2:
+            raise RuntimeError("second spec failed")
+        return _fixture_scrape(spark_, request)
+
+    collected = []
+    results = run_once(
+        spark,
+        _registry(spark),
+        {e: TWO_SPECS for e in ("mysql", "postgres", "oracle")},
+        scrape_fn,
+        sink_fn=lambda df: collected.extend(df.collect()),
+        anchor_ts="2024-06-01 00:00:00",
+    )
+    by_target = {r.target: r.error for r in results}
+    assert by_target["db-mysql"] is not None
+    assert by_target["db-postgres"] is None and by_target["db-oracle-ee"] is None
+    assert {r["labels"]["engine"] for r in collected} == {"postgres", "oracle"}
+    assert len(collected) == 6
