@@ -4,17 +4,12 @@ Composes the extension operators into the canonical prep DAG a corpus
 goes through before tokenization:
 
     quality filter → exact dedup (keep canonical) → deterministic
-    train/val/test split → partitioned lake write
+    train/val/test split
 
-Everything stays one declarative plan until the sink — Catalyst fuses
-the quality scalar pipeline into the scan, the dedup semi-join is the
-single corpus shuffle, and the split label is a map-side expression —
-so the whole pipeline costs scan + one shuffle + write. The write
-lands partitioned by (split, lang): low cardinality (3 × |langs|
-directories), prunes both the trainer's reads (split=train) and
-per-language budget queries, and uses dynamic partition overwrite so a
-re-run replaces exactly the partitions it produces (idempotent retries,
-same policy as sinks/parquet.py).
+Everything stays one declarative plan until the caller's sink — Catalyst
+fuses the quality scalar pipeline into the scan, the dedup semi-join is
+the single corpus shuffle, and the split label is a map-side
+expression — so the whole pipeline costs scan + one shuffle.
 
 Near-dup tiers (minhash_lsh_dedup → connected_components) slot in
 between the exact tier and the split as an anti-join against the
@@ -87,10 +82,10 @@ def curate(
         from database_collector_spark.operators import expectations as exp
 
         exp.verify(docs, **expectations)
-    # quality tier as ONE inline filter (r15 optimization round): the
-    # previous shape scored into a (doc_id, quality_score) frame and
-    # joined it back — a corpus self-join whose quality_score filter
-    # was then pushed below the scoring projection, re-deriving the
+    # quality tier as ONE inline filter: the previous shape scored into
+    # a (doc_id, quality_score) frame and joined it back — a corpus
+    # self-join whose quality_score filter was then pushed below the
+    # scoring projection, re-deriving the
     # tokenize folds a second time for the predicate (the
     # clf_truth_frame duplication class). Filtering directly on the
     # shared score expression evaluates the folds ONCE per row, joins
@@ -105,10 +100,10 @@ def curate(
     if repetition_max is not None:
         # fused scalar filter, not a join against a stats table: the
         # TOKEN array binds first (grams_of's lambda referencing an
-        # unbound split(...) re-splits the text per gram — review
-        # finding class), then the gram array materializes as its own
-        # projection (CollapseProject keeps non-cheap expressions
-        # single-evaluation), the fraction derives from it, and the
+        # unbound split(...) re-splits the text per gram), then the gram
+        # array materializes as its own projection (CollapseProject
+        # keeps non-cheap expressions single-evaluation), the fraction
+        # derives from it, and the
         # whole gate rides the same scan — zero shuffle
         kept = (
             kept.withColumn("__toks", F.split(F.col("text"), " "))
@@ -126,10 +121,8 @@ def curate(
 
         # the near-dup tier consumes the survivor frame from MULTIPLE
         # branches (signature build, jaccard verify, the final
-        # anti-join) — materialize it once (r15 optimization round;
-        # this was already this docstring's own advice to callers, now
-        # done where the fan-out actually happens). Lazy: plan
-        # construction must not run a job.
+        # anti-join) — materialize it once, where the fan-out actually
+        # happens. Lazy: plan construction must not run a job.
         kept = kept.localCheckpoint(eager=False)
         pairs = dedup.minhash_lsh_dedup(kept)
         comp = graph.connected_components(pairs)
@@ -153,7 +146,7 @@ def _numeric_order_key(
     """Order-preserving numeric image of ``order_col`` for the two-level
     prefix layout, or None when the column is already numeric.
 
-    Promotions are TIMEZONE-FREE by construction (r14 review: casting a
+    Promotions are TIMEZONE-FREE by construction (casting a
     date/ntz wall time through the session-zone ``timestamp`` is not
     injective — a spring-forward DST gap maps two distinct wall times
     to one instant, silently violating prefix_count_below's
@@ -168,8 +161,8 @@ def _numeric_order_key(
     numeric image and raises, naming the ``windowed_streams=True``
     escape — the per-stream window form orders by ANY comparable type,
     and when streams are many and small the streams themselves supply
-    the parallelism (r13 ADVICE: rejecting these keys outright was a
-    capability regression vs the pre-r13 window form)."""
+    the parallelism (rejecting these keys outright would lose what
+    the window form can do)."""
     if order_col not in dtypes:
         raise ValueError(
             f"{op}: order_col {order_col!r} is not a column of the "
@@ -178,7 +171,7 @@ def _numeric_order_key(
     # EXACT type-name match (plus the parameterized decimal family):
     # a prefix test would let 'interval day to second' pass as 'int'
     # and die later inside prefix_count_below with an error that never
-    # mentions order_col (review finding)
+    # mentions order_col
     t = dtypes[order_col]
     if t in _NUMERIC_ORDER_TYPES or t.startswith("decimal("):
         return None
@@ -208,8 +201,8 @@ def _stream_start_offsets(
     max_stream_groups: int,
     windowed_streams: bool,
 ) -> DataFrame:
-    """Shared offsets core for both packing operators (r14 review: the
-    two siblings had drifted line-for-line copies): given ``sized``
+    """Shared offsets core for both packing operators (one copy, so the
+    two cannot drift apart): given ``sized``
     (columns exactly [stream, order, n_tokens], pre-filtered of NULLs),
     attach ``_start`` = total n_tokens over strictly-earlier rows of
     the same stream, with the DUPLICATE-(stream, order)-key raise
@@ -223,12 +216,11 @@ def _stream_start_offsets(
     localCheckpoint'ed first — the primitive consumes its input from
     two plan branches (the rng min/max aggregate and the celled main
     path), and without the checkpoint each branch re-derives the
-    compression from a full corpus scan (the r13 aggregation-buffer
-    audit's repeated-scan class). ``windowed_streams=True``: ONE
+    compression from a full corpus scan. ``windowed_streams=True``: ONE
     per-stream cumulative window directly over ``sized`` — the
     duplicate check rides the window's own sort via lag (Spark's
     NaN = NaN is TRUE, probed, so NaN order keys cannot slip past it),
-    costing zero extra shuffles (second-pass review: routing this
+    costing zero extra shuffles (routing this
     branch through the compression aggregate doubled the shuffle
     volume for the exact high-cardinality case the escape exists
     for) — correct for any comparable order type. Both paths compute
@@ -248,7 +240,7 @@ def _stream_start_offsets(
         # null-safe equality: callers pre-filter NULL order keys, but a
         # plain == would let duplicate NULLs through silently if one
         # ever forgot (NULL == NULL is NULL); eqNullSafe keeps both
-        # paths enforcing the identical invariant (third-pass review).
+        # paths enforcing the identical invariant.
         # Side effect accepted: a partition-FIRST row with a NULL order
         # key also trips the guard (lag is NULL there) — any NULL order
         # key is already a precondition violation, and a loud raise
@@ -280,13 +272,13 @@ def _stream_start_offsets(
     val = order_col
     if promoted is not None:
         # no leading underscore: prefix_count_below reserves that
-        # namespace for its internals (r14 review); stream_col and
+        # namespace for its internals; stream_col and
         # order_col are caller-chosen, so probe for collisions instead
-        # of assuming them away (second-pass review: stream_col =
+        # of assuming them away (stream_col =
         # f"{order_col}__num" would have been silently overwritten)
         # case-INSENSITIVE probe: Spark resolves names case-
         # insensitively by default, so a case-variant collision would
-        # still overwrite (third-pass review, reproduced)
+        # still overwrite
         taken = {c.lower() for c in compressed.columns}
         val = f"{order_col}__num"
         while val.lower() in taken:
@@ -335,11 +327,11 @@ def pack_sequences(
 
     Scale (100 TB): the cumulative stream offset is the TWO-LEVEL
     distributed prefix sum (``ranking.prefix_count_below``), the same
-    layout ``pack_segments`` moved to in r13 — a plain
+    layout ``pack_segments`` uses — a plain
     ``Window.partitionBy(stream)`` cumulative sum funnels each stream
     through ONE task's sort, and with a dominant language (English is
     routinely >half a web corpus) that is a corpus-sized single-task
-    sort (r13 VERDICT: this operator was the audit's miss). date and
+    sort. date and
     timestamp order keys promote to a zone-free monotone numeric image
     (``_numeric_order_key`` — offsets unchanged); ``windowed_streams=
     True`` keeps the classic per-stream-window form for
@@ -378,19 +370,6 @@ def pack_sequences(
         "n_tokens",
         F.expr(f"_start div {b}").cast("long").alias("chunk_id"),
     )
-
-
-def write_curated(curated: DataFrame, path: str) -> None:
-    """Land the curated corpus partitioned by (split, lang) with dynamic
-    partition overwrite — re-running a curation batch replaces its own
-    partitions and never duplicates or truncates others'."""
-    spark = curated.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        curated.write.partitionBy("split", "lang").mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def leakage_safe_split(
@@ -581,12 +560,6 @@ def corpus_diff(
     return o.join(n, "_id", "full_outer").select(
         F.col("_id").alias(id_col), "old_h", "new_h", status.alias("status")
     )
-
-
-def corpus_diff_summary(diff: DataFrame) -> DataFrame:
-    """Status counts from :func:`corpus_diff` — the release-gate
-    numbers (4 rows max; churn thresholds alert on these)."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def token_budget_allocation(per_source: DataFrame, budget: int) -> DataFrame:
@@ -815,8 +788,8 @@ def pack_segments(
     table. A plain ``Window.partitionBy(stream)`` cumulative sum would
     funnel each stream through ONE task's sort — with a dominant
     language (English is routinely >half a web corpus) that is a
-    corpus-sized single-task sort, exactly the skew this avoids (r12
-    VERDICT advisory). Monotonicity of the bucket map in the order key
+    corpus-sized single-task sort, exactly the skew this avoids.
+    Monotonicity of the bucket map in the order key
     (int64→double cast is order-preserving; within-bucket windows
     compare the ORIGINAL key) keeps the offsets exact wherever the
     bucket cuts land. Per-document segment expansion stays an in-row
@@ -834,7 +807,7 @@ def pack_segments(
     and is the RIGHT plan when stream cardinality exceeds
     ``max_stream_groups`` (many small streams are themselves the
     parallelism; the prefix core's broadcast cell map would be the
-    bottleneck instead — r13 ADVICE). Both paths compute the identical
+    bottleneck instead). Both paths compute the identical
     pure function of (stream, order, counts), so switching never
     changes values. On the prefix path stream cardinality is bounded by
     ``max_stream_groups`` (enforced in-plan by the primitive's guard).

@@ -7,8 +7,7 @@ every child row BEFORE the shuffle — rows the filter rejects are
 *definitely* not in the parent (Bloom filters have no false negatives),
 so only probable matches pay the exchange. The exact join downstream
 then resolves the false positives, which makes the whole construction
-EXACT: ``bloom_semi_join`` ≡ plain left-semi join and
-``bloom_anti_join`` ≡ plain left-anti join, row for row. This is the
+EXACT: ``bloom_anti_join`` ≡ plain left-anti join, row for row. This is the
 same row-level runtime-filter idea Spark's own
 ``InjectRuntimeFilter``/``BloomFilterAggregate`` applies when statistics
 let it; implementing it as an explicit operator makes the reduction
@@ -25,8 +24,9 @@ expressions (no JVM BloomFilter object crosses the Py4J boundary):
   (map-side partial combine means the shuffle carries at most m/64 rows
   per partition), collect the ≤ m/64 words — the collect is bounded by
   the FILTER size (8 KiB per 2^16 bits), never by the parent row count.
-- probe: one array<long> literal + ``getbit`` per hash, a pure
-  projection evaluated inside whole-stage codegen before any exchange.
+- probe: the words array attached from a broadcast one-row frame +
+  ``getbit`` per hash, a pure projection evaluated inside whole-stage
+  codegen before any exchange.
 
 False-positive rate ~ (1 - e^{-kn/m})^k; with the default k=5 the
 filter stays useful up to n ≈ m/8 keys. Saturation degrades pruning,
@@ -106,24 +106,6 @@ def _might_contain_col(
     return cond
 
 
-def might_contain(
-    words: list[int],
-    key: Column,
-    *,
-    num_bits: int = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> Column:
-    """TRUE iff all k bits for ``key`` are set — i.e. ``key`` is
-    *possibly* in the build set; FALSE means *definitely absent*.
-    Literal-array form for small filters / tests; the join helpers
-    below ship the words as a broadcast one-row frame instead, which
-    keeps big bitsets out of the task binary (a 2^21-bit literal
-    measured MiB-scale task binaries and ~30x slowdown)."""
-    return _might_contain_col(
-        F.lit(words), key, num_bits=num_bits, num_hashes=num_hashes
-    )
-
-
 def _with_words(child: DataFrame, words: list[int]) -> DataFrame:
     """Attach the filter words to every child row from a broadcast
     one-row ``local_frame``: a map-side attach (no shuffle) whose build
@@ -132,38 +114,6 @@ def _with_words(child: DataFrame, words: list[int]) -> DataFrame:
     expression."""
     row = local_frame(child.sparkSession, [(words,)], "__bloom_words array<bigint>")
     return child.crossJoin(F.broadcast(row))
-
-
-def bloom_semi_join(
-    child: DataFrame,
-    parent: DataFrame,
-    *,
-    child_key: str,
-    parent_key: str,
-    num_bits: int = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> DataFrame:
-    """EXACTLY ``child LEFT SEMI JOIN parent``, with bloom-rejected rows
-    (definitely unmatched) dropped before the exchange — the shuffle
-    carries matches + false positives only."""
-    words = bloom_build(
-        parent, parent_key, num_bits=num_bits, num_hashes=num_hashes
-    )
-    probed = _with_words(child, words)
-    mc = _might_contain_col(
-        F.col("__bloom_words"),
-        F.col(child_key),
-        num_bits=num_bits,
-        num_hashes=num_hashes,
-    )
-    keys = parent.select(F.col(parent_key).alias("__bloom_pk")).where(
-        F.col("__bloom_pk").isNotNull()
-    )
-    return (
-        probed.where(mc)
-        .drop("__bloom_words")
-        .join(keys, F.col(child_key) == F.col("__bloom_pk"), "left_semi")
-    )
 
 
 def bloom_anti_join(

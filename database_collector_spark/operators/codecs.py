@@ -14,7 +14,7 @@ two layers:
   are numeric metric samples end-to-end; the collector loop in
   collector/cmd/collector/database-collector.go only ships floats) —
   this tier exists for the training-data-pipeline extension surface.
-* **Optional-dependency: JPEG via Pillow, FLAC/OGG via soundfile.**
+* **Optional-dependency: JPEG via Pillow.**
   Gated exactly like the botocore SigV4 path in ``sinks/remote_write``:
   importable → real decode; absent → the caller chooses null-stats
   fail-soft or a loud ``NotImplementedError``. Nothing in the gate
@@ -41,7 +41,7 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 def sniff_format(payload: bytes | None) -> str | None:
     """Identify a media payload by magic bytes — the dispatch key for
-    ``decode_image_any``/``decode_audio_any``. Returns one of
+    ``decode_image_any``. Returns one of
     'ppm' | 'png' | 'jpeg' | 'wav' | 'flac' | 'ogg' | 'mp3' | None."""
     if not payload or len(payload) < 4:
         return None
@@ -215,15 +215,6 @@ def have_pillow() -> bool:
         return False
 
 
-def have_soundfile() -> bool:
-    try:
-        import soundfile  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def decode_jpeg(payload: bytes | None):
     """JPEG → ``(w, h, pixels)`` via Pillow, or ``None`` for malformed
     input. Raises ``NotImplementedError`` when Pillow is absent — the
@@ -246,28 +237,3 @@ def decode_jpeg(payload: bytes | None):
         return None
     w, h = img.size
     return w, h, np.asarray(img, dtype=np.uint8).reshape(-1, 3)
-
-
-def decode_audio_compressed(payload: bytes | None):
-    """FLAC/OGG → ``(rate, channels, n_frames, samples_int16)`` via
-    soundfile, or ``None`` for malformed input. Raises
-    ``NotImplementedError`` when soundfile is absent."""
-    if not have_soundfile():
-        raise NotImplementedError(
-            "compressed-audio decode requires soundfile "
-            "(pip install soundfile); the dependency-free tier covers WAV"
-        )
-    import io
-
-    import soundfile
-
-    if payload is None:
-        return None
-    try:
-        samples, rate = soundfile.read(io.BytesIO(payload), dtype="int16")
-    except Exception:
-        return None
-    arr = np.asarray(samples, dtype=np.int16)
-    if arr.ndim == 1:
-        arr = arr.reshape(-1, 1)
-    return rate, arr.shape[1], arr.shape[0], arr

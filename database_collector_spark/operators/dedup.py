@@ -105,9 +105,9 @@ def span_dedup(
     is the document with duplicated spans dropped.
     """
     # bind the split array ONCE per row: a lambda referencing the
-    # split(...) expression re-splits the document per span (review
-    # finding class — O(tokens · spans) per doc); against the bound
-    # column each slice is an O(span) copy of an existing array
+    # split(...) expression re-splits the document per span
+    # (O(tokens · spans) per doc); against the bound column each slice
+    # is an O(span) copy of an existing array
     wref = F.col("_w")
     segs = docs.select("doc_id", F.split(F.col(text_col), " ").alias("_w")).select(
         "doc_id",
@@ -344,8 +344,8 @@ def jaccard_from_arrays(
 
     THE one definition of the exact-Jaccard arithmetic (integer rational
     -> double divide -> round 4 -> non-strict threshold) shared by the
-    batch verifiers and the streaming twin — the engine-exactness
-    contract lives here, in one place.
+    batch verifiers — the engine-exactness contract lives here, in one
+    place.
     """
     return (
         attached.select(
@@ -612,9 +612,9 @@ def _shingle_buckets(
         F.explode("sh_arr").alias("shingle"),
     )
     if df_max is not None:
-        # drop hot shingles BEFORE collecting their bucket arrays (r13
-        # scale audit): the old order built the full per-shingle array
-        # first and filtered on its size after — a stopword-gram with
+        # drop hot shingles BEFORE collecting their bucket arrays: the
+        # old order built the full per-shingle array first and filtered
+        # on its size after — a stopword-gram with
         # 1e8 docs materializes a multi-GB aggregation buffer before
         # being thrown away. The pre-count costs one extra map-side-
         # combinable aggregate over the shingle stream (only on the
@@ -835,10 +835,10 @@ def set_similarity_join(
     """
     t = threshold_num / threshold_den
     assert 0 < t <= 1, "threshold must be in (0, 1]"
-    # bind the split array ONCE per row (review finding class): the
-    # shingle lambda referencing the split(...) expression re-splits
-    # the document per shingle position — O(tokens²) per doc on the
-    # corpus scan; against the bound column each slice is O(shingle)
+    # bind the split array ONCE per row: the shingle lambda referencing
+    # the split(...) expression re-splits the document per shingle
+    # position — O(tokens²) per doc on the corpus scan; against the
+    # bound column each slice is O(shingle)
     wref = F.col("_w")
     if shingle_words:
         n_sh = F.size(wref) - (shingle_words - 1)
@@ -925,50 +925,6 @@ def set_similarity_join(
             F.col("inter") * threshold_den >= F.lit(threshold_num) * F.col("un")
         )
     )
-
-
-def lsh_tune(
-    n_perm: int,
-    threshold: float,
-    *,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-    steps: int = 1000,
-) -> tuple[int, int]:
-    """Pick the MinHash-LSH banding (bands, rows) for a target Jaccard
-    ``threshold`` — the parameter choice `minhash_lsh_pairs` callers
-    otherwise hand-tune and `lsh_recall_report` measures after the fact.
-
-    For b bands of r rows the candidate probability at similarity s is
-    the S-curve p(s) = 1 − (1 − s^r)^b. Among all factorizations
-    b·r <= n_perm this minimizes the weighted error mass
-    fp_weight·∫₀ᵗ p(s) ds + fn_weight·∫ᵗ¹ (1 − p(s)) ds (rectangle rule,
-    ``steps`` points — the standard public tuning recipe, e.g. in the
-    datasketch library's documentation of the same curve). Driver-side
-    pure math: deterministic, no data touched; raise fn_weight when a
-    missed near-dup costs more than a wasted verify (the usual case —
-    the exact-Jaccard verify already removes false positives).
-    """
-    assert 0 < threshold < 1 and n_perm >= 2
-    best: tuple[float, int, int] | None = None
-    for r in range(1, n_perm + 1):
-        b = n_perm // r
-        if b < 1:
-            break
-        fp = fn = 0.0
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p
-            else:
-                fn += 1.0 - p
-        err = (fp_weight * fp + fn_weight * fn) / steps
-        # strict < keeps the SMALLEST r (cheapest bands) on exact ties
-        if best is None or err < best[0]:
-            best = (err, b, r)
-    assert best is not None
-    return best[1], best[2]
 
 
 def boundary_overlap_pairs(

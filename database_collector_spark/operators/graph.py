@@ -324,12 +324,12 @@ def cluster_summary(components: DataFrame, *, head: int = 64) -> DataFrame:
     list joined with ',' — a scalar column, so differential harnesses
     (and lake formats without nested-type support) consume it directly.
 
-    CONTRACT (r13 scale audit): the listing is CAPPED at the first
+    CONTRACT: the listing is CAPPED at the first
     ``head`` ids (n_docs stays exact), and ``roster_truncated``
     (= n_docs > head) says so PER ROW, so a consumer can detect a
-    capped roster without parsing the string (r13 ADVICE: the cap was
-    silent — an output-contract change external readers could only
-    discover by counting commas). The old form collect_list'd the FULL
+    capped roster without parsing the string (a silent cap is an
+    output-contract change external readers could only discover by
+    counting commas). The old form collect_list'd the FULL
     membership per component — a boilerplate mega-cluster (the common
     worst case real dedup runs hit) makes one aggregation buffer
     corpus-sized. The head comes from a per-component
@@ -369,70 +369,6 @@ def cluster_summary(components: DataFrame, *, head: int = 64) -> DataFrame:
         "doc_ids",
         (F.col("n_docs") > head).alias("roster_truncated"),
     )
-
-
-def pagerank(
-    edges: DataFrame,
-    nodes: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Fixed-iteration PageRank over (src, dst) multigraph edges.
-
-    Production (double) form: per iteration, each node's rank splits
-    evenly over its out-edges (multi-edges count), ranks are summed at
-    the destination, dangling mass (nodes with no out-edges) is
-    redistributed uniformly, and the damping teleport keeps the total
-    mass at 1. Per iteration: one join keyed by src + one aggregation
-    keyed by dst — two shuffles, the same profile as a Pregel
-    superstep; lineage is truncated per round with ``localCheckpoint``
-    (same rationale as connected_components).
-
-    ``nodes`` must carry one ``node`` row per vertex (isolated vertices
-    keep teleport-only rank). Returns (node, rank) with rank summing to
-    ~1 (unrounded double — see ``pagerank_uniform_exact`` for the
-    differential-gate-exact variant).
-    """
-    outdeg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("outdeg")
-    )
-    n_row = nodes.agg(F.count("*").alias("n_nodes"))
-    state = (
-        nodes.join(F.broadcast(n_row))
-        .select("node", (F.lit(1.0) / F.col("n_nodes")).alias("rank"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(n_iter):
-        contrib = (
-            edges.join(
-                state.join(outdeg, "node").withColumnRenamed("node", "src"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("linked"))
-        )
-        dangling = (
-            state.join(outdeg, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
-        )
-        state = (
-            nodes.join(contrib, "node", "left")
-            .join(F.broadcast(n_row))
-            .join(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    (1.0 - damping) / F.col("n_nodes")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("linked"), F.lit(0.0))
-                        + F.col("dangling_mass") / F.col("n_nodes")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return state
 
 
 def pagerank_uniform_exact(
@@ -524,7 +460,7 @@ def triangle_counts(edges: DataFrame, *, src: str = "src", dst: str = "dst") -> 
     reversed rows are normalized away. Output: (node, n_triangles) for
     nodes in >= 1 triangle.
     """
-    # NOTE (r15 optimization round): lazily checkpointing `e` and
+    # NOTE: lazily checkpointing `e` and
     # `oriented` for their three-way fan-outs was tried and MEASURED
     # SLOWER (3.6 -> 4.2 s at sf0.1): the distinct's Exchange is
     # byte-identical across the branches, so Spark's ReusedExchange
@@ -606,13 +542,13 @@ def kcore_peel(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # alive-count bookkeeping stays in the DRIVER (r15 optimization
-    # round): |alive| after a round is |alive| − n_drop, so the old
-    # per-round nodes.count() job is pure re-derivation. r16: the
-    # degree aggregate is CHECKPOINTED once per round and every other
-    # per-round frame (survivors, drop set, next alive set) is a cheap
-    # filter/anti-join over that materialization — the r15 shape
-    # re-ran the degree shuffle for the drop count AND the survivor
+    # alive-count bookkeeping stays in the DRIVER: |alive| after a
+    # round is |alive| − n_drop, so a per-round nodes.count() job would
+    # be pure re-derivation. The degree aggregate is CHECKPOINTED once
+    # per round and every other per-round frame (survivors, drop set,
+    # next alive set) is a cheap filter/anti-join over that
+    # materialization — deriving them from the edges instead re-ran
+    # the degree shuffle for the drop count AND the survivor
     # checkpoint (two full passes over the edge set per round where
     # one suffices). The initial node set is the round-1 degree
     # table's key column, so the separate union-distinct node

@@ -7,16 +7,15 @@ sizing — is real and tested. Decode has two tiers:
 
 * **Real, dependency-free**: binary PPM (P6) — a header parse + raw RGB
   bytes, so ``decode_ppm``/``decode_image`` do actual bytes→pixels work
-  with numpy only. ``extract_features(decode_stub=False)`` and
-  ``resize(decode_stub=False)`` run on decoded pixels via this path.
+  with numpy only. ``extract_features(decode_stub=False)`` runs on
+  decoded pixels via this path.
 * **Real, dependency-free (compressed)**: PNG 8-bit RGB via
   ``operators/codecs.py`` — stdlib zlib IS the PNG codec, so
   ``decode_image_any`` really decompresses and unfilters compressed
   rasters with no third-party imports.
-* **Optional-dependency real codecs**: JPEG via Pillow, FLAC/OGG via
-  soundfile (``codecs.decode_jpeg`` / ``codecs.decode_audio_compressed``)
-  — import-gated like the botocore SigV4 path; absent → null stats or a
-  loud error per ``on_missing_codec``.
+* **Optional-dependency real codec**: JPEG via Pillow
+  (``codecs.decode_jpeg``) — import-gated like the botocore SigV4 path;
+  absent → null stats or a loud error per ``on_missing_codec``.
 * **Stubbed**: video codecs need ffmpeg; ``frame_sample`` keeps an
   honest NotImplementedError for compressed containers and the
   ``decode_stub=True`` paths derive deterministic fake features from the
@@ -453,78 +452,6 @@ def extract_features(media: DataFrame, *, decode_stub: bool = True) -> DataFrame
     return media.mapInPandas(_batches, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("resized", T.BinaryType(), True),
-        T.StructField("out_w", T.IntegerType(), True),
-        T.StructField("out_h", T.IntegerType(), True),
-    ]
-)
-
-
-def resize(
-    media: DataFrame,
-    *,
-    out_w: int = 8,
-    out_h: int = 8,
-    decode_stub: bool = True,
-    max_rows_per_batch: int = 64,
-) -> DataFrame:
-    """Image resize plumbing: binary in, fixed-size binary out.
-
-    ``decode_stub=True`` treats the payload as a row-major byte grid
-    (side = floor(sqrt(n)) — deterministic, no decoder);
-    ``decode_stub=False`` REALLY decodes P6 PPM payloads and resamples
-    the luminance plane ((r+g+b)//3) of the actual w x h image. Both
-    paths share the nearest-neighbor index map — the same math PIL
-    NEAREST does.
-
-    ``max_rows_per_batch`` is the memory contract: Arrow hands mapInPandas
-    whole batches, so batch size x payload size must fit the executor —
-    set ``spark.sql.execution.arrow.maxRecordsPerBatch`` to this value
-    for real media (done here via repartition-free iteration: the stub
-    slices oversized batches itself, which is the portable form).
-    """
-
-    def _grid(p: bytes) -> tuple[bytes, int, int]:
-        if decode_stub:
-            side = max(1, int(len(p) ** 0.5))
-            return p[: side * side], side, side
-        decoded = decode_ppm(p)
-        if decoded is None:  # malformed -> 1x1 black, not a batch failure
-            return b"\0", 1, 1
-        w, h, px = decoded
-        lum = (px.sum(axis=1, dtype="int64") // 3).astype("uint8")
-        return lum.tobytes(), w, h
-
-    def _resize_one(p: bytes) -> bytes:
-        g, gw, gh = _grid(p)
-        return bytes(
-            g[(y * gh // out_h) * gw + (x * gw // out_w)]
-            for y in range(out_h)
-            for x in range(out_w)
-        )
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for lo in range(0, len(pdf), max_rows_per_batch):
-                part = pdf.iloc[lo : lo + max_rows_per_batch]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": part["doc_id"],
-                        "resized": [
-                            _resize_one(p if p is not None else b"\0")
-                            for p in part["payload"]
-                        ],
-                        "out_w": out_w,
-                        "out_h": out_h,
-                    }
-                )
-
-    return media.mapInPandas(_batches, schema=RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -705,7 +632,7 @@ def dhash_images(media: DataFrame) -> DataFrame:
     integer-mean the channels to grayscale, and for each of the 8x8
     left/right neighbor pairs set bit ``y*8 + x`` iff
     ``gray[y][x] < gray[y][x+1]``. Requires a 9x8 raster (the canonical
-    dHash sample grid — real pipelines downscale first via ``resize``);
+    dHash sample grid — real pipelines downscale to it first);
     other dims or malformed payloads yield null (null-not-panic).
 
     The 64-bit hash is emitted as 16 lowercase hex chars: brightness-
@@ -747,19 +674,6 @@ IMAGE_ANY_SCHEMA = T.StructType(
         T.StructField("sum_r", T.LongType(), True),
         T.StructField("sum_g", T.LongType(), True),
         T.StructField("sum_b", T.LongType(), True),
-    ]
-)
-
-AUDIO_ANY_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("codec", T.StringType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("sum_ch0", T.LongType(), True),
-        T.StructField("sum_ch1", T.LongType(), True),
-        T.StructField("peak", T.IntegerType(), True),
     ]
 )
 
@@ -868,119 +782,3 @@ def decode_image_any(
             yield pd.DataFrame(out)
 
     return media.mapInPandas(_batches, schema=IMAGE_ANY_SCHEMA)
-
-
-def decode_audio_any(
-    media: DataFrame, *, on_missing_codec: str = "null"
-) -> DataFrame:
-    """Magic-byte-dispatched audio decode: WAV via the chunk-walking
-    ``decode_wav``, FLAC/OGG via the soundfile-gated
-    ``codecs.decode_audio_compressed``. Same stats and policy contract
-    as ``decode_image_any``."""
-    from database_collector_spark.operators import codecs
-
-    if on_missing_codec not in ("null", "error"):
-        raise ValueError(f"on_missing_codec {on_missing_codec!r}")
-
-    def _decode(p):
-        kind = codecs.sniff_format(p)
-        if kind == "wav":
-            return kind, decode_wav(p)
-        if kind in ("flac", "ogg"):
-            try:
-                return kind, codecs.decode_audio_compressed(p)
-            except NotImplementedError:
-                if on_missing_codec == "error":
-                    raise
-                return kind, None
-        return kind, None
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "doc_id",
-            "codec",
-            "sample_rate",
-            "n_channels",
-            "n_frames",
-            "sum_ch0",
-            "sum_ch1",
-            "peak",
-        )
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                out["doc_id"].append(doc_id)
-                kind, decoded = _decode(p)
-                out["codec"].append(kind)
-                if decoded is None:
-                    for k in cols[2:]:
-                        out[k].append(None)
-                    continue
-                rate, ch, n, samples = decoded
-                sums = samples.sum(axis=0, dtype="int64")
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(ch)
-                out["n_frames"].append(n)
-                out["sum_ch0"].append(int(sums[0]) if n else 0)
-                out["sum_ch1"].append(int(sums[1]) if ch > 1 and n else None)
-                out["peak"].append(
-                    int(abs(samples.astype("int64")).max()) if n else 0
-                )
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_batches, schema=AUDIO_ANY_SCHEMA)
-
-
-def scene_changes(
-    frame_stats: DataFrame, *, threshold_milli: int = 60_000
-) -> DataFrame:
-    """Content-adaptive keyframe election over ``decode_frames`` output:
-    flag frames whose per-channel mean brightness jumps from the
-    previous frame by more than ``threshold_milli`` (milli-units summed
-    over R/G/B) — the scene-cut detector that replaces fixed every-nth
-    sampling when a video corpus should keep one frame per SHOT for the
-    downstream encoder (the standard histogram-difference cut heuristic,
-    reduced to channel means which the decode tier already emits).
-
-    Exactness: per-frame channel means are integer floor-div
-    milli-values from the exact pixel sums, deltas are integer — the
-    flag is engine-exact, no float anywhere. Plan: ONE doc-keyed window
-    (lag) over the frame stats; the first frame of every doc is always
-    a cut (delta NULL). Frames with null stats (malformed, quarantined
-    upstream) pass through with is_cut false and null delta.
-
-    Output: (doc_id, frame_idx, delta_milli, is_cut).
-    """
-    from pyspark.sql.window import Window
-
-    area = F.col("w").cast("long") * F.col("h").cast("long")
-    means = frame_stats.select(
-        "doc_id",
-        "frame_idx",
-        *[
-            F.when(area > 0, (F.col(f"sum_{c}") * 1000 - (F.col(f"sum_{c}") * 1000) % area) / area)
-            .cast("long")
-            .alias(f"m_{c}")
-            for c in ("r", "g", "b")
-        ],
-    )
-    w = Window.partitionBy("doc_id").orderBy("frame_idx")
-    delta = None
-    for c in ("r", "g", "b"):
-        d = F.abs(F.col(f"m_{c}") - F.lag(f"m_{c}").over(w))
-        delta = d if delta is None else delta + d
-    first = F.lag("frame_idx").over(w).isNull()
-    has_stats = F.col("m_r").isNotNull()
-    # A valid frame whose PREDECESSOR was quarantined (null stats) has a
-    # NULL delta but is not `first` — treat it like a first frame (cut):
-    # a real shot boundary must not hide behind one corrupt frame.
-    prev_valid = F.lag("m_r").over(w).isNotNull()
-    return means.select(
-        "doc_id",
-        "frame_idx",
-        delta.alias("delta_milli"),
-        (
-            has_stats
-            & (first | ~prev_valid | (F.coalesce(delta, F.lit(0)) >= threshold_milli))
-        ).alias("is_cut"),
-    )

@@ -103,20 +103,6 @@ def bm25_scores(
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int = 10,
-    **kwargs,
-) -> DataFrame:
-    """Top-k documents by BM25 score (doc_id ASC tie-break): the ranked
-    retrieval form. The global top-k is a sort-limit — Spark executes it
-    as per-partition TakeOrdered + driver merge of k·p rows, never a
-    full sort."""
-    scored = bm25_scores(docs, query_terms, **kwargs)
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
 def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
@@ -161,7 +147,7 @@ def exact_ratio_round(num: F.Column, den: F.Column, digits: int = 6) -> F.Column
     operands with den > 0, computed as EXACT integer half-up in
     DECIMAL(38,0): q = (2·10^d·num + den) intdiv (2·den), then ONE
     long→double cast and /10^d — the engine-proof quantization of the
-    token_gini fix (r16 rounding-class sweep). ``round(double, 6)``
+    token_gini fix. ``round(double, 6)``
     diverges between Spark (half-up on the double's shortest decimal
     repr) and DuckDB (binary-double rounding) exactly when the ratio
     lands on a representable decimal midpoint — reachable for ratios of
@@ -258,7 +244,7 @@ def prefix_count_below(
     spearman_by_group: a handful of groups) — for high-cardinality
     grouped ranking use a plain per-group window instead, where the
     groups themselves supply the parallelism. The contract is ENFORCED,
-    not docstring-only (r10 ADVICE): when ``keys`` is non-empty an
+    not docstring-only: when ``keys`` is non-empty an
     IN-PLAN guard (count-over-the-rng-table window wrapping
     ``raise_error``) fires at action time whenever the key domain
     exceeds ``max_key_groups`` (default 256 — 256 keys x 65536 cells
@@ -289,7 +275,7 @@ def prefix_count_below(
     each cumulative (see the in-code note below) equals the value at
     the bucket's first cell only while the cumulative is non-decreasing
     in the cell index — a signed counter would silently produce wrong
-    prefix values (r15 ADVICE; current callers guard this in-plan,
+    prefix values (current callers guard this in-plan,
     e.g. gini's ``_int_domain_guard(lo=0)``) — at corpus
     scale with an ~all-distinct value domain the compressed table is
     corpus-sized, so the second chained pass is a real second
@@ -348,7 +334,7 @@ def prefix_count_below(
     # NaN AND +/-Infinity excluded from the range: a NaN would poison
     # the min/max into NaN, and an Infinity would make span infinite —
     # every finite value then maps to cell 0 and the whole grid
-    # collapses into one bucket (confirmed in review); both get
+    # collapses into one bucket; both get
     # explicit edge cells below instead
     inf = float("inf")
     finite_u = F.when(~F.isnan(vd) & (vd > -inf) & (vd < inf), u)
@@ -543,7 +529,7 @@ def prefix_count_below(
     # every cumulative is non-decreasing in _cell, so a per-bucket MIN
     # of each cumulative column equals its value at the bucket's first
     # cell, keeping the whole family consistent with the primary.
-    # FUSED into the cell map itself (r15 optimization round): the
+    # FUSED into the cell map itself: the
     # per-bucket min rides a partition-only window over the SAME
     # bounded cell table — HashPartitioning(keys) from the histogram
     # aggregate already satisfies the (keys, _b) clustering, so the
@@ -632,7 +618,7 @@ def auc_exact(
     # filter BEFORE the projection: a .where() after .select() resolves
     # original names against the projection's own aliases, so an input
     # column literally named 's'/'y' would shadow the exclusion
-    # (r15 review sweep — the rank_select_by_group class)
+    # (the rank_select_by_group class)
     base = scored.where(
         F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
     ).select(F.col(score_col).alias("s"), lab.alias("y"))
@@ -682,7 +668,7 @@ def _auc_core(base, keys: list[str], coarse_buckets: int) -> DataFrame:
         F.when(
             (F.sum("pos") > 0) & (F.sum("neg") > 0),
             # 2U/(2·n_pos·n_neg) as EXACT integer half-up at 6 decimals
-            # (r16 rounding-class sweep — the token_gini midpoint class;
+            # (the token_gini midpoint class;
             # AUC is a ratio of exact integers, so round(double, 6)
             # midpoints are reachable)
             exact_ratio_round(
@@ -712,7 +698,7 @@ def spearman_by_group(
     groupBy collapses the corpus to per-(group, x, y) joint counts
     (value-domain compression); each column's doubled average rank
     2*avgrank = 2*|<v| + |=v| + 1 is then computed DIRECTLY on the
-    joint table (r16 fused fold) — values map to deterministic
+    joint table — values map to deterministic
     count-equalized monotone buckets per group per axis (the
     prefix_count_below cell-histogram construction over bounded
     broadcast tables; see that docstring for the balance bound), and
@@ -750,7 +736,7 @@ def spearman_by_group(
     verbatim); this extends the engine's stats tier (stats_moments'
     linear corr) to rank correlation.
     """
-    # filter before projecting (the alias-shadowing class, r15 sweep)
+    # filter before projecting (the alias-shadowing class)
     base = df.where(
         F.col(group_col).isNotNull()
         & F.col(x_col).isNotNull()
@@ -766,9 +752,9 @@ def spearman_by_group(
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint(eager=False)
     )
-    # FUSED joint rank fold (r16 optimization round): both doubled
+    # FUSED joint rank fold: both doubled
     # average ranks are computed DIRECTLY on the joint table — no
-    # marginal aggregates and no rank join-backs. The r15 two-pass form
+    # marginal aggregates and no rank join-backs. A two-pass form
     # built per-axis marginal tables (the y marginal is ~corpus-sized
     # for near-all-distinct values), ran prefix_count_below over each,
     # and equi-joined both rank tables back onto the joint frame — two
@@ -781,7 +767,7 @@ def spearman_by_group(
     # with the same deterministic count-equalized log-grid buckets as
     # prefix_count_below (boundaries only affect partitioning, never
     # results — see that docstring). The corpus-side plan is exactly two
-    # window exchanges (one per axis) + the moment aggregate. (The r15
+    # window exchanges (one per axis) + the moment aggregate. (A
     # union-based fusion attempt was slower because it needed a
     # checkpoint barrier before two join-backs; this form has NO
     # join-backs, so no barrier exists to pay.)
@@ -959,7 +945,7 @@ def auc_by_group(
     the parallelism.
     """
     lab = F.col(label_col).cast("int")
-    # filter before projecting (the alias-shadowing class, r15 sweep)
+    # filter before projecting (the alias-shadowing class)
     base = scored.where(
         F.col(group_col).isNotNull()
         & F.col(score_col).isNotNull()
@@ -1015,15 +1001,15 @@ def calibration_curve(
     if group_col:
         sel.insert(0, F.col(group_col).alias("g"))
         cond = cond & F.col(group_col).isNotNull()
-    # filter before projecting (the alias-shadowing class, r15 sweep)
+    # filter before projecting (the alias-shadowing class)
     base = scored.where(cond).select(*sel)
     # localCheckpoint (lazy): the compressed per-score table feeds the
     # prefix core's branches PLUS the totals and the bin join-back —
     # without it every branch re-derives `scored`'s whole upstream (the
     # registered gate's hashed classifier re-tokenized the corpus three
     # times: measured 8.2 -> 5.8 s at sf0.1). Values cannot move either
-    # way (the bucket cuts are deterministic aggregates, unlike the r10
-    # sketch cuts); the trade-off is AVAILABILITY: localCheckpoint
+    # way (the bucket cuts are deterministic aggregates, unlike sketch
+    # cuts); the trade-off is AVAILABILITY: localCheckpoint
     # truncates lineage, so a lost executor block fails the job for a
     # retry instead of recomputing — fail-stop, never wrong data, same
     # policy as _auc_core/spearman_by_group.
@@ -1065,7 +1051,7 @@ def calibration_curve(
             "bin",
             "n_docs",
             "n_pos",
-            # exact integer half-up (r16 rounding-class sweep)
+            # exact integer half-up
             exact_ratio_round(F.col("n_pos"), F.col("n_docs")).alias("pos_rate"),
             "lo_score",
             "hi_score",
@@ -1146,7 +1132,7 @@ def fixed_bin_calibration(
             "bin",
             "n_docs",
             "n_pos",
-            # exact integer half-up (r16 rounding-class sweep)
+            # exact integer half-up
             exact_ratio_round(F.col("n_pos"), F.col("n_docs")).alias("pos_rate"),
             "lo_score",
             "hi_score",
@@ -1310,7 +1296,7 @@ def quantiles_by_group(
     inherits the whole bulk; the keyed-domain ceiling shrinks to
     ``max_key_groups // 4`` per the core's contract.
     """
-    # filter before projecting (the alias-shadowing class, r15 sweep)
+    # filter before projecting (the alias-shadowing class)
     base = df.where(
         F.col(group_col).isNotNull() & F.col(val_col).isNotNull()
     ).select(F.col(group_col).alias("g"), F.col(val_col).alias("v"))
@@ -1636,7 +1622,7 @@ def ndcg_at_k(
             )
         ),
     ).otherwise(F.col(rank_col))
-    # filter before projecting (the alias-shadowing class, r15 sweep);
+    # filter before projecting (the alias-shadowing class);
     # the rank guard also now computes only on contract-included rows
     r = ranked.where((F.col(rank_col) <= k) & gfilter).select(
         *gkeys, F.col(id_col).alias("_id"), checked_rank.alias("_rk")
@@ -1729,7 +1715,7 @@ def map_at_k(
     ``check_unique_judgments=True`` arms the shared in-plan guard.
 
     Engine parity: hits/k and hits/n_rel are single divisions over
-    identical exact integers (bit-equal cross-engine, r9 idiom); the AP
+    identical exact integers (bit-equal cross-engine); the AP
     sum is <= k terms of exact-integer ratios rounded at 6 — the same
     accepted tiny-sum class as the NDCG discount sum. ``rank >= 1`` is
     enforced in-plan with the same raise_error guard as ndcg_at_k
@@ -1753,7 +1739,7 @@ def map_at_k(
             )
         ),
     ).otherwise(F.col(rank_col))
-    # filter before projecting (the alias-shadowing class, r15 sweep);
+    # filter before projecting (the alias-shadowing class);
     # the rank guard also now computes only on contract-included rows
     r = ranked.where((F.col(rank_col) <= k) & gfilter).select(
         *gkeys, F.col(id_col).alias("_id"), checked_rank.alias("_rk")
@@ -1841,7 +1827,7 @@ def cohen_kappa(
     EXACT far past the 2^63 row counts where BIGINT n² would overflow
     (n up to 1e18); the single final division casts both exact decimal
     operands to double (round-to-nearest of identical integers —
-    engine-equal, r9 idiom) and rounds at 6. kappa is NULL when the
+    engine-equal) and rounds at 6. kappa is NULL when the
     denominator is 0 — both raters constant on the SAME side (pe = 1,
     chance agreement is certain and the statistic is undefined); one
     constant rater against a mixed one yields an exact 0 (den =
@@ -1908,7 +1894,7 @@ def pr_curve(
     (threshold = the bin's lo_score), with pred_pos/tp exact suffix-
     summed integers, precision = tp/pred_pos and recall = tp/total_pos
     each ONE division over identical exact integers (bit-equal
-    cross-engine, r9 idiom). recall is NULL when the group has no
+    cross-engine). recall is NULL when the group has no
     positives at all (nothing to recall — the auc single-class
     stance).
 
@@ -1952,7 +1938,7 @@ def pr_curve(
             "threshold",
             "pred_pos",
             "tp",
-            # exact integer half-up (r16 rounding-class sweep): both are
+            # exact integer half-up: both are
             # ratios of exact integer counts, the reachable-midpoint class
             exact_ratio_round(F.col("tp"), F.col("pred_pos")).alias("precision"),
             F.when(
@@ -2368,7 +2354,7 @@ def ks_statistic(
     # partition-spanning window: a Window.partitionBy() total over the
     # per-score table funnels it (corpus-sized when scores are
     # ~all-distinct) through one task, the exact anti-pattern this
-    # operator's docstring rules out (review finding; the
+    # operator's docstring rules out (the
     # calibration_curve totals pattern)
     tots = per_score.groupBy(*gkeys).agg(
         F.sum("pos").cast("long").alias("_np"),
@@ -2377,8 +2363,8 @@ def ks_statistic(
     # no broadcast HINT on the grouped join: tots' lineage bypasses
     # prefix_count_below's 256-group guard, so forcing a broadcast
     # could hit a driver OOM before the guard's clean raise on a
-    # high-cardinality group column; AQE broadcasts small sides anyway
-    # (review finding). The ungrouped total is one row by construction.
+    # high-cardinality group column; AQE broadcasts small sides anyway.
+    # The ungrouped total is one row by construction.
     joined = (
         below.join(tots, gkeys)
         if gkeys
@@ -2460,7 +2446,7 @@ def reciprocal_rank(
             )
         ),
     ).otherwise(F.col(rank_col))
-    # filter before projecting (the alias-shadowing class, r15 sweep);
+    # filter before projecting (the alias-shadowing class);
     # the rank guard also now computes only on contract-included rows
     r = ranked.where((F.col(rank_col) <= k) & gfilter).select(
         *gkeys, F.col(id_col).alias("_id"), checked_rank.alias("_rk")
@@ -2495,7 +2481,7 @@ def reciprocal_rank(
         if gkeys
         else firsts.crossJoin(n_rel)
     )
-    # exact integer half-up (r16 rounding-class sweep): 1/rank IS the
+    # exact integer half-up: 1/rank IS the
     # reachable-midpoint class (1/640 = 0.0015625 — a 7-digit decimal
     # midpoint — occurs the first time a relevant doc ranks 640th)
     rr = F.when(
@@ -2692,7 +2678,7 @@ def chi2_association(
         "n_a",
         "n_b",
         "n",
-        # exact integer half-up (r16 rounding-class sweep): expected and
+        # exact integer half-up: expected and
         # contrib are ratios of exact integers; the helper's two-step
         # long division keeps contrib's dev² numerator inside the same
         # DECIMAL(38,0) envelope the double form already required
@@ -2870,7 +2856,7 @@ def gini_by_group(
         # x 1e7 occurrences), the ANSI overflow class the docstring's
         # exactness claim rules out. decimal(19,0) covers the FULL
         # int64 range — 18 digits would itself overflow on valid
-        # v >= 1e18 inputs (review finding)
+        # v >= 1e18 inputs
         .withColumn(
             "_w",
             F.col("_v").cast("decimal(19,0)") * F.col("_cnt").cast("decimal(19,0)"),

@@ -220,12 +220,18 @@ def assign_centroids(
     return out.drop("cents", "cnorms")
 
 
-def kmeans_centroids(
+def kmeans_fit(
     embeddings: DataFrame, *, k: int = 8, iters: int = 3, dim: int = EMBED_DIM
-) -> list[list[int]]:
+) -> tuple[DataFrame, list[list[int]]]:
     """Deterministic Lloyd's k-means in quantized integer space — the
     trained coarse quantizer for IVF (``lsh_buckets`` is the untrained
-    alternative; real IVF trains its cells).
+    alternative; real IVF trains its cells). Returns the trainer's
+    materialized quantized frame (vec_id, qe, qnorm2) and the k
+    centroids, so a gate's final assignment reads that one
+    materialization instead of re-deriving with_quantized from a second
+    corpus scan (within ONE gate invocation — the frame dies with the
+    returned DataFrame, nothing is memoized across queries). k-means is
+    PQ with one subspace: the trainer is ``pq_fit_quantized`` with m = 1.
 
     Determinism (and the cross-engine gate) comes from three choices:
     init = the k lowest vec_ids' vectors (no RNG); assignment ties break
@@ -241,21 +247,7 @@ def kmeans_centroids(
     MLlib's KMeans does); all per-vector work is a broadcast-centroid
     projection plus one (cid, pos) partial-agg shuffle of the
     posexploded components — at 100 TB that shuffle moves
-    k*dim*|partitions| partial rows, not |vectors|*dim.
-    """
-    return kmeans_fit(embeddings, k=k, iters=iters, dim=dim)[1]
-
-
-def kmeans_fit(
-    embeddings: DataFrame, *, k: int = 8, iters: int = 3, dim: int = EMBED_DIM
-) -> tuple[DataFrame, list[list[int]]]:
-    """``kmeans_centroids`` that ALSO returns the trainer's materialized
-    quantized frame (vec_id, qe, qnorm2), so a gate's final assignment
-    reads that one materialization instead of re-deriving with_quantized
-    from a second corpus scan (within ONE gate invocation — the frame
-    dies with the returned DataFrame, nothing is memoized across
-    queries). k-means is PQ with one subspace: the trainer is
-    ``pq_fit_quantized`` with m = 1."""
+    k*dim*|partitions| partial rows, not |vectors|*dim."""
     base, books = pq_fit_quantized(
         with_quantized(embeddings).select("vec_id", "qe", "qnorm2"),
         m=1, k=k, iters=iters, dim=dim,
@@ -442,33 +434,6 @@ def incremental_assign(
     )
 
 
-def pq_train(
-    embeddings: DataFrame,
-    *,
-    m: int = 4,
-    k: int = 4,
-    iters: int = 2,
-    dim: int = EMBED_DIM,
-) -> list[list[list[int]]]:
-    """Product-quantization codebooks: split the quantized vector into
-    ``m`` contiguous subvectors of dim/m and train an independent
-    deterministic Lloyd's codebook of ``k`` centroids per subspace (same
-    determinism contract as ``kmeans_centroids``: lowest-vec_id seeds,
-    ties to lowest code, integer re-quantized centroids, empty cluster
-    keeps its centroid).
-
-    Returns ``books[j][c]`` = centroid ``c`` of subspace ``j``. PQ is
-    the compressed-ANN scale path: a 64-dim vector becomes m small
-    codes (here 4 bytes vs 512), so a 100 TB embedding corpus's code
-    table fits a fraction of the footprint and ADC search scans codes,
-    not vectors. Driver traffic stays k rows per iteration per subspace.
-    """
-    return pq_fit_quantized(
-        with_quantized(embeddings).select("vec_id", "qe"),
-        m=m, k=k, iters=iters, dim=dim,
-    )[1]
-
-
 def pq_fit_quantized(
     quantized: DataFrame,
     *,
@@ -477,15 +442,26 @@ def pq_fit_quantized(
     iters: int = 2,
     dim: int = EMBED_DIM,
 ) -> tuple[DataFrame, list[list[list[int]]]]:
-    """``pq_train`` over an ALREADY-quantized (vec_id, qe) frame — the
-    entry point when the vectors are themselves derived integers (the
-    IVF-PQ residual path: qe = vector − its coarse centroid, still exact
-    BIGINTs, so the residual-codebook chain stays cross-engine
-    replayable). Returns the books AND the trainer's materialized input
-    frame (all input columns preserved) so the encode/search steps of a
-    gate reuse the one materialization instead of re-deriving the
-    quantized corpus (within ONE gate invocation — nothing is memoized
-    across queries).
+    """Product-quantization codebooks over an already-quantized
+    (vec_id, qe) frame: split each vector into ``m`` contiguous
+    subvectors of dim/m and train an independent deterministic Lloyd's
+    codebook of ``k`` centroids per subspace (same determinism contract
+    as ``kmeans_fit``: lowest-vec_id seeds, ties to lowest code, integer
+    re-quantized centroids, empty cluster keeps its centroid).
+    ``books[j][c]`` = centroid ``c`` of subspace ``j``. PQ is the
+    compressed-ANN scale path: a 64-dim vector becomes m small codes
+    (here 4 bytes vs 512), so a 100 TB embedding corpus's code table
+    fits a fraction of the footprint and ADC search scans codes, not
+    vectors. Driver traffic stays k rows per iteration per subspace.
+
+    Raw embeddings enter through ``with_quantized``; vectors that are
+    themselves derived integers enter directly (the IVF-PQ residual
+    path: qe = vector − its coarse centroid, still exact BIGINTs, so the
+    residual-codebook chain stays cross-engine replayable). Returns the
+    books AND the trainer's materialized input frame (all input columns
+    preserved) so the encode/search steps of a gate reuse the one
+    materialization instead of re-deriving the quantized corpus (within
+    ONE gate invocation — nothing is memoized across queries).
 
     Below ``SMALL_CORPUS_THRESHOLD`` rows (read at call time; 0 forces
     the distributed loop) the corpus trains in ONE ``_lloyd_kernel``
@@ -517,24 +493,18 @@ def _books_frame(spark, books: list[list[list[int]]]) -> DataFrame:
     )
 
 
-def pq_encode(
-    embeddings: DataFrame, books: list[list[list[int]]]
-) -> DataFrame:
-    """Attach ``codes`` (array<int>, one code per subspace) to each
-    vector: for every subspace, the nearest codebook centroid in exact
-    integer arithmetic, ties to the lowest code. Zero shuffle: the
-    codebooks ride a broadcast ``_books_frame`` row, and the codes are a
-    nested higher-order-function projection over it, so encoding runs at
-    scan speed on any corpus size."""
-    return pq_encode_quantized(with_quantized(embeddings), books)
-
-
 def pq_encode_quantized(
     base: DataFrame, books: list[list[list[int]]]
 ) -> DataFrame:
-    """``pq_encode`` over a frame already carrying integer ``qe`` (all
-    other columns pass through) — used directly by the IVF-PQ residual
-    path, where qe is the per-cell residual and ``cid`` rides along."""
+    """Attach ``codes`` (array<int>, one code per subspace) to each row
+    of a frame carrying integer ``qe`` (all other columns pass through;
+    raw embeddings enter through ``with_quantized``, the IVF-PQ residual
+    path passes its per-cell residuals with ``cid`` riding along): for
+    every subspace, the nearest codebook centroid in exact integer
+    arithmetic, ties to the lowest code. Zero shuffle: the codebooks
+    ride a broadcast ``_books_frame`` row, and the codes are a nested
+    higher-order-function projection over it, so encoding runs at scan
+    speed on any corpus size."""
     m = len(books)
     sub = len(books[0][0])
     spark = base.sparkSession
@@ -922,75 +892,6 @@ def embedding_covariance(
     )
 
 
-def pca_project(
-    embeddings: DataFrame,
-    *,
-    k: int = 2,
-    dims: int = 16,
-    scale: int = 1_000_000,
-    n_iter: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Project embeddings onto their top-``k`` principal components.
-
-    The covariance comes from ``embedding_covariance``'s single
-    aggregate (driver traffic = ONE row — the same bounded-collect
-    budget as the k-means tier); eigenvectors come from deterministic
-    power iteration with deflation on the tiny dims×dims driver-side
-    matrix (fixed e_0 basis init, fixed iteration count — no RNG); the
-    projection is a broadcast map-side dot product, zero shuffle.
-    Exactness note: components are floats by nature — the differential
-    gate covers the covariance sums (exact ints); this projection is
-    pinned against numpy's eigendecomposition in pytest instead.
-    """
-    import numpy as np
-
-    row = (
-        embedding_covariance(
-            embeddings, dims=dims, scale=scale, vec_col=vec_col
-        )
-        .collect()
-    )
-    n = row[0]["n"]
-    cov = np.zeros((dims, dims))
-    for r in row:
-        c = (n * r["s_ij"] - r["s_i"] * r["s_j"]) / (n * n * scale * scale)
-        cov[r["i"], r["j"]] = cov[r["j"], r["i"]] = c
-    comps = []
-    m = cov.copy()
-    for c_idx in range(k):
-        v = np.zeros(dims)
-        v[c_idx % dims] = 1.0
-        for _ in range(n_iter):
-            v = m @ v
-            nv = float(np.linalg.norm(v))
-            if nv == 0.0:
-                break
-            v = v / nv
-        # sign convention: largest-|coord| entry positive
-        top = int(np.argmax(np.abs(v)))
-        if v[top] < 0:
-            v = -v
-        comps.append(v)
-        lam = float(v @ m @ v)
-        m = m - lam * np.outer(v, v)
-    # mean vector from the same collected row set (i == j rows hold s_i)
-    means = np.zeros(dims)
-    for r in row:
-        if r["i"] == r["j"]:
-            means[r["i"]] = r["s_i"] / (n * scale)
-    projections = []
-    for c_idx, v in enumerate(comps):
-        centered_dot = sum(
-            (F.element_at(F.col(vec_col), d + 1).cast("double") - float(means[d]))
-            * float(v[d])
-            for d in range(dims)
-        )
-        projections.append(centered_dot.alias(f"pc{c_idx + 1}"))
-    return embeddings.select(F.col(id_col), *projections)
-
-
 # ---------------------------------------------------------------------------
 # scalar quantization (SQ8) — the per-dimension compressed tier
 # ---------------------------------------------------------------------------
@@ -1165,31 +1066,6 @@ def jl_project(
     ).withColumn("distortion", distortion)
 
 
-def jl_distortion_report(
-    embeddings: DataFrame, *, k: int = 8, seed: int = 7, dim: int = EMBED_DIM
-) -> DataFrame:
-    """One-row JL quality audit: min / mean / max norm distortion and
-    the fraction inside ±30% — the measurement that justifies (or
-    rejects) a chosen k before committing the projected index, same
-    measurement-tier shape as lsh_recall_report. One aggregate over the
-    map-side projection; the shuffle carries one row."""
-    d = jl_project(embeddings, k=k, seed=seed, dim=dim)
-    return d.filter(F.col("x_norm2") > 0).agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.round(F.min("distortion"), 6).alias("min_distortion"),
-        F.round(F.avg("distortion"), 6).alias("mean_distortion"),
-        F.round(F.max("distortion"), 6).alias("max_distortion"),
-        F.round(
-            F.avg(
-                F.when(
-                    (F.col("distortion") >= 0.7) & (F.col("distortion") <= 1.3), 1.0
-                ).otherwise(0.0)
-            ),
-            6,
-        ).alias("frac_within_30pct"),
-    )
-
-
 def embedding_outliers(
     embeddings: DataFrame, *, top_n: int = 20, dims: int = EMBED_DIM
 ) -> DataFrame:
@@ -1302,11 +1178,9 @@ def cell_cosine_probe(
     queries: DataFrame, cells: DataFrame, *, topk: int = 3
 ) -> DataFrame:
     """Exact-cosine top-k of each query against ONLY its own coarse
-    cell — the IVF probe step shared by the trained-probe gate
-    (workloads_similarity.q_ann_ivf_kmeans_probe) and the persisted-index
-    round-trip gate (workloads_similarity.q_ann_index_roundtrip): ONE
-    definition, because the round-trip's bit-identity claim only holds
-    if both compute the same ranks and rounding. Both inputs carry
+    cell — the IVF probe step, served by the persisted-index round-trip
+    gate (workloads_similarity.q_ann_index_roundtrip) from the loaded
+    artifacts. Both inputs carry
     (vec_id, qe, qnorm2, cid); queries are broadcast into a cid
     equi-join, so probe work is Σ|probed cell| rows at any corpus
     size. Output: (q_id, c_id, cos, rank), self-matches excluded."""
@@ -1519,7 +1393,7 @@ def semdedup_prune(
 ) -> DataFrame:
     """SemDeDup-style semantic pruning (Abbas et al. 2023, public):
     cluster the corpus with the deterministic integer k-means
-    (``kmeans_centroids``), then WITHIN each cluster drop any vector
+    (``kmeans_fit``), then WITHIN each cluster drop any vector
     that has cosine similarity >= ``threshold`` with another member that
     dominates it — the paper's keep-the-extreme rule, here "keep the
     member FARTHEST from its centroid" (exact integer squared distance;

@@ -1,20 +1,14 @@
-"""Sketch-only production aggregates (extension surface).
+"""Mergeable sketch aggregates (extension surface): roaring-style
+bitmaps, count-min cells, deterministic md5 HLL registers and Bloom
+words.
 
-The driver gates ``approx_distinct`` / ``approx_quantiles``
-(workloads_ts.py) pair each sketch with its EXACT twin so the result is
-oracle-hashable — right for a correctness gate, wrong for production: the
-exact side is the expensive part (count-distinct shuffles every distinct
-value; exact percentiles sort every group). These helpers are the
-production-shape API: sketch ONLY, collect-free, exact-agg-free.
-
-100 TB cost model: both sketches are algebraic aggregates — each input
-partition folds into a fixed-size sketch (HLL++ registers / GK summary)
-map-side, and the shuffle moves ONE sketch per (group x partition), not
-rows. That is the whole point: the network cost is O(groups x
-sketch_size), independent of row count, and there is no sort anywhere in
-the plan (pinned by tests/test_plan_quality.py). Mergeability is also
-what makes the same calls valid under Structured Streaming — partial
-sketches merge across micro-batches like any other partial aggregate.
+100 TB cost model: every sketch here is an algebraic aggregate — each
+input partition folds into a fixed-size sketch map-side, and the shuffle
+moves ONE sketch per (group x partition), not rows, so the network cost
+is O(groups x sketch_size), independent of row count. Mergeability is
+also what makes the same calls valid under Structured Streaming —
+partial sketches merge across micro-batches like any other partial
+aggregate.
 """
 
 from __future__ import annotations
@@ -25,56 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def approx_distinct(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    *,
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Per-group HLL++ approximate count-distinct of ``value_col``.
-
-    ``rsd`` is the target relative standard deviation (0.02 => ~4k
-    registers, measured within 5% of exact on every fixture SF — see the
-    q_approx_distinct gate, which pins that band against an exact oracle
-    so this helper's precision claim stays evidence-backed).
-
-    Output: group columns + ``approx_<value_col>`` (long).
-    """
-    return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(value_col, rsd=rsd).alias(f"approx_{value_col}")
-    )
-
-
-def approx_quantiles(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    *,
-    probabilities: Sequence[float] = (0.5, 0.9, 0.99),
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Per-group GK-sketch quantiles of ``value_col`` at the given
-    probabilities — rank error <= 1/accuracy, never a sort.
-
-    Output: group columns + one ``q<pct>`` double column per probability
-    (q50, q90, q99 by default; fractional percents get the dot kept,
-    e.g. q99.9).
-    """
-
-    def _name(p: float) -> str:
-        pct = p * 100
-        return f"q{pct:g}"
-
-    aggs = [
-        F.percentile_approx(value_col, F.lit(p), F.lit(accuracy))
-        .cast("double")
-        .alias(_name(p))
-        for p in probabilities
-    ]
-    return df.groupBy(*group_cols).agg(*aggs)
-
-
 def bitmap_distinct(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -82,7 +26,7 @@ def bitmap_distinct(
 ) -> DataFrame:
     """Per-group EXACT count-distinct of a non-negative integer key via
     mergeable roaring-style bitmaps — the middle point between
-    ``approx_distinct`` (fixed cost, ~2% error) and a plain
+    ``approx_count_distinct`` (fixed cost, ~2% error) and a plain
     COUNT(DISTINCT) (exact, but the Expand/shuffle carries every
     distinct value as its own row).
 
@@ -240,7 +184,7 @@ def cms_inner_product(cells_a: DataFrame, cells_b: DataFrame) -> DataFrame:
 # Deterministic HLL registers (cross-engine reproducible sketch state)
 # ---------------------------------------------------------------------------
 #
-# approx_count_distinct above is the production default, but its register
+# approx_count_distinct is the production default, but its register
 # hash is Spark-internal: the sketch STATE cannot be recomputed by another
 # engine, so gates can only bound its error. This tier is the
 # persistable/mergeable alternative the 100 TB rollup story needs: an HLL
@@ -269,10 +213,8 @@ def hop_expand(
 ) -> DataFrame:
     """Expand each row into every hop-aligned sliding window containing
     it: input has an epoch-second BIGINT column ``s_col``; output keeps
-    all columns and adds ``win_s`` (the window's start second). The ONE
-    definition shared by the batch sliding-HLL gate, the streaming
-    stateful twin, and their parity test — so the expansion cannot
-    silently drift between them.
+    all columns and adds ``win_s`` (the window's start second), the
+    expansion the sliding-HLL gate folds its registers over.
 
     ``window_s`` must be a whole multiple of ``hop_s``: with
     ``nhops = window_s // hop_s`` copies a non-divisible pair would

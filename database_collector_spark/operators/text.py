@@ -514,7 +514,7 @@ def _feature_col(tok_col: str, bigrams: bool) -> F.Column:
 
 def _check_clf_params(n_buckets: int, salt: str) -> None:
     """Shared guard for EVERY function that interpolates the salt into
-    a SQL expression string (hashed_classifier, hash_weight_table and
+    a SQL expression string (hashed_classifier and
     dsir_logratio_weights): identifier-safe salts can never alter the
     expression, and the entry points accept exactly the same salt
     domain so a weight table always round-trips through the classifier.
@@ -636,22 +636,6 @@ def hashed_classifier(
         F.when(nonzero & (F.col("logit_milli") > 0), F.lit("keep"))
         .otherwise(F.lit("drop"))
         .alias("label"),
-    )
-
-
-def hash_weight_table(spark, *, n_buckets: int = 4096, salt: str = "clf") -> DataFrame:
-    """The deterministic pseudo-model as an explicit (bucket,
-    weight_milli) table — what a trained model would ship as parquet.
-    Built with ONE sequence-range select (n_buckets rows, no data scan);
-    feeding it back through ``hashed_classifier(weights=...)`` must
-    reproduce the in-row path bit-for-bit (pinned in tests)."""
-    _check_clf_params(n_buckets, salt)
-    return spark.range(n_buckets).select(
-        F.col("id").alias("bucket"),
-        F.expr(
-            f"CAST(conv(substring(md5(concat('w:', CAST(id AS STRING),"
-            f" ':', '{salt}')), 1, 8), 16, 10) AS BIGINT) % 2001 - 1000"
-        ).alias("weight_milli"),
     )
 
 

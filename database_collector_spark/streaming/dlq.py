@@ -7,8 +7,7 @@ recipe is per-batch dead-lettering: validate inside ``foreachBatch``,
 write passing rows to the main sink and failing rows — WITH the reason —
 to a quarantine path, both through the replay-safe batch-id partition
 overwrite so at-least-once delivery still converges to exactly-once
-contents on BOTH paths. This is the streaming twin of the batch
-corrupt-line quarantine in ``sources/jsonl.py``/``sources/csv.py``.
+contents on BOTH paths.
 
 The batch is validated ONCE: the predicate computes per-row from plain
 columns, so the good/bad split is two filters over one cached batch —

@@ -606,7 +606,7 @@ FROM ranked WHERE rank <= 3
 
 def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a TRAINED coarse quantizer: deterministic Lloyd's k-means
-    (operators/similarity.py:kmeans_centroids) instead of the untrained
+    (operators/similarity.py::kmeans_fit) instead of the untrained
     sign-projection buckets of ann_ivf_probe. Gate output = the trained
     cell structure: per cell, member count, member-id checksum and
     centroid-component checksum — any divergence in any iteration's
@@ -687,46 +687,6 @@ SELECT a.cid, COUNT(*) AS n_members,
 FROM afinal a
 JOIN (SELECT cid, list_sum(c) AS s FROM c{iters}) cc USING (cid)
 GROUP BY a.cid, cc.s
-"""
-
-
-def q_ann_ivf_kmeans_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Search over the TRAINED cells: each query vector (vec_id < 10)
-    ranks exact cosine against its own k-means cell only — the probe
-    step completing the train -> assign -> probe IVF story
-    (`ann_ivf_probe` is the same search over untrained sign-projection
-    buckets). One probe touches one cell partition at any corpus size.
-    """
-    emb = _t(spark, sf_dir, "embeddings")
-    # reuse the trainer's checkpointed quantized frame (see
-    # q_ann_ivf_kmeans) — the probe's two branches (queries + cells)
-    # then both read the one materialization
-    qbase, cents = similarity.kmeans_fit(emb, k=8, iters=3)
-    base = similarity.assign_centroids(qbase, cents)
-    # probe body shared with the persisted-index round-trip gate — ONE
-    # definition (similarity.cell_cosine_probe), so the two cannot drift
-    return similarity.cell_cosine_probe(base.filter(F.col("vec_id") < 10), base)
-
-
-def _sql_kmeans_probe(k: int = 8, iters: int = 3) -> str:
-    return f"""{_sql_kmeans_ctes(k, iters)},
-scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-         round(list_dot_product(q.qe, c.qe)
-               / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nc.n2 AS DOUBLE))), 6) AS cos,
-         ROW_NUMBER() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY list_dot_product(q.qe, c.qe)
-                    / (sqrt(CAST(nq.n2 AS DOUBLE)) * sqrt(CAST(nc.n2 AS DOUBLE))) DESC,
-                    c.vec_id ASC) AS rank
-  FROM afinal q
-  JOIN afinal c ON q.cid = c.cid AND q.vec_id <> c.vec_id
-  JOIN norms nq ON nq.vec_id = q.vec_id
-  JOIN norms nc ON nc.vec_id = c.vec_id
-  WHERE q.vec_id < 10
-)
-SELECT q_id, c_id, cos, CAST(rank AS BIGINT) AS rank
-FROM scored WHERE rank <= 3
 """
 
 
@@ -1094,7 +1054,7 @@ def q_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``flat=True`` so the projected components land as SCALAR columns
     y_0..y_7 — nested final columns (array/struct/map) are banned at the
     oracle boundary (the driver's pandas canonicalizer cannot hash list
-    cells; r9's only red row). The array-output form stays available for
+    cells). The array-output form stays available for
     composition via ``jl_project(..., flat=False)``."""
     return similarity.jl_project(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=8, seed=7, flat=True
@@ -1189,8 +1149,8 @@ def q_ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_index_load, and serve the probe query (vec_id < 10, exact cosine
     top-3 within the query's own trained cell) entirely from the LOADED
     artifacts — the production workflow every similarity system runs
-    (build nightly, serve all day). Output and oracle are identical to
-    ann_ivf_kmeans_probe's closed form: if any component survives the
+    (build nightly, serve all day). The oracle is the closed form of
+    that probe over freshly trained cells: if any component survives the
     parquet round-trip changed (quantized vectors, norms, assignments,
     centroids), at least one rank or cosine flips the hash."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -1204,9 +1164,8 @@ def q_ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.ivf_index_save(emb, path, k=8, iters=3)
         _BUILT_ARTIFACTS.add(path)
     cents, cells = similarity.ivf_index_load(spark, path)
-    # probe body shared with q_ann_ivf_kmeans_probe — ONE definition
-    # (similarity.cell_cosine_probe); the queries are assigned against
-    # the LOADED centroids and scored against the LOADED cells
+    # probe body: similarity.cell_cosine_probe; the queries are assigned
+    # against the LOADED centroids and scored against the LOADED cells
     return similarity.cell_cosine_probe(
         similarity.incremental_assign(emb.filter(F.col("vec_id") < 10), cents),
         cells,
@@ -1216,7 +1175,7 @@ def q_ann_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_ann_index_roundtrip() -> str:
 
     # the round-trip is lossless by contract, so the oracle is the
-    # trained-probe closed form (_sql_kmeans_probe's shape)
+    # trained-probe closed form over the replayed Lloyd cells
     return f"""{_sql_kmeans_ctes()},
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
@@ -1268,7 +1227,7 @@ def q_ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production composite ANN index — IVF coarse quantizer + PQ
     codes over the per-cell RESIDUALS (Jegou et al.'s IVFADC, the shape
     FAISS serves at scale): train the k=8 coarse quantizer
-    (similarity.kmeans_centroids), subtract each vector's centroid
+    (similarity.kmeans_fit), subtract each vector's centroid
     (exact BIGINT residuals via one zip_with), train
     m=4 subspace codebooks on the residuals
     (similarity.pq_fit_quantized), encode
@@ -1279,7 +1238,7 @@ def q_ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries|). Every artifact is exact-integer, so the DuckDB oracle
     replays coarse Lloyd -> residuals -> subspace Lloyd -> ADC
     bit-for-bit. Closes the tier gap where IVF and PQ existed only as
-    separate gates (ann_ivf_kmeans_probe, ann_pq_adc): at 100 TB the
+    separate gates (ann_ivf_kmeans, ann_pq_adc): at 100 TB the
     index you actually deploy is this composite — cells bound the scan,
     codes bound the memory."""
     cents, resid, books = _ivfpq_artifacts(spark, sf_dir)

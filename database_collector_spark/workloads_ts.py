@@ -1230,16 +1230,41 @@ FROM events GROUP BY event_type
 """
 
 
+def ttl_final_state(
+    events: DataFrame,
+    *,
+    key_col: str = "event_id_label",
+    ts_col: str = "ts",
+    ttl_s: int = 3600,
+) -> DataFrame:
+    """The end state an event-time TTL counter reaches on a bounded frame
+    once the watermark advances to the stream's end: each key with
+    ``total`` = its row count, and ``expired`` = whether the final
+    watermark (global max event time) passed last-seen + TTL — i.e.
+    whether the tombstone would have fired. One partial-agg shuffle on
+    the key plus a broadcast of a 1-row global max; oracle-checkable,
+    which a streaming operator natively is not (SURVEY §2.10)."""
+    secs = F.col(ts_col).cast("timestamp_ltz").cast("long")
+    per = events.groupBy(key_col).agg(
+        F.count("*").alias("rds_events_total"),
+        F.max(secs).alias("last_seen_s"),
+    )
+    stream_end = events.agg(F.max(secs).alias("stream_end_s"))
+    return per.crossJoin(F.broadcast(stream_end)).select(
+        key_col,
+        "rds_events_total",
+        "last_seen_s",
+        (F.col("stream_end_s") - F.col("last_seen_s") > ttl_s).alias("expired"),
+    )
+
+
 def q_ttl_expiry_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stateful streaming TTL counter
-    (streaming/stateful.py::running_counts_with_ttl): per-user running
+    """Batch form of a streaming TTL counter's end state: per-user running
     total + whether the key's eviction tombstone would have fired by
     end-of-stream (final watermark passed last-seen + 1h). Pins the
     eviction *semantics* with a SQL oracle — the streaming tier itself
     can only be test-pinned. Keyed by user_id so the fixture exercises
     both outcomes (users going quiet an hour before stream end expire)."""
-    from database_collector_spark.streaming.stateful import ttl_final_state
-
     ev = _t(spark, sf_dir, "events")
     return ttl_final_state(ev, key_col="user_id", ts_col="ts", ttl_s=3600)
 
@@ -1314,9 +1339,8 @@ SELECT l_returnflag, 'price_count' AS series_name, NULL AS quantile, c AS value 
 
 def q_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric ±30 min events-to-events interval join: per purchase,
-    clicks by the SAME user within [p_ts - 30m, p_ts + 30m] — the batch
-    twin of streaming.ops.stream_stream_symmetric_join (same semantics,
-    range-bucketed equi-join instead of watermark-bounded buffers).
+    clicks by the SAME user within [p_ts - 30m, p_ts + 30m], as a
+    range-bucketed equi-join instead of watermark-bounded buffers.
 
     A theta-join on |c_ts - p_ts| <= 30m is a nested loop at any scale;
     bucketing both sides by floor(ts/1800) makes a ±30 min window span at
@@ -3111,15 +3135,12 @@ def q_hll_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop windows as sliding_unique_users, but the sketch state itself is
     engine-reproducible, so the gate hashes (n_regs, v_zero, reg_sum):
     any register divergence fails the hash outright, and the estimate
-    verdict documents accuracy on top. Batch twin of the stateful
-    streaming op streaming/stateful.py::sliding_hll_unique (parity
-    pinned register-for-register in tests/test_streaming_hll.py).
+    verdict documents accuracy on top.
 
-    Windows keyed by epoch-second BIGINT win_s — the r8 lesson: naive
-    vs tz-aware TIMESTAMP is an oracle-portability trap; integer window
-    keys cannot have it. Plan: hop explode (4x, the shared
-    sketches.hop_expand the streaming twin and the parity test also
-    use), one distinct-free register partial-agg (max is insensitive to
+    Windows keyed by epoch-second BIGINT win_s: naive vs tz-aware
+    TIMESTAMP is an oracle-portability trap; integer window keys cannot
+    have it. Plan: hop explode (4x, sketches.hop_expand), one
+    distinct-free register partial-agg (max is insensitive to
     duplicates), one finalize agg + one exact-twin agg joined on the
     window key.
     """

@@ -1,6 +1,6 @@
 """Bloom-filter join pre-reduction (operators/bloom.py): the
 no-false-negative invariant, pruning power on absent keys, exact
-equivalence to the plain semi/anti joins (including NULL child keys),
+equivalence to the plain anti join (including NULL child keys),
 and the plan shape — the probe filter must be evaluated before the
 exact join's exchange so rejected rows never shuffle."""
 
@@ -18,12 +18,19 @@ def _parent(spark):
     return spark.range(0, 2000).select((F.col("id") * 3).alias("k"))
 
 
+def _might_contain(words, key):
+    # the column builder bloom_anti_join probes with, fed a literal array
+    return bloom._might_contain_col(
+        F.lit(words), key, num_bits=BITS, num_hashes=bloom.DEFAULT_NUM_HASHES
+    )
+
+
 def test_no_false_negatives(spark):
     parent = _parent(spark)
     words = bloom.bloom_build(parent, "k", num_bits=BITS)
     missed = (
         parent.select(
-            bloom.might_contain(words, F.col("k"), num_bits=BITS).alias("m")
+            _might_contain(words, F.col("k")).alias("m")
         )
         .where(~F.col("m"))
         .count()
@@ -38,7 +45,7 @@ def test_absent_keys_mostly_rejected(spark):
     absent = spark.range(0, 5000).select((F.col("id") * 3 + 1).alias("k"))
     fp = (
         absent.select(
-            bloom.might_contain(words, F.col("k"), num_bits=BITS).alias("m")
+            _might_contain(words, F.col("k")).alias("m")
         )
         .where(F.col("m"))
         .count()
@@ -54,21 +61,6 @@ def _child(spark):
         .alias("k"),
         F.col("id").alias("payload"),
     )
-
-
-def test_semi_join_equals_plain(spark):
-    parent, child = _parent(spark), _child(spark)
-    got = sorted(
-        r["payload"]
-        for r in bloom.bloom_semi_join(
-            child, parent, child_key="k", parent_key="k", num_bits=BITS
-        ).collect()
-    )
-    want = sorted(
-        r["payload"]
-        for r in child.join(parent, "k", "left_semi").collect()
-    )
-    assert got == want and len(want) > 0
 
 
 def test_anti_join_equals_plain(spark):

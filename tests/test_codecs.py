@@ -1,8 +1,8 @@
 """Compressed-format codec tier (operators/codecs.py): the
 dependency-free PNG codec (stdlib zlib — round trips, all five scanline
 filters, CRC/truncation/colortype rejection), magic-byte sniffing, the
-optional-dependency JPEG/FLAC gates, and the magic-dispatched
-decode_image_any / decode_audio_any Spark operators."""
+optional-dependency JPEG gate, and the magic-dispatched
+decode_image_any Spark operator."""
 
 from __future__ import annotations
 
@@ -131,14 +131,6 @@ def test_jpeg_gate_matches_pillow_availability():
             codecs.decode_jpeg(b"\xff\xd8\xff\xe0")
 
 
-def test_flac_gate_matches_soundfile_availability():
-    if not codecs.have_soundfile():
-        with pytest.raises(NotImplementedError, match="soundfile"):
-            codecs.decode_audio_compressed(b"fLaC....")
-    else:
-        assert codecs.decode_audio_compressed(b"fLaC-not-really") is None
-
-
 # ----------------------------------- Spark dispatch (decode_*_any ops)
 
 
@@ -202,33 +194,3 @@ def test_decode_image_any_error_policy_raises_without_codec(spark):
         multimodal.decode_image_any(jpeg, on_missing_codec="error").collect()
     with pytest.raises(ValueError):
         multimodal.decode_image_any(jpeg, on_missing_codec="quarantine")
-
-
-def test_decode_audio_any_wav_real_flac_gated(spark):
-    from pyspark.sql import functions as F
-
-    from database_collector_spark.operators import multimodal
-
-    docs = spark.range(0, 6).select(F.col("id").alias("doc_id"))
-    wav = multimodal.to_wav_media(docs)
-    flac = spark.range(0, 1).select(
-        (F.col("id") + 100).alias("doc_id"),
-        F.lit("audio").alias("media_type"),
-        F.lit(b"fLaCfake").cast("binary").alias("payload"),
-        F.struct(
-            F.lit(8).cast("long").alias("n_bytes"),
-            F.lit("audio/flac").alias("declared_format"),
-        ).alias("meta"),
-    )
-    out = {r["doc_id"]: r for r in
-           multimodal.decode_audio_any(wav.unionByName(flac)).collect()}
-    # WAV rows decode identically to decode_audio (the closed form)
-    ref = {r["doc_id"]: r for r in
-           multimodal.decode_audio(multimodal.to_wav_media(docs)).collect()}
-    for d in range(6):
-        assert out[d]["codec"] == "wav"
-        for k in ("sample_rate", "n_channels", "n_frames", "sum_ch0", "peak"):
-            assert out[d][k] == ref[d][k], k
-    assert out[100]["codec"] == "flac"
-    if not codecs.have_soundfile():
-        assert out[100]["sample_rate"] is None

@@ -1,9 +1,7 @@
 """End-to-end curation pipeline (curation.py): quality filter → exact
-dedup → split → partitioned idempotent write."""
+dedup → split."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 
@@ -63,19 +61,6 @@ def test_near_dup_tier_runs_over_survivors(spark):
     out = curation.curate(docs, quality_min=0.3, near_dup=True)
     ids = {r["doc_id"] for r in out.collect()}
     assert ids == {1}
-
-
-def test_write_curated_is_idempotent_and_partitioned(spark, tmp_path):
-    out_dir = str(tmp_path / "curated")
-    curated = curation.curate(_docs(spark))
-    curation.write_curated(curated, out_dir)
-    n1 = spark.read.parquet(out_dir).count()
-    # partition layout: split=... directories exist
-    assert any(d.startswith("split=") for d in os.listdir(out_dir))
-    # re-run replaces, never appends
-    curation.write_curated(curated, out_dir)
-    n2 = spark.read.parquet(out_dir).count()
-    assert n1 == n2 == curated.count()
 
 
 def test_curate_repetition_gate_drops_boilerplate(spark):

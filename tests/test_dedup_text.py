@@ -403,34 +403,6 @@ def test_set_similarity_join_shingles_and_short_docs(spark):
     assert got[(1, 2)] == (3, 5)
 
 
-def test_lsh_tune_midpoint_tracks_threshold():
-    from database_collector_spark.operators.dedup import lsh_tune
-
-    b, r = lsh_tune(128, 0.8)
-    assert b * r <= 128 and b >= 1 and r >= 1
-    # the curve's 50% point (1/b)^(1/r) should land near the threshold
-    mid = (1.0 / b) ** (1.0 / r)
-    assert abs(mid - 0.8) < 0.1
-
-
-def test_lsh_tune_higher_threshold_wants_longer_rows():
-    from database_collector_spark.operators.dedup import lsh_tune
-
-    _, r_low = lsh_tune(128, 0.5)
-    _, r_high = lsh_tune(128, 0.9)
-    assert r_high > r_low
-
-
-def test_lsh_tune_fn_weight_pushes_toward_recall():
-    from database_collector_spark.operators.dedup import lsh_tune
-
-    b_bal, r_bal = lsh_tune(128, 0.8, fp_weight=0.5, fn_weight=0.5)
-    b_rec, r_rec = lsh_tune(128, 0.8, fp_weight=0.1, fn_weight=0.9)
-    # recall-heavy tuning lowers the curve midpoint (catches more):
-    mid = lambda b, r: (1.0 / b) ** (1.0 / r)
-    assert mid(b_rec, r_rec) <= mid(b_bal, r_bal)
-
-
 def test_boundary_overlap_pairs_detects_shard_splits(spark):
     from pyspark.sql import Row
 

@@ -1,9 +1,12 @@
 """Documentation-drift guards: the gate surface and its docs must move
 together — every driver-gate query needs an oracle twin and a COVERAGE.md
-mention, and the correctness window must stay exactly driver-sized."""
+mention, and the correctness window must stay exactly driver-sized —
+and every package definition keeps a caller outside the tests."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import re
 
@@ -119,3 +122,121 @@ def test_staged_cohorts_never_shadow_registered_gates():
     assert gates.STAGED <= registry
     assert set(entrymod.queries()) == registry - gates.STAGED
     assert set(entrymod.oracle_sql()) == registry - gates.STAGED
+
+
+# ROADMAP item 4's keep rule: a package definition stays while non-test
+# code (a gate, the tick, curation.curate, an example, a tool or the
+# benchmark) refers to it. These collector-surface pieces have no caller
+# yet; item 4's wiring decides each one, and wiring one in takes it off
+# this list.
+COLLECTOR_SURFACE_WITHOUT_CALLER = {
+    "operators.kv.parse_numeric",
+    "operators.kv.pivot_wide",
+    "pipeline.run_loop",
+    "plans.metric_config.run_config",
+    "sinks.cloudwatch.foreach_batch",
+    "sinks.cloudwatch.publish_df",
+    "sinks.parquet.compact_partitions",
+    "sinks.parquet.read_timeseries",
+    "sinks.parquet.write_timeseries",
+    "sources.aws_discovery.registry_from_aws",
+    "sources.jdbc.scrape_target",
+    "sources.registry.discover",
+    "sources.registry.refresh_diff",
+    "sources.registry.rejects",
+    "streaming.dlq.dead_letter_sink",
+    "streaming.events.stream_pipeline",
+    "streaming.events.windowed_counts",
+    "streaming.sink.idempotent_parquet_sink",
+    "streaming.upsert.upsert_parquet_sink",
+}
+
+
+def _referenced_names(node: ast.AST) -> set[str]:
+    names = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            names.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            names.add(n.attr)
+        elif isinstance(n, ast.alias):
+            names.add(n.name.rsplit(".", 1)[-1])
+    return names
+
+
+def _defs_without_caller(sources: dict[str, str], package: set[str]) -> set[str]:
+    """``module.name`` of each top-level function or class defined in a
+    ``package`` module that no Name, Attribute or import in ``sources``
+    (module -> source text) refers to, the definition's own body left
+    out. Matching is by name, so a same-named reference anywhere counts
+    as a use; a mention in a string or docstring never does."""
+    top = {m: ast.parse(src).body for m, src in sources.items()}
+    refs: dict[str, int] = {}
+    for nodes in top.values():
+        for node in nodes:
+            for name in _referenced_names(node):
+                refs[name] = refs.get(name, 0) + 1
+    unused = set()
+    for module in package:
+        for node in top[module]:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                own = int(node.name in _referenced_names(node))
+                if refs.get(node.name, 0) == own:
+                    unused.add(f"{module}.{node.name}")
+    return unused
+
+
+def test_caller_scan_flags_each_unreferenced_form():
+    sources = {
+        "m": (
+            "def called(): pass\n"
+            "def recursive(): recursive()\n"
+            "class Unused: pass\n"
+            "def by_attr(): pass\n"
+            "def imported(): pass\n"
+            "def in_docstring(): pass\n"
+            "REGISTRY = {'q': called}\n"
+        ),
+        "user": (
+            "from m import imported\n"
+            "import m\n"
+            "m.by_attr()\n"
+            '"""in_docstring is only mentioned here"""\n'
+        ),
+    }
+    assert _defs_without_caller(sources, {"m"}) == {
+        "m.recursive",
+        "m.Unused",
+        "m.in_docstring",
+    }
+
+
+def test_every_package_definition_has_a_non_test_caller():
+    """Gate functions count as used because the QUERIES dicts name them.
+    Equality, not a subset: a collector-surface name that gains a caller
+    must leave COLLECTOR_SURFACE_WITHOUT_CALLER."""
+    pkg = os.path.join(ROOT, "database_collector_spark")
+    paths = [
+        p
+        for d in ("database_collector_spark", "examples", "tools", "perfbench")
+        for p in glob.glob(os.path.join(ROOT, d, "**", "*.py"), recursive=True)
+        if not os.path.basename(p).startswith("test_")
+    ] + [os.path.join(ROOT, f) for f in ("bench.py", "__spark_entry__.py")]
+    sources, package = {}, set()
+    for path in paths:
+        in_pkg = path.startswith(pkg + os.sep)
+        module = os.path.relpath(path, pkg if in_pkg else ROOT)
+        module = module[: -len(".py")].replace(os.sep, ".")
+        if in_pkg:
+            package.add(module)
+        else:
+            module = f"<{module}>"
+        with open(path) as fh:
+            sources[module] = fh.read()
+    unused = _defs_without_caller(sources, package)
+    assert unused == COLLECTOR_SURFACE_WITHOUT_CALLER, (
+        "ROADMAP item 4 keeps a package definition only while non-test "
+        "code calls it. Without a caller: "
+        f"{sorted(unused - COLLECTOR_SURFACE_WITHOUT_CALLER)}; listed but "
+        f"now called: {sorted(COLLECTOR_SURFACE_WITHOUT_CALLER - unused)}"
+    )

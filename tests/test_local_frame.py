@@ -57,7 +57,7 @@ def _adc(spark):
 
 def _bloom(spark):
     keys = spark.range(0, 40)
-    return bloom.bloom_semi_join(
+    return bloom.bloom_anti_join(
         keys.select(F.col("id").alias("c")),
         keys.filter("id % 3 = 0").select(F.col("id").alias("p")),
         child_key="c",
@@ -72,7 +72,7 @@ ATTACHES = {
     "embedding_covariance": lambda s: similarity.embedding_covariance(
         s.read.parquet(f"{SF}/embeddings.parquet"), dims=4
     ),
-    "bloom_semi_join": _bloom,
+    "bloom_anti_join": _bloom,
 }
 
 

@@ -26,7 +26,7 @@ def test_ivf_index_roundtrip_is_lossless(spark):
         similarity.ivf_index_save(emb, path, k=8, iters=3)
         cents, cells = similarity.ivf_index_load(spark, path)
         # centroids reload exactly (integers; parquet is lossless)
-        assert cents == similarity.kmeans_centroids(emb, k=8, iters=3)
+        assert cents == similarity.kmeans_fit(emb, k=8, iters=3)[1]
         # cells reload exactly: same rows as an in-memory build
         mem = similarity.assign_centroids(
             similarity.with_quantized(emb).select("vec_id", "qe", "qnorm2"),

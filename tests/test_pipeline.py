@@ -1,9 +1,8 @@
-"""End-to-end batch lifecycle (§3.1 analog) + stateful streaming op."""
+"""End-to-end batch lifecycle (§3.1 analog) and the TTL end-state twin."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import tempfile
 
 from pyspark.sql import Row
@@ -81,82 +80,13 @@ def test_run_loop_ticks_bounded():
     assert slept == [300, 300]  # no sleep after the final tick
 
 
-def test_stateful_running_counts_with_ttl(spark):
-    # Each ingest runs as a bounded availableNow pass restarting from the
-    # same checkpoint (an always-on query with state timeouts never goes
-    # idle, so processAllAvailable would hang). Event-time TTL makes
-    # eviction deterministic: it fires when the *watermark* passes
-    # last-seen-ts + 1h, regardless of wall clock.
-    from database_collector_spark.streaming.stateful import running_counts_with_ttl
-
-    with tempfile.TemporaryDirectory() as tmp:
-        import os
-
-        src = f"{tmp}/in"
-        os.makedirs(src)
-
-        def run_pass() -> set:
-            # memory sink can't recover from a checkpoint; foreachBatch can
-            emitted: set = set()
-
-            def sink(batch_df, _batch_id):
-                emitted.update(
-                    (r["event_id_label"], r["rds_events_total"], r["expired"])
-                    for r in batch_df.collect()
-                )
-
-            stream = spark.readStream.schema(
-                "event_id_label string, ts timestamp"
-            ).json(src)
-            q = (
-                running_counts_with_ttl(stream)
-                .writeStream.outputMode("update")
-                .foreachBatch(sink)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                assert q.awaitTermination(120), "stream pass did not finish"
-            finally:
-                q.stop()
-            return emitted
-
-        def write_batch(fname: str, rows: list[tuple[str, str]]) -> None:
-            with open(f"{src}/{fname}", "w") as f:
-                f.write(
-                    "\n".join(
-                        json.dumps({"event_id_label": k, "ts": ts})
-                        for k, ts in rows
-                    )
-                )
-
-        write_batch(
-            "b1.json",
-            [("A", "2024-06-01T10:00:00"), ("A", "2024-06-01T10:01:00"),
-             ("B", "2024-06-01T10:02:00")],
-        )
-        assert run_pass() == {("A", 2, False), ("B", 1, False)}
-
-        # pass 2: A updates (recovered state: 2 + 1), and once the
-        # watermark reaches 12:00 the engine's follow-up batch fires B's
-        # 11:02 timeout -> tombstone with its final total
-        write_batch("b2.json", [("A", "2024-06-01T12:00:00")])
-        assert run_pass() == {("A", 3, False), ("B", 1, True)}
-
-        # pass 3: B is gone; only the new key C appears
-        write_batch("b3.json", [("C", "2024-06-01T12:30:00")])
-        assert run_pass() == {("C", 1, False)}
-
-
 def test_ttl_batch_twin_matches_streaming_end_state(spark):
-    # the batch twin (ttl_final_state) must reproduce the streaming
-    # operator's observable end state on the same rows: per-key final
-    # totals, with expired=True exactly for the keys whose tombstone the
-    # stream emitted. Fixture = the b1+b2 rows from the streaming test
-    # above, whose end state is A: 3 alive, B: 1 expired (stream end
+    # ttl_final_state must give the end state an event-time TTL counter
+    # reaches on these rows once the watermark hits the stream's end:
+    # per-key final totals, with expired=True exactly for the keys whose
+    # tombstone would have fired. A: 3 alive, B: 1 expired (stream end
     # 12:00, B last seen 10:02, TTL 1h).
-    from database_collector_spark.streaming.stateful import ttl_final_state
+    from database_collector_spark.workloads_ts import ttl_final_state
 
     rows = [
         ("A", "2024-06-01T10:00:00"),

@@ -490,35 +490,13 @@ def test_pq_encode_zero_shuffle(spark):
     from database_collector_spark.workloads import _t
 
     emb = _t(spark, SF, "embeddings")
-    books = similarity.pq_train(emb, m=4, k=4, iters=1)
-    plan = _plan(similarity.pq_encode(emb, books).select("vec_id", "codes"))
+    books = similarity.pq_fit_quantized(
+        similarity.with_quantized(emb).select("vec_id", "qe"), m=4, k=4, iters=1
+    )[1]
+    enc = similarity.pq_encode_quantized(similarity.with_quantized(emb), books)
+    plan = _plan(enc.select("vec_id", "codes"))
     assert "Exchange hashpartitioning" not in plan
     assert "BroadcastNestedLoopJoin" in plan  # the one-row codebook attach
-
-
-def test_sketch_helpers_have_no_exact_aggregate_or_sort(spark):
-    # production sketch path: partial HLL/GK sketches merge through ONE
-    # shuffle; no exact count-distinct Expand and no sort-based exact
-    # percentile anywhere in the plan (the gate queries keep the exact
-    # twin; these helpers must not)
-    from database_collector_spark.operators import sketches
-    from database_collector_spark.workloads import _t
-
-    ev = _t(spark, SF, "events")
-    p1 = _plan(sketches.approx_distinct(ev, ["event_type"], "user_id"))
-    assert "approx_count_distinct" in p1
-    assert "Sort " not in p1 and "Expand" not in p1
-    assert p1.count("Exchange hashpartitioning") == 1
-
-    li = _t(spark, SF, "lineitem")
-    p2 = _plan(
-        sketches.approx_quantiles(li, ["l_returnflag"], "l_quantity")
-    )
-    assert "percentile_approx" in p2
-    # exact percentile would show up as percentile(...) — approx only
-    assert "percentile(" not in p2.replace("percentile_approx(", "")
-    assert "Sort " not in p2
-    assert p2.count("Exchange hashpartitioning") == 1
 
 
 def test_funnel_has_no_join_and_two_shrinking_exchanges(spark):

@@ -56,15 +56,6 @@ def test_bm25_scores_match_python_reference(spark):
         assert got[doc][2] == pytest.approx(want[doc][2], abs=1e-4)
 
 
-def test_bm25_topk_orders_by_score_then_id(spark):
-    df = spark.createDataFrame(DOCS)
-    rows = ranking.bm25_topk(df, ["hash", "join", "vector"], k=2).collect()
-    assert len(rows) == 2
-    # doc 3 matches all three terms with the highest tfs -> must rank first
-    assert rows[0]["doc_id"] == 3
-    assert rows[0]["score"] >= rows[1]["score"]
-
-
 def test_bm25_plan_stays_jvm_side(spark):
     df = spark.createDataFrame(DOCS)
     plan = ranking.bm25_scores(df, ["hash", "join"])._jdf.queryExecution().executedPlan().toString()

@@ -92,7 +92,7 @@ def test_kmeans_clusters_separable_data(spark):
         [0.1, 0.9, 0.0, 0.0],
     ]
     emb = _embs(spark, vecs)
-    cents = similarity.kmeans_centroids(emb, k=2, iters=2, dim=4)
+    cents = similarity.kmeans_fit(emb, k=2, iters=2, dim=4)[1]
     assert len(cents) == 2 and all(len(c) == 4 for c in cents)
     assigned = similarity.assign_centroids(
         similarity.with_quantized(emb).select("vec_id", "qe", "qnorm2"), cents
@@ -100,14 +100,14 @@ def test_kmeans_clusters_separable_data(spark):
     got = {r["vec_id"]: r["cid"] for r in assigned.collect()}
     assert got == {0: 0, 2: 0, 1: 1, 3: 1}
     # deterministic: retraining yields byte-identical centroids
-    assert cents == similarity.kmeans_centroids(emb, k=2, iters=2, dim=4)
+    assert cents == similarity.kmeans_fit(emb, k=2, iters=2, dim=4)[1]
 
 
 def test_kmeans_empty_cluster_keeps_centroid(spark):
     # all points identical -> every vector lands on centroid 0 from
     # round 1 on; centroid 1 must survive as its init value, not vanish
     emb = _embs(spark, [[1.0, 0.0], [1.0, 0.0], [1.0, 0.0]])
-    cents = similarity.kmeans_centroids(emb, k=2, iters=2, dim=2)
+    cents = similarity.kmeans_fit(emb, k=2, iters=2, dim=2)[1]
     assert len(cents) == 2
     assert cents[0] == cents[1]  # init was identical points; both survive
 
@@ -177,15 +177,6 @@ def test_extract_features_real_decode_uses_pixels(spark):
     assert stub["header_byte"] == ord("P")
 
 
-def test_resize_real_decode_luminance(spark):
-    docs = spark.createDataFrame([(3,)], "doc_id long")
-    media = multimodal.to_ppm_media(docs)
-    row = multimodal.resize(media, out_w=4, out_h=4, decode_stub=False).collect()[0]
-    # channel-constant image -> constant luminance (21+22+23)//3 = 22
-    assert len(row["resized"]) == 16
-    assert set(row["resized"]) == {22}
-
-
 def test_frame_sample_real_decode_walks_ppm_boundaries(spark):
     # doc_id=5 -> 1 + 5%6 = 6 frames with per-frame-varying dims; the
     # walker must parse each header to find the next boundary. every_nth=2
@@ -212,31 +203,6 @@ def test_frame_sample_real_decode_malformed_stops_walk(spark):
     )
     media = multimodal.to_media(docs)  # UTF-8 text payload, not PPM
     assert multimodal.frame_sample(media, decode_stub=False).count() == 0
-
-
-def test_resize_fixed_output_shape(spark):
-    docs = spark.createDataFrame(
-        [(1, "x" * 100), (2, "abcdef")], "doc_id long, text string"
-    )
-    rows = {
-        r["doc_id"]: r
-        for r in multimodal.resize(multimodal.to_media(docs), out_w=4, out_h=4).collect()
-    }
-    # every payload, whatever its size, lands on exactly out_w*out_h bytes
-    assert all(len(r["resized"]) == 16 for r in rows.values())
-    assert rows[1]["out_w"] == 4 and rows[1]["out_h"] == 4
-    # uniform input -> uniform output (nearest-neighbor preserves values)
-    assert set(rows[1]["resized"]) == {ord("x")}
-
-
-def test_resize_batch_cap_preserves_rows(spark):
-    docs = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(10)], "doc_id long, text string"
-    )
-    out = multimodal.resize(
-        multimodal.to_media(docs), max_rows_per_batch=3
-    )
-    assert out.count() == 10  # rebatching never drops or duplicates rows
 
 
 def test_frame_sample_cardinality_and_stride(spark):
@@ -266,17 +232,23 @@ def test_multiprobe_dominates_single_probe(spark):
         assert best[r["q_id"]] >= r["cos"]
 
 
+def _pq_books(emb, **kw):
+    return similarity.pq_fit_quantized(
+        similarity.with_quantized(emb).select("vec_id", "qe"), **kw
+    )[1]
+
+
 def test_pq_train_encode_shapes_and_determinism(spark):
     emb = spark.createDataFrame(
         [Row(vec_id=i, label="x", embedding=[float((i * 7 + d) % 5 - 2) for d in range(64)])
          for i in range(20)]
     )
-    books = similarity.pq_train(emb, m=4, k=4, iters=2)
+    books = _pq_books(emb, m=4, k=4, iters=2)
     assert len(books) == 4 and all(len(b) == 4 for b in books)
     assert all(len(c) == 16 for b in books for c in b)
     # deterministic: retraining yields identical codebooks
-    assert books == similarity.pq_train(emb, m=4, k=4, iters=2)
-    enc = similarity.pq_encode(emb, books)
+    assert books == _pq_books(emb, m=4, k=4, iters=2)
+    enc = similarity.pq_encode_quantized(similarity.with_quantized(emb), books)
     rows = enc.select("vec_id", "codes").collect()
     assert len(rows) == 20
     assert all(len(r["codes"]) == 4 for r in rows)
@@ -293,8 +265,8 @@ def test_pq_adc_self_query_ranks_own_cell_first(spark):
         [Row(vec_id=i, label="a", embedding=vec(0, i)) for i in range(5)]
         + [Row(vec_id=100 + i, label="b", embedding=vec(50, i)) for i in range(5)]
     )
-    books = similarity.pq_train(emb, m=4, k=2, iters=2)
-    enc = similarity.pq_encode(emb, books)
+    books = _pq_books(emb, m=4, k=2, iters=2)
+    enc = similarity.pq_encode_quantized(similarity.with_quantized(emb), books)
     queries = (
         similarity.with_quantized(emb)
         .filter("vec_id = 0")
@@ -414,51 +386,6 @@ def test_embedding_covariance_matches_numpy(spark):
         assert r["s_ij"] == int((x[:, r["i"]] * x[:, r["j"]]).sum())
 
 
-def test_pca_project_recovers_numpy_components(spark):
-    import numpy as np
-
-    from database_collector_spark.operators.similarity import pca_project
-
-    # anisotropic cloud: dominant variance along a known diagonal
-    pts = []
-    for i in range(200):
-        t = (i % 41 - 20) / 4.0
-        s = ((i * 7) % 11 - 5) / 9.0
-        pts.append([t + 0.1 * s, t - 0.1 * s, s * 0.5, 0.05 * t] + [0.0] * 4)
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in p]) for i, p in enumerate(pts)],
-        "vec_id long, embedding array<float>",
-    )
-    got = pca_project(df, k=2, dims=8, n_iter=100).collect()
-    proj = np.array([[r["pc1"], r["pc2"]] for r in sorted(got, key=lambda r: r["vec_id"])])
-
-    x = np.array(pts, dtype=np.float32).astype(np.float64)
-    x = np.round(x * 1e6) / 1e6
-    xc = x - x.mean(axis=0)
-    cov = (xc.T @ xc) / len(x)
-    w, v = np.linalg.eigh(cov)
-    ref = xc @ v[:, ::-1][:, :2]
-    # per-component alignment up to sign: |cos| ~ 1 and variance ratio ~ 1
-    for c in range(2):
-        a, b = proj[:, c], ref[:, c]
-        cos = abs(float(a @ b) / (np.linalg.norm(a) * np.linalg.norm(b)))
-        assert cos > 0.999, f"component {c} misaligned: |cos|={cos}"
-
-
-def test_pca_project_plan_is_broadcast_free_map_side(spark):
-    from database_collector_spark.operators.similarity import pca_project
-
-    df = spark.createDataFrame(
-        [(i, [float(i % 5), float(i % 3), 0.0, 1.0]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    plan = (
-        pca_project(df, k=1, dims=4, n_iter=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan and "Join" not in plan
-
-
 def test_sq8_codes_bounded_and_degenerate_dims_zero(spark):
     rows = [
         Row(vec_id=0, embedding=[0.0, 1.0, 5.0], label=0),
@@ -571,17 +498,6 @@ def test_jl_matrix_is_ternary_and_sparse(spark):
     assert 0.5 < zfrac < 0.8
 
 
-def test_jl_distortion_concentrates_on_real_embeddings(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rep = similarity.jl_distortion_report(emb, k=16, seed=7).collect()[0]
-    assert rep["n_vecs"] == 500
-    # JL with k=16: distortion concentrates near 1; wide deterministic band
-    assert 0.3 < rep["min_distortion"] <= rep["mean_distortion"]
-    assert rep["mean_distortion"] <= rep["max_distortion"] < 3.0
-    assert 0.6 < rep["mean_distortion"] < 1.4
-    assert rep["frac_within_30pct"] > 0.5
-
-
 def test_jl_project_plan_is_map_only(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     plan = (
@@ -632,51 +548,6 @@ def test_embedding_outliers_no_corpus_shuffle(spark):
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
     assert "SortMergeJoin" not in plan
-
-
-def _p6(w, h, val):
-    return f"P6\n{w} {h}\n255\n".encode() + bytes([val]) * (w * h * 3)
-
-
-def test_scene_changes_flags_brightness_cuts(spark):
-    # video: two dark frames, a bright frame (cut), then bright again
-    payload = _p6(4, 4, 10) + _p6(4, 4, 12) + _p6(4, 4, 200) + _p6(4, 4, 201)
-    media = spark.createDataFrame([Row(doc_id=1, payload=bytearray(payload))])
-    frames = multimodal.frame_sample(media, every_nth=1, decode_stub=False)
-    stats = multimodal.decode_frames(frames)
-    got = {
-        r["frame_idx"]: r
-        for r in multimodal.scene_changes(stats, threshold_milli=60_000).collect()
-    }
-    assert got[0]["is_cut"] is True and got[0]["delta_milli"] is None
-    # 10 -> 12: delta = 3 channels * 2 * 1000 = 6000 < threshold
-    assert got[1]["is_cut"] is False and got[1]["delta_milli"] == 6000
-    # 12 -> 200: 3 * 188 * 1000 = 564000 >= threshold
-    assert got[2]["is_cut"] is True and got[2]["delta_milli"] == 564000
-    assert got[3]["is_cut"] is False and got[3]["delta_milli"] == 3000
-
-
-def test_scene_changes_cut_after_quarantined_frame(spark):
-    # frame 1 has null stats (simulating a quarantined decode); frame 2
-    # must be flagged like a first frame — a shot boundary must not hide
-    # behind one corrupt frame (round-8 ADVICE)
-    stats = spark.createDataFrame(
-        [
-            Row(doc_id=1, frame_idx=0, w=4, h=4, sum_r=480, sum_g=480, sum_b=480),
-            Row(doc_id=1, frame_idx=1, w=None, h=None, sum_r=None, sum_g=None, sum_b=None),
-            Row(doc_id=1, frame_idx=2, w=4, h=4, sum_r=3200, sum_g=3200, sum_b=3200),
-            Row(doc_id=1, frame_idx=3, w=4, h=4, sum_r=3216, sum_g=3216, sum_b=3216),
-        ],
-        "doc_id int, frame_idx int, w int, h int, sum_r long, sum_g long, sum_b long",
-    )
-    got = {
-        r["frame_idx"]: r
-        for r in multimodal.scene_changes(stats, threshold_milli=60_000).collect()
-    }
-    assert got[0]["is_cut"] is True
-    assert got[1]["is_cut"] is False and got[1]["delta_milli"] is None
-    assert got[2]["is_cut"] is True and got[2]["delta_milli"] is None
-    assert got[3]["is_cut"] is False
 
 
 def test_jl_project_random_property(spark):

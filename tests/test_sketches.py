@@ -5,29 +5,6 @@ from __future__ import annotations
 from database_collector_spark.operators import sketches
 
 
-def test_approx_distinct_close_to_exact(spark):
-    df = spark.range(0, 5000).selectExpr("id % 4 AS g", "id % 1000 AS v")
-    got = {
-        r["g"]: r["approx_v"]
-        for r in sketches.approx_distinct(df, ["g"], "v").collect()
-    }
-    assert set(got) == {0, 1, 2, 3}
-    for g, approx in got.items():
-        exact = 250  # ids 0..999 split evenly over 4 residue classes
-        assert abs(approx - exact) <= 0.05 * exact
-
-
-def test_approx_quantiles_names_and_rank_band(spark):
-    df = spark.range(1, 10001).selectExpr("id % 2 AS g", "CAST(id AS DOUBLE) AS v")
-    out = sketches.approx_quantiles(
-        df, ["g"], "v", probabilities=(0.5, 0.999)
-    )
-    assert out.columns == ["g", "q50", "q99.9"]
-    for r in out.collect():
-        assert abs(r["q50"] - 5000) <= 100
-        assert r["q99.9"] >= 9900
-
-
 def test_bitmap_distinct_exact_and_null_safe(spark):
     from pyspark.sql import functions as F
 

@@ -1,6 +1,6 @@
-"""Streaming extension operators (streaming/ops.py): watermarked dedup,
-session windows, stream-stream interval join — each driven through a file
-source with availableNow passes and a foreachBatch collector."""
+"""Streaming sinks (idempotent, upsert, dead-letter) and the streaming
+twins of batch operators — each driven through a file source with
+availableNow passes and a foreachBatch collector."""
 
 from __future__ import annotations
 
@@ -33,208 +33,6 @@ def _run_stream(spark, src, build, ckpt, out_mode="append"):
 def _write(src, fname, records):
     with open(f"{src}/{fname}", "w") as f:
         f.write("\n".join(json.dumps(r) for r in records))
-
-
-def test_streaming_dedup_within_watermark(spark):
-    from database_collector_spark.streaming.ops import streaming_dedup
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        os.makedirs(src)
-        _write(
-            src,
-            "b1.json",
-            [
-                {"doc_hash": "h1", "ts": "2024-06-01T10:00:00"},
-                {"doc_hash": "h1", "ts": "2024-06-01T10:00:30"},  # replay, dropped
-                {"doc_hash": "h2", "ts": "2024-06-01T10:01:00"},
-            ],
-        )
-
-        def build(path):
-            stream = spark.readStream.schema("doc_hash string, ts timestamp").json(
-                path
-            )
-            return streaming_dedup(
-                stream, key_cols=["doc_hash"], watermark="10 minutes"
-            )
-
-        got = _run_stream(spark, src, build, f"{tmp}/ckpt")
-        assert sorted(r["doc_hash"] for r in got) == ["h1", "h2"]
-
-        # second pass: h1 replays again within horizon -> still dropped;
-        # h3 is new -> emitted
-        _write(
-            src,
-            "b2.json",
-            [
-                {"doc_hash": "h1", "ts": "2024-06-01T10:02:00"},
-                {"doc_hash": "h3", "ts": "2024-06-01T10:02:30"},
-            ],
-        )
-        got = _run_stream(spark, src, build, f"{tmp}/ckpt")
-        assert sorted(r["doc_hash"] for r in got) == ["h3"]
-
-
-def test_session_window_closes_on_gap(spark):
-    from database_collector_spark.streaming.ops import session_window_agg
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        os.makedirs(src)
-        # user 1: two events 5 min apart (one session), then 2h of silence
-        _write(
-            src,
-            "b1.json",
-            [
-                {"user_id": 1, "ts": "2024-06-01T10:00:00", "value": 2.0},
-                {"user_id": 1, "ts": "2024-06-01T10:05:00", "value": 3.0},
-            ],
-        )
-
-        def build(path):
-            stream = spark.readStream.schema(
-                "user_id long, ts timestamp, value double"
-            ).json(path)
-            return session_window_agg(stream, gap="30 minutes", watermark="0 seconds")
-
-        got = _run_stream(spark, src, build, f"{tmp}/ckpt")
-        assert got == []  # watermark has not passed session_end + gap yet
-
-        # an event far in the future advances the watermark past the
-        # first session -> it is finalized and emitted
-        _write(src, "b2.json", [{"user_id": 2, "ts": "2024-06-01T13:00:00", "value": 1.0}])
-        got = _run_stream(spark, src, build, f"{tmp}/ckpt")
-        assert len(got) == 1
-        r = got[0]
-        assert r["user_id"] == 1
-        assert r["n_events"] == 2
-        assert r["session_value"] == 5.0
-        assert str(r["session_start"]).startswith("2024-06-01 10:00:00")
-        # session end = last event + gap
-        assert str(r["session_end"]).startswith("2024-06-01 10:35:00")
-
-
-def test_stream_stream_interval_join(spark):
-    from database_collector_spark.streaming.ops import stream_stream_interval_join
-
-    with tempfile.TemporaryDirectory() as tmp:
-        la, ra = f"{tmp}/l", f"{tmp}/r"
-        os.makedirs(la)
-        os.makedirs(ra)
-        _write(
-            la,
-            "l1.json",
-            [{"user_id": 1, "l_ts": "2024-06-01T10:02:00", "l_id": 100}],
-        )
-        _write(
-            ra,
-            "r1.json",
-            [
-                {"user_id": 1, "r_ts": "2024-06-01T10:01:00", "r_id": 200},  # in window
-                {"user_id": 1, "r_ts": "2024-06-01T09:00:00", "r_id": 201},  # too old
-                {"user_id": 2, "r_ts": "2024-06-01T10:01:30", "r_id": 202},  # other key
-            ],
-        )
-
-        def build(_):
-            left = spark.readStream.schema(
-                "user_id long, l_ts timestamp, l_id long"
-            ).json(la)
-            right = spark.readStream.schema(
-                "user_id long, r_ts timestamp, r_id long"
-            ).json(ra)
-            return stream_stream_interval_join(left, right, lookback="2 minutes")
-
-        got = _run_stream(spark, la, build, f"{tmp}/ckpt")
-        assert [(r["l_id"], r["r_id"]) for r in got] == [(100, 200)]
-
-
-def test_streaming_incremental_dedup_vs_static_corpus(spark):
-    from pyspark.sql import Row
-
-    from database_collector_spark.streaming.ops import streaming_incremental_dedup
-
-    base = "the quick brown fox jumps over the lazy dog again"
-    corpus = spark.createDataFrame(
-        [
-            Row(doc_id=1, text=base),
-            Row(doc_id=2, text="completely unrelated corpus content lives here"),
-        ]
-    )
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        os.makedirs(src)
-        _write(
-            src,
-            "b1.json",
-            [
-                # near-dup of corpus doc 1 (identical text -> jaccard 1.0)
-                {"doc_id": 10, "text": base, "ts": "2024-06-01T10:00:00"},
-                # clean doc: no corpus band collision
-                {"doc_id": 11, "text": "fresh novel words nobody wrote before now",
-                 "ts": "2024-06-01T10:00:10"},
-            ],
-        )
-
-        def build(path):
-            stream = spark.readStream.schema(
-                "doc_id long, text string, ts timestamp"
-            ).json(path)
-            return streaming_incremental_dedup(stream, corpus)
-
-        got = _run_stream(spark, src, build, f"{tmp}/ckpt")
-        assert [(r["new_doc"], r["corpus_doc"], r["jaccard"]) for r in got] == [
-            (10, 1, 1.0)
-        ]
-
-        # replay of doc 10 within the watermark horizon -> suppressed
-        _write(
-            src,
-            "b2.json",
-            [{"doc_id": 10, "text": base, "ts": "2024-06-01T10:01:00"}],
-        )
-        got = _run_stream(spark, src, build, f"{tmp}/ckpt")
-        assert got == []
-
-
-def test_stream_stream_symmetric_join(spark):
-    # ±30 min symmetric tolerance: a right row BEFORE and one AFTER the
-    # left event both pair; outside-tolerance and other-key rows don't
-    from database_collector_spark.streaming.ops import stream_stream_symmetric_join
-
-    with tempfile.TemporaryDirectory() as tmp:
-        la, ra = f"{tmp}/l", f"{tmp}/r"
-        os.makedirs(la)
-        os.makedirs(ra)
-        _write(
-            la,
-            "l1.json",
-            [{"user_id": 1, "l_ts": "2024-06-01T12:00:00", "l_id": 100}],
-        )
-        _write(
-            ra,
-            "r1.json",
-            [
-                {"user_id": 1, "r_ts": "2024-06-01T11:40:00", "r_id": 200},  # before, in
-                {"user_id": 1, "r_ts": "2024-06-01T12:20:00", "r_id": 201},  # after, in
-                {"user_id": 1, "r_ts": "2024-06-01T12:45:00", "r_id": 202},  # after, out
-                {"user_id": 1, "r_ts": "2024-06-01T11:15:00", "r_id": 203},  # before, out
-                {"user_id": 2, "r_ts": "2024-06-01T12:00:00", "r_id": 204},  # other key
-            ],
-        )
-
-        def build(_):
-            left = spark.readStream.schema(
-                "user_id long, l_ts timestamp, l_id long"
-            ).json(la)
-            right = spark.readStream.schema(
-                "user_id long, r_ts timestamp, r_id long"
-            ).json(ra)
-            return stream_stream_symmetric_join(left, right, tolerance="30 minutes")
-
-        got = _run_stream(spark, la, build, f"{tmp}/ckpt")
-        assert sorted((r["l_id"], r["r_id"]) for r in got) == [(100, 200), (100, 201)]
 
 
 def test_idempotent_sink_converges_under_batch_replay(spark):
@@ -342,51 +140,6 @@ def test_crash_after_write_before_commit_recovers_exactly_once(spark):
         rows = spark.read.parquet(out).collect()
         assert sorted(r["id"] for r in rows) == [1, 2]
         assert {r["_batch_id"] for r in rows} == {0}
-
-
-def test_streaming_heavy_hitters_spacesaving(spark):
-    import tempfile as _tf
-    from collections import Counter
-
-    from database_collector_spark.streaming.stateful import (
-        streaming_heavy_hitters,
-    )
-
-    # skewed stream: 'hot' appears 60x, 'warm' 20x, 200 singletons
-    stream1 = ["hot"] * 30 + ["warm"] * 10 + [f"cold{i}" for i in range(100)]
-    stream2 = ["hot"] * 30 + ["warm"] * 10 + [f"cold{i}" for i in range(100, 200)]
-    truth = Counter(stream1 + stream2)
-
-    with _tf.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        os.makedirs(src)
-        _write(src, "b1.json", [{"item": it} for it in stream1])
-        _write(src, "b2.json", [{"item": it} for it in stream2])
-        ckpt = f"{tmp}/ckpt"
-
-        def build(path):
-            stream = spark.readStream.schema("item string").json(path)
-            return streaming_heavy_hitters(stream, capacity=16)
-
-        rows = _run_stream(spark, src, build, ckpt, out_mode="update")
-
-    # replay rows in order; per (shard, item) keep the last estimate
-    latest: dict = {}
-    for r in rows:
-        latest[(r["shard"], r["item"])] = (r["count_est"], r["err"])
-    by_item: dict = {}
-    for (_, item), (c, e) in latest.items():
-        by_item[item] = (c, e)
-
-    # SpaceSaving guarantees: heavy items survive; estimates bound truth
-    for hot in ("hot", "warm"):
-        assert hot in by_item
-        c, e = by_item[hot]
-        assert truth[hot] <= c <= truth[hot] + e
-
-    # bounded state: at most capacity entries per shard ever emitted
-    per_shard = Counter(shard for (shard, _) in latest)
-    assert all(n <= 16 for n in per_shard.values())
 
 
 def test_streaming_upsert_latest_wins_across_batches(spark):
@@ -727,99 +480,6 @@ def test_streaming_quality_gate_matches_batch_classifier(spark):
             bigrams=True,
         ).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, batch))
-
-
-def test_streaming_near_dup_flags_repeats_within_bucket(spark):
-    from database_collector_spark.streaming.stateful import streaming_near_dup
-
-    t_a = "alpha beta gamma delta epsilon"
-    t_b = "completely different words over here entirely"
-    t_c = "third distinct document body with other tokens"
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/in"
-        os.makedirs(src)
-        _write(
-            src,
-            "b1.json",
-            [{"doc_id": 1, "text": t_a}, {"doc_id": 2, "text": t_b}],
-        )
-        _write(
-            src,
-            "b2.json",
-            [
-                {"doc_id": 3, "text": t_a},  # exact repeat of doc 1
-                {"doc_id": 4, "text": t_c},  # fresh
-                {"doc_id": 5, "text": t_c},  # same-batch repeat of doc 4
-            ],
-        )
-
-        def build(path):
-            stream = spark.readStream.schema("doc_id long, text string").json(path)
-            return streaming_near_dup(stream, max_hamming=1)
-
-        got = {
-            r["doc_id"]: r
-            for r in _run_stream(spark, src, build, f"{tmp}/ckpt", out_mode="update")
-        }
-        assert got[1]["is_dup"] is False
-        assert got[3]["is_dup"] is True and got[3]["min_hamming"] == 0
-        assert got[3]["simhash"] == got[1]["simhash"]
-        assert got[4]["is_dup"] is False
-        assert got[5]["is_dup"] is True and got[5]["min_hamming"] == 0
-        # doc 2 must not be flagged against unrelated docs
-        assert got[2]["is_dup"] is False
-
-
-def test_near_dup_state_fn_is_chunk_order_invariant():
-    """The state function must produce identical decisions whether a
-    bucket's micro-batch arrives as one chunk or as arbitrarily-ordered
-    Arrow chunks (the applyInPandasWithState iterator contract)."""
-    import pandas as pd
-
-    from database_collector_spark.streaming.stateful import _make_near_dup_fn
-
-    class _State:
-        def __init__(self):
-            self.exists = False
-            self.value = None
-
-        @property
-        def get(self):
-            return self.value
-
-        def update(self, v):
-            self.exists = True
-            self.value = v
-
-    rows = [(5, 0b1010), (1, 0b1010), (3, 0b0101), (2, 0b1011)]
-
-    def run(chunks):
-        fn = _make_near_dup_fn(max_hamming=1, capacity=16)
-        st = _State()
-        out = pd.concat(
-            list(fn((0,), iter(chunks), st))
-        ).sort_values("doc_id")
-        return list(map(tuple, out[["doc_id", "is_dup"]].itertuples(index=False))), st.value
-
-    whole = [pd.DataFrame(rows, columns=["doc_id", "simhash"])]
-    split = [
-        pd.DataFrame(rows[:1], columns=["doc_id", "simhash"]),
-        pd.DataFrame(rows[1:3], columns=["doc_id", "simhash"]),
-        pd.DataFrame(rows[3:], columns=["doc_id", "simhash"]),
-    ]
-    split_rev = list(reversed(split))
-    a, sa = run(whole)
-    b, sb = run(split)
-    c, sc = run(split_rev)
-    # chunking must not change decisions...
-    assert a == b
-    assert sa == sb
-    # ...but chunk ARRIVAL order does change which rows each chunk holds;
-    # concat-then-sort makes even reversed arrival identical
-    assert a == c and sa == sc
-    # semantic spot-check: doc 1 first (1010 fresh), doc 2 (1011, 1 bit) dup,
-    # doc 3 (0101, 4 bits) fresh, doc 5 (1010 exact) dup
-    assert a == [(1, False), (2, True), (3, False), (5, True)]
 
 
 def test_streaming_bloom_build_matches_batch(spark):

@@ -13,6 +13,7 @@ from collections import Counter
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from database_collector_spark import curation
 from database_collector_spark.operators import text
@@ -337,6 +338,19 @@ def test_hashed_classifier_matches_python_reference(spark):
         assert r3["p_keep"] is None and r3["label"] == "drop"
 
 
+def _hash_weight_table(spark, *, n_buckets, salt):
+    # the pseudo-model as an explicit (bucket, weight_milli) table, the
+    # shape a trained model ships as parquet; hashed_classifier's in-row
+    # weight expression, evaluated once per bucket
+    return spark.range(n_buckets).select(
+        F.col("id").alias("bucket"),
+        F.expr(
+            f"CAST(conv(substring(md5(concat('w:', CAST(id AS STRING),"
+            f" ':', '{salt}')), 1, 8), 16, 10) AS BIGINT) % 2001 - 1000"
+        ).alias("weight_milli"),
+    )
+
+
 def test_hashed_classifier_weight_table_path_identical(spark):
     docs = spark.createDataFrame(
         [
@@ -346,7 +360,7 @@ def test_hashed_classifier_weight_table_path_identical(spark):
         ]
     )
     inrow = text.hashed_classifier(docs, n_buckets=32, salt="t", bigrams=True)
-    table = text.hash_weight_table(spark, n_buckets=32, salt="t")
+    table = _hash_weight_table(spark, n_buckets=32, salt="t")
     joined = text.hashed_classifier(
         docs, n_buckets=32, salt="t", bigrams=True, weights=table
     )
@@ -357,7 +371,7 @@ def test_hashed_classifier_weight_table_path_identical(spark):
 
 def test_hashed_classifier_weight_table_join_is_broadcast(spark):
     docs = spark.createDataFrame([Row(doc_id=1, text="a b c")])
-    table = text.hash_weight_table(spark, n_buckets=16, salt="t")
+    table = _hash_weight_table(spark, n_buckets=16, salt="t")
     plan = (
         text.hashed_classifier(docs, n_buckets=16, salt="t", weights=table)
         ._jdf.queryExecution().executedPlan().toString()

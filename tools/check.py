@@ -154,7 +154,7 @@ def main() -> int:
     if staged:
         queries = {**queries, **gates.all_queries()}
         oracles = gates.all_oracles()
-    failures = 0
+    passed = failures = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -197,6 +197,10 @@ def main() -> int:
             failures += 1
         else:
             print(f"ok    {name}: rows={len(s_canon)} ({elapsed:.1f}s)")
+            passed += 1
+    # counted here, not by grepping "ok" lines: Spark's stderr progress
+    # bar can share a line with one
+    print("OK:", passed)
     print("FAILURES:", failures)
     con.close()
     spill.cleanup()
