@@ -11,9 +11,10 @@ optimizes, and extends it with the large-scale training-data operators
 
 Layout:
     model/      canonical schemas (long-format metric samples, registry, events)
-    sources/    source discovery registry + JDBC catalog scan builders
+    sources/    source discovery registry + the JDBC scrape
+    configs/    per-engine metric-config TOMLs: the SQL each engine scrapes
     plans/      declarative metric-config (TOML semantics) -> DataFrame compiler
-    operators/  enrichment, K/V pivot, diffs, dedup, similarity, text, multimodal
+    operators/  enrichment, diffs, dedup, similarity, text, multimodal
     streaming/  Structured Streaming events path
     sinks/      Prometheus remote-write encoder, parquet sink
 """

@@ -103,11 +103,3 @@ RDS_EVENT_SCHEMA = T.StructType(
         T.StructField("EventID", T.StringType(), True),
     ]
 )
-
-# K/V catalog row (SHOW GLOBAL STATUS / VARIABLES shape — SURVEY §1.1).
-KV_SCHEMA = T.StructType(
-    [
-        T.StructField("variable_name", T.StringType(), False),
-        T.StructField("variable_value", T.StringType(), True),
-    ]
-)

@@ -106,7 +106,7 @@ def train_merges(
     [(rank, sym_a, sym_b, merged, pair_count)] as plain driver values —
     the APPLY-side gates (encode_corpus / fertility_report) consume the
     pairs directly, without a createDataFrame + re-collect round trip
-    (r16: the list already lives on the driver when training ends).
+    (the list already lives on the driver when training ends).
     One corpus pass builds the vocab (persisted); each round is a
     vocab-sized aggregate + a 1-row collect."""
     base = word_vocab(docs, text_col).persist()
@@ -121,19 +121,18 @@ def train_merges(
                 (rank, top.sym_a, top.sym_b, top.sym_a + top.sym_b, top.pair_count)
             )
             # merges stay a LAZY replace chain over the one persisted
-            # base vocab (r15 optimization round): round r's top-pair
-            # scan evaluates r cheap string replaces inline instead of
-            # paying a persist + count materialization job per round —
-            # half the driver jobs of the old per-round persist, and no
-            # round-r copy of the vocab held in storage. The oracle
-            # unrolls the same chain as CTEs.
+            # base vocab: round r's top-pair scan evaluates r cheap
+            # string replaces inline instead of paying a persist + count
+            # materialization job per round — half the driver jobs of a
+            # per-round persist, and no round-r copy of the vocab held
+            # in storage. The oracle unrolls the same chain as CTEs.
             vocab = apply_merge(vocab, top.sym_a, top.sym_b)
-            # r16 (r15 ADVICE): the chain's O(n_merges²/2) inline
-            # replace work and O(rank) plan depth need an actual guard,
-            # not a comment — re-flatten the plan every 16 rounds with a
-            # lazy checkpoint (materialized by the next round's top-pair
-            # scan), so a long-merge trainer stays O(16·|vocab|) replace
-            # work per round with bounded plan depth.
+            # the chain's O(n_merges²/2) inline replace work and O(rank)
+            # plan depth need a guard: re-flatten the plan every 16
+            # rounds with a lazy checkpoint (materialized by the next
+            # round's top-pair scan), so a long-merge trainer stays
+            # O(16·|vocab|) replace work per round with bounded plan
+            # depth.
             if rank % 16 == 0:
                 vocab = vocab.localCheckpoint(eager=False)
     finally:
@@ -181,9 +180,9 @@ def encode_corpus(
     (id cols.., n_words, n_bpe_tokens) as a pure projection.
 
     ``extra_cols`` appends caller-supplied column expressions to the
-    projection (r16: fertility_report carries its group key and char
-    count here instead of equi-joining the counts back onto the corpus
-    — a doc_id self-join of two full corpus scans for columns that were
+    projection (fertility_report carries its group key and char count
+    here instead of equi-joining the counts back onto the corpus — a
+    doc_id self-join of two full corpus scans for columns that were
     already on the row)."""
 
     def seq_of(word: F.Column) -> F.Column:
@@ -226,9 +225,9 @@ def fertility_report(
 
     Composition: :func:`encode_corpus`'s zero-shuffle projection
     supplies exact integer (n_words, n_bpe_tokens) per doc WITH the
-    group key and character count carried on the same row (r16: the
-    old doc_id equi-join of the counts back onto the corpus scanned the
-    corpus twice and shuffled it once, for columns already present);
+    group key and character count carried on the same row (a doc_id
+    equi-join of the counts back onto the corpus would scan the corpus
+    twice and shuffle it once, for columns already present);
     the report is ONE |groups|-row aggregate of integer sums —
     fertility and chars/token are the only doubles, derived from exact
     totals and rounded (corpus-size-free state, scan-speed cost). The

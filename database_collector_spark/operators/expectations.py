@@ -52,8 +52,8 @@ def column_profile(
     map-side count partials with NO Expand and no distinct shuffle.
     ``verify``'s completeness check uses this mode: a null audit that
     shuffles the corpus for cardinalities it never reads would defeat
-    the cheap-gate-first placement (r15 review; one implementation so
-    the two modes cannot drift).
+    the cheap-gate-first placement (one implementation, so the two
+    modes cannot drift).
 
     Column names are interpolated into the stack() SQL string, so they
     are enforced to a safe identifier charset first (the
@@ -192,7 +192,7 @@ def key_uniqueness(
         # key expression) literally named '_kq_n', in any case variant
         # since Spark resolves names case-insensitively — so probe the
         # grouped frame's OWN columns and uniquify (the curation.py
-        # promoted-key collision probe, applied here per r14 ADVICE)
+        # promoted-key collision probe)
         grouped = [F.col(c) if isinstance(c, str) else c for c in cols]
         alias = "_kq_n"
         while True:

@@ -3,7 +3,7 @@
 Reference flow (collector/cmd/collector/database-collector.go:239-287):
 cron tick -> list secrets -> per-target goroutine -> scrape -> convert ->
 remote-write. Spark flow: registry DataFrame -> enabled_page() -> per-target
-scrape (JDBC pushdown, or pre-scraped fixture frames in tests) -> declarative
+scrape (``sources.jdbc.scrape``, or fixture frames in tests) -> declarative
 metric-config melt, tagged with the target's host and engine -> one union
 of every melted frame -> enrich() -> sink. The driver loop below is
 the cron stand-in (CRON_SCHEDULE / @every 5m semantics,
@@ -88,6 +88,16 @@ def run_once(
                 RuntimeWarning,
                 stacklevel=2,
             )
+    # the reference logs and skips a target whose engine has no route
+    # (database-collector.go:67-69); the collected page already says which
+    unknown = [f"{t['secret_name']} ({t['engine']})" for t in page if t["route"] is None]
+    if unknown:
+        warnings.warn(
+            f"skipping {len(unknown)} enabled targets with an unknown engine: "
+            + ", ".join(unknown),
+            RuntimeWarning,
+            stacklevel=2,
+        )
     targets = [t for t in page if t["route"] is not None]
     results: list[CollectResult] = []
     samples: list[DataFrame] = []

@@ -7,10 +7,11 @@ these as values."* Fields: ``context`` (metric prefix), ``metricsdesc``
 (value column -> help text), ``request`` (SQL), ``labels`` (label columns),
 optional ``metricstype``.
 
-This compiler subsumes every scraper in SURVEY §2.1: each catalog query is
-an entry whose request runs via JDBC pushdown (or against a registered view
-in tests), and whose result is melted into the canonical long-format metric
-frame — one row per (label-tuple, value-column).
+Every scraper the engine runs is such an entry. ``ENGINE_CONFIGS`` holds
+the shipped per-engine configs (``configs/<route>.toml``): each request
+runs via JDBC pushdown (or against a registered view in tests), and its
+result is melted into the canonical long-format metric frame — one row
+per (label-tuple, value-column).
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from __future__ import annotations
 import tomllib
 from dataclasses import dataclass, field
 from functools import reduce
+from importlib import resources
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +36,16 @@ class MetricSpec:
     def metric_name(self, value_col: str) -> str:
         # '<context>_<valuecol>' — e.g. long_running_sessions_session_duration_hours
         return f"{self.context}_{value_col.lower()}"
+
+
+# route -> the metric-config TOML of the scrapers the reference enables
+# for that engine; the keys are the registry's routes
+ENGINE_CONFIGS: dict[str, str] = {
+    route: resources.files("database_collector_spark")
+    .joinpath("configs", f"{route}.toml")
+    .read_text()
+    for route in ("mysql", "postgres", "oracle")
+}
 
 
 def load_specs(toml_text: str) -> list[MetricSpec]:
@@ -53,11 +65,17 @@ def load_specs(toml_text: str) -> list[MetricSpec]:
 
 
 def melt_to_samples(result: DataFrame, spec: MetricSpec) -> DataFrame:
-    """Query result -> one sample row per (row, value column).
+    """Query result -> one sample row per (row, value column) whose value
+    parses as a number.
 
     The melt is one projection over one generator: each result row builds
     an array of (name, type, value) structs, one per value column, that
     ``inline`` expands, so the result is read once. No shuffle, no UDF.
+
+    This is the numeric parse of every scrape: ``try_cast``, not ``cast``,
+    so a value that is not a number (a TLS key in a status table) becomes
+    NULL and is dropped with the NULLs, where ANSI ``cast`` would abort
+    the whole tick's write.
     """
     label_map = (
         F.create_map(
@@ -77,16 +95,20 @@ def melt_to_samples(result: DataFrame, spec: MetricSpec) -> DataFrame:
                 F.lit(spec.metricstype.get(value_col, "gauge").upper()).alias(
                     "metric_type"
                 ),
-                F.col(value_col).cast("double").alias("value"),
+                F.col(value_col).try_cast("double").alias("value"),
             )
             for value_col in spec.metricsdesc
         ]
     )
-    return result.select(
-        F.inline(per_column),
-        label_map.alias("labels"),
-        F.lit(None).cast("timestamp").alias("ts"),
-    ).select("name", "metric_type", "labels", "value", "ts")
+    return (
+        result.select(
+            F.inline(per_column),
+            label_map.alias("labels"),
+            F.lit(None).cast("timestamp").alias("ts"),
+        )
+        .select("name", "metric_type", "labels", "value", "ts")
+        .filter(F.col("value").isNotNull())
+    )
 
 
 def run_config(

@@ -16,10 +16,10 @@ convention, shared with the remote-write sink), ``value: double``,
 
 Spark-first shape: ``df.foreachPartition(sink)`` — each executor partition
 creates its own boto3 client and ships its own chunks, so throughput
-scales with the cluster instead of funneling through the driver. A
-bounded driver-side ``publish_df`` path exists for post-aggregation
-frames (and is what the in-process moto tests exercise, since moto's
-``mock_aws`` patches botocore only in the calling process).
+scales with the cluster instead of funneling through the driver. That
+is the only publish path; the in-process moto tests drive the same
+``sink`` over ``df.toLocalIterator()``, since moto's ``mock_aws`` patches
+botocore only in the calling process.
 
 Public API limits honored (CloudWatch PutMetricData documentation):
 
@@ -201,47 +201,3 @@ def write_batch(df, sink: CloudWatchSink) -> None:
     """Batch entry: enriched TimeSeries frame -> CloudWatch, one client and
     chunk stream per partition."""
     df.foreachPartition(sink)
-
-
-def foreach_batch(sink: CloudWatchSink):
-    """Streaming adapter: ``writeStream.foreachBatch(foreach_batch(sink))``."""
-
-    def _write(batch_df, _batch_id: int) -> None:
-        write_batch(batch_df, sink)
-
-    return _write
-
-
-def publish_df(df, sink: CloudWatchSink, *, max_rows: int = 100_000) -> int:
-    """Bounded driver-side publish for post-aggregation frames.
-
-    The engine's metric frames at the publish boundary are
-    post-aggregation (one row per live series per scrape — the reference's
-    whole payload fits one Lambda invocation), so a driver-side iterate is
-    bounded by construction; ``max_rows`` makes the bound explicit and
-    raises rather than silently funneling a data-sized frame through the
-    driver. Returns the number of datums shipped (post fail-soft drops).
-    """
-    client = sink._client()
-    shipped = 0
-    rows = df.toLocalIterator()
-    datums = []
-    for i, row in enumerate(rows):
-        if i >= max_rows:
-            raise ValueError(
-                f"publish_df is driver-side and bounded at {max_rows} rows; "
-                "use write_batch (foreachPartition) for data-sized frames"
-            )
-        d = to_datum(
-            row["labels"], row["value"], row["ts"],
-            unit=sink.unit, storage_resolution=sink.storage_resolution,
-        )
-        if d is None:
-            if sink.dropped_acc is not None:
-                sink.dropped_acc.add(1)
-        else:
-            datums.append(d)
-    for batch in chunk_datums(iter(datums), sink.chunk):
-        client.put_metric_data(Namespace=sink.namespace, MetricData=batch)
-        shipped += len(batch)
-    return shipped

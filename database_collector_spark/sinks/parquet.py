@@ -13,23 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_timeseries(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "append",
-    partition_by_date: bool = True,
-) -> None:
-    out = df
-    writer = None
-    if partition_by_date:
-        out = df.withColumn("ds", F.to_date("ts"))
-        writer = out.write.partitionBy("ds")
-    else:
-        writer = out.write
-    writer.mode(mode).parquet(path)
-
-
 def overwrite_partitions(df: DataFrame, path: str) -> None:
     """Idempotent re-run semantics for a scheduled batch: replace exactly
     the date partitions present in ``df``, leave every other partition
@@ -38,20 +21,16 @@ def overwrite_partitions(df: DataFrame, path: str) -> None:
     This is what makes the 5-minute collection loop safe to retry: a
     re-run of a failed tick rewrites that tick's dates instead of
     appending duplicates (append mode) or truncating history (static
-    overwrite, which drops ALL partitions). The mode is set per-write,
-    not globally, so co-resident jobs keep Spark's default."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("ds", F.to_date("ts"))
-            .write.partitionBy("ds")
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite, which drops ALL partitions). The mode is a writer option,
+    not a session conf, so no other job sharing the session ever sees
+    it."""
+    (
+        df.withColumn("ds", F.to_date("ts"))
+        .write.partitionBy("ds")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(path)
+    )
 
 
 def compact_partitions(spark, path: str) -> None:
@@ -72,18 +51,10 @@ def compact_partitions(spark, path: str) -> None:
     the slice is read with its own distinct source path filter)."""
     df = spark.read.parquet(path).localCheckpoint(eager=True)
     n_ds = df.select("ds").distinct().count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(max(1, n_ds), F.col("ds"))
-            .write.partitionBy("ds")
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def read_timeseries(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    (
+        df.repartition(max(1, n_ds), F.col("ds"))
+        .write.partitionBy("ds")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(path)
+    )

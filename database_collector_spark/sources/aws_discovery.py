@@ -11,12 +11,13 @@ Spark-first shape: discovery is inherently a driver-side API call over
 ≤100 tiny records, so this module is deliberately the thinnest possible
 boundary — list + fetch produce one ``createDataFrame`` against
 ``SOURCES_REGISTRY_SCHEMA`` and every downstream step
-(``registry.discover`` / ``rejects`` / ``refresh_diff``, scraper
-fan-out) is DataFrame-side. Differences from the reference, on purpose:
+(``registry.enabled_page`` / ``refresh_diff``, scraper fan-out) is
+DataFrame-side. Differences from the reference, on purpose:
 
 * fail-soft — an unfetchable/unparsable secret becomes a registry row
-  with NULL connection fields (visible in ``rejects``-style audits)
-  instead of a panic taking down the whole collector;
+  with NULL connection fields (its NULL engine gets a NULL route, which
+  ``pipeline.run_once`` warns about) instead of a panic taking down the
+  whole collector;
 * boto3 is import-gated so the engine core has no hard AWS dependency.
 """
 
@@ -131,8 +132,8 @@ def registry_from_aws(
     """S1+S2 composed: AWS listing -> the sources-registry DataFrame.
 
     The result is schema-identical to a JSON/Delta/parquet registry table,
-    so ``registry.discover`` / ``rejects`` / ``refresh_diff`` work
-    unchanged on either provenance.
+    so ``registry.enabled_page`` / ``refresh_diff`` work unchanged on
+    either provenance.
     """
     client = client if client is not None else secrets_client()
     rows = []

@@ -5,8 +5,10 @@ verbatim (goroutine per (secret, engine), database-collector.go:201-226;
 Oracle pool clamped to 1 connection, oracle-exporter.go:19-21). The Spark
 shape: one ``spark.read.jdbc`` per (target, scraper) with full-query
 pushdown — the remote database plans the query, Spark just fetches.
-``pipeline.run_once`` issues the reads one target at a time and unions
-what they return into one tick.
+``pipeline.run_once`` issues the reads one target at a time through
+:func:`scrape` and unions what they return into one tick; which SQL runs
+per engine is the metric config's ``request`` field
+(``plans.metric_config.ENGINE_CONFIGS``).
 
 Credentials never appear in plans or logs: they ride in reader options
 (redacted by Spark) and are re-resolved from the registry row on every
@@ -17,8 +19,6 @@ batch, preserving the reference's rotation-safe per-scrape re-fetch
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from database_collector_spark.sources.catalog_queries import select_scrapers
 
 JDBC_URL_TEMPLATES = {
     # DSN shapes from mysql-exporter.go:87, postgres-exporter.go:21,
@@ -77,23 +77,17 @@ def read_catalog_query(
     return reader.load()
 
 
-def scrape_target(
-    spark: SparkSession,
-    target: dict,
-    requested: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """All enabled scrapers for one registry row -> {scraper: DataFrame}."""
-    engine = target["route"]
-    return {
-        name: read_catalog_query(
-            spark,
-            engine=engine,
-            host=target["host"],
-            port=target["port"],
-            username=target["username"],
-            password=target["password"],
-            dbname=target.get("dbname"),
-            query=sql,
-        )
-        for name, sql in select_scrapers(engine, requested).items()
-    }
+def scrape(spark: SparkSession, target: dict, request: str) -> DataFrame:
+    """One metric-config request against one registry row (``run_once``'s
+    ``scrape_fn``): the DSN comes from the row's route, host, port and
+    dbname, the credentials from the same row on every tick."""
+    return read_catalog_query(
+        spark,
+        engine=target["route"],
+        host=target["host"],
+        port=target["port"],
+        username=target["username"],
+        password=target["password"],
+        dbname=target["dbname"],
+        query=request,
+    )

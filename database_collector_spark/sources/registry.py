@@ -21,8 +21,8 @@ ENABLED_TAG = "database-collector:enabled"
 MAX_TARGETS = 100  # parity with secrets-manager.go:33
 
 # 'oracle', 'oracle-ee' and 'custom-oracle-ee' all route to the oracle
-# collector (database-collector.go:65); unknown engines are warn-skipped
-# (database-collector.go:67-69).
+# collector (database-collector.go:65); unknown engines get a NULL route
+# and ``pipeline.run_once`` warn-skips them (database-collector.go:67-69).
 ENGINE_ALIASES = {
     "mysql": "mysql",
     "postgres": "postgres",
@@ -51,41 +51,17 @@ def enabled_page(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> Data
     )
 
 
-def discover(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> DataFrame:
-    """The routable targets of :func:`enabled_page`; unknown engines are
-    filtered out (the caller can anti-join to get the rejects for warning
-    logs, mirroring the reference's warn-skip).
-    """
-    return enabled_page(registry, max_targets=max_targets).filter(
-        F.col("route").isNotNull()
-    )
-
-
 def overflow_count(registry: DataFrame, *, max_targets: int = MAX_TARGETS) -> int:
     """How many ENABLED targets exceed the page cap (0 when within it).
 
     The reference's MaxResults-100 listing silently truncates a larger
-    registry (secrets-manager.go:33 never paginates); ``discover``
+    registry (secrets-manager.go:33 never paginates); :func:`enabled_page`
     reproduces the cap but the pipeline WARNS on truncation instead of
-    silently dropping targets — call this only when the capped page
-    (:func:`enabled_page`) came back full, so the extra count() action
-    is paid exactly when truncation is possible."""
+    silently dropping targets — call this only when the capped page came
+    back full, so the extra count() action is paid exactly when
+    truncation is possible."""
     n = registry.filter(F.col("tags").getItem(ENABLED_TAG).isNotNull()).count()
     return max(0, n - max_targets)
-
-
-def rejects(registry: DataFrame) -> DataFrame:
-    """Tagged targets whose engine is unknown — the reference logs and
-    skips these (database-collector.go:67-69)."""
-    alias_map = F.create_map(
-        *[F.lit(x) for kv in ENGINE_ALIASES.items() for x in kv]
-    )
-    return (
-        registry.filter(F.col("tags").getItem(ENABLED_TAG).isNotNull())
-        .withColumn("route", alias_map[F.col("engine")])
-        .filter(F.col("route").isNull())
-        .drop("route")
-    )
 
 
 def refresh_diff(previous: DataFrame, current: DataFrame, key: str = "secret_name") -> DataFrame:

@@ -304,8 +304,9 @@ def q_engine_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The warn-skip side of engine dispatch (SURVEY §2.2 P2).
 
     collector/cmd/collector/database-collector.go:67-69 logs-and-skips
-    targets whose engine has no route; ``sources.registry.rejects`` is the
-    operator form. Same shape here: the event_types the alias CASE of
+    targets whose engine has no route; ``pipeline.run_once`` warns with
+    the enabled targets whose ``registry.enabled_page`` route is NULL.
+    Same shape here: the event_types the alias CASE of
     q_engine_dispatch does NOT route, counted — exactly what the reference
     would emit as warning lines.
     """
@@ -1016,7 +1017,7 @@ def q_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     nulled results and sums the survivors, so a silently-wrong fallback
     (0 instead of NULL) mismatches.
 
-    Perf note (r15 optimization round): try_* catches the ANSI
+    Perf note: try_* catches the ANSI
     ArithmeticException PER ROW, and exception construction is ~30 µs —
     with every real order total overflowing cents·10^15 and every 7th
     denominator zero, the throw/catch path WAS the query (measured

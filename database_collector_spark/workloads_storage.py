@@ -695,8 +695,8 @@ def ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     `bucketed_join_persist` gate, the nightly-join example
     (examples/nightly_join.py) and its second-consumer test all read
     the SAME tables — every consumer after the first build joins on
-    doc_id with zero Exchange (r13 VERDICT #6: demonstrate the
-    pay-the-shuffle-once layout as shared infrastructure)."""
+    doc_id with zero Exchange: the shuffle is paid once, by the layout
+    all of them share."""
     dt, et = _bjp_tables(spark, sf_dir)
     # build-once decision asks the CATALOG, not a process-global set:
     # managed tables live in the (default in-memory) session catalog,

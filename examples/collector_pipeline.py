@@ -10,10 +10,13 @@
            * CloudWatch: PutMetricData datum mapping (S9, dry)
 
 Run:  python examples/collector_pipeline.py
-Swap ``scrape_fn`` for ``sources.jdbc.read_catalog_query`` and the dry
-sinks for ``RemoteWriteSink`` / ``CloudWatchSink`` against real
-endpoints and the same composition is the production loop
-(``pipeline.run_loop`` schedules it @every 5m, database-collector.go:271).
+The production tick is the same call over the shipped scrapers and a
+real sink:
+``run_once(spark, registry, ENGINE_CONFIGS, jdbc.scrape, sink_fn)``, with
+``ENGINE_CONFIGS`` from ``plans.metric_config``, ``scrape`` from
+``sources.jdbc`` and a ``sink_fn`` that writes ``RemoteWriteSink`` /
+``CloudWatchSink`` against real endpoints (``pipeline.run_loop``
+schedules it @every 5m, database-collector.go:271).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 
 Pins the reference behaviors at collector/internal/aws/
 secrets-manager.go:30-46 (tag-filtered single-page listing, cap 100) and
-the composed path into ``registry.discover`` — plus this engine's
+the composed path into ``registry.enabled_page`` — plus this engine's
 deliberate fail-soft deviation from the reference's panic on a bad
 secret.
 """
@@ -17,7 +17,7 @@ moto = pytest.importorskip("moto")
 boto3 = pytest.importorskip("boto3")
 
 from database_collector_spark.sources import aws_discovery
-from database_collector_spark.sources.registry import ENABLED_TAG, discover
+from database_collector_spark.sources.registry import ENABLED_TAG, enabled_page
 
 
 @pytest.fixture()
@@ -75,7 +75,11 @@ def test_registry_roundtrip_into_discover(spark, sm_client):
     assert rows["db-ora"]["port"] == 1521  # string port coerced
     assert rows["db-bad-json"]["engine"] is None  # fail-soft NULLs
 
-    routed = {r["secret_name"]: r["route"] for r in discover(reg).collect()}
+    routed = {
+        r["secret_name"]: r["route"]
+        for r in enabled_page(reg).collect()
+        if r["route"] is not None
+    }
     # alias map routes oracle variants; unknown + unparsable are skipped
     assert routed == {"db-mysql": "mysql", "db-ora": "oracle"}
 

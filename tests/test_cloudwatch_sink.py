@@ -24,7 +24,6 @@ from database_collector_spark.sinks.cloudwatch import (
     MAX_DIMENSIONS,
     CloudWatchSink,
     chunk_datums,
-    publish_df,
     to_datum,
 )
 
@@ -90,7 +89,8 @@ def cw_client(monkeypatch):
         yield boto3.client("cloudwatch")
 
 
-def test_publish_df_roundtrip(spark, cw_client):
+def test_sink_roundtrip(spark, cw_client):
+    # the foreachPartition body, driven in-process over the collected rows
     rows = [
         ({"__name__": "threads_running", "identifier": "db-a"}, 3.0, TS),
         ({"__name__": "threads_running", "identifier": "db-b"}, 5.0, TS),
@@ -98,9 +98,12 @@ def test_publish_df_roundtrip(spark, cw_client):
         ({"__name__": "bad", "identifier": "db-a"}, float("nan"), TS),
     ]
     df = spark.createDataFrame(rows, "labels map<string,string>, value double, ts timestamp")
-    sink = CloudWatchSink("DatabaseCollector", client_factory=lambda: cw_client)
-    shipped = publish_df(df, sink)
-    assert shipped == 3  # NaN row dropped fail-soft, not an API error
+    acc = _Acc()
+    sink = CloudWatchSink(
+        "DatabaseCollector", client_factory=lambda: cw_client, dropped_acc=acc
+    )
+    sink(df.toLocalIterator())
+    assert acc.n == 1  # NaN row dropped fail-soft, not an API error
 
     names = {
         (m["MetricName"], tuple((d["Name"], d["Value"]) for d in m["Dimensions"]))
@@ -110,6 +113,7 @@ def test_publish_df_roundtrip(spark, cw_client):
     assert ("threads_running", (("identifier", "db-b"),)) in names
     assert ("uptime", (("identifier", "db-a"),)) in names
     assert not any(n[0] == "bad" for n in names)
+    assert len(names) == 3  # the three finite samples shipped
 
     stats = cw_client.get_metric_statistics(
         Namespace="DatabaseCollector",
@@ -122,16 +126,6 @@ def test_publish_df_roundtrip(spark, cw_client):
     )["Datapoints"]
     assert len(stats) == 1
     assert stats[0]["Sum"] == 5.0 and stats[0]["SampleCount"] == 1.0
-
-
-def test_publish_df_bound_is_enforced(spark, cw_client):
-    df = spark.createDataFrame(
-        [({"__name__": "m"}, 1.0, TS)] * 5,
-        "labels map<string,string>, value double, ts timestamp",
-    )
-    sink = CloudWatchSink("NS", client_factory=lambda: cw_client)
-    with pytest.raises(ValueError, match="bounded"):
-        publish_df(df, sink, max_rows=3)
 
 
 def test_sink_chunks_across_calls(cw_client):

@@ -1,52 +1,12 @@
-"""K/V parse + pivot (FIXTURES.md F2/F3) and registry ops (F1)."""
+"""Registry ops (FIXTURES.md F1). The K/V numeric parse is the melt's,
+pinned over live JDBC in test_jdbc_smoke.py."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
-from database_collector_spark.model.schemas import KV_SCHEMA, SOURCES_REGISTRY_SCHEMA
-from database_collector_spark.operators.kv import parse_numeric, pivot_wide
-from database_collector_spark.sources.registry import discover, refresh_diff, rejects
-
-
-def test_parse_numeric_drops_junk_maps_states(spark):
-    kv = spark.createDataFrame(
-        [
-            Row(variable_name="Threads_connected", variable_value="42"),
-            Row(variable_name="Uptime", variable_value="123456"),
-            Row(variable_name="Slave_running", variable_value="ON"),
-            Row(variable_name="Read_only", variable_value="OFF"),
-            Row(variable_name="Rsa_public_key", variable_value="-----BEGIN"),
-            Row(variable_name="Null_value", variable_value=None),
-            Row(variable_name="Slave_IO_Running", variable_value="Connecting"),
-        ],
-        KV_SCHEMA,
-    )
-    out = {r["name"]: r["value"] for r in parse_numeric(kv).collect()}
-    assert out["mysql_global_status_threads_connected"] == 42.0
-    assert out["mysql_global_status_slave_running"] == 1.0
-    assert out["mysql_global_status_read_only"] == 0.0
-    # upstream mysqld_exporter parity: 'Connecting' is a NON-running state
-    assert out["mysql_global_status_slave_io_running"] == 0.0
-    assert "mysql_global_status_rsa_public_key" not in out
-    assert "mysql_global_status_null_value" not in out
-
-
-def test_pivot_wide_one_row(spark):
-    kv = spark.createDataFrame(
-        [
-            Row(variable_name="Slave_IO_Running", variable_value="Yes"),
-            Row(variable_name="Slave_SQL_Running", variable_value="No"),
-            Row(variable_name="Seconds_Behind_Master", variable_value="17"),
-        ],
-        KV_SCHEMA,
-    )
-    wide = pivot_wide(
-        kv, ["Slave_IO_Running", "Slave_SQL_Running", "Seconds_Behind_Master"]
-    ).collect()
-    assert len(wide) == 1
-    assert wide[0]["Slave_IO_Running"] == "Yes"
-    assert wide[0]["Seconds_Behind_Master"] == "17"
+from database_collector_spark.model.schemas import SOURCES_REGISTRY_SCHEMA
+from database_collector_spark.sources.registry import enabled_page, refresh_diff
 
 
 def _registry(spark, rows):
@@ -75,15 +35,16 @@ def test_discover_filters_routes_caps(spark):
         _row("e", "sqlserver"),           # unknown -> skipped (:67-69)
         _row("f", "mysql", tagged=False), # untagged -> filtered (secrets-manager.go:34-39)
     ]
-    got = {r["secret_name"]: r["route"] for r in discover(_registry(spark, rows)).collect()}
+    page = enabled_page(_registry(spark, rows)).collect()
+    got = {r["secret_name"]: r["route"] for r in page if r["route"] is not None}
     assert got == {"a": "mysql", "b": "postgres", "c": "oracle", "d": "oracle"}
-    rej = [r["secret_name"] for r in rejects(_registry(spark, rows)).collect()]
+    rej = [r["secret_name"] for r in page if r["route"] is None]
     assert rej == ["e"]
 
 
 def test_discover_max_results_cap(spark):
     rows = [_row(f"s{i:03d}", "mysql") for i in range(120)]
-    got = discover(_registry(spark, rows)).collect()
+    got = enabled_page(_registry(spark, rows)).collect()
     assert len(got) == 100  # MaxResults parity (secrets-manager.go:33)
 
 

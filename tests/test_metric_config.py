@@ -13,11 +13,17 @@ import datetime as dt
 from pyspark.sql import Row
 
 from database_collector_spark.operators.enrich import enrich
-from database_collector_spark.plans.metric_config import load_specs, run_config
+from database_collector_spark.plans.metric_config import (
+    ENGINE_CONFIGS,
+    load_specs,
+    melt_to_samples,
+    run_config,
+)
 from database_collector_spark.sinks.remote_write import (
     decode_write_request,
     encode_write_request,
 )
+from database_collector_spark.sources.registry import ENGINE_ALIASES
 
 # The reference query (custom-metrics.toml:4-16) with SYSDATE pinned to an
 # anchor for determinism; Spark SQL dialect for date arithmetic.
@@ -108,3 +114,36 @@ def test_minimum_slice_end_to_end(spark):
     assert labels["job"] == "database-collector"
     assert labels["engine"] == "oracle"
     assert labels["username"] == "SDM_BATCH"
+
+
+def test_every_shipped_spec_loads_with_a_value_column():
+    assert set(ENGINE_CONFIGS) == set(ENGINE_ALIASES.values())
+    for route, text in ENGINE_CONFIGS.items():
+        specs = load_specs(text)
+        assert specs, route
+        for spec in specs:
+            assert spec.request.strip() and spec.metricsdesc, (route, spec.context)
+            assert not set(spec.labels) & set(spec.metricsdesc), (route, spec.context)
+
+
+def test_oracle_specs_melt_their_label_and_value_columns(spark):
+    """Oracle's v$ views cannot be hosted by Derby or a Spark view, so its
+    SQL is not run here: each spec's melt runs over a fixture frame with
+    the upper-case column names Oracle reports for that spec's labels and
+    value columns. A numeric row becomes one sample per value column; a
+    row of 'UNLIMITED' (v$resource_limit's word for no limit) yields none."""
+    for spec in load_specs(ENGINE_CONFIGS["oracle"]):
+        cols = [c.upper() for c in spec.labels + list(spec.metricsdesc)]
+        rows = [
+            tuple(["x"] * len(spec.labels) + ["7"] * len(spec.metricsdesc)),
+            tuple(["y"] * len(spec.labels) + [" UNLIMITED"] * len(spec.metricsdesc)),
+        ]
+        frame = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+        got = {
+            (r["name"], tuple(sorted(r["labels"].items())), r["value"])
+            for r in melt_to_samples(frame, spec).collect()
+        }
+        labels = tuple(sorted((lbl, "x") for lbl in spec.labels))
+        assert got == {(spec.metric_name(v), labels, 7.0) for v in spec.metricsdesc}, (
+            spec.context
+        )

@@ -104,8 +104,16 @@ def test_ttl_batch_twin_matches_streaming_end_state(spark):
     assert got == {("A", 3, False), ("B", 1, True)}
 
 
+def _append(df, path):
+    """Land ``df`` the way a plain appending writer would: one more set of
+    files in each date partition."""
+    df.withColumn("ds", F.to_date("ts")).write.partitionBy("ds").mode(
+        "append"
+    ).parquet(path)
+
+
 def test_parquet_sink_partitioned(spark):
-    from database_collector_spark.sinks.parquet import read_timeseries, write_timeseries
+    from database_collector_spark.sinks.parquet import overwrite_partitions
 
     df = spark.createDataFrame(
         [
@@ -114,8 +122,8 @@ def test_parquet_sink_partitioned(spark):
         ]
     )
     with tempfile.TemporaryDirectory() as tmp:
-        write_timeseries(df, f"{tmp}/ts")
-        back = read_timeseries(spark, f"{tmp}/ts")
+        overwrite_partitions(df, f"{tmp}/ts")
+        back = spark.read.parquet(f"{tmp}/ts")
         assert back.count() == 2
         assert sorted(str(r["ds"]) for r in back.select("ds").collect()) == [
             "2024-06-01",
@@ -127,12 +135,10 @@ def test_parquet_sink_partitioned(spark):
 
 
 def test_overwrite_partitions_is_idempotent(spark):
-    from database_collector_spark.sinks.parquet import (
-        overwrite_partitions,
-        read_timeseries,
-        write_timeseries,
-    )
+    from database_collector_spark.sinks.parquet import overwrite_partitions
 
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(mode_key)
     d1 = dt.datetime(2024, 6, 1, 10)
     d2 = dt.datetime(2024, 6, 2, 10)
     base = spark.createDataFrame(
@@ -142,7 +148,7 @@ def test_overwrite_partitions_is_idempotent(spark):
         ]
     )
     with tempfile.TemporaryDirectory() as tmp:
-        write_timeseries(base, f"{tmp}/ts")
+        _append(base, f"{tmp}/ts")
         # re-run of day 2's tick with a corrected value: only day 2 replaced
         rerun = spark.createDataFrame(
             [Row(labels={"__name__": "m"}, value=20.0, ts=d2)]
@@ -150,27 +156,22 @@ def test_overwrite_partitions_is_idempotent(spark):
         overwrite_partitions(rerun, f"{tmp}/ts")
         got = {
             str(r["ds"]): r["value"]
-            for r in read_timeseries(spark, f"{tmp}/ts").collect()
+            for r in spark.read.parquet(f"{tmp}/ts").collect()
         }
         assert got == {"2024-06-01": 1.0, "2024-06-02": 20.0}
         # running the same re-run again changes nothing (idempotent)
         overwrite_partitions(rerun, f"{tmp}/ts")
-        assert read_timeseries(spark, f"{tmp}/ts").count() == 2
-        # the per-write conf override did not leak into the session
-        assert (
-            spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            == "static"
-        )
+        assert spark.read.parquet(f"{tmp}/ts").count() == 2
+        # the dynamic mode is a writer option: the session keeps its
+        # static default
+        assert spark.conf.get(mode_key) == session_mode
+        assert session_mode.lower() == "static"
 
 
 def test_compact_partitions_one_file_per_date(spark):
     import glob
 
-    from database_collector_spark.sinks.parquet import (
-        compact_partitions,
-        read_timeseries,
-        write_timeseries,
-    )
+    from database_collector_spark.sinks.parquet import compact_partitions
 
     with tempfile.TemporaryDirectory() as tmp:
         # three appends -> several files per date partition
@@ -181,13 +182,13 @@ def test_compact_partitions_one_file_per_date(spark):
                     Row(labels={"m": "x"}, value=v, ts=dt.datetime(2024, 6, 2, 10)),
                 ]
             )
-            write_timeseries(df, f"{tmp}/ts")
+            _append(df, f"{tmp}/ts")
         assert len(glob.glob(f"{tmp}/ts/ds=2024-06-01/*.parquet")) >= 3
         compact_partitions(spark, f"{tmp}/ts")
         for ds in ("2024-06-01", "2024-06-02"):
             assert len(glob.glob(f"{tmp}/ts/ds={ds}/*.parquet")) == 1
         # content survives byte-for-byte in row terms
-        assert read_timeseries(spark, f"{tmp}/ts").count() == 6
+        assert spark.read.parquet(f"{tmp}/ts").count() == 6
 
 
 def test_run_once_warns_on_registry_overflow(spark):
@@ -340,3 +341,67 @@ def test_run_once_drops_every_spec_of_a_target_that_fails_late(spark):
     assert by_target["db-postgres"] is None and by_target["db-oracle-ee"] is None
     assert {r["labels"]["engine"] for r in collected} == {"postgres", "oracle"}
     assert len(collected) == 6
+
+
+def test_run_once_warns_naming_unknown_engine_targets(spark):
+    # the reference logs and skips an engine it has no route for
+    # (database-collector.go:67-69): the tick names the skipped target
+    import warnings as _warnings
+
+    rows = [
+        Row(
+            secret_name=f"db-{e}",
+            engine=e,
+            host=f"{e}-host",
+            port=1433,
+            username="u",
+            password="p",
+            dbname="d",
+            tags={"database-collector:enabled": "true"},
+        )
+        for e in ("mysql", "sqlserver")
+    ]
+    registry = spark.createDataFrame(rows, SOURCES_REGISTRY_SCHEMA)
+    with _warnings.catch_warnings(record=True) as caught:
+        _warnings.simplefilter("always")
+        results = run_once(
+            spark,
+            registry,
+            {"mysql": CONFIG},
+            lambda spark_, target, request: _fixture_scrape(spark_, request),
+            lambda df: None,
+        )
+    assert [r.target for r in results] == ["db-mysql"]
+    (msg,) = [str(w.message) for w in caught if w.category is RuntimeWarning]
+    assert "unknown engine" in msg and "db-sqlserver (sqlserver)" in msg
+    assert "db-mysql" not in msg
+
+
+def test_non_numeric_value_drops_one_sample_not_the_tick(spark):
+    # one target's value column holds a word: under ANSI a plain cast
+    # raises at sink time and takes every target's write with it; the
+    # melt's try_cast drops that one sample and the rest land
+    def scrape_fn(spark_, target, request):
+        idle = "n/a" if target["route"] == "postgres" else "1"
+        return spark_.createDataFrame(
+            [("ACTIVE", "2"), ("IDLE", idle)], "status string, active string"
+        )
+
+    collected = []
+    results = run_once(
+        spark,
+        _registry(spark),
+        {e: CONFIG for e in ("mysql", "postgres", "oracle")},
+        scrape_fn,
+        sink_fn=lambda df: collected.extend(df.collect()),
+        anchor_ts="2024-06-01 00:00:00",
+    )
+    assert all(r.error is None for r in results) and len(results) == 3
+    got = {(r["labels"]["engine"], r["labels"]["status"]): r["value"] for r in collected}
+    assert got == {
+        ("mysql", "ACTIVE"): 2.0,
+        ("mysql", "IDLE"): 1.0,
+        ("postgres", "ACTIVE"): 2.0,
+        ("oracle", "ACTIVE"): 2.0,
+        ("oracle", "IDLE"): 1.0,
+    }
