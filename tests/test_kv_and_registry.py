@@ -1,12 +1,52 @@
-"""Registry ops (FIXTURES.md F1). The K/V numeric parse is the melt's,
-pinned over live JDBC in test_jdbc_smoke.py."""
+"""K/V numeric parse (FIXTURES.md F2) and registry ops (F1). The K/V
+parse is the shipped MySQL request's state-word CASE plus the melt's
+``try_cast``; test_jdbc_smoke.py also runs it over live JDBC."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
 
 from database_collector_spark.model.schemas import SOURCES_REGISTRY_SCHEMA
+from database_collector_spark.plans.metric_config import (
+    ENGINE_CONFIGS,
+    load_specs,
+    melt_to_samples,
+)
 from database_collector_spark.sources.registry import enabled_page, refresh_diff
+
+
+def test_parse_numeric_drops_junk_maps_states(spark):
+    (spec,) = [
+        s for s in load_specs(ENGINE_CONFIGS["mysql"])
+        if s.context == "mysql_global_status"
+    ]
+    spark.createDataFrame(
+        [
+            ("Threads_connected", "42"),
+            ("Uptime", "123456"),
+            ("Slave_running", "ON"),
+            ("Read_only", "OFF"),
+            ("Rsa_public_key", "-----BEGIN"),
+            ("Null_value", None),
+            ("Slave_IO_Running", "Connecting"),
+        ],
+        "VARIABLE_NAME string, VARIABLE_VALUE string",
+    ).createOrReplaceTempView("kv_global_status")
+    # the shipped request, verbatim but for its table
+    request = spec.request.replace(
+        "performance_schema.global_status", "kv_global_status"
+    )
+    out = {
+        r["labels"]["variable_name"]: r["value"]
+        for r in melt_to_samples(spark.sql(request), spec).collect()
+    }
+    assert out["threads_connected"] == 42.0
+    assert out["slave_running"] == 1.0
+    assert out["read_only"] == 0.0
+    # upstream mysqld_exporter parity: 'Connecting' is a NON-running state
+    assert out["slave_io_running"] == 0.0
+    assert "rsa_public_key" not in out
+    assert "null_value" not in out
 
 
 def _registry(spark, rows):
